@@ -1008,10 +1008,9 @@ def connected_components(
     component-min labelling, jumping only gets there in fewer rounds.
     The loop is a driver loop over PLANS, never over rows; each round
     checkpoints its (node-sized) label table and unpersists the previous
-    one, so lineage stays flat. For adversarial graphs the alternating
-    large-star/small-star form (Kiveris et al., "Connected Components in
-    MapReduce", SoCC'14) remains available as
-    :func:`connected_components_star`.
+    one, so lineage stays flat. Pointer jumping also bounds adversarial
+    shapes: a 120-node path converges within the default 20 rounds
+    (tests/test_dedup.py).
 
     Raises if max_iter rounds don't converge (a correctness signal — it
     means the graph has a component with diameter > ~2^max_iter).
@@ -1027,9 +1026,9 @@ def connected_components(
         # round over round even with the data cached, and Catalyst
         # re-analyzes the whole history each iteration (measured: exponential
         # per-round wall time past ~8 rounds). Truncating lineage keeps every
-        # round constant-cost; see connected_components_star for the cluster
-        # (setCheckpointDir) variant of the same move. Lazy (r13):
-        # round 1's job materializes it.
+        # round constant-cost (on a cluster with executor-loss concerns,
+        # setCheckpointDir + .checkpoint() is the reliable-storage variant
+        # of the same move). Lazy (r13): round 1's job materializes it.
         .localCheckpoint(eager=False)
     )
     for _ in range(max_iter):
@@ -1077,102 +1076,6 @@ def connected_components(
     raise RuntimeError(
         f"connected_components: no convergence in {max_iter} rounds "
         "(component diameter exceeds max_iter)"
-    )
-
-
-def _large_star(edges: DataFrame) -> DataFrame:
-    """Large-star round: every node's strictly-LARGER neighbors re-attach to
-    the minimum of its closed neighborhood (min of self and neighbors)."""
-    sym = edges.unionByName(
-        edges.select(F.col("d").alias("s"), F.col("s").alias("d"))
-    )
-    m = sym.groupBy("s").agg(F.least(F.min("d"), F.first("s")).alias("m"))
-    return (
-        sym.join(m, "s")
-        .filter(F.col("d") > F.col("s"))
-        .select(F.col("d").alias("s"), F.col("m").alias("d"))
-        .filter(F.col("s") != F.col("d"))
-        .distinct()
-    )
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """Small-star round: edges canonicalized to point larger→smaller; every
-    node's smaller neighbors (and itself) attach to its minimum neighbor."""
-    canon = edges.select(
-        F.greatest("s", "d").alias("s"), F.least("s", "d").alias("d")
-    ).filter(F.col("s") != F.col("d"))
-    m = canon.groupBy("s").agg(F.min("d").alias("m"))
-    attach_neighbors = (
-        canon.join(m, "s")
-        .select(F.col("d").alias("s"), F.col("m").alias("d"))
-        .filter(F.col("s") != F.col("d"))
-    )
-    attach_self = m.select("s", F.col("m").alias("d"))
-    return attach_neighbors.unionByName(attach_self).distinct()
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Connected components via alternating large-star/small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) → (node, rep), rep = min node id — same output contract as
-    :func:`connected_components`.
-
-    This is the ADVERSARIAL-GRAPH scale path: min-label propagation needs
-    D rounds (D = component diameter), which is fine for the tiny dense
-    components near-dup graphs produce but unbounded in general — a 10k-node
-    chain needs 10k shuffle rounds. Star contraction halves tree heights
-    every two rounds instead: O(log² n) rounds on ANY graph shape, every
-    round the same two keyed shuffles (neighborhood-min agg + re-attach
-    join) over an edge set that only shrinks. The default stays
-    min-label for bounded-diameter near-dup clusters (fewer rounds, no
-    edge rewriting); this form exists for the corpus whose duplicate
-    structure is a surprise.
-
-    Convergence: the small-star output is a fixpoint (every edge points
-    node→component-min and re-running changes nothing) — checked exactly
-    via two anti-join counts on persisted frames, not a checksum.
-    """
-    edges = (
-        pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .filter(F.col("s") != F.col("d"))
-        .distinct()
-        # localCheckpoint, not persist: persist caches the DATA but the
-        # logical plan still compounds round over round, and Catalyst
-        # re-analyzes the full history every iteration — measured 2s →
-        # 20s/round by round 3 on a 120-node chain. Checkpointing truncates
-        # the plan so every round costs the same. (On a cluster with
-        # executor loss concerns, setCheckpointDir + .checkpoint() is the
-        # reliable-storage variant of the same move.) Lazy (r13): the
-        # first round materializes it.
-        .localCheckpoint(eager=False)
-    )
-    for _ in range(max_iter):
-        # lazy: the first convergence probe materializes the checkpoint in
-        # its own job (same single-job-per-round move as
-        # connected_components)
-        new_edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
-        unchanged = (
-            new_edges.exceptAll(edges).isEmpty()
-            and edges.exceptAll(new_edges).isEmpty()
-        )
-        edges.unpersist()
-        edges = new_edges
-        if unchanged:
-            roots = edges.select(F.col("d").alias("node")).distinct().select(
-                "node", F.col("node").alias("rep")
-            )
-            out = edges.select(
-                F.col("s").alias("node"), F.col("d").alias("rep")
-            ).unionByName(roots)
-            return out
-    raise RuntimeError(
-        f"connected_components_star: no convergence in {max_iter} rounds"
     )
 
 

@@ -1070,7 +1070,7 @@ def _probe_vocab(postings: DataFrame, vocab: DataFrame | None, lengths) -> DataF
     if vocab is not None:
         lens = sorted(set(lengths))
         return vocab.filter(F.col("tlen").isin(lens)) if lens else vocab
-    return postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    return _term_df(postings)
 
 
 def fuzzy_match_from_postings(
@@ -1904,7 +1904,7 @@ def term_bucket_py(term: str) -> int:
 def build_postings(docs: DataFrame, id_col: str, text_col: str) -> tuple[DataFrame, DataFrame]:
     """One corpus pass → (postings, corpus_stats).
 
-    postings: (bucket, term, doc_id, tf, dl) — the per-(term, doc) posting
+    postings: (doc_id, dl, term, tf, bucket) — the per-(term, doc) posting
     list with the doc-length norm denormalized in (ES stores norms per doc;
     at parquet scale the duplicated int is cheaper than a second join).
     corpus_stats: one row (n_docs, sum_dl) — exact integer sums, so scores
@@ -1914,7 +1914,17 @@ def build_postings(docs: DataFrame, id_col: str, text_col: str) -> tuple[DataFra
     terms map to a handful of buckets, so an indexed probe reads ~terms/64
     of the index — the partition-pruned analogue of ES's term dictionary
     seek. Within a bucket, parquet min/max on the sorted ``term`` column
-    prunes row groups further. Tokens pinned (r13): the postings
+    prunes row groups further.
+
+    The bucket is computed BEFORE the TF aggregate and the token stream is
+    repartitioned by it, so the aggregate and the layout share one
+    exchange: ``bucket`` is a function of ``term``, so
+    HashPartitioning(bucket) clusters every grouping key, and the same
+    partitioning is the persisted layout's — :func:`_bucket_laid` adds no
+    second shuffle when an index is saved. Trade-off, documented for
+    cluster sizing: the exchange carries raw token rows (no map-side
+    combine), ~1.3× the aggregated posting bytes — still under the 2× of
+    shuffling the aggregate twice. Tokens pinned (r13): the postings
     explode's inferred size > 0 filter re-ran the tokenizer regexp per
     row through pushdown re-inlining (functions.pinning)."""
     from pandemic_knowledge_spark.functions.pinning import pin
@@ -1928,42 +1938,6 @@ def build_postings(docs: DataFrame, id_col: str, text_col: str) -> tuple[DataFra
     )
     postings = (
         base.select("doc_id", "dl", F.explode("toks").alias("term"))
-        .groupBy("doc_id", "dl", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .withColumn(
-            "bucket", F.pmod(F.crc32(F.col("term")), F.lit(N_TERM_BUCKETS)).cast("int")
-        )
-    )
-    return postings, stats
-
-
-def _postings_bucket_laid(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """:func:`build_postings` rows in the persisted-index layout, built with
-    ONE exchange (r13, guide §2.4 "two operations keyed the same way can
-    share one exchange"): the bucket column is computed BEFORE the TF
-    aggregate and the token stream is repartitioned by it, so the same
-    shuffle serves the groupBy (``bucket`` is functionally dependent on
-    ``term`` — HashPartitioning(bucket) clusters every grouping key) and
-    the ``partitionBy("bucket")`` write. The plain :func:`build_postings`
-    lineage pays that shuffle twice: the (doc, term) aggregate exchange
-    and then :meth:`SearchIndex.save`'s ``repartition("bucket")``.
-
-    The local sort is (bucket, term) — a prefix the file writer's required
-    ordering (its dynamic-partition columns) is satisfied by, so no second
-    writer-inserted sort runs, and the within-file term order (row-group
-    min/max pruning) is guaranteed rather than inherited from sort
-    stability. Trade-off, documented for cluster sizing: the exchange
-    carries raw token rows (no map-side combine), ~1.3× the aggregated
-    posting bytes — still well under the 2× of shuffling the aggregate
-    twice, and one fewer shuffle round."""
-    from pandemic_knowledge_spark.functions.pinning import pin
-
-    base = pin(
-        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col)),
-        toks=tokenize(text_col),
-    ).withColumn("dl", F.size("toks"))
-    return (
-        base.select("doc_id", "dl", F.explode("toks").alias("term"))
         .withColumn(
             "bucket", F.pmod(F.crc32(F.col("term")), F.lit(N_TERM_BUCKETS)).cast("int")
         )
@@ -1971,8 +1945,32 @@ def _postings_bucket_laid(docs: DataFrame, id_col: str, text_col: str) -> DataFr
         .groupBy("doc_id", "dl", "term", "bucket")
         .agg(F.count(F.lit(1)).alias("tf"))
         .select("doc_id", "dl", "term", "tf", "bucket")
-        .sortWithinPartitions("bucket", "term")
     )
+    return postings, stats
+
+
+def _bucket_laid(postings: DataFrame) -> DataFrame:
+    """The persisted layout every index writer uses — postings in
+    :meth:`SearchIndex.save` and :meth:`SearchIndex.append_save`,
+    positions in a positional save: one hash partition per bucket, sorted
+    (bucket, term) within it. The (bucket, term) prefix satisfies the file
+    writer's required ordering (its dynamic-partition column), so no
+    second writer-inserted sort runs, and the within-file term order
+    (row-group min/max pruning) is guaranteed rather than inherited from
+    sort stability. Over a :func:`build_postings` frame the repartition
+    matches the aggregate's own exchange and plans none of its own."""
+    return postings.repartition("bucket").sortWithinPartitions("bucket", "term")
+
+
+def _term_df(postings: DataFrame) -> DataFrame:
+    """(term, df) from postings: (doc_id, term) rows are unique, so a
+    map-side-combined count per term IS the document frequency."""
+    return postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+
+
+def _doc_id_set(postings: DataFrame) -> DataFrame:
+    """(doc_id, dl): the indexed-id set with each doc's length norm."""
+    return postings.groupBy("doc_id").agg(F.first("dl").alias("dl"))
 
 
 def _bm25_score_agg(scored: DataFrame, k: int, after: tuple | None = None) -> DataFrame:
@@ -2128,49 +2126,66 @@ def _read_index_meta(spark, path: str) -> dict | None:
     return rows[0].asDict()
 
 
-def _write_index_sidecars(
-    spark,
-    path: str,
-    postings: DataFrame,
-    fingerprint: str | None = None,
-    pos_fingerprint: str | None = None,
-) -> None:
-    """(Re)derive the three sidecars from the persisted postings: the
-    full-rebuild path used by :meth:`SearchIndex.save` and by the load-time
-    repair. ``doc_ids`` and ``vocab`` are each one aggregate over the
-    postings — paid once per ingest (or once per crash), never per probe.
-    ``meta`` (stats + postings fingerprint) goes LAST: until it commits,
-    the layout reads as stale and repairs again — overwrite-in-progress
-    can therefore never masquerade as fresh."""
-    doc_ids = (
-        postings.groupBy("doc_id")
-        .agg(F.first("dl").alias("dl"))
-        # materialized once by the write below; the stats aggregate then
-        # reads the cached blocks (lazy, r13)
-        .localCheckpoint(eager=False)
-    )
-    doc_ids.write.mode("overwrite").parquet(f"{path}/doc_ids")
+def _write_vocab(term_df: DataFrame, path: str) -> None:
+    """Overwrite the ``vocab`` sidecar from (term, df) rows: partitioned by
+    term length, sorted by term within each length (the FST-analogue
+    pruning axes of the dictionary probes)."""
     (
-        postings.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .withColumn("tlen", F.length("term"))
+        term_df.withColumn("tlen", F.length("term"))
         .repartition("tlen")
         .sortWithinPartitions("tlen", "term")
         .write.mode("overwrite")
         .partitionBy("tlen")
         .parquet(f"{path}/vocab")
     )
-    row = doc_ids.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
-    ).collect()[0]
-    _write_index_meta(
-        spark,
-        path,
-        int(row["n_docs"]),
-        int(row["sum_dl"] or 0),
-        fingerprint or _postings_fingerprint(postings),
-        pos_fingerprint,
-    )
+
+
+def _write_index_sidecars(
+    spark,
+    path: str,
+    postings: DataFrame,
+    stats: tuple | None = None,
+    pos_fingerprint: str | None = None,
+) -> None:
+    """Derive the sidecars of a full write from ``postings``: ``doc_ids``
+    and ``vocab`` are each one aggregate over the postings, written
+    concurrently with the postings-fingerprint listing (Spark sessions
+    schedule jobs from several threads safely; locally the three short
+    jobs overlap their task-launch overhead). ``meta`` — the commit
+    record — goes strictly LAST, after every job has completed: until it
+    commits the layout reads as stale and :meth:`SearchIndex.load`
+    repairs again, so an overwrite in progress never masquerades as
+    fresh.
+
+    ``stats`` = the build's full-corpus (n_docs, sum_dl), which counts
+    zero-token docs like the corpus-scan scorers (:meth:`SearchIndex.save`).
+    None = derive them from the written ``doc_ids`` — the load-time
+    repair, which has nothing but posting rows to read."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def _doc_ids():
+        _doc_id_set(postings).write.mode("overwrite").parquet(f"{path}/doc_ids")
+
+    def _fingerprint():
+        # over the WRITTEN files (a listing-only read — no data scan):
+        # load() validates against the same listing
+        return _postings_fingerprint(spark.read.parquet(f"{path}/postings"))
+
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        futs = [
+            pool.submit(_doc_ids),
+            pool.submit(_write_vocab, _term_df(postings), path),
+            pool.submit(_fingerprint),
+        ]
+        _, _, fingerprint = (f.result() for f in futs)
+    if stats is None:
+        row = (
+            spark.read.parquet(f"{path}/doc_ids")
+            .agg(F.count(F.lit(1)), F.sum("dl"))
+            .collect()[0]
+        )
+        stats = (int(row[0]), int(row[1] or 0))
+    _write_index_meta(spark, path, *stats, fingerprint, pos_fingerprint)
 
 
 def _write_index_meta(
@@ -2204,16 +2219,21 @@ class SearchIndex:
     /root/reference/flow/scripts/insert_owid.py bulk(), and then every
     keystroke search is an index probe, never a corpus scan).
 
-    Persisted layout (:meth:`save`): ``postings/`` (the source of truth,
-    bucket-partitioned) plus three DERIVED sidecars — ``vocab/`` the terms
-    dictionary (term, df) partitioned by term length (ES's per-segment FST:
-    fuzzy/suggest/prefix probes expand against dictionary slivers, never
-    postings), ``doc_ids/`` the indexed-id set with dl norms (the
-    incremental-ingest dedup guard and the stats derivation), and ``meta``
-    one row (n_docs, sum_dl, postings-file fingerprint). Sidecars are
-    validated against the fingerprint at load and rebuilt from postings on
-    mismatch, so a crash anywhere in save/append degrades to a one-time
-    repair, never a wrong answer."""
+    Persisted layout: ``postings/`` (the source of truth, bucket-partitioned)
+    plus three DERIVED sidecars — ``vocab/`` the terms dictionary (term, df)
+    partitioned by term length (ES's per-segment FST: fuzzy/suggest/prefix
+    probes expand against dictionary slivers, never postings), ``doc_ids/``
+    the indexed-id set with dl norms (the incremental-ingest dedup guard),
+    and ``meta`` one row (n_docs, sum_dl, postings-file fingerprint).
+
+    One write path: :meth:`save` writes a whole index, :meth:`append_save`
+    adds a batch of documents to a persisted one (creating it on the first
+    batch). Both lay postings out with :func:`_bucket_laid`; a full write
+    derives its sidecars with :func:`_write_index_sidecars`, an append
+    refreshes them incrementally. Either way ``meta`` commits LAST and is
+    validated against the postings fingerprint at :meth:`load`, which
+    rebuilds the sidecars from postings on mismatch — a crash anywhere in
+    a write degrades to a one-time repair, never a wrong answer."""
 
     def __init__(self, postings: DataFrame, stats: DataFrame,
                  stats_scalars: tuple | None = None,
@@ -2244,12 +2264,6 @@ class SearchIndex:
         # postings: present only on positional builds/layouts; phrase
         # probes require it.
         self.positional = positional
-        # (docs, id_col, text_col) of an uncached build: save() re-derives
-        # the bucket-laid postings from this lineage with a single
-        # exchange (_postings_bucket_laid) instead of repartitioning the
-        # aggregated frame a second time. None on loaded/bare/cached
-        # indexes (a warm cache is cheaper than re-tokenizing).
-        self._lineage: tuple | None = None
 
     @classmethod
     def build(cls, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
@@ -2262,12 +2276,8 @@ class SearchIndex:
         ``positional=True`` additionally builds the positional posting
         table (phrase probes; a second tokenize pass over the corpus)."""
         postings, stats = build_postings(docs, id_col, text_col)
-        vocab = (
-            postings.groupBy("term")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .withColumn("tlen", F.length("term"))
-        )
-        doc_ids = postings.groupBy("doc_id").agg(F.first("dl").alias("dl"))
+        vocab = _term_df(postings).withColumn("tlen", F.length("term"))
+        doc_ids = _doc_id_set(postings)
         pos = (
             build_positional_postings(docs, id_col, text_col)
             if positional
@@ -2280,10 +2290,7 @@ class SearchIndex:
             doc_ids = doc_ids.cache()
             if pos is not None:
                 pos = pos.cache()
-        idx = cls(postings, stats, vocab=vocab, doc_ids=doc_ids, positional=pos)
-        if not cache:
-            idx._lineage = (docs, id_col, text_col)
-        return idx
+        return cls(postings, stats, vocab=vocab, doc_ids=doc_ids, positional=pos)
 
     def warm(self) -> "SearchIndex":
         """Force materialization now (first search pays nothing)."""
@@ -2296,13 +2303,12 @@ class SearchIndex:
         return self
 
     def save(self, path: str, timings: dict | None = None) -> "SearchIndex":
-        """Persist parquet: postings partitioned by term bucket and sorted
-        by term within each partition file (row-group min/max pruning),
-        the positional postings when this is a positional build (same
-        layout — a phrase probe prunes the same way), then the derived
-        sidecars (vocab / doc_ids / meta — meta carries the per-artifact
-        file fingerprints and is written LAST, so a crash anywhere here
-        leaves a mismatch that :meth:`load` repairs — or, for the
+        """Persist the whole index (overwrite): postings in the
+        :func:`_bucket_laid` layout, the positional postings when this is
+        a positional build (same layout — a phrase probe prunes the same
+        way), then the derived sidecars with ``meta`` LAST
+        (:func:`_write_index_sidecars`; a crash anywhere here leaves a
+        fingerprint mismatch that :meth:`load` repairs — or, for the
         non-derivable positional artifact, loudly disables).
 
         ``timings``: pass a dict to get the per-tier wall seconds recorded
@@ -2311,51 +2317,29 @@ class SearchIndex:
         positional tiers tripled build_save; the split shows which tier
         moves, from the one code path that actually runs).
 
-        Sidecars derive from the IN-MEMORY postings (r9 verdict task #4):
-        one eager checkpoint of the bucket-laid frame feeds the postings
-        write AND both sidecar aggregates, so nothing re-reads the files
-        just written and nothing re-runs the tokenize lineage twice more
-        (the pre-r10 shape re-scanned the written parquet once per
-        sidecar). Meta stats come from the build's full-corpus ``stats``
-        row — n_docs counts zero-token docs exactly like the corpus-scan
-        scorers, so a LOADED index now scores bit-identically to the
-        in-memory build even on corpora with empty documents (the r9
-        advisor's divergence; only the crash-REPAIR path, which has
-        nothing but postings to read, keeps the postings-only stats).
-        At cluster scale the checkpoint holds one copy of the postings in
+        One lazy checkpoint of the laid postings feeds the postings write
+        AND both sidecar aggregates, so nothing re-reads the files just
+        written and nothing re-runs the tokenize lineage. Saving an
+        uncached build shuffles once (see :func:`build_postings`). Meta
+        stats come from the build's full-corpus ``stats`` row — n_docs
+        counts zero-token docs exactly like the corpus-scan scorers, so a
+        LOADED index scores bit-identically to the in-memory build even
+        on corpora with empty documents (only the crash-REPAIR path, which
+        has nothing but postings to read, keeps postings-only stats). At
+        cluster scale the checkpoint holds one copy of the postings in
         executor memory/disk for the duration of the save — the same
         footprint the write shuffle already has."""
         import time as _time
 
         t0 = _time.perf_counter()
-        if self._lineage is not None:
-            # uncached build: re-derive the layout from the corpus with ONE
-            # exchange (bucket-first aggregate) instead of shuffling the
-            # aggregated postings a second time — see _postings_bucket_laid.
-            laid = _postings_bucket_laid(*self._lineage).localCheckpoint(
-                eager=False
-            )
-        else:
-            # loaded / bare / cached postings: lay out the existing frame.
-            # Sorting (bucket, term) — not just term — satisfies the file
-            # writer's required ordering so it inserts no second sort.
-            laid = (
-                self.postings.repartition("bucket")
-                .sortWithinPartitions("bucket", "term")
-                .localCheckpoint(eager=False)
-            )
-        (
-            laid.write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(f"{path}/postings")
-        )
+        laid = _bucket_laid(self.postings).localCheckpoint(eager=False)
+        laid.write.mode("overwrite").partitionBy("bucket").parquet(f"{path}/postings")
         t1 = _time.perf_counter()
         spark = self.postings.sparkSession
         pos_fp = None
         if self.positional is not None:
             (
-                self.positional.repartition("bucket")
-                .sortWithinPartitions("bucket", "term")
+                _bucket_laid(self.positional)
                 .write.mode("overwrite")
                 .partitionBy("bucket")
                 .parquet(f"{path}/positions")
@@ -2364,63 +2348,12 @@ class SearchIndex:
                 spark.read.parquet(f"{path}/positions"), "positions"
             )
         t2 = _time.perf_counter()
-
-        # The two sidecar writes and the postings-fingerprint listing are
-        # INDEPENDENT jobs over the same checkpointed frame / already-written
-        # files — submit them concurrently (Spark sessions schedule jobs
-        # from multiple threads safely; on a cluster the three short jobs
-        # interleave their idle scheduling/IO phases, locally they overlap
-        # task-launch overhead). Crash semantics unchanged: meta — the
-        # commit record — is still written strictly LAST, after every
-        # future has completed.
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _write_doc_ids():
-            (
-                laid.groupBy("doc_id")
-                .agg(F.first("dl").alias("dl"))
-                .write.mode("overwrite")
-                .parquet(f"{path}/doc_ids")
-            )
-
-        def _write_vocab():
-            (
-                laid.groupBy("term")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .withColumn("tlen", F.length("term"))
-                .repartition("tlen")
-                .sortWithinPartitions("tlen", "term")
-                .write.mode("overwrite")
-                .partitionBy("tlen")
-                .parquet(f"{path}/vocab")
-            )
-
-        def _fingerprint():
-            # fingerprint witness stays over the WRITTEN files (a
-            # listing-only read — no data scan): load() validates against
-            # the same listing
-            return _postings_fingerprint(spark.read.parquet(f"{path}/postings"))
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = [
-                pool.submit(_write_doc_ids),
-                pool.submit(_write_vocab),
-                pool.submit(_fingerprint),
-            ]
-            _, _, fingerprint = (f.result() for f in futs)
         if self.stats_scalars is not None:
-            n_docs, sum_dl = self.stats_scalars
+            stats = self.stats_scalars
         else:
             row = self.stats.collect()[0]
-            n_docs, sum_dl = int(row["n_docs"]), int(row["sum_dl"] or 0)
-        _write_index_meta(
-            spark,
-            path,
-            n_docs,
-            sum_dl,
-            fingerprint,
-            pos_fp,
-        )
+            stats = (int(row["n_docs"]), int(row["sum_dl"] or 0))
+        _write_index_sidecars(spark, path, laid, stats, pos_fp)
         laid.unpersist()
         if timings is not None:
             timings["postings_sec"] = round(t1 - t0, 3)
@@ -2445,8 +2378,19 @@ class SearchIndex:
         read, falls back to postings-only stats (a repaired index on a
         corpus with empty docs scores with a slightly smaller n_docs
         until the next save — empty docs never match anything, so only
-        idf norms shift)."""
-        postings = spark.read.parquet(f"{path}/postings")
+        idf norms shift). Raises FileNotFoundError when ``path`` holds no
+        postings yet."""
+        from pyspark.errors import AnalysisException
+
+        try:
+            postings = spark.read.parquet(f"{path}/postings")
+        except AnalysisException as e:
+            # absent, or a first write crashed before its postings commit
+            # (no data file to infer a schema from); any other read error
+            # propagates, so an existing index is never taken for none
+            if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+                raise FileNotFoundError(f"no search index under {path}") from e
+            raise
         fingerprint = _postings_fingerprint(postings)
         meta = _read_index_meta(spark, path)
         if meta is None or meta["fingerprint"] != fingerprint:
@@ -2455,7 +2399,7 @@ class SearchIndex:
             # it matches the postings — disable it (pos_fingerprint=None)
             # rather than risk silently inconsistent phrase results; a
             # positional save() re-enables it.
-            _write_index_sidecars(spark, path, postings, fingerprint=fingerprint)
+            _write_index_sidecars(spark, path, postings)
             meta = _read_index_meta(spark, path)
         positional = None
         if meta.get("pos_fingerprint"):
@@ -2499,12 +2443,10 @@ class SearchIndex:
         (score, doc_id) of the previous page's last hit — deep pagination
         without the from/size prefix re-rank (:func:`_bm25_score_agg`)."""
         if self.stats_scalars is not None:
-            thresh = int(
-                self.postings.sparkSession.conf.get(
-                    "pk.search.probe.windowMaxBytes", str(PROBE_WINDOW_MAX_BYTES)
-                )
-            )
-            if self.index_bytes is not None and self.index_bytes < thresh:
+            if (
+                self.index_bytes is not None
+                and self.index_bytes < PROBE_WINDOW_MAX_BYTES
+            ):
                 n_docs, sum_dl = self.stats_scalars
                 return bm25_from_postings_small(
                     self.postings, n_docs, sum_dl, query, k=k, after=after
@@ -2600,95 +2542,39 @@ class SearchIndex:
             )
         return phrase_search_from_postings(self.positional, phrase, k=k)
 
-    def merge(self, docs: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text") -> "SearchIndex":
-        """Incremental maintenance: tokenize ONLY the new docs, union their
-        postings in, and sum the corpus stats — the daily-ingest path (the
-        reference re-bulk-loads whole indexes instead,
-        insert_owid.py:282-284). Searches over the merged index are
-        bit-identical to a from-scratch rebuild: per-doc tf/dl rows are
-        independent, df recounts over the unioned pruned postings, and the
-        one-row stats are exact integer sums.
+    @classmethod
+    def append_save(cls, spark, path: str, docs: DataFrame,
+                    id_col: str = "doc_id", text_col: str = "text") -> "SearchIndex":
+        """Persisted incremental ingest — the one door a stream of document
+        batches writes through. When ``path`` holds no postings yet (never
+        written, or the first write crashed before its postings commit),
+        the batch becomes the index through :meth:`save`. Otherwise only
+        ``docs`` is tokenized and its postings are APPENDED into the
+        existing layout, then the sidecars refresh INCREMENTALLY: the
+        dedup guard anti-joins the tiny ``doc_ids`` sidecar (never a
+        full-postings distinct) and the batch's rows append to it, the
+        terms dictionary merges old vocab + the batch's term counts
+        (dictionary-sized, not postings-sized), and the meta stats are
+        exact integer sums. Returns the updated loaded index; probes over
+        it equal a from-scratch rebuild of old ∪ new.
 
         Already-indexed doc ids in ``docs`` are DROPPED (first-accepted
         wins — the same policy as the incremental dedup ingest): without
         this, a re-crawled doc would hold two posting rows per term,
-        inflating df and double-counting its scores. The guard anti-joins
-        the ``doc_ids`` sidecar — one row per doc, the tiny table — when
-        the index carries one (loaded or cached builds); only a bare
-        posting frame pays the full-postings distinct fallback."""
-        if self.doc_ids is not None:
-            indexed = self.doc_ids.select(F.col("doc_id").alias(id_col))
-        else:
-            indexed = self.postings.select(
-                F.col("doc_id").alias(id_col)
-            ).distinct()
-        docs = docs.join(indexed, id_col, "left_anti")
-        new_p, new_s = build_postings(docs, id_col, text_col)
-        stats = (
-            self.stats.unionByName(new_s)
-            .agg(
-                F.sum("n_docs").alias("n_docs"),
-                F.sum("sum_dl").alias("sum_dl"),
-            )
-        )
-        doc_ids = None
-        if self.doc_ids is not None:
-            doc_ids = self.doc_ids.unionByName(
-                new_p.groupBy("doc_id").agg(F.first("dl").alias("dl"))
-            )
-        positional = None
-        if self.positional is not None:
-            # per-(doc, term) position rows are independent across docs,
-            # so the positional table unions exactly like the postings
-            # (docs was already dedup-filtered above)
-            positional = self.positional.unionByName(
-                build_positional_postings(docs, id_col, text_col)
-            )
-        vocab = None
-        if self.vocab is not None:
-            # per-term df IS summable here: the anti-join guard above
-            # guarantees old and new doc sets are disjoint, so each (term,
-            # doc) posting row lands in exactly one side — union the old
-            # dictionary with the batch term counts and sum, exactly as
-            # the persisted :meth:`append_save` path does. (r8 shipped
-            # with vocab=None on a wrong "df is not unionable" rationale,
-            # which silently sent merged-index fuzzy/suggest probes back
-            # to the full-postings aggregate the sidecar exists to kill.)
-            vocab = (
-                self.vocab.select("term", "df")
-                .unionByName(
-                    new_p.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-                )
-                .groupBy("term")
-                .agg(F.sum("df").cast("long").alias("df"))
-                .withColumn("tlen", F.length("term"))
-            )
-        return SearchIndex(
-            self.postings.unionByName(new_p), stats, doc_ids=doc_ids,
-            vocab=vocab, positional=positional,
-        )
-
-    @classmethod
-    def append_save(cls, spark, path: str, docs: DataFrame,
-                    id_col: str = "doc_id", text_col: str = "text") -> "SearchIndex":
-        """Persisted incremental ingest: tokenize only ``docs``, APPEND their
-        postings into the existing bucket-partitioned parquet layout at
-        ``path``, then refresh the sidecars INCREMENTALLY — the dedup guard
-        anti-joins the tiny ``doc_ids`` sidecar (never a full-postings
-        distinct), the terms dictionary merges old vocab + the batch's term
-        counts (dictionary-sized, not postings-sized), and the meta stats
-        are exact integer sums. Returns the updated loaded index; probes
-        over it equal a from-scratch rebuild of old ∪ new.
+        inflating df and double-counting its scores.
 
         CRASH-IDEMPOTENT under at-least-once retries (e.g. foreachBatch):
         the load() at entry validates the sidecar fingerprint and repairs
-        a half-finished predecessor, already-indexed doc ids are dropped
-        (first-accepted wins — see :meth:`merge`), the parquet append only
-        becomes visible at job commit, and meta commits LAST — a crash at
-        any point leaves either a no-op retry or a fingerprint mismatch
-        that the next open repairs from the postings."""
-        prev = cls.load(spark, path)  # validates/repairs sidecars
+        a half-finished predecessor, the doc-id guard turns a replayed
+        batch into a no-op, the parquet append only becomes visible at job
+        commit, and meta commits LAST — a crash at any point leaves either
+        a no-op retry or a fingerprint mismatch that the next open repairs
+        from the postings."""
+        try:
+            prev = cls.load(spark, path)  # validates/repairs sidecars
+        except FileNotFoundError:
+            cls.build(docs, id_col, text_col, cache=False).save(path)
+            return cls.load(spark, path)
         if prev.positional is not None:
             raise ValueError(
                 "append_save does not maintain positional layouts: a crash "
@@ -2702,38 +2588,25 @@ class SearchIndex:
             )
         indexed = prev.doc_ids.select(F.col("doc_id").alias(id_col))
         # materialize the filtered batch BEFORE any write: the anti-join
-        # reads {path}/doc_ids, which the refresh below overwrites
+        # reads {path}/doc_ids, which the refresh below appends to
         docs = docs.join(indexed, id_col, "left_anti").localCheckpoint(eager=True)
         new_p, _new_s = build_postings(docs, id_col, text_col)
-        new_p = new_p.localCheckpoint(eager=True)  # 3 consumers below
-        (
-            new_p.repartition("bucket")
-            .sortWithinPartitions("bucket", "term")
-            .write.mode("append")
-            .partitionBy("bucket")
-            .parquet(f"{path}/postings")
-        )
-        new_docs = new_p.groupBy("doc_id").agg(F.first("dl").alias("dl"))
+        new_p = _bucket_laid(new_p).localCheckpoint(eager=True)  # 3 consumers below
+        new_p.write.mode("append").partitionBy("bucket").parquet(f"{path}/postings")
+        new_docs = _doc_id_set(new_p)
         new_docs.write.mode("append").parquet(f"{path}/doc_ids")
         batch = new_docs.agg(
             F.count(F.lit(1)).alias("n"), F.coalesce(F.sum("dl"), F.lit(0)).alias("s")
         ).collect()[0]
         merged_vocab = (
             prev.vocab.select("term", "df")
-            .unionByName(new_p.groupBy("term").agg(F.count(F.lit(1)).alias("df")))
+            .unionByName(_term_df(new_p))
             .groupBy("term")
             .agg(F.sum("df").cast("long").alias("df"))
-            .withColumn("tlen", F.length("term"))
             # materialize before overwriting the directory it reads from
             .localCheckpoint(eager=True)
         )
-        (
-            merged_vocab.repartition("tlen")
-            .sortWithinPartitions("tlen", "term")
-            .write.mode("overwrite")
-            .partitionBy("tlen")
-            .parquet(f"{path}/vocab")
-        )
+        _write_vocab(merged_vocab, path)
         n_docs, sum_dl = prev.stats_scalars
         _write_index_meta(
             spark,

@@ -123,7 +123,6 @@ from pandemic_knowledge_spark.operators.dedup import (
     N_PERM,
     ROWS_PER_BAND,
     connected_components,
-    connected_components_star,
     exact_dedup,
     minhash_lsh_pairs_auto,
     minhash_lsh_pairs_pruned,
@@ -5935,14 +5934,14 @@ def dedup_cluster_reps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @q("dedup_cluster_reps_star", oracle=_CLUSTER_ORACLE)
 def dedup_cluster_reps_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster dedup via alternating large-star/small-star contraction
-    (Kiveris et al., SoCC'14) — the ADVERSARIAL-GRAPH scale path: O(log²)
-    rounds on any component shape, where min-label propagation needs
-    diameter-many rounds. Same oracle as dedup_cluster_reps proves the two
-    algorithms agree on the real near-dup graph."""
+    """Cluster dedup for adversarially shaped duplicate graphs (long
+    chains). Pointer-jumping min-label propagation converges in O(log D)
+    rounds on any component shape, so this runs the same
+    :func:`connected_components` as dedup_cluster_reps, against the same
+    oracle."""
     d = load(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs_auto(d, "doc_id", "text", k=2, threshold=0.5)
-    cc = connected_components_star(pairs)
+    cc = connected_components(pairs)
     return cc.select(F.col("node").alias("doc_id"), F.col("rep").alias("rep_id"))
 
 
@@ -10073,7 +10072,7 @@ BENCH_QUERY_NAMES.extend(
 # (b) rotate the window onto the 50 r8-evidence IOUs declared at r12.
 # 25 new rows + 50 IOUs > 50 slots, so the window takes the new rows
 # first (never-checked rows lead — the standing rule) then the first
-# IOUs in the window_rotate.py proposal order; the displaced IOUs below
+# IOUs in oldest-evidence-first order; the displaced IOUs below
 # are the r14 cohort, declared explicitly per the r12 verdict ("declare
 # the overflow as r14 IOUs"). LATE WAVE: the session then added 17 more
 # never-checked rows (agg_es_scripted_metric_door,
@@ -10187,7 +10186,7 @@ _DRIVER_PRIORITY = [
     # total, the verbatim epoch_millis time-picker range, and arbitrary
     # fixed_interval widths, and terms order/min_doc_count cuts inside
     # two- and three-level nested buckets), then the first 25 of
-    # the 50 r8-stale IOUs declared at r12 (window_rotate.py order). The
+    # the 50 r8-stale IOUs declared at r12 (oldest evidence first). The
     # 25 displaced IOUs are _NEXT_WINDOW_IOUS above. No existing row's
     # oracle changed this round (sql_bool_search/sql_bm25_search_fields
     # gained an `after` parameter that leaves their no-cursor SQL text

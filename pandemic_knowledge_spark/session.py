@@ -16,6 +16,16 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = "32"
 
 
+def default_driver_memory() -> str:
+    """Driver heap default: half the host's physical RAM, floored at 1g.
+    A fixed default larger than the host lets the local-mode JVM grow past
+    physical memory and get killed instead of spilling; half leaves room
+    for the Python workers and the OS page cache. ``PK_DRIVER_MEMORY``
+    overrides it per deployment."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, phys // 2 // (1 << 30))}g"
+
+
 def get_spark(
     app_name: str = "pandemic-knowledge-spark",
     master: str | None = None,
@@ -43,7 +53,7 @@ def get_spark(
         # session; on a real cluster spark-submit owns this).
         .config(
             "spark.driver.memory",
-            os.environ.get("PK_DRIVER_MEMORY", "32g"),
+            os.environ.get("PK_DRIVER_MEMORY") or default_driver_memory(),
         )
         # Whole-stage codegen emits a lot of JIT'd classes; the JVM's default
         # ~240 MB code cache fills after a handful of distinct query shapes,

@@ -203,19 +203,20 @@ def corpus_stream_index(
     text_col: str = "text",
 ):
     """Streaming search-index maintenance: every micro-batch of newly landed
-    documents tokenizes ONCE and appends its postings into the persisted
-    bucket-partitioned index (operators.search.SearchIndex.append_save) —
-    the streaming form of the reference's daily re-bulk-load into ES
-    (insert_owid.py:282-290), except incremental: old documents are never
-    re-tokenized, and a probe over the index equals a from-scratch rebuild
-    at every point in time. foreachBatch is at-least-once; the sink is
-    crash-idempotent anyway (SearchIndex.append_save drops already-indexed
-    doc ids, the parquet append commits atomically at job level, and stats
-    derive from postings — no second artifact to go stale), so a retried
-    micro-batch is a no-op."""
-    from pandemic_knowledge_spark.operators.search import SearchIndex, build_postings
-
+    documents goes through the index's one write door,
+    operators.search.SearchIndex.append_save — the first batch creates the
+    persisted index, every later one tokenizes only its own documents and
+    appends their postings. The streaming form of the reference's daily
+    re-bulk-load into ES (insert_owid.py:282-290), except incremental: old
+    documents are never re-tokenized, and a probe over the index equals a
+    from-scratch rebuild at every point in time. foreachBatch is
+    at-least-once; the sink is crash-idempotent anyway (append_save repairs
+    a half-written predecessor from its postings, drops already-indexed doc
+    ids, and commits its meta record last), so a retried micro-batch is a
+    no-op."""
     from pyspark.sql.types import LongType
+
+    from pandemic_knowledge_spark.operators.search import SearchIndex
 
     schema = StructType(
         [StructField(id_col, LongType()), StructField(text_col, StringType())]
@@ -223,19 +224,10 @@ def corpus_stream_index(
     raw = spark.readStream.schema(schema).parquet(landing_dir)
 
     def _index(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        jvm = batch_df.sparkSession._jvm
-        hconf = batch_df.sparkSession._jsc.hadoopConfiguration()
-        path = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/postings")
-        fs = path.getFileSystem(hconf)
-        if fs.exists(path):
+        if not batch_df.isEmpty():
             SearchIndex.append_save(
                 batch_df.sparkSession, index_dir, batch_df, id_col, text_col
             )
-        else:
-            postings, stats = build_postings(batch_df, id_col, text_col)
-            SearchIndex(postings, stats).save(index_dir)
 
     return (
         raw.writeStream.foreachBatch(_index)

@@ -9,7 +9,6 @@ import pytest
 
 from pandemic_knowledge_spark.operators.dedup import (
     connected_components,
-    connected_components_star,
     minhash_lsh_pairs,
     minhash_lsh_pairs_pruned,
 )
@@ -98,8 +97,8 @@ def _uf_reference(pairs):
 
 
 def test_star_contraction_matches_union_find_on_random_graphs(spark):
-    """Large-star/small-star output == union-find ground truth == min-label
-    propagation, on pseudo-random graphs with mixed component shapes."""
+    """Min-label propagation with pointer jumping == union-find ground
+    truth, on pseudo-random graphs with mixed component shapes."""
     import random
 
     rng = random.Random(7)
@@ -110,23 +109,19 @@ def test_star_contraction_matches_union_find_on_random_graphs(spark):
     pairs = [(a, b) for a, b in pairs if a != b]
     df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
     want = set(_uf_reference(pairs).items())
-    got_star = {
-        (r.node, r.rep) for r in connected_components_star(df).collect()
-    }
-    got_prop = {
+    got = {
         (r.node, r.rep) for r in connected_components(df, max_iter=20).collect()
     }
-    assert got_star == want
-    assert got_prop == want
+    assert got == want
 
 
 def test_star_contraction_converges_on_long_chain(spark):
-    """The adversarial case the default can't take: a 120-node path graph
-    (diameter 119). Min-label needs ~119 rounds; star contraction must
-    finish in O(log^2 n) — well under 20 — with the exact clustering."""
+    """The adversarial shape for plain min-label propagation: a 120-node
+    path graph (diameter 119) would need ~119 rounds; pointer jumping
+    must finish within 20 rounds with the exact clustering."""
     pairs = [(i, i + 1) for i in range(120)]
     df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    got = {(r.node, r.rep) for r in connected_components_star(df, max_iter=20).collect()}
+    got = {(r.node, r.rep) for r in connected_components(df, max_iter=20).collect()}
     assert got == {(i, 0) for i in range(121)}
 
 

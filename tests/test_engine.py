@@ -370,7 +370,7 @@ def test_search_index_parquet_roundtrip_prunes_partitions(spark, tmp_path):
     assert "PartitionFilters: [bucket" in plan.replace("PartitionFilters: [isnotnull(bucket", "PartitionFilters: [bucket") or "bucket#" in plan.split("PartitionFilters")[1].split("]")[0]
 
 
-def test_search_index_probe_tiers_and_eager_stats(spark, tmp_path):
+def test_search_index_probe_tiers_and_eager_stats(spark, tmp_path, monkeypatch):
     """Probe-tier dispatch regression pin (the r4 probe-latency bug):
 
     1. load() derives corpus stats ONCE, eagerly — the probe plan must not
@@ -403,15 +403,14 @@ def test_search_index_probe_tiers_and_eager_stats(spark, tmp_path):
     assert "Window" in plan  # small tier selected for a tiny index
     assert plan.count("Scan parquet") == 1  # stats folded, not re-derived
 
-    spark.conf.set("pk.search.probe.windowMaxBytes", "0")
-    try:
-        big = idx.search(q, k=8)
-        big_plan = big._jdf.queryExecution().executedPlan().toString()
-        assert "Window" not in big_plan  # scale tier: broadcast df, no
-        # posting-row shuffle by term
-        assert big.collect() == small.collect()
-    finally:
-        spark.conf.unset("pk.search.probe.windowMaxBytes")
+    from pandemic_knowledge_spark.operators import search as search_mod
+
+    monkeypatch.setattr(search_mod, "PROBE_WINDOW_MAX_BYTES", 0)
+    big = idx.search(q, k=8)
+    big_plan = big._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in big_plan  # scale tier: broadcast df, no
+    # posting-row shuffle by term
+    assert big.collect() == small.collect()
 
 
 def test_spark_crc32_matches_python_bucket(spark):
@@ -447,21 +446,6 @@ def test_multifield_index_probe_matches_direct(spark):
     postings, stats = build_postings_fields(d, "doc_id", ["title", "body"])
     probed = bm25_fields_from_postings(postings, stats, "virus outbreak", k=5)
     assert probed.collect() == direct.collect()
-
-
-def test_search_index_merge_equals_rebuild(spark):
-    """Merging new docs into an existing index must equal rebuilding from
-    the full corpus — the incremental daily-ingest path."""
-    from pandemic_knowledge_spark.operators.search import SearchIndex
-    from pandemic_knowledge_spark.tables import load
-
-    docs = load(spark, "/root/testdata/sf0.001", "documents")
-    old = docs.filter(F.col("doc_id") % 2 == 0)
-    new = docs.filter(F.col("doc_id") % 2 == 1)
-    merged = SearchIndex.build(old, "doc_id", "text", cache=False).merge(new)
-    full = SearchIndex.build(docs, "doc_id", "text", cache=False)
-    q = "virus outbreak"
-    assert merged.search(q, k=8).collect() == full.search(q, k=8).collect()
 
 
 def test_search_index_append_save_equals_rebuild(spark, tmp_path):

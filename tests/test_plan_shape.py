@@ -857,17 +857,22 @@ def test_fuzzy_match_candidate_join_is_length_equi_join(spark, sf_dir):
 
 
 def test_index_save_laid_frame_is_single_exchange(spark, sf_dir):
-    """The persisted-index save path (uncached build) derives the
-    bucket-laid postings with ONE exchange: the token stream is
-    repartitioned by bucket BEFORE the TF aggregate, so the same shuffle
-    serves the groupBy and the partitionBy("bucket") write (r13; the
-    aggregate-then-repartition shape paid two postings-sized shuffles).
-    The (bucket, term) local sort satisfies the file writer's required
-    ordering, so no writer-inserted second sort appears either."""
-    from pandemic_knowledge_spark.operators.search import _postings_bucket_laid
+    """Saving an uncached build lays the postings out with ONE exchange:
+    build_postings repartitions the token stream by bucket BEFORE the TF
+    aggregate, so the same shuffle serves the groupBy and the save's
+    repartition("bucket") (the aggregate-then-repartition shape paid two
+    postings-sized shuffles). The (bucket, term) local sort satisfies the
+    file writer's required ordering, so no writer-inserted second sort
+    appears either."""
+    from pandemic_knowledge_spark.operators.search import SearchIndex, _bucket_laid
     from pandemic_knowledge_spark.tables import load
 
-    laid = _postings_bucket_laid(load(spark, sf_dir, "documents"), "doc_id", "text")
+    # An identical build cached by an earlier test's Engine would stand in
+    # for this lineage (cache substitution); the shape pinned here is the
+    # uncached one.
+    spark.catalog.clearCache()
+    idx = SearchIndex.build(load(spark, sf_dir, "documents"), cache=False)
+    laid = _bucket_laid(idx.postings)
     plan = laid._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan
     assert re.search(r"Sort \[bucket#\d+ ASC NULLS FIRST, term#\d+ ASC NULLS FIRST\]", plan), plan

@@ -49,7 +49,9 @@ def test_cursor_walk_equals_offset_pages_direct_scan(spark, sf_dir):
     ]
 
 
-def test_cursor_walk_equals_offset_pages_indexed_both_tiers(spark, sf_dir, tmp_path):
+def test_cursor_walk_equals_offset_pages_indexed_both_tiers(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     docs = load(spark, sf_dir, "documents")
     path = str(tmp_path / "sa_idx")
     SearchIndex.build(docs, "doc_id", "text", cache=False).save(path)
@@ -63,21 +65,14 @@ def test_cursor_walk_equals_offset_pages_indexed_both_tiers(spark, sf_dir, tmp_p
     ]
 
     # force the OTHER tier by flipping the window gate
-    old = spark.conf.get("pk.search.probe.windowMaxBytes", None)
-    try:
-        flip = "0" if (idx.index_bytes or 0) < (64 << 20) else str(1 << 60)
-        spark.conf.set("pk.search.probe.windowMaxBytes", flip)
-        got2 = _walk_by_cursor(
-            lambda c: idx.search(QUERY, k=K, after=c).collect(), 3
-        )
-        assert [list(map(tuple, p)) for p in got2] == [
-            list(map(tuple, p)) for p in offset_pages
-        ]
-    finally:
-        if old is None:
-            spark.conf.unset("pk.search.probe.windowMaxBytes")
-        else:
-            spark.conf.set("pk.search.probe.windowMaxBytes", old)
+    import pandemic_knowledge_spark.operators.search as search_mod
+
+    small = (idx.index_bytes or 0) < search_mod.PROBE_WINDOW_MAX_BYTES
+    monkeypatch.setattr(search_mod, "PROBE_WINDOW_MAX_BYTES", 0 if small else 1 << 60)
+    got2 = _walk_by_cursor(lambda c: idx.search(QUERY, k=K, after=c).collect(), 3)
+    assert [list(map(tuple, p)) for p in got2] == [
+        list(map(tuple, p)) for p in offset_pages
+    ]
 
 
 def test_engine_facade_pages_past_its_own_search(spark, sf_dir):

@@ -150,63 +150,6 @@ def test_suggest_probe_plan_prunes_tlen_partitions(spark, tmp_path):
         assert "tlen" in part
 
 
-def test_merge_guard_reads_doc_ids_sidecar(spark, tmp_path):
-    """merge() on a loaded index anti-joins the doc_ids sidecar (one row
-    per doc), never a full-postings distinct (r7 'What's wrong #2')."""
-    docs, path = _saved(spark, tmp_path)
-    idx = SearchIndex.load(spark, path)
-    new = docs.withColumn("doc_id", F.col("doc_id") + 1_000_000)
-    merged = idx.merge(new)
-    plan = merged.postings._jdf.queryExecution().optimizedPlan().toString()
-    import re
-
-    # guard source: the 2-column (doc_id, dl) sidecar relation...
-    assert re.search(r"Relation \[doc_id#\d+L,dl#\d+\] parquet", plan), plan
-    # ...and never a distinct-aggregate over the postings relation
-    assert "Join LeftAnti" in plan
-    assert not re.search(r"Aggregate \[doc_id#\d+L\], \[doc_id#\d+L\]", plan), plan
-    # the merged in-memory index carries a doc_ids union for the NEXT merge
-    assert merged.doc_ids is not None
-    assert merged.doc_ids.count() == 2 * idx.doc_ids.count()
-
-
-def test_merge_carries_vocab_and_probes_skip_postings(spark, tmp_path):
-    """In-memory merge() keeps the terms dictionary alive (r8 verdict
-    'What's wrong #1'): the anti-join guard makes old/new doc sets
-    disjoint, so per-term df sums exactly as the persisted append_save
-    path — the merged dictionary equals a from-scratch rebuild's, the
-    merged suggest/fuzzy probes return rebuild-identical rows, and the
-    suggest plan still reads dictionary slivers, NOT the full-postings
-    aggregate the sidecar exists to kill."""
-    docs = load(spark, SF_DIR, "documents")
-    old = docs.filter(F.col("doc_id") % 2 == 0)
-    new = docs.filter(F.col("doc_id") % 2 == 1)
-    path = str(tmp_path / "idx_half")
-    SearchIndex.build(old, "doc_id", "text", cache=False).save(path)
-    merged = SearchIndex.load(spark, path).merge(new)
-    assert merged.vocab is not None
-
-    rebuilt = SearchIndex.build(docs, "doc_id", "text", cache=False)
-    assert sorted(map(tuple, merged.vocab.select("term", "df").collect())) == \
-        sorted(map(tuple, rebuilt.vocab.select("term", "df").collect()))
-    assert (
-        merged.suggest("strean", max_edits=2, prefix_length=1, k=5).collect()
-        == rebuilt.suggest("strean", max_edits=2, prefix_length=1, k=5).collect()
-    )
-    assert (
-        merged.fuzzy_search("sparc strean", k=10).collect()
-        == rebuilt.fuzzy_search("sparc strean", k=10).collect()
-    )
-    # plan gate: the merged suggest probe expands against the persisted
-    # dictionary + the batch's term counts — never the postings layout
-    with _full_plan_paths(spark):
-        plan = (
-            merged.suggest("strean", max_edits=2, prefix_length=1, k=5)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-    assert "/vocab" in plan and "/postings" not in plan
-
-
 def test_load_repairs_sidecars_after_simulated_crash(spark, tmp_path):
     """Crash between a postings append and its sidecar refresh (the only
     window where sidecars can go stale): simulate it by appending postings
@@ -258,6 +201,27 @@ def test_append_save_refreshes_sidecars_incrementally(spark, tmp_path):
         updated.suggest(st).collect()
         == term_suggest(docs, "doc_id", "text", st).collect()
     )
+
+
+def test_append_save_creates_index_where_no_postings_committed(spark, tmp_path):
+    """append_save is the index's one door for a stream: on a path with no
+    committed postings — absent, or left by a first write that crashed
+    before its postings commit — it creates the index, equal to a save of
+    the batch. load() of such a path raises FileNotFoundError."""
+    import pytest
+
+    docs = load(spark, SF_DIR, "documents")
+    path = str(tmp_path / "fresh")
+    with pytest.raises(FileNotFoundError):
+        SearchIndex.load(spark, path)
+    os.makedirs(f"{path}/postings/_temporary/0")
+    created = SearchIndex.append_save(spark, path, docs)
+    full = str(tmp_path / "full")
+    SearchIndex.build(docs, "doc_id", "text", cache=False).save(full)
+    want = SearchIndex.load(spark, full)
+    assert created.stats_scalars == want.stats_scalars
+    q = "virus outbreak"
+    assert created.search(q, k=8).collect() == want.search(q, k=8).collect()
 
 
 def test_load_legacy_postings_only_layout(spark, tmp_path):
@@ -319,16 +283,7 @@ def test_positional_tier_roundtrip_and_consistency_guards(spark, tmp_path):
         idx.phrase_search(ph, k=10).collect()
         == phrase_search(docs, "doc_id", "text", ph, k=10).collect()
     )
-    # in-memory merge keeps the positional tier and equals a full rebuild
-    old = docs.filter(F.col("doc_id") % 2 == 0)
     new = docs.filter(F.col("doc_id") % 2 == 1)
-    merged = SearchIndex.build(
-        old, "doc_id", "text", cache=False, positional=True
-    ).merge(new)
-    assert (
-        merged.phrase_search(ph, k=10).collect()
-        == phrase_search(docs, "doc_id", "text", ph, k=10).collect()
-    )
 
     # (3) append_save refuses the layout
     with pytest.raises(ValueError, match="positional"):

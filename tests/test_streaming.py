@@ -243,6 +243,44 @@ def test_corpus_stream_index_equals_batch_build(spark, tmp_path):
     )
 
 
+def test_corpus_stream_index_first_batch_crash_is_idempotent(spark, sf_dir, tmp_path):
+    """A crash inside the index stream's FIRST micro-batch, after the
+    postings commit and before the meta commit: the index's meta record
+    and the stream's commit of batch 0 are both missing, so the restarted
+    query re-runs batch 0 through append_save. The retry must repair the
+    half-created index rather than duplicate it — probes equal a batch
+    build over the same docs and doc_ids holds each id once."""
+    import shutil
+
+    from pandemic_knowledge_spark.operators.search import SearchIndex
+    from pandemic_knowledge_spark.streaming.jobs import corpus_stream_index
+    from pandemic_knowledge_spark.tables import load
+
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    landing, idx, ckpt = (str(tmp_path / d) for d in ("landing", "idx", "ckpt"))
+    docs.write.parquet(landing)
+    corpus_stream_index(spark, landing, idx, ckpt).awaitTermination(120)
+    assert os.path.isdir(f"{idx}/meta")
+
+    shutil.rmtree(f"{idx}/meta")
+    for name in ("0", ".0.crc"):
+        if os.path.exists(f"{ckpt}/commits/{name}"):
+            os.remove(f"{ckpt}/commits/{name}")
+    corpus_stream_index(spark, landing, idx, ckpt).awaitTermination(120)
+    assert os.path.exists(f"{ckpt}/commits/0")  # batch 0 re-ran and committed
+
+    streamed = SearchIndex.load(spark, idx)
+    full = SearchIndex.build(docs, "doc_id", "text", cache=False)
+    for query in ("virus outbreak", "spark join stream window"):
+        assert (
+            streamed.search(query, k=8).collect()
+            == full.search(query, k=8).collect()
+        )
+    ids = [r.doc_id for r in spark.read.parquet(f"{idx}/doc_ids").collect()]
+    assert len(ids) == len(set(ids))
+    assert sorted(ids) == sorted(r.doc_id for r in full.doc_ids.collect())
+
+
 def test_atomic_table_on_hadoop_scheme(spark, events_batch, tmp_path):
     """W3 on the reference's own storage CLASS: the whole AtomicTable
     protocol (mkdir, publish, pointer swap, read, GC, sequence advance)
