@@ -94,6 +94,7 @@ groupBy shuffle, then a TakeOrderedAndProject top-k.
 
 from __future__ import annotations
 
+import operator
 import re
 from functools import reduce
 
@@ -123,6 +124,7 @@ from pandemic_knowledge_spark.operators.search import (
 _SCORED_KEYS = ("match", "phrase", "prefix", "fuzzy", "constant_score")
 _MEMBER_KEYS = ("match", "phrase", "prefix", "term", "range", "exists", "bool")
 _RANGE_OPS = ("gte", "gt", "lte", "lt")
+_RANGE_CMP = {"gte": operator.ge, "gt": operator.gt, "lte": operator.le, "lt": operator.lt}
 
 
 def _range_parts(clause: dict) -> tuple[str, dict]:
@@ -272,12 +274,10 @@ def _member_pred(toks, clause: dict):
     key = _clause_key(clause, _MEMBER_KEYS)
     if key == "range":
         field, bounds = _range_parts(clause)
-        col, pred = F.col(field), F.lit(True)
-        for op, v in sorted(bounds.items()):
-            cmp = {"gte": col >= F.lit(v), "gt": col > F.lit(v),
-                   "lte": col <= F.lit(v), "lt": col < F.lit(v)}[op]
-            pred = pred & cmp
-        return pred
+        col = F.col(field)
+        return reduce(lambda a, b: a & b, (
+            _RANGE_CMP[op](col, F.lit(v)) for op, v in sorted(bounds.items())
+        ))
     if key == "exists":
         return F.col(clause["exists"]["field"]).isNotNull()
     if key == "bool":

@@ -981,6 +981,29 @@ def ngram_containment_pairs(
     )
 
 
+def union_find_reps(pairs) -> dict:
+    """Driver-side twin of :func:`connected_components` for a pair list
+    small enough to collect: iterable of (a, b) → {node: rep}, rep = min
+    node id of the component (the same labelling). Union links the larger
+    root under the smaller, so every root is its set's min; find halves
+    paths as it walks."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
 def connected_components(
     pairs: DataFrame,
     src: str = "doc_a",

@@ -691,6 +691,9 @@ def _range_spec(spec: dict, path: str) -> dict:
       epoch millis; the engine's date columns are timestamps, session TZ
       UTC) — the comparison then pushes down as a typed literal instead
       of failing BIGINT-vs-TIMESTAMP mid-analysis.
+    - Every resolved timestamp bound stays UTC-AWARE: PySpark reads a
+      naive datetime literal as the driver's local time, so a naive
+      bound would shift by the driver's UTC offset.
     - ``format: strict_date_optional_time`` (the other Kibana spelling):
       ISO strings pass through (Spark's ANSI string→timestamp cast).
     - ANCHORED date math (``2026-01-01||+1M/d``) resolves driver-side
@@ -722,6 +725,7 @@ def _range_spec(spec: dict, path: str) -> dict:
                   "— resolve it client-side to a concrete instant")
         if isinstance(v, str) and "||" in v:
             new_op, v = _anchored_date_math(v, op, fmt, path)
+            v = v.replace(tzinfo=datetime.timezone.utc)
             if new_op != op and new_op in spec:
                 _fail(f"{path}.{op}",
                       f"rounded {op} rewrites to {new_op}, which the "
@@ -747,7 +751,7 @@ def _range_spec(spec: dict, path: str) -> dict:
                                       "number")
             v = datetime.datetime.fromtimestamp(
                 float(v) / 1000.0, tz=datetime.timezone.utc
-            ).replace(tzinfo=None)
+            )
         bounds[op] = v
     if not bounds:
         _fail(path, "range needs at least one of gte/gt/lte/lt")

@@ -66,6 +66,10 @@ def pagerank(edges: DataFrame, iters: int = ITERS) -> DataFrame:
     it they flow through planner-chosen shuffle joins instead: the
     integer arithmetic is partition-order-independent, so results are
     bit-identical in both regimes.
+
+    Side effect at construction: choosing the regime runs ``nodes.count()``
+    (one Spark job, which also materializes the node checkpoint), so
+    merely building this frame, e.g. to ``explain`` it, executes work.
     """
     edges = edges.select("src", "dst", "w")
     outw = edges.groupBy("src").agg(F.sum("w").alias("w_out"))

@@ -243,6 +243,11 @@ def correlation_pairs_topk_pruned(
     Sub-cap buckets emit exact C(c,2) ordered pairs grouped (sorted
     collect per bucket + nested array transform — the winnow shape), so
     candidate rows never pass through a posting self-join.
+
+    Side effects at construction: the adaptive width (``n_proj=None``)
+    runs a key count, and the signature frame is checkpointed EAGERLY, so
+    building this frame (plan capture, ``explain``) runs the daily rollup
+    and the whole signature pass before anything is collected.
     """
     from pandemic_knowledge_spark.functions.text import md5_int
 

@@ -26,6 +26,16 @@ OWID_LANDING_SCHEMA = StructType(
     [StructField(h, StringType()) for cands in OWID_COLUMNS.values() for h in cands]
 )
 
+BATCH_CLUSTER_MAX_PAIRS = 1000
+"""Within-batch near-dup pair count up to which corpus_stream_ingest_dedup
+clusters on the driver (union-find over the collected pairs) instead of
+running connected_components, and hence the most ids its IN filter drops.
+connected_components costs tens of Spark jobs whatever the graph size
+(about 6 s for an 18-doc batch on 4 local cores); the driver arm costs
+about 0.4 ms of py4j per dropped id in the IN filter, which at 1000 ids
+matches the fixed cost of an anti-join against a local frame. Larger
+batches (an availableNow backlog drain) take connected_components."""
+
 
 def owid_stream_ingest(
     spark: SparkSession,
@@ -129,9 +139,19 @@ def corpus_stream_ingest_dedup(
          nothing: candidates come from band-bucket equi-joins only. At
          scale, lay the store out partitioned by (band, bkey) so the probe
          prunes to matching buckets instead of scanning all signatures.
-      2. within-batch: surviving docs pair among themselves and collapse
-         to clusters (connected_components); only each cluster's min-id
-         representative survives.
+         The survivors are materialized right here, once: the pairing,
+         the corpus semi-join and the store append all read that copy,
+         so the probe runs once per micro-batch.
+      2. within-batch: surviving docs pair among themselves
+         (pairs_from_base over that one copy) and collapse to clusters;
+         only each cluster's min-id representative survives. One bounded
+         collect reads at most ``BATCH_CLUSTER_MAX_PAIRS`` + 1 pairs. If
+         that is all of them, the driver clusters them
+         (dedup.union_find_reps) and the dropped ids leave through an IN
+         filter. A batch with more pairs (an availableNow backlog drain)
+         runs connected_components on the same pair frame and drops its
+         non-reps with an anti-join. Both arms label a cluster by its min
+         id, so they accept the same docs.
       3. survivors append to the corpus table AND their signatures to the
          store — the store is the job's only state, readable by any other
          job (it IS the batch dedup structure, shared, not an opaque
@@ -151,6 +171,7 @@ def corpus_stream_ingest_dedup(
         minhash_base,
         minhash_pairs_between,
         pairs_from_base,
+        union_find_reps,
     )
 
     reader = spark.readStream.schema(doc_schema)
@@ -174,16 +195,31 @@ def corpus_stream_ingest_dedup(
         # disable cross-history dedup and admit duplicates into the corpus.
         jvm_path = spark._jvm.org.apache.hadoop.fs.Path(sig_store)
         fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-        old = spark.read.parquet(sig_store) if fs.exists(jvm_path) else None
-        if old is not None:
+        if fs.exists(jvm_path):
+            old = spark.read.parquet(sig_store)
             hit = minhash_pairs_between(base, old, threshold).select("doc_a").distinct()
-            base = base.join(hit, base["doc_id"] == hit["doc_a"], "left_anti")
-        pairs = pairs_from_base(base, threshold)
-        dropped = connected_components(pairs).filter(F.col("node") != F.col("rep"))
-        base = base.join(dropped, base["doc_id"] == dropped["node"], "left_anti")
-        keep = base.select("doc_id").localCheckpoint(eager=True)
-        accepted = docs.join(keep, "doc_id", "left_semi").unionByName(unsigned)
-        accepted.write.mode("append").parquet(out_path)
+            # Materialized here, so the pairing, the corpus semi-join and the
+            # store append below read blocks and the probe runs once.
+            base = base.join(
+                hit, base["doc_id"] == hit["doc_a"], "left_anti"
+            ).localCheckpoint(eager=True)
+        pairs = pairs_from_base(base, threshold).select("doc_a", "doc_b")
+        head = pairs.limit(BATCH_CLUSTER_MAX_PAIRS + 1).collect()
+        if len(head) <= BATCH_CLUSTER_MAX_PAIRS:
+            reps = union_find_reps((r.doc_a, r.doc_b) for r in head)
+            dropped = [n for n, rep in reps.items() if n != rep]
+            if dropped:
+                base = base.filter(~F.col("doc_id").isin(dropped))
+        else:
+            # Re-derives the pairs from the materialized base: one band
+            # join, small beside its label-propagation rounds.
+            cc = connected_components(pairs)
+            dropped = cc.filter(F.col("node") != F.col("rep"))
+            base = base.join(
+                dropped, base["doc_id"] == dropped["node"], "left_anti"
+            ).localCheckpoint(eager=True)
+        accepted = docs.join(base.select("doc_id"), "doc_id", "left_semi")
+        accepted.unionByName(unsigned).write.mode("append").parquet(out_path)
         base.write.mode("append").parquet(sig_store)
 
     writer = stream.writeStream.foreachBatch(_ingest).option(

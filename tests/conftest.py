@@ -23,6 +23,9 @@ def sf_dir():
     return SF_DIR
 
 
+_SLOW_MARKED = pytest.StashKey[int]()
+
+
 def pytest_collection_modifyitems(config, items):
     """Two-tier suite (r14, r13 verdict item 1a: the driver's default
     `pytest tests/ -x -q` must finish inside its verification window; the
@@ -37,6 +40,19 @@ def pytest_collection_modifyitems(config, items):
         slow_ids = {
             line.strip() for line in f if line.strip() and not line.startswith("#")
         }
-    for item in items:
-        if item.nodeid in slow_ids:
-            item.add_marker(pytest.mark.slow)
+    marked = [item for item in items if item.nodeid in slow_ids]
+    for item in marked:
+        item.add_marker(pytest.mark.slow)
+    config.stash[_SLOW_MARKED] = len(marked)
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """Make the slow tier visible even under -q: how many collected tests
+    tests/slow_tests.txt marks, and how to run them. Reports only; which
+    tests run is up to the -m expression (pytest.ini: ``-m "not slow"``)."""
+    n = config.stash.get(_SLOW_MARKED, 0)
+    if n:
+        terminalreporter.write_line(
+            f"slow tier: {n} collected tests are marked slow by tests/slow_tests.txt "
+            f"(-m expression: {config.option.markexpr!r}); `-m slow` runs them"
+        )

@@ -115,6 +115,38 @@ def test_star_contraction_matches_union_find_on_random_graphs(spark):
     assert got == want
 
 
+def test_union_find_reps_labels_components_by_min_id():
+    """The driver-side twin of connected_components labels every node with
+    its component's min id: the chain test's expected labels, a path
+    listed from its far end, and random graphs against a BFS over the
+    adjacency lists."""
+    import random
+
+    from pandemic_knowledge_spark.operators.dedup import union_find_reps
+
+    assert union_find_reps(
+        [(2, 5), (5, 9), (20, 21), (9, 11), (40, 41), (41, 42), (42, 43)]
+    ) == {2: 2, 5: 2, 9: 2, 11: 2, 20: 20, 21: 20, 40: 40, 41: 40, 42: 40, 43: 40}
+    assert union_find_reps([(i + 1, i) for i in range(120)]) == {i: 0 for i in range(121)}
+    assert union_find_reps([]) == {}
+    rng = random.Random(11)
+    for _ in range(20):
+        pairs = [(rng.randrange(60), rng.randrange(60)) for _ in range(50)]
+        adj = {}
+        for a, b in pairs:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+        want = {}
+        for start in adj:
+            seen, todo = {start}, [start]
+            while todo:
+                for m in adj[todo.pop()] - seen:
+                    seen.add(m)
+                    todo.append(m)
+            want[start] = min(seen)
+        assert union_find_reps(pairs) == want
+
+
 def test_star_contraction_converges_on_long_chain(spark):
     """The adversarial shape for plain min-label propagation: a 120-node
     path graph (diameter 119) would need ~119 rounds; pointer jumping

@@ -270,6 +270,43 @@ def test_es_aggs_terms_histogram_range(spark):
     assert ranges == {"*-10.0": 1, "10.0-30.0": 2, "30.0-*": 1}
 
 
+def test_epoch_millis_range_ignores_driver_time_zone(spark, sf_dir):
+    """Range bounds resolved driver-side (epoch_millis numbers, anchored
+    date math) are UTC instants whatever the driver's TZ: a daily
+    date_histogram planned under TZ=America/New_York returns the rows the
+    UTC-planned one does. The frames are collected after TZ is restored,
+    because collect renders timestamps in the driver's local time."""
+    import os
+    import time
+
+    from pandemic_knowledge_spark.operators.esdsl import es_aggs
+
+    ev = load(spark, sf_dir, "events")
+    hist = {"d": {"date_histogram": {"field": "ts", "calendar_interval": "day"}}}
+    bodies = [
+        # 2024-01-02T00:00Z .. 2024-01-04T00:00Z
+        {"query": {"range": {"ts": {"gte": 1704153600000, "lt": 1704326400000,
+                                    "format": "epoch_millis"}}}, "aggs": hist},
+        {"query": {"range": {"ts": {"gte": "1704067200000||+1d",
+                                    "lt": "1704067200000||+3d",
+                                    "format": "epoch_millis"}}}, "aggs": hist},
+    ]
+    want = [rows(es_aggs(ev, b)["d"]) for b in bodies]
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        planned = [es_aggs(ev, b)["d"] for b in bodies]
+    finally:
+        if old_tz is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    assert want[0] and want[0] == want[1]
+    assert [rows(df) for df in planned] == want
+
+
 def test_es_aggs_filter_semantics(spark):
     from pandemic_knowledge_spark.operators.esdsl import es_aggs
 
