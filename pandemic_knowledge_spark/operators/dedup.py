@@ -244,7 +244,7 @@ def band_rows_rowlocal(
     # than the duplicated chain — 1.29→1.39 s — and was reverted; the
     # bare-explode single-column pin added later in the round measured
     # ~17% FASTER than the inline form on this subplan, 2.70→2.23 s noop
-    # median of 6, every round consistent. See OPTIMIZATION_r13.md.)
+    # median of 6, every round consistent.)
     from pandemic_knowledge_spark.functions.pinning import pin
 
     with_hs = pin(
@@ -360,9 +360,9 @@ def minhash_lsh_pairs(
     persisted store). Measured locally, the single-pass form is faster and
     more run-to-run stable — so :func:`minhash_lsh_pairs_auto` (the
     entry-point callers should use) picks THIS form below the
-    ``prunedThreshold`` corpus size and the pruned form above it; the
-    incremental path (streaming.jobs.corpus_stream_ingest_dedup) already
-    IS the store-probing form.
+    :data:`PRUNED_THRESHOLD_BYTES` corpus size and the pruned form above
+    it; the incremental path (streaming.jobs.corpus_stream_ingest_dedup)
+    already IS the store-probing form.
     """
     # Eager localCheckpoint, not cache(): same winnow/substrings discipline —
     # the base (shingle scan + one groupBy) has three consumers (band rows +
@@ -456,8 +456,7 @@ def minhash_lsh_pairs_pruned(
     return _verify_pairs(cand, hs, hs, threshold)
 
 
-PRUNED_THRESHOLD_CONF = "spark.pandemic_knowledge.dedup.prunedThresholdBytes"
-PRUNED_THRESHOLD_DEFAULT = 1 << 30  # 1 GiB of corpus ≈ the page-cache frontier
+PRUNED_THRESHOLD_BYTES = 1 << 30  # 1 GiB of corpus ≈ the page-cache frontier
 
 
 def minhash_lsh_pairs_auto(
@@ -468,23 +467,22 @@ def minhash_lsh_pairs_auto(
     threshold: float = 0.5,
     scale: bool | None = None,
 ) -> DataFrame:
-    """MinHash+LSH near-dup pairs with the scale path config-gated.
+    """MinHash+LSH near-dup pairs with the scale path size-gated.
 
     ``scale=True`` forces the candidate-pruned two-pass form
     (:func:`minhash_lsh_pairs_pruned` — signatures-only first shuffle),
     ``scale=False`` forces the single-pass form (fastest when the corpus
     fits executor page cache). ``scale=None`` (default) auto-selects: corpora
-    whose Catalyst size estimate exceeds
-    ``spark.pandemic_knowledge.dedup.prunedThresholdBytes`` (default 1 GiB)
-    take the pruned path, because there the corpus-wide collect_set shuffle
-    of the single-pass form is the dominant cost. The estimate is the
-    optimized plan's ``sizeInBytes`` — file-size metadata, no job, no scan
-    (a sizing count() measured ~0.2 s per call on the bench, pure overhead
-    for small corpora)."""
+    whose Catalyst size estimate reaches :data:`PRUNED_THRESHOLD_BYTES`
+    (1 GiB) take the pruned path, because there the corpus-wide
+    collect_set shuffle of the single-pass form is the dominant cost. The
+    estimate is the optimized plan's ``sizeInBytes`` — file-size metadata,
+    no job, no scan (a sizing count() measured ~0.2 s per call on the
+    bench, pure overhead for small corpora)."""
     if scale is None:
         from pandemic_knowledge_spark.operators.dispatch import size_gated
 
-        scale = size_gated(docs, PRUNED_THRESHOLD_CONF, PRUNED_THRESHOLD_DEFAULT)
+        scale = size_gated(docs, PRUNED_THRESHOLD_BYTES)
     fn = minhash_lsh_pairs_pruned if scale else minhash_lsh_pairs
     return fn(docs, id_col, text_col, k=k, threshold=threshold)
 
@@ -579,8 +577,8 @@ def winnow_fingerprints(
     # time per row (functions.pinning). _h needs only a plain alias — its
     # consumers (size + winnow's w shifted slices) are sibling PROJECTION
     # references, which CollapseProject already refuses to inline, and no
-    # predicate crosses it (an _h pin measured as pure Generate overhead:
-    # r13 micro-bench, OPTIMIZATION_r13.md wave 3).
+    # predicate crosses it (an _h pin measured as pure Generate overhead
+    # in a micro-benchmark of this subplan).
     base = pin(
         docs.select(F.col(id_col), F.col(text_col)),
         _toks=tokenize(F.col(text_col)),
@@ -759,20 +757,15 @@ def ngram_intersections(
             size_estimate,
         )
 
-        thresh = int(
-            docs.sparkSession.conf.get(
-                PRUNED_THRESHOLD_CONF, str(PRUNED_THRESHOLD_DEFAULT)
-            )
-        )
         est = size_estimate(docs)
-        if est != UNKNOWN_SIZE and est >= thresh:
+        if est != UNKNOWN_SIZE and est >= PRUNED_THRESHOLD_BYTES:
             raise ValueError(
                 f"{op_name}: corpus size estimate {est} B >= "
-                f"{PRUNED_THRESHOLD_CONF}={thresh} B. Exact pairwise "
-                "intersection is quadratic in per-shingle doc frequency; at "
-                "this scale use minhash_lsh_pairs_auto (the approximate "
-                "scale tier), raise the threshold conf, or pass "
-                "allow_large=True to accept the quadratic cost explicitly."
+                f"PRUNED_THRESHOLD_BYTES={PRUNED_THRESHOLD_BYTES} B. Exact "
+                "pairwise intersection is quadratic in per-shingle doc "
+                "frequency; at this scale use minhash_lsh_pairs_auto (the "
+                "approximate scale tier), or pass allow_large=True to "
+                "accept the quadratic cost explicitly."
             )
     # The shingle sketch is CPU-bound and the checkpoint pins its
     # partitioning for every downstream stage — rebalance a

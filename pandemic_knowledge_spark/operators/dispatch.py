@@ -13,7 +13,8 @@ frames take the scale path there; the recall-lossy correlation gate
 instead treats unknown as small (driver-materialized frames ARE small,
 and losing true pairs silently is the worse failure). Pass parquet-backed
 input (or the operator's explicit ``scale=``/``skew_safe=`` override)
-when the dispatch choice matters.
+when the dispatch choice matters. Thresholds are module constants of
+each operator, read at call time.
 """
 
 from __future__ import annotations
@@ -31,9 +32,7 @@ def size_estimate(df: DataFrame) -> int:
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
-def size_gated(df: DataFrame, conf_key: str, default_bytes: int) -> bool:
-    """True when ``df``'s Catalyst size estimate reaches the threshold in
-    session conf ``conf_key`` (falling back to ``default_bytes``) — i.e.
-    the caller should take its scale tier."""
-    thresh = int(df.sparkSession.conf.get(conf_key, str(default_bytes)))
-    return size_estimate(df) >= thresh
+def size_gated(df: DataFrame, threshold_bytes: int) -> bool:
+    """True when ``df``'s Catalyst size estimate reaches ``threshold_bytes``
+    — i.e. the caller should take its scale tier."""
+    return size_estimate(df) >= threshold_bytes

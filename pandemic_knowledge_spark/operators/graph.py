@@ -37,9 +37,6 @@ DAMP_NUM = 85       # damping 0.85 as an integer rational
 DAMP_DEN = 100
 ITERS = 5
 
-PAGERANK_BCAST_MAX_NODES_CONF = (
-    "spark.pandemic_knowledge.graph.pagerankBroadcastMaxNodes"
-)
 # Node tables broadcast per round (ranks into the edge join, recv into the
 # rank rebuild) are (long, long) rows — ~8M rows is ~130 MB framed, well
 # inside the driver/executor comfort band and far under the 8 GB /
@@ -48,7 +45,7 @@ PAGERANK_BCAST_MAX_NODES_CONF = (
 # 100 TB-node graph must never be collected to the driver — the same rule
 # the connected-components loop applies to its label table
 # (operators.dedup: pointer jumping never broadcasts labels).
-PAGERANK_BCAST_MAX_NODES_DEFAULT = 8_000_000
+PAGERANK_BCAST_MAX_NODES = 8_000_000
 
 
 def pagerank(edges: DataFrame, iters: int = ITERS) -> DataFrame:
@@ -60,9 +57,9 @@ def pagerank(edges: DataFrame, iters: int = ITERS) -> DataFrame:
     contribute nothing — their mass is dropped, not redistributed (the
     usual simplification; symmetrize the graph if you need conservation).
 
-    Scale regimes: up to ``spark.pandemic_knowledge.graph.
-    pagerankBroadcastMaxNodes`` (default 8M) nodes, the per-round rank and
-    receive tables broadcast — zero node-table shuffles per round. Above
+    Scale regimes: up to :data:`PAGERANK_BCAST_MAX_NODES` (8M) nodes, the
+    per-round rank and receive tables broadcast — zero node-table
+    shuffles per round. Above
     it they flow through planner-chosen shuffle joins instead: the
     integer arithmetic is partition-order-independent, so results are
     bit-identical in both regimes.
@@ -103,12 +100,7 @@ def pagerank(edges: DataFrame, iters: int = ITERS) -> DataFrame:
     # regime) broadcast as before (r13: 10 SMJ → 0); over it, no
     # broadcast hints — the planner's shuffle joins are slower per round
     # but never stage a graph-sized table through the driver.
-    max_bcast = int(
-        edges.sparkSession.conf.get(
-            PAGERANK_BCAST_MAX_NODES_CONF, str(PAGERANK_BCAST_MAX_NODES_DEFAULT)
-        )
-    )
-    small_nodes = nodes.count() <= max_bcast
+    small_nodes = nodes.count() <= PAGERANK_BCAST_MAX_NODES
     _b = F.broadcast if small_nodes else (lambda df: df)
     for it in range(1, iters + 1):
         contrib = (

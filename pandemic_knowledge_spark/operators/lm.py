@@ -73,7 +73,7 @@ def lm_score(
     # RAW (doc_id, a, b) rows while the model side's clone is
     # column-pruned (doc_id dropped) and gains the build-side isnotnull
     # filters, so the exchanges are not canonically equal and AQE stage
-    # reuse cannot fire (r14 plan evidence: plans/r14/lm_score_docs).
+    # reuse cannot fire (the executed plan shows two bigram exchanges).
     # Every sharing form costs more than the scan it saves: a
     # localCheckpoint stores a corpus-sized copy (r13, measured worse); a
     # (doc_id, a, b) pre-aggregate shares the scan but routes every

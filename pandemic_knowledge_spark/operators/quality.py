@@ -192,9 +192,8 @@ def quality_scores(
     The features array is pinned (functions.pinning): written inline, the
     n_features > 0 filter pushed below the projection and re-ran the full
     regexp + bigram chain per row in the Filter, and n_features / score
-    each inlined it again — 3 evaluations per row in the r13 before plan
-    (`plans/r13/text_quality_classifier_before.txt`); pinned it runs
-    once."""
+    each inlined it again — 3 evaluations per row in the unpinned
+    physical plan; pinned it runs once."""
     from pandemic_knowledge_spark.functions.pinning import pin
 
     base = pin(

@@ -468,8 +468,7 @@ def grouped_percentiles_exact(
     return out
 
 
-PCT_THRESHOLD_CONF = "spark.pandemic_knowledge.ranks.percentileRanksThresholdBytes"
-PCT_THRESHOLD_DEFAULT = 1 << 30
+PCT_THRESHOLD_BYTES = 1 << 30
 
 
 def grouped_percentiles_auto(
@@ -488,7 +487,7 @@ def grouped_percentiles_auto(
     reducer-side merged map holds every distinct value of the group. The
     gate proxies that risk with the input size estimate (cardinality is
     not statically knowable), same convention as the other tier
-    dispatchers: below ``PCT_THRESHOLD_CONF`` (default 1 GiB) the builtin
+    dispatchers: below :data:`PCT_THRESHOLD_BYTES` (1 GiB) the builtin
     runs; at or above, :func:`grouped_percentiles_exact`'s bucket-pruned
     rank form.
     Both tiers emit identical doubles (builtin equivalence is pinned in
@@ -496,7 +495,7 @@ def grouped_percentiles_auto(
     if scale is None:
         from pandemic_knowledge_spark.operators.dispatch import size_gated
 
-        scale = size_gated(df, PCT_THRESHOLD_CONF, PCT_THRESHOLD_DEFAULT)
+        scale = size_gated(df, PCT_THRESHOLD_BYTES)
     if scale:
         return grouped_percentiles_exact(df, group_cols, value_col, ps)
     return df.groupBy(*group_cols).agg(

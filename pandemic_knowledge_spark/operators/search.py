@@ -18,6 +18,8 @@ the DuckDB oracle agree bit-for-bit; scores round to 4 dp before ranking.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -2099,8 +2101,8 @@ def _layout_fingerprint(frame: DataFrame, subdir: str) -> str:
     sorted data-file names (driver-side listing — no data scan). Appends
     add files and never rewrite them, so fingerprint equality ⇔ the
     sidecars were derived from exactly these files. Stored in the
-    ``meta`` sidecar LAST at every save/append; a mismatch at load means a
-    crash landed between an artifact commit and the meta refresh."""
+    ``meta.json`` record, committed LAST at every save/append; a mismatch
+    at load means a crash landed between an artifact and the record."""
     import hashlib
 
     names = sorted(f.rsplit(f"/{subdir}/", 1)[-1] for f in frame.inputFiles())
@@ -2108,22 +2110,23 @@ def _layout_fingerprint(frame: DataFrame, subdir: str) -> str:
 
 
 def _postings_fingerprint(postings: DataFrame) -> str:
-    """Fingerprint of the postings artifact — a mismatch vs meta triggers
-    a one-time DERIVED-sidecar rebuild (self-healing, never wrong — the
-    postings remain the single source of truth for vocab/doc_ids/stats)."""
+    """Fingerprint of the postings artifact — a mismatch vs the record
+    triggers a one-time DERIVED-sidecar rebuild (self-healing, never wrong —
+    the postings remain the single source of truth for vocab/doc_ids/stats)."""
     return _layout_fingerprint(postings, "postings")
 
 
 def _read_index_meta(spark, path: str) -> dict | None:
-    """The one-row meta sidecar as a dict, or None when absent/unreadable
-    (legacy layout, or a crash mid-overwrite — both mean 'rebuild')."""
+    """The committed ``meta.json`` record as a dict (no Spark job), or None
+    — no commit yet, or a layout older than the record (postings-only, or
+    a parquet ``meta/`` row): each means 'repair'."""
+    from pandemic_knowledge_spark.streaming.sinks import read_published_file
+
+    text = read_published_file(spark, f"{path}/meta.json")
     try:
-        rows = spark.read.parquet(f"{path}/meta").collect()
-    except Exception:
+        return json.loads(text) if text else None
+    except ValueError:
         return None
-    if len(rows) != 1:
-        return None
-    return rows[0].asDict()
 
 
 def _write_vocab(term_df: DataFrame, path: str) -> None:
@@ -2146,16 +2149,15 @@ def _write_index_sidecars(
     postings: DataFrame,
     stats: tuple | None = None,
     pos_fingerprint: str | None = None,
-) -> None:
+) -> dict:
     """Derive the sidecars of a full write from ``postings``: ``doc_ids``
     and ``vocab`` are each one aggregate over the postings, written
     concurrently with the postings-fingerprint listing (Spark sessions
     schedule jobs from several threads safely; locally the three short
-    jobs overlap their task-launch overhead). ``meta`` — the commit
-    record — goes strictly LAST, after every job has completed: until it
-    commits the layout reads as stale and :meth:`SearchIndex.load`
-    repairs again, so an overwrite in progress never masquerades as
-    fresh.
+    jobs overlap their task-launch overhead). The ``meta.json`` record —
+    returned — is published strictly LAST, after every job has completed:
+    until then the layout reads as stale and :meth:`SearchIndex.load`
+    repairs again, so an overwrite in progress never masquerades as fresh.
 
     ``stats`` = the build's full-corpus (n_docs, sum_dl), which counts
     zero-token docs like the corpus-scan scorers (:meth:`SearchIndex.save`).
@@ -2185,31 +2187,21 @@ def _write_index_sidecars(
             .collect()[0]
         )
         stats = (int(row[0]), int(row[1] or 0))
-    _write_index_meta(spark, path, *stats, fingerprint, pos_fingerprint)
+    return _write_index_meta(spark, path, *stats, fingerprint, pos_fingerprint)
 
 
 def _write_index_meta(
     spark, path: str, n_docs: int, sum_dl: int, fingerprint: str,
     pos_fingerprint: str | None = None,
-) -> None:
-    # One row of driver-known scalars: build it JVM-side from range(1) +
-    # literals, NOT createDataFrame([...]) — a local-collection frame is a
-    # Python-RDD scan parallelized over defaultParallelism partitions, and
-    # coalesce(1) on it chains every one of those Python sub-partitions
-    # through a single task's worker round-trips (measured ~4 s of the
-    # ~6.5 s index save at sf0.1; the literal form is ~0.2 s).
-    (
-        spark.range(1)
-        .select(
-            F.lit(n_docs).cast("long").alias("n_docs"),
-            F.lit(sum_dl).cast("long").alias("sum_dl"),
-            F.lit(fingerprint).cast("string").alias("fingerprint"),
-            F.lit(pos_fingerprint).cast("string").alias("pos_fingerprint"),
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{path}/meta")
-    )
+) -> dict:
+    """Commit the index: publish its one-line ``meta.json`` record the way
+    AtomicTable publishes ``_CURRENT`` (no Spark job) and return it."""
+    from pandemic_knowledge_spark.streaming.sinks import publish_file
+
+    meta = dict(n_docs=int(n_docs), sum_dl=int(sum_dl), fingerprint=fingerprint,
+                pos_fingerprint=pos_fingerprint)
+    publish_file(spark, f"{path}/meta.json", json.dumps(meta))
+    return meta
 
 
 class SearchIndex:
@@ -2224,16 +2216,17 @@ class SearchIndex:
     partitioned by term length (ES's per-segment FST: fuzzy/suggest/prefix
     probes expand against dictionary slivers, never postings), ``doc_ids/``
     the indexed-id set with dl norms (the incremental-ingest dedup guard),
-    and ``meta`` one row (n_docs, sum_dl, postings-file fingerprint).
+    and ``meta.json`` the JSON commit record (n_docs, sum_dl, fingerprints).
 
     One write path: :meth:`save` writes a whole index, :meth:`append_save`
     adds a batch of documents to a persisted one (creating it on the first
     batch). Both lay postings out with :func:`_bucket_laid`; a full write
     derives its sidecars with :func:`_write_index_sidecars`, an append
-    refreshes them incrementally. Either way ``meta`` commits LAST and is
+    refreshes them incrementally. Either way the record is published LAST
+    (streaming.sinks.publish_file, as AtomicTable's ``_CURRENT``) and is
     validated against the postings fingerprint at :meth:`load`, which
-    rebuilds the sidecars from postings on mismatch — a crash anywhere in
-    a write degrades to a one-time repair, never a wrong answer."""
+    rebuilds the sidecars from postings on mismatch or absence — a crash
+    anywhere in a write degrades to a one-time repair, never a wrong answer."""
 
     def __init__(self, postings: DataFrame, stats: DataFrame,
                  stats_scalars: tuple | None = None,
@@ -2306,10 +2299,10 @@ class SearchIndex:
         """Persist the whole index (overwrite): postings in the
         :func:`_bucket_laid` layout, the positional postings when this is
         a positional build (same layout — a phrase probe prunes the same
-        way), then the derived sidecars with ``meta`` LAST
-        (:func:`_write_index_sidecars`; a crash anywhere here leaves a
-        fingerprint mismatch that :meth:`load` repairs — or, for the
-        non-derivable positional artifact, loudly disables).
+        way), then the derived sidecars and LAST the ``meta.json`` commit
+        record (:func:`_write_index_sidecars`; a crash anywhere here
+        leaves a fingerprint mismatch that :meth:`load` repairs — or, for
+        the non-derivable positional artifact, loudly disables).
 
         ``timings``: pass a dict to get the per-tier wall seconds recorded
         into it (``postings_sec`` / ``positions_sec`` / ``sidecars_sec``)
@@ -2320,7 +2313,7 @@ class SearchIndex:
         One lazy checkpoint of the laid postings feeds the postings write
         AND both sidecar aggregates, so nothing re-reads the files just
         written and nothing re-runs the tokenize lineage. Saving an
-        uncached build shuffles once (see :func:`build_postings`). Meta
+        uncached build shuffles once (see :func:`build_postings`). Record
         stats come from the build's full-corpus ``stats`` row — n_docs
         counts zero-token docs exactly like the corpus-scan scorers, so a
         LOADED index scores bit-identically to the in-memory build even
@@ -2363,23 +2356,20 @@ class SearchIndex:
 
     @classmethod
     def load(cls, spark, path: str) -> "SearchIndex":
-        """Open the persisted index: validate the sidecar fingerprint
-        against the postings file listing (driver-side, no data scan);
-        on mismatch — legacy postings-only layouts, or a crash between a
-        postings append and its sidecar refresh — rebuild the sidecars
-        from the postings once. Corpus stats (n_docs, sum_dl) then come
-        from the meta row as driver-side literals, so index-open costs a
-        file listing + a one-row read instead of the full-postings
-        aggregate, and every probe touches only pruned slivers. The meta
-        stats were recorded by save() from the FULL corpus (zero-token
-        docs included), so loaded-index scores are bit-identical to the
-        in-memory build even on corpora with empty documents. Only the
-        crash-REPAIR path below, which has nothing but posting rows to
-        read, falls back to postings-only stats (a repaired index on a
-        corpus with empty docs scores with a slightly smaller n_docs
-        until the next save — empty docs never match anything, so only
-        idf norms shift). Raises FileNotFoundError when ``path`` holds no
-        postings yet."""
+        """Open the persisted index: validate the ``meta.json`` record's
+        fingerprint against the postings file listing (driver-side, no
+        data scan); when it differs or there is no record — a crash before
+        the record's publish, or a layout older than the record — rebuild
+        the sidecars from the postings once. Corpus stats (n_docs, sum_dl)
+        come from the record as driver-side literals, so index-open costs
+        a file listing and a one-line read, not a postings aggregate.
+        save() recorded them from the FULL corpus (zero-token docs
+        included), so loaded-index scores are bit-identical to the
+        in-memory build. Only the crash-REPAIR path, which has nothing but
+        posting rows to read, falls back to postings-only stats (on a
+        corpus with empty docs n_docs reads slightly smaller until the next
+        save — empty docs never match, so only idf norms shift). Raises
+        FileNotFoundError when ``path`` holds no postings yet."""
         from pyspark.errors import AnalysisException
 
         try:
@@ -2391,16 +2381,29 @@ class SearchIndex:
             if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
                 raise FileNotFoundError(f"no search index under {path}") from e
             raise
-        fingerprint = _postings_fingerprint(postings)
         meta = _read_index_meta(spark, path)
-        if meta is None or meta["fingerprint"] != fingerprint:
+        if meta is None or meta["fingerprint"] != _postings_fingerprint(postings):
             # derived sidecars rebuild from postings; the positional
             # artifact is NOT derivable, and after a crash we can't know
             # it matches the postings — disable it (pos_fingerprint=None)
             # rather than risk silently inconsistent phrase results; a
             # positional save() re-enables it.
-            _write_index_sidecars(spark, path, postings)
-            meta = _read_index_meta(spark, path)
+            meta = _write_index_sidecars(spark, path, postings)
+        return cls._committed(spark, path, postings, meta)
+
+    @classmethod
+    def _committed(cls, spark, path: str, postings: DataFrame, meta: dict,
+                   like: "SearchIndex | None" = None) -> "SearchIndex":
+        """The handle over a committed layout: ``postings`` is the frame
+        whose file listing gave ``meta["fingerprint"]``. ``like`` = a
+        handle on the same index whose sidecar schemas the reads reuse
+        (no schema-inference job)."""
+
+        def read(name: str) -> DataFrame:
+            r = spark.read
+            r = r if like is None else r.schema(getattr(like, name).schema)
+            return r.parquet(f"{path}/{name}")
+
         positional = None
         if meta.get("pos_fingerprint"):
             try:
@@ -2423,8 +2426,8 @@ class SearchIndex:
             stats,
             stats_scalars=(meta["n_docs"], meta["sum_dl"]),
             index_bytes=int(index_bytes),
-            vocab=spark.read.parquet(f"{path}/vocab"),
-            doc_ids=spark.read.parquet(f"{path}/doc_ids"),
+            vocab=read("vocab"),
+            doc_ids=read("doc_ids"),
             positional=positional,
         )
 
@@ -2554,9 +2557,12 @@ class SearchIndex:
         dedup guard anti-joins the tiny ``doc_ids`` sidecar (never a
         full-postings distinct) and the batch's rows append to it, the
         terms dictionary merges old vocab + the batch's term counts
-        (dictionary-sized, not postings-sized), and the meta stats are
-        exact integer sums. Returns the updated loaded index; probes over
-        it equal a from-scratch rebuild of old ∪ new.
+        (dictionary-sized, not postings-sized), and the record's stats are
+        exact integer sums. Returns the updated index handle, built from
+        the committed record, the postings frame the new fingerprint was
+        listed from and the previous handle's sidecar schemas (no second
+        :meth:`load`); probes over it equal a from-scratch rebuild of
+        old ∪ new.
 
         Already-indexed doc ids in ``docs`` are DROPPED (first-accepted
         wins — the same policy as the incremental dedup ingest): without
@@ -2567,14 +2573,15 @@ class SearchIndex:
         the load() at entry validates the sidecar fingerprint and repairs
         a half-finished predecessor, the doc-id guard turns a replayed
         batch into a no-op, the parquet append only becomes visible at job
-        commit, and meta commits LAST — a crash at any point leaves either
-        a no-op retry or a fingerprint mismatch that the next open repairs
-        from the postings."""
+        commit, and the ``meta.json`` record commits LAST — a crash at any
+        point leaves either a no-op retry or a fingerprint mismatch that
+        the next open repairs from the postings."""
         try:
             prev = cls.load(spark, path)  # validates/repairs sidecars
         except FileNotFoundError:
             cls.build(docs, id_col, text_col, cache=False).save(path)
-            return cls.load(spark, path)
+            postings = spark.read.parquet(f"{path}/postings")
+            return cls._committed(spark, path, postings, _read_index_meta(spark, path))
         if prev.positional is not None:
             raise ValueError(
                 "append_save does not maintain positional layouts: a crash "
@@ -2608,14 +2615,12 @@ class SearchIndex:
         )
         _write_vocab(merged_vocab, path)
         n_docs, sum_dl = prev.stats_scalars
-        _write_index_meta(
-            spark,
-            path,
-            n_docs + int(batch["n"]),
-            sum_dl + int(batch["s"]),
-            _postings_fingerprint(spark.read.parquet(f"{path}/postings")),
+        postings = spark.read.schema(prev.postings.schema).parquet(f"{path}/postings")
+        meta = _write_index_meta(
+            spark, path, n_docs + int(batch["n"]), sum_dl + int(batch["s"]),
+            _postings_fingerprint(postings),
         )
-        return cls.load(spark, path)
+        return cls._committed(spark, path, postings, meta, like=prev)
 
 
 def tfidf_keywords(

@@ -85,8 +85,7 @@ def _grams(docs: DataFrame, id_col: str, text_col: str, gram_len: int) -> DataFr
     )
 
 
-SKEW_THRESHOLD_CONF = "spark.pandemic_knowledge.substrings.skewSafeThresholdBytes"
-SKEW_THRESHOLD_DEFAULT = 1 << 30  # same 1 GiB frontier as the minhash gate
+SKEW_THRESHOLD_BYTES = 1 << 30  # same 1 GiB frontier as the minhash gate
 
 
 def _dup_positions_window(grams: DataFrame) -> DataFrame:
@@ -142,8 +141,8 @@ def duplicated_spans(
     ``skew_safe`` picks the first-occurrence strategy: False = rank window
     (one shuffle, fastest small), True = combine+join (hot-gram-proof, the
     100 TB form), None = auto on the Catalyst size estimate vs
-    ``spark.pandemic_knowledge.substrings.skewSafeThresholdBytes`` (1 GiB
-    default) — the same gate shape as the MinHash dispatcher.
+    :data:`SKEW_THRESHOLD_BYTES` (1 GiB) — the same gate shape as the
+    MinHash dispatcher.
 
     Auto-mode caveat: the size estimate is the optimized plan's
     ``sizeInBytes``, which is Long.MaxValue for LocalRelation inputs
@@ -154,7 +153,7 @@ def duplicated_spans(
     if skew_safe is None:
         from pandemic_knowledge_spark.operators.dispatch import size_gated
 
-        skew_safe = size_gated(docs, SKEW_THRESHOLD_CONF, SKEW_THRESHOLD_DEFAULT)
+        skew_safe = size_gated(docs, SKEW_THRESHOLD_BYTES)
     grams = _grams(docs, id_col, text_col, gram_len)
     if skew_safe:
         # cache: the combine form derives grams twice (aggregate + probe);
@@ -272,7 +271,7 @@ def duplication_report(
     if skew_safe is None:
         from pandemic_knowledge_spark.operators.dispatch import size_gated
 
-        skew_safe = size_gated(docs, SKEW_THRESHOLD_CONF, SKEW_THRESHOLD_DEFAULT)
+        skew_safe = size_gated(docs, SKEW_THRESHOLD_BYTES)
     g = _grams_with_sentinels(docs, id_col, text_col, gram_len)
     if skew_safe:
         # same double-derivation cache discipline as duplicated_spans

@@ -164,7 +164,6 @@ def correlation_pairs_topk(
     return _corr_topk_from_sxy(daily, sxy, k)
 
 
-CORR_THRESHOLD_CONF = "spark.pandemic_knowledge.timeseries.corrPrunedThresholdBytes"
 # The exact tier's Σ_d c_d² pair fan-out is quadratic in keys-active-per-
 # day, so its frontier sits FAR below the MinHash dispatcher's 1 GiB —
 # but not at 1 MiB: with the r5 adaptive band width the sketch tier's
@@ -174,7 +173,7 @@ CORR_THRESHOLD_CONF = "spark.pandemic_knowledge.timeseries.corrPrunedThresholdBy
 # once keys multiply (14–18 s vs minutes at 22 MB / 15k keys). 4 MiB
 # keeps oracle- and bench-scale runs exact and routes real corpora to
 # the sketch tier.
-CORR_THRESHOLD_DEFAULT = 1 << 22
+CORR_THRESHOLD_BYTES = 1 << 22
 CORR_N_BANDS = 16
 # Band width (bits) adapts to the key count: b = ⌈log₂ n⌉ + 1, so the
 # per-band bucket space is ~2× the key count and EXPECTED candidates stay
@@ -417,10 +416,9 @@ def correlation_pairs_topk_auto(
 ) -> DataFrame:
     """Exact-vs-pruned dispatch on the Catalyst size estimate — the same
     gate shape as operators.dedup.minhash_lsh_pairs_auto: below
-    ``spark.pandemic_knowledge.timeseries.corrPrunedThresholdBytes``
-    (default 4 MiB — the measured exact-vs-pruned frontier, see the
-    constant) every pair is scored exactly; above it the sign-sketch tier
-    prunes candidates first.
+    :data:`CORR_THRESHOLD_BYTES` (4 MiB — the measured exact-vs-pruned
+    frontier, see the constant) every pair is scored exactly; above it
+    the sign-sketch tier prunes candidates first.
 
     Unlike the dedup dispatchers (where "unknown size" must be treated as
     huge for memory safety), a size-UNKNOWN input (LocalRelation /
@@ -437,12 +435,7 @@ def correlation_pairs_topk_auto(
         )
 
         est = size_estimate(events)
-        thresh = int(
-            events.sparkSession.conf.get(
-                CORR_THRESHOLD_CONF, str(CORR_THRESHOLD_DEFAULT)
-            )
-        )
-        scale = est != UNKNOWN_SIZE and est >= thresh
+        scale = est != UNKNOWN_SIZE and est >= CORR_THRESHOLD_BYTES
     import logging
 
     logging.getLogger(__name__).info(

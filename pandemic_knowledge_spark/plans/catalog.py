@@ -1691,9 +1691,9 @@ WHERE round(CAST(len(list_intersect(sa.hs, sb.hs)) AS DOUBLE)
 @q("dedup_minhash_lsh", oracle=_MINHASH_ORACLE, bench=True)
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs (16 perms, 4 bands), exact-Jaccard
-    verified at τ=0.5 over distinct 2-shingles. Uses the config-gated auto
-    dispatcher: above `spark.pandemic_knowledge.dedup.prunedThresholdBytes`
-    (Catalyst size estimate, default 1 GiB) the candidate-pruned two-pass
+    verified at τ=0.5 over distinct 2-shingles. Uses the size-gated auto
+    dispatcher: above `operators.dedup.PRUNED_THRESHOLD_BYTES`
+    (Catalyst size estimate, 1 GiB) the candidate-pruned two-pass
     form takes over (its first shuffle
     carries signatures only — the 100 TB shape), below it the single-pass
     form wins; both are driver-checked against the same oracle."""
@@ -2013,8 +2013,9 @@ def search_phrase_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
 def search_phrase_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """match_phrase over the PERSISTED positional index tier (r8: the
     SearchIndex artifact now optionally carries ``positions/`` with its
-    own meta fingerprint — stale-after-crash positions disable the tier
-    loudly instead of answering inconsistently, and append_save refuses
+    own fingerprint in the ``meta.json`` commit record — stale-after-crash
+    positions disable the tier loudly instead of answering
+    inconsistently, and append_save refuses
     positional layouts because positions aren't derivable from postings):
     build(positional=True) → save → load → phrase probe, only the phrase
     terms' crc32 buckets scanned. Oracle = the corpus-scan phrase SQL,

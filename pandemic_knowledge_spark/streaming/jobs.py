@@ -248,8 +248,8 @@ def corpus_stream_index(
     from-scratch rebuild at every point in time. foreachBatch is
     at-least-once; the sink is crash-idempotent anyway (append_save repairs
     a half-written predecessor from its postings, drops already-indexed doc
-    ids, and commits its meta record last), so a retried micro-batch is a
-    no-op."""
+    ids, and publishes its one-line ``meta.json`` commit record last, by an
+    atomic rename), so a retried micro-batch is a no-op."""
     from pyspark.sql.types import LongType
 
     from pandemic_knowledge_spark.operators.search import SearchIndex

@@ -19,7 +19,8 @@ OVERWRITE on real filesystems (HDFS/local/viewfs), and a direct
 overwrite-create of the one-object manifest on object-store schemes —
 there the PUT replaces the object atomically while Hadoop's "rename" is
 delete-then-copy and would expose a missing-manifest window. Readers see
-the old pointer or the new one, never a torn or absent file.
+the old pointer or the new one, never a torn or absent file. The search
+index commits its ``meta.json`` record through the same :func:`publish_file`.
 """
 
 from __future__ import annotations
@@ -50,6 +51,97 @@ def _is_unsupported_fs(e: Exception) -> bool:
     return False
 
 
+# Stores where a single-object overwrite PUT is atomic but rename is NOT
+# (delete-dst-then-copy under the hood, leaving a missing-file window a
+# concurrent reader would see): publish by direct create-overwrite there,
+# never by rename.
+OBJECT_STORE_SCHEMES = frozenset(
+    {"s3a", "s3", "s3n", "gs", "abfs", "abfss", "wasb", "wasbs", "oss", "cos"}
+)
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p, p.getFileSystem(spark._jsc.hadoopConfiguration())
+
+
+def publish_file(
+    spark: SparkSession, path: str, content: str, put: bool | None = None
+) -> None:
+    """Atomically replace the small file at ``path`` with ``content``
+    (AtomicTable's ``_CURRENT``, the search index's ``meta.json``) through
+    the Hadoop FileSystem of the path's scheme, with no Spark job.
+
+    ``put`` (default: the scheme is in :data:`OBJECT_STORE_SCHEMES`):
+    direct overwrite-create — atomic at object stores, whose "rename" is
+    delete-then-copy. Otherwise: tmp write + FileContext rename with
+    OVERWRITE — the POSIX/HDFS atomic swap.
+    Unknown schemes try the rename and fall back to a FileSystem-level
+    delete+rename swap only when no AbstractFileSystem is bound
+    (UnsupportedFileSystemException, classified by java class walk, not
+    message text); any other rename failure propagates — downgrading a
+    transient HDFS error to touching the LIVE file would be the
+    non-atomicity this exists to prevent. Readers see the old content or
+    the new, never a torn file."""
+    jvm = spark._jvm
+    dst, fs = _hadoop_path(spark, path)
+    if put is None:
+        put = (dst.toUri().getScheme() or "file").lower() in OBJECT_STORE_SCHEMES
+    if put:
+        _write_file(fs, dst, content)
+        return
+    tmp = jvm.org.apache.hadoop.fs.Path(
+        dst.getParent(), f"{dst.getName()}.tmp-{uuid.uuid4().hex[:8]}"
+    )
+    _write_file(fs, tmp, content)
+    try:
+        rename_enum = jvm.org.apache.hadoop.fs.Options.Rename
+        opts = spark.sparkContext._gateway.new_array(rename_enum, 1)
+        opts[0] = rename_enum.OVERWRITE
+        fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+            dst.toUri(), spark._jsc.hadoopConfiguration()
+        )
+        fc.rename(tmp, dst, opts)
+    except Exception as e:
+        if not _is_unsupported_fs(e):
+            fs.delete(tmp, False)
+            raise
+        # No AbstractFileSystem bound for this scheme: FileSystem-level
+        # swap. delete+rename leaves at worst a brief missing-file window
+        # (a reader sees the old content, or retries past "absent"),
+        # NEVER a torn file — overwrite-creating the live dst would
+        # truncate-then-write in place, exposing an empty/partial file
+        # mid-write. A failed rename then propagates loudly (whatever the
+        # file points at is intact; re-publishing repairs).
+        fs.delete(dst, False)
+        if not fs.rename(tmp, dst):
+            raise RuntimeError(
+                f"publish failed: rename({tmp}, {dst}) returned false; "
+                "re-publish to repair"
+            )
+
+
+def read_published_file(spark: SparkSession, path: str) -> str | None:
+    """Content of a file committed by :func:`publish_file`, or None when
+    it does not exist (nothing published yet). No Spark job."""
+    p, fs = _hadoop_path(spark, path)
+    if not fs.exists(p):
+        return None
+    ins = fs.open(p)
+    try:
+        return bytes(ins.readAllBytes()).decode("utf-8")
+    finally:
+        ins.close()
+
+
+def _write_file(fs, path, content: str) -> None:
+    out = fs.create(path, True)
+    try:
+        out.write(bytearray(content.encode("utf-8")))
+    finally:
+        out.close()
+
+
 class AtomicTable:
     """A parquet table addressed through a ``_CURRENT`` version manifest.
 
@@ -74,7 +166,7 @@ class AtomicTable:
         self.root = root.rstrip("/") or root
         self.keep_versions = keep_versions
         self._spark = spark
-        jvm, fs, rootp = self._fs()
+        rootp, fs = _hadoop_path(self._session(), self.root)
         fs.mkdirs(rootp)
 
     # -- Hadoop FS plumbing -------------------------------------------------
@@ -88,37 +180,9 @@ class AtomicTable:
             )
         return s
 
-    def _fs(self):
-        s = self._session()
-        jvm = s._jvm
-        rootp = jvm.org.apache.hadoop.fs.Path(self.root)
-        fs = rootp.getFileSystem(s._jsc.hadoopConfiguration())
-        return jvm, fs, rootp
-
-    def _child(self, jvm, rootp, name: str):
-        return jvm.org.apache.hadoop.fs.Path(rootp, name)
-
-    def _write_file(self, fs, path, content: str) -> None:
-        out = fs.create(path, True)
-        try:
-            out.write(bytearray(content.encode("utf-8")))
-        finally:
-            out.close()
-
     def current_version(self) -> str | None:
-        jvm, fs, rootp = self._fs()
-        mp = self._child(jvm, rootp, "_CURRENT")
-        if not fs.exists(mp):
-            return None
-        ins = fs.open(mp)
-        try:
-            br = jvm.java.io.BufferedReader(
-                jvm.java.io.InputStreamReader(ins, "UTF-8")
-            )
-            line = br.readLine()
-        finally:
-            ins.close()
-        return (line or "").strip() or None
+        path = f"{self.root}/_CURRENT"
+        return (read_published_file(self._session(), path) or "").strip() or None
 
     @staticmethod
     def _seq_of(name: str) -> int:
@@ -133,7 +197,7 @@ class AtomicTable:
         Lexicographic name order is NOT publish order once sequences
         collide — the uuid suffix would shuffle same-seq versions
         arbitrarily."""
-        jvm, fs, rootp = self._fs()
+        rootp, fs = _hadoop_path(self._session(), self.root)
         entries = []
         for st in fs.listStatus(rootp):
             name = st.getPath().getName()
@@ -146,68 +210,17 @@ class AtomicTable:
         seq = max((self._seq_of(v) for v in self._versions()), default=-1) + 1
         version = f"v-{seq:06d}-{uuid.uuid4().hex[:8]}"
         df.write.mode("errorifexists").parquet(f"{self.root}/{version}")
-        self._publish(version)
+        rootp, _ = _hadoop_path(self._session(), self.root)
+        scheme = (rootp.toUri().getScheme() or "file").lower()
+        publish_file(
+            self._session(), f"{self.root}/_CURRENT", version,
+            put=self._publish_mechanism(scheme) == "put",
+        )
         self._gc(keep=version)
         return version
 
-    # Stores where a single-object overwrite PUT is atomic but rename is
-    # NOT (delete-dst-then-copy under the hood, leaving a no-manifest
-    # window a concurrent reader would see): publish the manifest by
-    # direct create-overwrite there, never by rename.
-    OBJECT_STORE_SCHEMES = frozenset(
-        {"s3a", "s3", "s3n", "gs", "abfs", "abfss", "wasb", "wasbs", "oss", "cos"}
-    )
-
-    def _publish(self, version: str) -> None:
-        """Atomically repoint _CURRENT at ``version``.
-
-        Real filesystems (file/hdfs/viewfs): tmp write + FileContext rename
-        with OVERWRITE — the POSIX/HDFS atomic pointer swap. Object stores
-        (scheme-listed above): direct overwrite-create of the one-object
-        manifest — the PUT replaces the object atomically at the store,
-        while their "rename" is delete-then-copy and would expose a
-        missing-manifest window. Unknown schemes try the rename and fall
-        back to a FileSystem-level delete+rename swap only when no
-        AbstractFileSystem is bound (UnsupportedFileSystemException,
-        classified by java class walk, not message text); any other
-        rename failure propagates — downgrading a transient HDFS error
-        to touching the LIVE manifest would be the non-atomicity this
-        class exists to prevent."""
-        s = self._session()
-        jvm, fs, rootp = self._fs()
-        scheme = (rootp.toUri().getScheme() or "file").lower()
-        dst = self._child(jvm, rootp, "_CURRENT")
-        if self._publish_mechanism(scheme) == "put":
-            self._write_file(fs, dst, version)
-            return
-        tmp = self._child(jvm, rootp, f"_CURRENT.tmp-{uuid.uuid4().hex[:8]}")
-        self._write_file(fs, tmp, version)
-        try:
-            gw = s.sparkContext._gateway
-            rename_enum = jvm.org.apache.hadoop.fs.Options.Rename
-            opts = gw.new_array(rename_enum, 1)
-            opts[0] = rename_enum.OVERWRITE
-            fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-                rootp.toUri(), s._jsc.hadoopConfiguration()
-            )
-            fc.rename(tmp, dst, opts)
-        except Exception as e:
-            if not _is_unsupported_fs(e):
-                fs.delete(tmp, False)
-                raise
-            # No AbstractFileSystem bound for this scheme: FileSystem-level
-            # swap. delete+rename leaves at worst a brief missing-manifest
-            # window (a reader sees old pointer, or retries past "absent"),
-            # NEVER a torn file — overwrite-creating the live dst would
-            # truncate-then-write in place, exposing an empty/partial
-            # manifest mid-write. A failed rename then propagates loudly
-            # (the version directory is intact; re-publishing repairs).
-            fs.delete(dst, False)
-            if not fs.rename(tmp, dst):
-                raise RuntimeError(
-                    f"manifest swap failed: rename({tmp}, {dst}) returned "
-                    "false; re-publish to repair"
-                )
+    # per-table copy of the module set: an instance may override it
+    OBJECT_STORE_SCHEMES = OBJECT_STORE_SCHEMES
 
     def _publish_mechanism(self, scheme: str) -> str:
         """'put' (single-object overwrite-create — atomic at object
@@ -222,10 +235,10 @@ class AtomicTable:
         recency (never the one just published). With the default
         keep_versions=2 the immediately-previous version always survives
         for in-flight readers that resolved _CURRENT just before the swap."""
-        jvm, fs, rootp = self._fs()
+        rootp, fs = _hadoop_path(self._session(), self.root)
         versions = [v for v in self._versions() if v != keep]
         for stale in versions[: max(0, len(versions) - (self.keep_versions - 1))]:
-            fs.delete(self._child(jvm, rootp, stale), True)
+            fs.delete(self._session()._jvm.org.apache.hadoop.fs.Path(rootp, stale), True)
 
     def read(self, spark: SparkSession) -> DataFrame:
         version = self.current_version()

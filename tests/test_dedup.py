@@ -264,17 +264,15 @@ def test_ngram_jaccard_int32_ids_pack_safely(spark):
     assert got == expect and len(got) > 0
 
 
-def test_ngram_jaccard_size_gate_refuses_large_estimates(spark, sf_dir):
-    """Exact Jaccard has no lossless scale tier, so above prunedThresholdBytes
+def test_ngram_jaccard_size_gate_refuses_large_estimates(spark, sf_dir, monkeypatch):
+    """Exact Jaccard has no lossless scale tier, so above PRUNED_THRESHOLD_BYTES
     the operator must refuse loudly (naming minhash_lsh_pairs_auto) instead of
     silently running Θ(ΣC(df,2)) work — and must NOT fire at sf0.01 under the
     default threshold, nor for driver-materialized (unknown-size) frames."""
     import pytest
 
-    from pandemic_knowledge_spark.operators.dedup import (
-        PRUNED_THRESHOLD_CONF,
-        ngram_jaccard_pairs,
-    )
+    from pandemic_knowledge_spark.operators import dedup
+    from pandemic_knowledge_spark.operators.dedup import ngram_jaccard_pairs
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # default threshold (1 GiB): sf0.01 passes the gate — plan construction
@@ -284,24 +282,21 @@ def test_ngram_jaccard_size_gate_refuses_large_estimates(spark, sf_dir):
         "doc_b",
         "jaccard",
     ]
-    spark.conf.set(PRUNED_THRESHOLD_CONF, "1")
-    try:
-        with pytest.raises(ValueError, match="minhash_lsh_pairs_auto"):
-            ngram_jaccard_pairs(docs, "doc_id", "text", "lang")
-        # explicit override accepts the quadratic cost
-        out = ngram_jaccard_pairs(
-            docs, "doc_id", "text", "lang", allow_large=True
-        )
-        assert out.columns == ["doc_a", "doc_b", "jaccard"]
-        # unknown estimate (LocalRelation = Long.MaxValue) reads as small,
-        # not huge: driver-materialized frames necessarily fit memory
-        local = spark.createDataFrame(
-            [(1, "en", "alpha beta gamma"), (2, "en", "alpha beta delta")],
-            "doc_id long, lang string, text string",
-        )
-        assert ngram_jaccard_pairs(local, "doc_id", "text", "lang").count() >= 0
-    finally:
-        spark.conf.unset(PRUNED_THRESHOLD_CONF)
+    monkeypatch.setattr(dedup, "PRUNED_THRESHOLD_BYTES", 1)
+    with pytest.raises(ValueError, match="minhash_lsh_pairs_auto"):
+        ngram_jaccard_pairs(docs, "doc_id", "text", "lang")
+    # explicit override accepts the quadratic cost
+    out = ngram_jaccard_pairs(
+        docs, "doc_id", "text", "lang", allow_large=True
+    )
+    assert out.columns == ["doc_a", "doc_b", "jaccard"]
+    # unknown estimate (LocalRelation = Long.MaxValue) reads as small,
+    # not huge: driver-materialized frames necessarily fit memory
+    local = spark.createDataFrame(
+        [(1, "en", "alpha beta gamma"), (2, "en", "alpha beta delta")],
+        "doc_id long, lang string, text string",
+    )
+    assert ngram_jaccard_pairs(local, "doc_id", "text", "lang").count() >= 0
 
 
 def test_ngram_jaccard_string_ids_fall_through_to_two_column_count(spark):

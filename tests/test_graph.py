@@ -84,15 +84,13 @@ def test_asymmetric_graph_keeps_source_only_nodes(spark):
     assert 1 in ranks and ranks[1] == (DAMP_DEN - DAMP_NUM) * SCALE // DAMP_DEN
 
 
-def test_broadcast_gate_fallback_bit_identical(spark):
+def test_broadcast_gate_fallback_bit_identical(spark, monkeypatch):
     """r14 guard (r13 verdict item 8): over the node gate the loop must
     not broadcast its node tables, and the shuffle-join fallback must be
     bit-identical (integer arithmetic is partition-order-independent).
     Run the same graph in both regimes and compare exactly; check the
     fallback plan really has no broadcast of the rank/recv tables."""
-    from pandemic_knowledge_spark.operators.graph import (
-        PAGERANK_BCAST_MAX_NODES_CONF,
-    )
+    from pandemic_knowledge_spark.operators import graph
 
     rng = random.Random(7)
     pairs = {(rng.randrange(0, 10), 10 + rng.randrange(0, 6)) for _ in range(30)}
@@ -100,7 +98,7 @@ def test_broadcast_gate_fallback_bit_identical(spark):
     expected = brute_pagerank(edges)
     assert _spark_ranks(spark, edges) == expected  # broadcast regime
     df = spark.createDataFrame(edges, "src long, dst long, w long")
-    spark.conf.set(PAGERANK_BCAST_MAX_NODES_CONF, "0")
+    monkeypatch.setattr(graph, "PAGERANK_BCAST_MAX_NODES", 0)
     # Auto-broadcast off: the tiny test relations would otherwise be
     # planner-broadcast on size alone — with it off, a BroadcastHashJoin
     # could only come from an operator-side hint, which the gate must
@@ -113,5 +111,4 @@ def test_broadcast_gate_fallback_bit_identical(spark):
         assert "BroadcastHashJoin" not in plan
         assert {r.node: r.rank for r in out.collect()} == expected
     finally:
-        spark.conf.unset(PAGERANK_BCAST_MAX_NODES_CONF)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)

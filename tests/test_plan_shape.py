@@ -403,25 +403,21 @@ def test_pruned_minhash_first_shuffle_is_signatures_only(spark, sf_dir):
     assert "LeftSemi" in full  # hash sets built only for candidate docs
 
 
-def test_minhash_auto_dispatch_scale_gate(spark, sf_dir):
-    """Auto dispatcher: below the configured threshold → single-pass
+def test_minhash_auto_dispatch_scale_gate(spark, sf_dir, monkeypatch):
+    """Auto dispatcher: below the size threshold → single-pass
     (collect_set before any band join); above → pruned two-pass."""
-    from pandemic_knowledge_spark.operators.dedup import (
-        PRUNED_THRESHOLD_CONF,
-        minhash_lsh_pairs_auto,
-    )
+    from pandemic_knowledge_spark.operators import dedup
+    from pandemic_knowledge_spark.operators.dedup import minhash_lsh_pairs_auto
     from pandemic_knowledge_spark.tables import load
 
     docs = load(spark, sf_dir, "documents")
-    spark.conf.set(PRUNED_THRESHOLD_CONF, "1")  # force scale path
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "PRUNED_THRESHOLD_BYTES", 1)  # force scale path
         plan = (
             minhash_lsh_pairs_auto(docs, "doc_id", "text")
             ._jdf.queryExecution().executedPlan().toString()
         )
         assert "LeftSemi" in plan
-    finally:
-        spark.conf.unset(PRUNED_THRESHOLD_CONF)
     plan_small = (
         minhash_lsh_pairs_auto(docs, "doc_id", "text")  # default 1 GiB byte threshold
         ._jdf.queryExecution().executedPlan().toString()

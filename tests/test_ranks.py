@@ -194,27 +194,22 @@ def test_grouped_percentiles_match_builtin(spark):
     assert g == e  # exact doubles, no rounding
 
 
-def test_grouped_percentiles_auto_dispatch(spark, sf_dir):
+def test_grouped_percentiles_auto_dispatch(spark, sf_dir, monkeypatch):
     """Auto tier: parquet-backed input below the 1 GiB default gate takes
     the builtin aggregate; forcing the gate to 0 flips to the rank form;
     identical values either way (latency-only dispatch)."""
-    from pandemic_knowledge_spark.operators.ranks import (
-        PCT_THRESHOLD_CONF,
-        grouped_percentiles_auto,
-    )
+    from pandemic_knowledge_spark.operators import ranks
+    from pandemic_knowledge_spark.operators.ranks import grouped_percentiles_auto
     from pandemic_knowledge_spark.tables import load
 
     li = load(spark, sf_dir, "lineitem")
     ps = [0.25, 0.5]
     small = grouped_percentiles_auto(li, ["l_returnflag"], "l_quantity", ps)
     assert "percentile(" in small._jdf.queryExecution().executedPlan().toString()
-    spark.conf.set(PCT_THRESHOLD_CONF, "0")
-    try:
-        big = grouped_percentiles_auto(li, ["l_returnflag"], "l_quantity", ps)
-        assert "percentile(" not in big._jdf.queryExecution().executedPlan().toString()
-        assert sorted(map(tuple, big.collect())) == sorted(map(tuple, small.collect()))
-    finally:
-        spark.conf.unset(PCT_THRESHOLD_CONF)
+    monkeypatch.setattr(ranks, "PCT_THRESHOLD_BYTES", 0)
+    big = grouped_percentiles_auto(li, ["l_returnflag"], "l_quantity", ps)
+    assert "percentile(" not in big._jdf.queryExecution().executedPlan().toString()
+    assert sorted(map(tuple, big.collect())) == sorted(map(tuple, small.collect()))
 
 
 def test_grouped_percentiles_plan_shape(spark, sf_dir):

@@ -6,8 +6,9 @@ fuzzy/suggest/prefix probes never touch postings until candidates are known
 /root/reference/news_app/app/app/src/SearchUI.js:22-27,45-46). The Spark
 analogue persisted here: ``vocab/`` = (term, df) partitioned by term length
 alongside ``postings/``, plus ``doc_ids/`` (the incremental-ingest guard)
-and a ``meta`` row carrying the postings-file fingerprint that makes the
-whole layout self-healing after a crash.
+and the ``meta.json`` commit record — one line of JSON with the corpus
+stats and the postings-file fingerprint, published last by an atomic
+rename — that makes the whole layout self-healing after a crash.
 """
 
 from __future__ import annotations
@@ -54,12 +55,28 @@ def _saved(spark, tmp_path, name="idx"):
 
 
 def test_save_writes_vocab_docids_meta_sidecars(spark, tmp_path):
-    """save() persists the three derived sidecars; vocab is hive-partitioned
-    by term length and agrees row-for-row with the postings aggregate."""
+    """save() persists the derived sidecars and the ``meta.json`` record;
+    the record parses to the build's stats and the written postings'
+    fingerprint, and its publish leaves no tmp file behind; vocab is
+    hive-partitioned by term length and agrees row-for-row with the
+    postings aggregate."""
+    import json
+
+    from pandemic_knowledge_spark.operators.search import _postings_fingerprint
+
     docs, path = _saved(spark, tmp_path)
     assert os.path.isdir(f"{path}/vocab")
     assert os.path.isdir(f"{path}/doc_ids")
-    assert os.path.isdir(f"{path}/meta")
+    with open(f"{path}/meta.json", encoding="utf-8") as f:
+        meta = json.load(f)
+    want = SearchIndex.build(docs, "doc_id", "text", cache=False).stats.collect()[0]
+    assert meta == {
+        "n_docs": want["n_docs"],
+        "sum_dl": want["sum_dl"],
+        "fingerprint": _postings_fingerprint(spark.read.parquet(f"{path}/postings")),
+        "pos_fingerprint": None,
+    }
+    assert not [e for e in os.listdir(path) if ".tmp" in e]
     # length-partitioned layout (the FST-analogue pruning axis)
     assert any(e.startswith("tlen=") for e in os.listdir(f"{path}/vocab"))
     idx = SearchIndex.load(spark, path)
@@ -168,7 +185,7 @@ def test_load_repairs_sidecars_after_simulated_crash(spark, tmp_path):
         new_p.repartition("bucket").sortWithinPartitions("term")
         .write.mode("append").partitionBy("bucket").parquet(f"{path}/postings")
     )
-    idx = SearchIndex.load(spark, path)  # must repair, not trust meta
+    idx = SearchIndex.load(spark, path)  # must repair, not trust the record
     full = SearchIndex.build(docs, "doc_id", "text", cache=False)
     assert idx.stats_scalars == tuple(
         full.stats.collect()[0][i] for i in range(2)
@@ -182,7 +199,7 @@ def test_load_repairs_sidecars_after_simulated_crash(spark, tmp_path):
 
 def test_append_save_refreshes_sidecars_incrementally(spark, tmp_path):
     """append_save keeps all three sidecars equal to a from-scratch save of
-    the full corpus — vocab df counts, doc_ids rows, meta stats."""
+    the full corpus — vocab df counts, doc_ids rows, the record's stats."""
     docs = load(spark, SF_DIR, "documents")
     old = docs.filter(F.col("doc_id") % 2 == 0)
     new = docs.filter(F.col("doc_id") % 2 == 1)
@@ -225,19 +242,36 @@ def test_append_save_creates_index_where_no_postings_committed(spark, tmp_path):
 
 
 def test_load_legacy_postings_only_layout(spark, tmp_path):
-    """A pre-sidecar layout (postings dir only) opens fine: load() derives
-    the sidecars once and probes work — no migration step."""
+    """Layouts written before the ``meta.json`` record open fine: a
+    pre-sidecar one (postings dir only), and one whose commit record is
+    the old one-row parquet ``meta/`` (such indexes persist under the
+    system temp dir across runs). load() derives the sidecars and the
+    record once and probes work — no migration step."""
+    from pandemic_knowledge_spark.operators.search import _postings_fingerprint
+
     docs = load(spark, SF_DIR, "documents")
     idx0 = SearchIndex.build(docs, "doc_id", "text", cache=False)
-    path = str(tmp_path / "legacy")
-    (
-        idx0.postings.repartition("bucket").sortWithinPartitions("term")
-        .write.mode("overwrite").partitionBy("bucket").parquet(f"{path}/postings")
-    )
-    idx = SearchIndex.load(spark, path)
-    assert idx.vocab is not None and idx.doc_ids is not None
-    q = "virus outbreak"
-    assert idx.search(q, k=5).collect() == idx0.search(q, k=5).collect()
+    stats = idx0.stats.collect()[0]
+    for name in ("postings_only", "parquet_meta"):
+        path = str(tmp_path / name)
+        (
+            idx0.postings.repartition("bucket").sortWithinPartitions("term")
+            .write.mode("overwrite").partitionBy("bucket").parquet(f"{path}/postings")
+        )
+        if name == "parquet_meta":
+            fp = _postings_fingerprint(spark.read.parquet(f"{path}/postings"))
+            spark.range(1).select(
+                F.lit(stats["n_docs"]).cast("long").alias("n_docs"),
+                F.lit(stats["sum_dl"]).cast("long").alias("sum_dl"),
+                F.lit(fp).alias("fingerprint"),
+                F.lit(None).cast("string").alias("pos_fingerprint"),
+            ).coalesce(1).write.parquet(f"{path}/meta")
+        assert not os.path.exists(f"{path}/meta.json")
+        idx = SearchIndex.load(spark, path)
+        assert os.path.isfile(f"{path}/meta.json"), name
+        assert idx.vocab is not None and idx.doc_ids is not None
+        q = "virus outbreak"
+        assert idx.search(q, k=5).collect() == idx0.search(q, k=5).collect(), name
 
 
 def test_inmemory_build_caches_dictionary_for_interactive_probes(spark):
@@ -261,8 +295,8 @@ def test_inmemory_build_caches_dictionary_for_interactive_probes(spark):
 def test_positional_tier_roundtrip_and_consistency_guards(spark, tmp_path):
     """The opt-in positional artifact: (1) a positional build+save+load
     answers phrase probes identically to the corpus scan; (2) positions
-    are NOT derivable from postings, so a postings change that meta
-    didn't record (crash simulation) must DISABLE the tier loudly, never
+    are NOT derivable from postings, so a postings change that the
+    meta.json record didn't capture (crash simulation) must DISABLE the tier loudly, never
     serve silently inconsistent phrase results; (3) append_save rejects
     positional layouts (full-refresh artifacts); (4) a plain build has no
     phrase door."""
@@ -289,7 +323,7 @@ def test_positional_tier_roundtrip_and_consistency_guards(spark, tmp_path):
     with pytest.raises(ValueError, match="positional"):
         SearchIndex.append_save(spark, path, new)
 
-    # (2) crash simulation: postings change without a meta refresh →
+    # (2) crash simulation: postings change without a record publish →
     # load repairs the derived sidecars but DISABLES positions
     extra = docs.withColumn("doc_id", F.col("doc_id") + 5_000_000)
     new_p, _ = build_postings(extra, "doc_id", "text")

@@ -245,13 +245,12 @@ def test_corpus_stream_index_equals_batch_build(spark, tmp_path):
 
 def test_corpus_stream_index_first_batch_crash_is_idempotent(spark, sf_dir, tmp_path):
     """A crash inside the index stream's FIRST micro-batch, after the
-    postings commit and before the meta commit: the index's meta record
-    and the stream's commit of batch 0 are both missing, so the restarted
-    query re-runs batch 0 through append_save. The retry must repair the
-    half-created index rather than duplicate it — probes equal a batch
-    build over the same docs and doc_ids holds each id once."""
-    import shutil
-
+    postings commit and before the record's publish: the index's
+    ``meta.json`` record and the stream's commit of batch 0 are both
+    missing, so the restarted query re-runs batch 0 through append_save.
+    The retry must repair the half-created index rather than duplicate
+    it — probes equal a batch build over the same docs and doc_ids holds
+    each id once."""
     from pandemic_knowledge_spark.operators.search import SearchIndex
     from pandemic_knowledge_spark.streaming.jobs import corpus_stream_index
     from pandemic_knowledge_spark.tables import load
@@ -260,9 +259,9 @@ def test_corpus_stream_index_first_batch_crash_is_idempotent(spark, sf_dir, tmp_
     landing, idx, ckpt = (str(tmp_path / d) for d in ("landing", "idx", "ckpt"))
     docs.write.parquet(landing)
     corpus_stream_index(spark, landing, idx, ckpt).awaitTermination(120)
-    assert os.path.isdir(f"{idx}/meta")
+    assert os.path.isfile(f"{idx}/meta.json")
 
-    shutil.rmtree(f"{idx}/meta")
+    os.remove(f"{idx}/meta.json")
     for name in ("0", ".0.crc"):
         if os.path.exists(f"{ckpt}/commits/{name}"):
             os.remove(f"{ckpt}/commits/{name}")

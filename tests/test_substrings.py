@@ -148,24 +148,15 @@ def test_both_first_occurrence_forms_identical(spark):
     assert w == c
 
 
-def test_skew_gate_dispatches_on_threshold(spark):
-    from pandemic_knowledge_spark.operators.substrings import (
-        SKEW_THRESHOLD_CONF,
-        duplicated_spans,
-    )
+def test_skew_gate_dispatches_on_threshold(spark, monkeypatch):
+    from pandemic_knowledge_spark.operators import substrings
+    from pandemic_knowledge_spark.operators.substrings import duplicated_spans
 
     # must be a parquet-backed frame: LocalRelations report unknown stats
     # (Long.MaxValue) and always dispatch to the skew-safe form
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    old = spark.conf.get(SKEW_THRESHOLD_CONF, None)
-    try:
-        spark.conf.set(SKEW_THRESHOLD_CONF, "1")  # everything is "big"
-        plan_big = duplicated_spans(docs, gram_len=L)._jdf.queryExecution().optimizedPlan().toString()
-        spark.conf.set(SKEW_THRESHOLD_CONF, str(1 << 40))
-        plan_small = duplicated_spans(docs, gram_len=L)._jdf.queryExecution().optimizedPlan().toString()
-    finally:
-        if old is None:
-            spark.conf.unset(SKEW_THRESHOLD_CONF)
-        else:
-            spark.conf.set(SKEW_THRESHOLD_CONF, old)
+    monkeypatch.setattr(substrings, "SKEW_THRESHOLD_BYTES", 1)  # everything is "big"
+    plan_big = duplicated_spans(docs, gram_len=L)._jdf.queryExecution().optimizedPlan().toString()
+    monkeypatch.setattr(substrings, "SKEW_THRESHOLD_BYTES", 1 << 40)
+    plan_small = duplicated_spans(docs, gram_len=L)._jdf.queryExecution().optimizedPlan().toString()
     assert "row_number" not in plan_big and "row_number" in plan_small

@@ -259,29 +259,27 @@ def test_corr_pruned_degenerate_bucket_chain(spark):
     assert all(abs(r.r - 1.0) < 1e-12 for r in out_full)
 
 
-def test_corr_auto_dispatch_scale_gate(spark, sf_dir):
+def test_corr_auto_dispatch_scale_gate(spark, sf_dir, monkeypatch):
     """Auto dispatcher: below the byte threshold → exact day-blocked pair
     join (no sign sketches, no checkpoints — pure parquet lineage); above
     → pruned (r14 tier marker: the signature checkpoint truncates the
     plan at a Scan ExistingRDD node, which the exact tier never has —
     the old shiftleft/md5 markers are either folded to literals or
     hidden behind that same checkpoint now)."""
+    from pandemic_knowledge_spark.operators import timeseries
     from pandemic_knowledge_spark.operators.timeseries import (
-        CORR_THRESHOLD_CONF,
         correlation_pairs_topk_auto,
     )
     from pandemic_knowledge_spark.tables import load
 
     ev = load(spark, sf_dir, "events")
-    spark.conf.set(CORR_THRESHOLD_CONF, "1")  # force scale path
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(timeseries, "CORR_THRESHOLD_BYTES", 1)  # force scale path
         plan = (
             correlation_pairs_topk_auto(ev, "user_id", "ts")
             ._jdf.queryExecution().executedPlan().toString()
         )
         assert "ExistingRDD" in plan
-    finally:
-        spark.conf.unset(CORR_THRESHOLD_CONF)
     plan_small = (
         correlation_pairs_topk_auto(ev, "user_id", "ts")  # default 4 MiB gate
         ._jdf.queryExecution().executedPlan().toString()
