@@ -1761,13 +1761,9 @@ def _index_match_frame(index, terms, min_terms: int = 1) -> DataFrame:
     ``min_terms`` enforces the match clause's term-level control
     (operator and / minimum_should_match) as a count in the same grouped
     aggregation — postings hold one row per (term, doc)."""
-    from pandemic_knowledge_spark.operators.search import term_bucket_py
+    from pandemic_knowledge_spark.operators.search import _term_rows
 
-    q = sorted(set(terms))
-    buckets = sorted({term_bucket_py(t) for t in q})
-    p = index.postings.filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(q)
-    )
+    p = _term_rows(index.postings, terms, index.n_buckets)
     df_t = p.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     scored = _attach_bm25_scores(
         _index_stats_cols(index, p.join(F.broadcast(df_t), "term"))
@@ -1802,9 +1798,11 @@ def _index_phrase_frame(index, phrase: str, slop: int = 0) -> DataFrame:
     if dl_src is None:
         dl_src = index.postings.groupBy("doc_id").agg(F.first("dl").alias("dl"))
     counts = (
-        phrase_counts_from_postings(index.positional, phrase)
+        phrase_counts_from_postings(index.positional, phrase, index.n_buckets)
         if slop == 0
-        else span_counts_from_postings(index.positional, phrase, slop)
+        else span_counts_from_postings(
+            index.positional, phrase, slop, index.n_buckets
+        )
     )
     pf = (
         counts
@@ -1831,9 +1829,9 @@ def _index_member_frame(index, clause: dict) -> DataFrame:
     terms, term-sorted row groups for prefixes), phrase probes the
     positional tier. Each is semi/anti-joined against the hits frame."""
     from pandemic_knowledge_spark.operators.search import (
+        _term_rows,
         phrase_counts_from_postings,
         span_counts_from_postings,
-        term_bucket_py,
     )
 
     key = _clause_key(clause, _MEMBER_KEYS)
@@ -1846,19 +1844,13 @@ def _index_member_frame(index, clause: dict) -> DataFrame:
         )
     p = index.postings
     if key == "term":
-        t = clause["term"]
-        return p.filter(
-            (F.col("bucket") == term_bucket_py(t)) & (F.col("term") == t)
-        ).select("doc_id")
+        return _term_rows(p, [clause["term"]], index.n_buckets).select("doc_id")
     if key == "match":
         terms = sorted(set(query_terms(clause["match"])))
         if not terms:
             raise ValueError("bool match clause has no tokenizable terms")
         min_terms = _match_min_terms(clause, terms)
-        buckets = sorted({term_bucket_py(t) for t in terms})
-        hits = p.filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-        )
+        hits = _term_rows(p, terms, index.n_buckets)
         if min_terms == 1:
             return hits.select("doc_id").distinct()
         # one row per (term, doc): the grouped count IS the distinct
@@ -1883,9 +1875,13 @@ def _index_member_frame(index, clause: dict) -> DataFrame:
     if slop < 0:
         raise ValueError("phrase slop must be >= 0")
     counts = (
-        phrase_counts_from_postings(index.positional, clause["phrase"])
+        phrase_counts_from_postings(
+            index.positional, clause["phrase"], index.n_buckets
+        )
         if slop == 0
-        else span_counts_from_postings(index.positional, clause["phrase"], slop)
+        else span_counts_from_postings(
+            index.positional, clause["phrase"], slop, index.n_buckets
+        )
     )
     return counts.select("doc_id")
 

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from pandemic_knowledge_spark.functions.text import query_terms, sql_tokenize, tokenize
@@ -1083,6 +1083,7 @@ def fuzzy_match_from_postings(
     max_expansions: int = 50,
     prefix_length: int = 0,
     vocab: DataFrame | None = None,
+    n_buckets: int | None = None,
 ) -> DataFrame:
     """``fuzzy_match_search`` probed from a persisted index — ES's actual
     fuzzy execution shape (expand against the term dictionary, then run a
@@ -1099,7 +1100,7 @@ def fuzzy_match_from_postings(
     max_expansions rows — ES's rewrite is capped identically) collects to
     the driver so the scoring probe can enumerate its crc32 BUCKETS and
     get parquet partition pruning, exactly like the MLT probe's second
-    phase."""
+    phase (``n_buckets`` = the layout's count, :func:`_term_rows`)."""
     q_terms = sorted(set(query_terms(query)))
     if not q_terms:
         return bm25_from_postings(postings, stats, "", k)
@@ -1125,7 +1126,9 @@ def fuzzy_match_from_postings(
     sel_terms = sorted(r.term for r in selected.collect())
     if not sel_terms:
         return bm25_from_postings(postings, stats, "", k)
-    return bm25_from_postings(postings, stats, " ".join(sel_terms), k)
+    return bm25_from_postings(
+        postings, stats, " ".join(sel_terms), k, n_buckets=n_buckets
+    )
 
 
 def prefix_search_from_postings(
@@ -1135,6 +1138,7 @@ def prefix_search_from_postings(
     k: int = 10,
     max_expansions: int = 50,
     vocab: DataFrame | None = None,
+    n_buckets: int | None = None,
 ) -> DataFrame:
     """:func:`prefix_search` probed from a persisted index — the
     per-keystroke path of the reference's search box
@@ -1143,7 +1147,8 @@ def prefix_search_from_postings(
     sidecar when present — row-group min/max on the term-sorted files
     prunes inside each length partition; otherwise one postings count),
     then the bounded expansion set (≤ terms + max_expansions) probes the
-    bucket-pruned postings. Identical output to the corpus-scan form."""
+    bucket-pruned postings (``n_buckets`` = the layout's count,
+    :func:`_term_rows`). Identical output to the corpus-scan form."""
     toks = query_terms(query)
     if not toks:
         return bm25_from_postings(postings, stats, "", k)
@@ -1159,7 +1164,9 @@ def prefix_search_from_postings(
     sel_terms = sorted({r.term for r in expansions.collect()} | set(full_terms))
     if not sel_terms:
         return bm25_from_postings(postings, stats, "", k)
-    return bm25_from_postings(postings, stats, " ".join(sel_terms), k)
+    return bm25_from_postings(
+        postings, stats, " ".join(sel_terms), k, n_buckets=n_buckets
+    )
 
 
 def term_suggest_from_vocab(
@@ -1373,6 +1380,7 @@ def more_like_this_from_postings(
     max_query_terms: int = 8,
     min_term_freq: int = 1,
     min_doc_freq: int = 1,
+    n_buckets: int | None = None,
 ) -> DataFrame:
     """``more_like_this`` probed from a persisted index — the interactive
     path (ES fetches the source doc's term vector, selects terms, then
@@ -1390,7 +1398,8 @@ def more_like_this_from_postings(
     tie-break, min_term_freq/min_doc_freq) runs driver-side over ≤ one
     doc's vocabulary. Scoring reuses :func:`bm25_from_postings` — the
     selected terms ARE tokens, so a space-joined query string re-analyzes
-    to exactly them — probing k+1 and dropping the source."""
+    to exactly them — probing k+1 and dropping the source. ``n_buckets`` =
+    the layout's term-bucket count (:func:`_term_rows`)."""
     import math
     from decimal import ROUND_HALF_UP, Decimal
 
@@ -1416,12 +1425,8 @@ def more_like_this_from_postings(
     )
     if not src_rows:
         return bm25_from_postings(postings, stats, "", k)  # empty, right schema
-    buckets = sorted({term_bucket_py(r.term) for r in src_rows})
-    src_terms = sorted({r.term for r in src_rows})
     df_rows = (
-        postings.filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(src_terms)
-        )
+        _term_rows(postings, (r.term for r in src_rows), n_buckets)
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("df"))
         .collect()
@@ -1437,7 +1442,7 @@ def more_like_this_from_postings(
     if not ranked:
         return bm25_from_postings(postings, stats, "", k)
     query = " ".join(t for _, t in ranked)
-    hits = bm25_from_postings(postings, stats, query, k + 1)
+    hits = bm25_from_postings(postings, stats, query, k + 1, n_buckets=n_buckets)
     return (
         hits.filter(F.col("doc_id") != F.lit(src_doc_id))
         .orderBy(F.desc("score"), F.col("doc_id"))
@@ -1890,31 +1895,74 @@ ORDER BY score DESC, doc_id
 # Persisted inverted index (SURVEY.md §4.2 — the ES index analogue)
 # ---------------------------------------------------------------------------
 
-N_TERM_BUCKETS = 64
+N_TERM_BUCKETS = 16
+"""Term buckets of a NEW index layout (``bucket`` = crc32(term) mod this).
+
+Every append writes one postings file per bucket, and every read of
+``postings/`` lists the bucket dirs: Spark lists up to 32 of them on the
+driver (``spark.sql.sources.parallelPartitionDiscovery.threshold``'s
+default) and starts a listing job above that. So the count stays ≤ 32,
+and a committed index opens with no Spark job. Chosen, against 8, 32
+and 64, for the scales this repo runs: the ingest stream's 200-doc base
+growing by 14-doc batches, news_search's 5000 docs and sf1's 50000. On
+a 4-vCPU VM, 8, 16 and 32 were within run-to-run noise of each other
+on append and probe time at the ingest scale, where 64 appended about
+1.5x slower; 16 gave news_search the lowest index set-up time; and at
+sf1 probe latency was flat from 8 to 64 buckets, so probes do not wait
+on the terms/16 scan. Of the tied counts, 16 lists half the dirs of 32
+and prunes twice as much as 8 where the index grows. Layouts written with 64 buckets keep theirs:
+the ``meta.json`` record carries each layout's count
+(:attr:`SearchIndex.n_buckets`)."""
+
+# The count of layouts written before the record carried one. 16 divides
+# it, which makes the listing rule in :func:`_listed_bucket_count` exact.
+_LEGACY_TERM_BUCKETS = 64
 
 
-def term_bucket_py(term: str) -> int:
-    """Python-side term bucket — MUST mirror the Spark expression in
-    build_postings (crc32 over UTF-8 agrees between zlib and Spark's F.crc32),
-    so a query can enumerate its terms' buckets client-side and get parquet
-    PARTITION PRUNING on the probe."""
+def term_bucket_py(term: str, n_buckets: int | None = None) -> int:
+    """Python-side term bucket — MUST mirror :func:`_bucket_col` (crc32
+    over UTF-8 agrees between zlib and Spark's F.crc32), so a query can
+    enumerate its terms' buckets client-side and get parquet PARTITION
+    PRUNING on the probe. ``n_buckets``: the layout's count (default
+    :data:`N_TERM_BUCKETS`, what builds write)."""
     import zlib
 
-    return zlib.crc32(term.encode("utf-8")) % N_TERM_BUCKETS
+    return zlib.crc32(term.encode("utf-8")) % (n_buckets or N_TERM_BUCKETS)
 
 
-def build_postings(docs: DataFrame, id_col: str, text_col: str) -> tuple[DataFrame, DataFrame]:
-    """One corpus pass → (postings, corpus_stats).
+def _bucket_col(n_buckets: int | None = None):
+    """The Spark term-bucket expression every postings builder partitions by."""
+    return F.pmod(F.crc32(F.col("term")), F.lit(n_buckets or N_TERM_BUCKETS)).cast("int")
+
+
+def _term_rows(frame: DataFrame, terms, n_buckets: int | None = None) -> DataFrame:
+    """``frame``'s posting rows for ``terms``, pruned to their buckets (a
+    partition filter on a persisted layout) — the one place a probe maps
+    terms to buckets. ``n_buckets`` = the layout's count
+    (:attr:`SearchIndex.n_buckets`; default :data:`N_TERM_BUCKETS`)."""
+    terms = sorted(set(terms))
+    buckets = sorted({term_bucket_py(t, n_buckets) for t in terms})
+    return frame.filter(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
+
+
+def build_postings(
+    docs: DataFrame, id_col: str, text_col: str, n_buckets: int | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """One corpus pass → (postings, doc_lens).
 
     postings: (doc_id, dl, term, tf, bucket) — the per-(term, doc) posting
     list with the doc-length norm denormalized in (ES stores norms per doc;
     at parquet scale the duplicated int is cheaper than a second join).
-    corpus_stats: one row (n_docs, sum_dl) — exact integer sums, so scores
-    computed from the index are bit-identical to the direct corpus scorer.
+    doc_lens: (doc_id, dl), one row per doc, zero-token docs included
+    (dl = 0) — the indexed-id set, and the rows the corpus stats
+    (n_docs, sum_dl) sum: exact integers, so scores computed from the
+    index are bit-identical to the direct corpus scorer, which counts
+    empty docs too.
 
-    Persist postings partitioned by ``bucket`` (crc32(term) % 64): a query's
-    terms map to a handful of buckets, so an indexed probe reads ~terms/64
-    of the index — the partition-pruned analogue of ES's term dictionary
+    Persist postings partitioned by ``bucket`` (crc32(term) mod
+    ``n_buckets``, default :data:`N_TERM_BUCKETS`): a query's terms map
+    to a handful of buckets, so an indexed probe reads ~terms/buckets of
+    the index — the partition-pruned analogue of ES's term dictionary
     seek. Within a bucket, parquet min/max on the sorted ``term`` column
     prunes row groups further.
 
@@ -1935,20 +1983,20 @@ def build_postings(docs: DataFrame, id_col: str, text_col: str) -> tuple[DataFra
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col)),
         toks=tokenize(text_col),
     ).withColumn("dl", F.size("toks"))
-    stats = base.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
-    )
     postings = (
         base.select("doc_id", "dl", F.explode("toks").alias("term"))
-        .withColumn(
-            "bucket", F.pmod(F.crc32(F.col("term")), F.lit(N_TERM_BUCKETS)).cast("int")
-        )
+        .withColumn("bucket", _bucket_col(n_buckets))
         .repartition("bucket")
         .groupBy("doc_id", "dl", "term", "bucket")
         .agg(F.count(F.lit(1)).alias("tf"))
         .select("doc_id", "dl", "term", "tf", "bucket")
     )
-    return postings, stats
+    return postings, base.select("doc_id", "dl")
+
+
+def _doc_stat_cols() -> tuple:
+    """The (n_docs, sum_dl) corpus-stats aggregates over (doc_id, dl) rows."""
+    return F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
 
 
 def _bucket_laid(postings: DataFrame) -> DataFrame:
@@ -1971,7 +2019,9 @@ def _term_df(postings: DataFrame) -> DataFrame:
 
 
 def _doc_id_set(postings: DataFrame) -> DataFrame:
-    """(doc_id, dl): the indexed-id set with each doc's length norm."""
+    """(doc_id, dl) of the docs that have postings — the id set the
+    load-time repair rebuilds ``doc_ids`` from (zero-token docs have no
+    posting rows, so only a build's own doc rows list them)."""
     return postings.groupBy("doc_id").agg(F.first("dl").alias("dl"))
 
 
@@ -2012,7 +2062,7 @@ PROBE_WINDOW_MAX_BYTES = 64 << 20
 
 def bm25_from_postings(
     postings: DataFrame, stats, query: str, k: int = 10,
-    after: tuple | None = None,
+    after: tuple | None = None, n_buckets: int | None = None,
 ) -> DataFrame:
     """BM25 top-k scored ENTIRELY from the posting tables — no corpus scan,
     no tokenize. Identical output to :func:`bm25_search` (same tf/dl/df/
@@ -2031,12 +2081,9 @@ def bm25_from_postings(
 
     ``stats`` is either the one-row (n_docs, sum_dl) DataFrame (in-memory
     build path) or a plain ``(n_docs, sum_dl)`` tuple (loaded-index path —
-    folds to literals, skipping the crossJoin broadcast round)."""
-    q_terms = sorted(set(query_terms(query)))
-    buckets = sorted({term_bucket_py(t) for t in q_terms})
-    p = postings.filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(q_terms)
-    )
+    folds to literals, skipping the crossJoin broadcast round).
+    ``n_buckets`` = the layout's term-bucket count (:func:`_term_rows`)."""
+    p = _term_rows(postings, query_terms(query), n_buckets)
     df_t = p.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     scored = p.join(F.broadcast(df_t), "term")
     if isinstance(stats, tuple):
@@ -2065,7 +2112,7 @@ def bm25_from_postings(
 
 def bm25_from_postings_small(
     postings: DataFrame, n_docs: int, sum_dl: int, query: str, k: int = 10,
-    after: tuple | None = None,
+    after: tuple | None = None, n_buckets: int | None = None,
 ) -> DataFrame:
     """Interactive small-candidate probe tier: df via ``count() OVER
     (PARTITION BY term)`` in the SAME scan — one job, no broadcast round
@@ -2079,11 +2126,7 @@ def bm25_from_postings_small(
     :meth:`SearchIndex.search` keeps this tier behind the size gate."""
     from pyspark.sql import Window
 
-    q_terms = sorted(set(query_terms(query)))
-    buckets = sorted({term_bucket_py(t) for t in q_terms})
-    p = postings.filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(q_terms)
-    )
+    p = _term_rows(postings, query_terms(query), n_buckets)
     avgdl = F.lit(sum_dl).cast("double") / F.lit(n_docs)
     idf = F.log(
         F.lit(1.0)
@@ -2116,6 +2159,51 @@ def _postings_fingerprint(postings: DataFrame) -> str:
     return _layout_fingerprint(postings, "postings")
 
 
+def _listed_bucket_count(postings: DataFrame) -> int:
+    """The term-bucket count of a layout whose record does not carry one
+    (written before records did, or being repaired), read off the
+    ``bucket=K`` dirs of the postings listing a read already holds (no
+    Spark job): 64 when some K ≥ :data:`N_TERM_BUCKETS`, else
+    :data:`N_TERM_BUCKETS`. Exact because 16 divides 64: when every
+    bucket of a 64-bucket layout is below 16, crc32 mod 64 equals crc32
+    mod 16 for each of its terms, so either count finds every posting."""
+    top = max(
+        int(f.rsplit("/bucket=", 1)[1].split("/", 1)[0])
+        for f in postings.inputFiles()
+    )
+    return N_TERM_BUCKETS if top < N_TERM_BUCKETS else _LEGACY_TERM_BUCKETS
+
+
+def _file_schema(frame: DataFrame) -> dict:
+    """``frame``'s schema as a parquet read of its written files reports
+    it — every field and element nullable, as Spark's parquet writer
+    stores them — in the JSON form the ``meta.json`` record holds."""
+
+    def nullable(v):
+        if isinstance(v, dict):
+            return {
+                k: True if k in ("nullable", "containsNull", "valueContainsNull")
+                else nullable(x)
+                for k, x in v.items()
+            }
+        return [nullable(x) for x in v] if isinstance(v, list) else v
+
+    return nullable(frame.schema.jsonValue())
+
+
+def _read_artifact(spark, path: str, name: str, schemas: dict) -> DataFrame:
+    """Open the index artifact ``{path}/{name}``: with the record's schema
+    when ``schemas`` has it (a listing, no Spark job), else by parquet
+    schema inference (one job — records written before they carried
+    schemas, and the repair)."""
+    from pyspark.sql.types import StructType
+
+    r = spark.read
+    if name in schemas:
+        r = r.schema(StructType.fromJson(schemas[name]))
+    return r.parquet(f"{path}/{name}")
+
+
 def _read_index_meta(spark, path: str) -> dict | None:
     """The committed ``meta.json`` record as a dict (no Spark job), or None
     — no commit yet, or a layout older than the record (postings-only, or
@@ -2129,77 +2217,92 @@ def _read_index_meta(spark, path: str) -> dict | None:
         return None
 
 
-def _write_vocab(term_df: DataFrame, path: str) -> None:
+def _write_vocab(term_df: DataFrame, path: str) -> dict:
     """Overwrite the ``vocab`` sidecar from (term, df) rows: partitioned by
     term length, sorted by term within each length (the FST-analogue
-    pruning axes of the dictionary probes)."""
+    pruning axes of the dictionary probes). Returns its record schema."""
+    vocab = term_df.withColumn("tlen", F.length("term"))
     (
-        term_df.withColumn("tlen", F.length("term"))
-        .repartition("tlen")
+        vocab.repartition("tlen")
         .sortWithinPartitions("tlen", "term")
         .write.mode("overwrite")
         .partitionBy("tlen")
         .parquet(f"{path}/vocab")
     )
+    return _file_schema(vocab)
 
 
 def _write_index_sidecars(
     spark,
     path: str,
     postings: DataFrame,
+    doc_ids: DataFrame,
+    n_buckets: int,
     stats: tuple | None = None,
-    pos_fingerprint: str | None = None,
+    positional: DataFrame | None = None,
 ) -> dict:
-    """Derive the sidecars of a full write from ``postings``: ``doc_ids``
-    and ``vocab`` are each one aggregate over the postings, written
-    concurrently with the postings-fingerprint listing (Spark sessions
-    schedule jobs from several threads safely; locally the three short
-    jobs overlap their task-launch overhead). The ``meta.json`` record —
-    returned — is published strictly LAST, after every job has completed:
-    until then the layout reads as stale and :meth:`SearchIndex.load`
-    repairs again, so an overwrite in progress never masquerades as fresh.
+    """Write the sidecars of a whole index whose ``postings`` (and
+    ``positional`` artifact, if any) are already written, then publish
+    its ``meta.json`` record — returned — strictly LAST: until then the
+    layout reads as stale and :meth:`SearchIndex.load` repairs again, so
+    an overwrite in progress never masquerades as fresh. ``doc_ids`` and
+    ``vocab`` (one aggregate over the postings) are written concurrently
+    (Spark sessions schedule jobs from several threads safely; locally
+    the two short jobs overlap their task-launch overhead). The
+    fingerprints list the written files through the schemas the record
+    stores, so they read no data and infer nothing.
 
-    ``stats`` = the build's full-corpus (n_docs, sum_dl), which counts
-    zero-token docs like the corpus-scan scorers (:meth:`SearchIndex.save`).
-    None = derive them from the written ``doc_ids`` — the load-time
-    repair, which has nothing but posting rows to read."""
+    ``doc_ids``: the (doc_id, dl) rows to write — a build's, zero-token
+    docs included (:meth:`SearchIndex.save`), or the postings' own id
+    set (the load-time repair, which has nothing but posting rows to
+    read). ``stats``: (n_docs, sum_dl) when the caller holds them (a
+    loaded handle being saved); None = sum the written ``doc_ids``."""
     from concurrent.futures import ThreadPoolExecutor
 
-    def _doc_ids():
-        _doc_id_set(postings).write.mode("overwrite").parquet(f"{path}/doc_ids")
-
-    def _fingerprint():
-        # over the WRITTEN files (a listing-only read — no data scan):
-        # load() validates against the same listing
-        return _postings_fingerprint(spark.read.parquet(f"{path}/postings"))
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
+    schemas = {"postings": _file_schema(postings), "doc_ids": _file_schema(doc_ids)}
+    if positional is not None:
+        schemas["positions"] = _file_schema(positional)
+    with ThreadPoolExecutor(max_workers=2) as pool:
         futs = [
-            pool.submit(_doc_ids),
+            pool.submit(doc_ids.write.mode("overwrite").parquet, f"{path}/doc_ids"),
             pool.submit(_write_vocab, _term_df(postings), path),
-            pool.submit(_fingerprint),
         ]
-        _, _, fingerprint = (f.result() for f in futs)
+        _, schemas["vocab"] = (f.result() for f in futs)
+
+    def fingerprint(name: str) -> str:
+        return _layout_fingerprint(_read_artifact(spark, path, name, schemas), name)
+
     if stats is None:
         row = (
-            spark.read.parquet(f"{path}/doc_ids")
-            .agg(F.count(F.lit(1)), F.sum("dl"))
-            .collect()[0]
+            _read_artifact(spark, path, "doc_ids", schemas)
+            .agg(*_doc_stat_cols()).collect()[0]
         )
-        stats = (int(row[0]), int(row[1] or 0))
-    return _write_index_meta(spark, path, *stats, fingerprint, pos_fingerprint)
+        stats = (row["n_docs"], row["sum_dl"] or 0)
+    return _write_index_meta(
+        spark, path, *stats, n_buckets, schemas, fingerprint("postings"),
+        fingerprint("positions") if positional is not None else None,
+    )
 
 
 def _write_index_meta(
-    spark, path: str, n_docs: int, sum_dl: int, fingerprint: str,
-    pos_fingerprint: str | None = None,
+    spark, path: str, n_docs: int, sum_dl: int, n_buckets: int,
+    schemas: dict, fingerprint: str, pos_fingerprint: str | None = None,
 ) -> dict:
     """Commit the index: publish its one-line ``meta.json`` record the way
-    AtomicTable publishes ``_CURRENT`` (no Spark job) and return it."""
+    AtomicTable publishes ``_CURRENT`` (no Spark job) and return it.
+
+    Fields: ``n_docs`` and ``sum_dl`` (the corpus stats, exact integers);
+    ``n_buckets`` (the layout's term-bucket count); ``fingerprint`` and
+    ``pos_fingerprint`` (the postings and positions file listings the
+    record commits; the latter null without a positional artifact); and
+    ``schemas`` — the JSON StructType of ``postings``, ``vocab``,
+    ``doc_ids`` and, when present, ``positions``, so :meth:`SearchIndex.load`
+    opens every artifact without schema inference."""
     from pandemic_knowledge_spark.streaming.sinks import publish_file
 
-    meta = dict(n_docs=int(n_docs), sum_dl=int(sum_dl), fingerprint=fingerprint,
-                pos_fingerprint=pos_fingerprint)
+    meta = dict(n_docs=int(n_docs), sum_dl=int(sum_dl), n_buckets=int(n_buckets),
+                fingerprint=fingerprint, pos_fingerprint=pos_fingerprint,
+                schemas=schemas)
     publish_file(spark, f"{path}/meta.json", json.dumps(meta))
     return meta
 
@@ -2211,12 +2314,21 @@ class SearchIndex:
     /root/reference/flow/scripts/insert_owid.py bulk(), and then every
     keystroke search is an index probe, never a corpus scan).
 
-    Persisted layout: ``postings/`` (the source of truth, bucket-partitioned)
-    plus three DERIVED sidecars — ``vocab/`` the terms dictionary (term, df)
-    partitioned by term length (ES's per-segment FST: fuzzy/suggest/prefix
-    probes expand against dictionary slivers, never postings), ``doc_ids/``
-    the indexed-id set with dl norms (the incremental-ingest dedup guard),
-    and ``meta.json`` the JSON commit record (n_docs, sum_dl, fingerprints).
+    Persisted layout: ``postings/`` (the source of truth, partitioned by
+    term bucket) plus three DERIVED sidecars — ``vocab/`` the terms
+    dictionary (term, df) partitioned by term length (ES's per-segment FST:
+    fuzzy/suggest/prefix probes expand against dictionary slivers, never
+    postings), ``doc_ids/`` the indexed-id set with dl norms, zero-token
+    docs included (the incremental-ingest dedup guard), and ``meta.json``
+    the JSON commit record: corpus stats, the layout's term-bucket count,
+    the file-listing fingerprints and every artifact's schema
+    (:func:`_write_index_meta`). Opening a committed index reads the
+    record and lists the files — no Spark job.
+
+    :attr:`n_buckets` is the layout's term-bucket count: new layouts use
+    :data:`N_TERM_BUCKETS`, layouts written before it was 16 keep 64. The
+    handle passes it to every probe, so terms map to the buckets that
+    layout was written with.
 
     One write path: :meth:`save` writes a whole index, :meth:`append_save`
     adds a batch of documents to a persisted one (creating it on the first
@@ -2233,7 +2345,8 @@ class SearchIndex:
                  index_bytes: int | None = None,
                  vocab: DataFrame | None = None,
                  doc_ids: DataFrame | None = None,
-                 positional: DataFrame | None = None) -> None:
+                 positional: DataFrame | None = None,
+                 n_buckets: int | None = None) -> None:
         self.postings = postings
         self.stats = stats
         # (n_docs, sum_dl) as plain ints when known eagerly (loaded index):
@@ -2257,6 +2370,8 @@ class SearchIndex:
         # postings: present only on positional builds/layouts; phrase
         # probes require it.
         self.positional = positional
+        # Term-bucket count of the postings (and positions) layout.
+        self.n_buckets = n_buckets or N_TERM_BUCKETS
 
     @classmethod
     def build(cls, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
@@ -2268,9 +2383,9 @@ class SearchIndex:
         aggregate the postings once per session, not once per keystroke.
         ``positional=True`` additionally builds the positional posting
         table (phrase probes; a second tokenize pass over the corpus)."""
-        postings, stats = build_postings(docs, id_col, text_col)
+        postings, doc_ids = build_postings(docs, id_col, text_col)
+        stats = doc_ids.agg(*_doc_stat_cols())
         vocab = _term_df(postings).withColumn("tlen", F.length("term"))
-        doc_ids = _doc_id_set(postings)
         pos = (
             build_positional_postings(docs, id_col, text_col)
             if positional
@@ -2311,25 +2426,23 @@ class SearchIndex:
         moves, from the one code path that actually runs).
 
         One lazy checkpoint of the laid postings feeds the postings write
-        AND both sidecar aggregates, so nothing re-reads the files just
-        written and nothing re-runs the tokenize lineage. Saving an
-        uncached build shuffles once (see :func:`build_postings`). Record
-        stats come from the build's full-corpus ``stats`` row — n_docs
-        counts zero-token docs exactly like the corpus-scan scorers, so a
-        LOADED index scores bit-identically to the in-memory build even
-        on corpora with empty documents (only the crash-REPAIR path, which
-        has nothing but postings to read, keeps postings-only stats). At
-        cluster scale the checkpoint holds one copy of the postings in
-        executor memory/disk for the duration of the save — the same
-        footprint the write shuffle already has."""
+        and the vocab aggregate, so nothing re-reads the files just
+        written. Saving an uncached build shuffles once (see
+        :func:`build_postings`). ``doc_ids`` are the build's per-doc rows,
+        zero-token docs included, and the record's stats sum them — n_docs
+        counts empty docs exactly like the corpus-scan scorers, so a
+        LOADED index scores bit-identically to the in-memory build (only
+        the crash-REPAIR path, which has nothing but postings to read,
+        keeps postings-only stats). A loaded handle keeps its record's
+        stats. At cluster scale the checkpoint holds one copy of the
+        postings in executor memory/disk for the duration of the save —
+        the same footprint the write shuffle already has."""
         import time as _time
 
         t0 = _time.perf_counter()
         laid = _bucket_laid(self.postings).localCheckpoint(eager=False)
         laid.write.mode("overwrite").partitionBy("bucket").parquet(f"{path}/postings")
         t1 = _time.perf_counter()
-        spark = self.postings.sparkSession
-        pos_fp = None
         if self.positional is not None:
             (
                 _bucket_laid(self.positional)
@@ -2337,16 +2450,12 @@ class SearchIndex:
                 .partitionBy("bucket")
                 .parquet(f"{path}/positions")
             )
-            pos_fp = _layout_fingerprint(
-                spark.read.parquet(f"{path}/positions"), "positions"
-            )
         t2 = _time.perf_counter()
-        if self.stats_scalars is not None:
-            stats = self.stats_scalars
-        else:
-            row = self.stats.collect()[0]
-            stats = (int(row["n_docs"]), int(row["sum_dl"] or 0))
-        _write_index_sidecars(spark, path, laid, stats, pos_fp)
+        doc_ids = self.doc_ids if self.doc_ids is not None else _doc_id_set(laid)
+        _write_index_sidecars(
+            self.postings.sparkSession, path, laid, doc_ids, self.n_buckets,
+            self.stats_scalars, self.positional,
+        )
         laid.unpersist()
         if timings is not None:
             timings["postings_sec"] = round(t1 - t0, 3)
@@ -2356,58 +2465,74 @@ class SearchIndex:
 
     @classmethod
     def load(cls, spark, path: str) -> "SearchIndex":
-        """Open the persisted index: validate the ``meta.json`` record's
-        fingerprint against the postings file listing (driver-side, no
-        data scan); when it differs or there is no record — a crash before
-        the record's publish, or a layout older than the record — rebuild
-        the sidecars from the postings once. Corpus stats (n_docs, sum_dl)
-        come from the record as driver-side literals, so index-open costs
-        a file listing and a one-line read, not a postings aggregate.
-        save() recorded them from the FULL corpus (zero-token docs
-        included), so loaded-index scores are bit-identical to the
-        in-memory build. Only the crash-REPAIR path, which has nothing but
-        posting rows to read, falls back to postings-only stats (on a
-        corpus with empty docs n_docs reads slightly smaller until the next
-        save — empty docs never match, so only idf norms shift). Raises
-        FileNotFoundError when ``path`` holds no postings yet."""
+        """Open the persisted index with no Spark job: read the
+        ``meta.json`` record, open every artifact with the schema it
+        stores (a driver-side file listing, no inference), and validate
+        its fingerprint against the postings listing. Corpus stats
+        (n_docs, sum_dl) and the term-bucket count come from the record
+        as driver-side literals. save() recorded the stats from the FULL
+        corpus (zero-token docs included), so loaded-index scores are
+        bit-identical to the in-memory build.
+
+        When the fingerprint differs or there is no record — a crash
+        before the record's publish, or a layout older than the record —
+        the sidecars and the record are rebuilt from the postings once
+        (schema inference; the bucket count from the listing,
+        :func:`_listed_bucket_count`), and a parquet ``meta/`` left by
+        older layouts is deleted. Only this REPAIR path, which has
+        nothing but posting rows to read, falls back to postings-only
+        stats (on a corpus with empty docs n_docs reads slightly smaller
+        until the next save — empty docs never match, so only idf norms
+        shift). A record written before records carried schemas and a
+        bucket count still opens, by inference and the listing rule.
+        Raises FileNotFoundError when ``path`` holds no postings yet."""
         from pyspark.errors import AnalysisException
 
+        from pandemic_knowledge_spark.streaming.sinks import _hadoop_path
+
+        meta = _read_index_meta(spark, path)
         try:
-            postings = spark.read.parquet(f"{path}/postings")
+            postings = _read_artifact(
+                spark, path, "postings", (meta or {}).get("schemas") or {}
+            )
         except AnalysisException as e:
             # absent, or a first write crashed before its postings commit
             # (no data file to infer a schema from); any other read error
             # propagates, so an existing index is never taken for none
-            if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-                raise FileNotFoundError(f"no search index under {path}") from e
-            raise
-        meta = _read_index_meta(spark, path)
+            if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+                raise
+            postings = None
+        # (with a record's schema an empty dir reads fine: an overwrite
+        # that crashed before its postings commit)
+        if postings is None or not postings.inputFiles():
+            raise FileNotFoundError(f"no search index under {path}")
         if meta is None or meta["fingerprint"] != _postings_fingerprint(postings):
             # derived sidecars rebuild from postings; the positional
             # artifact is NOT derivable, and after a crash we can't know
             # it matches the postings — disable it (pos_fingerprint=None)
             # rather than risk silently inconsistent phrase results; a
             # positional save() re-enables it.
-            meta = _write_index_sidecars(spark, path, postings)
+            meta = _write_index_sidecars(
+                spark, path, postings, _doc_id_set(postings),
+                _listed_bucket_count(postings),
+            )
+            legacy, fs = _hadoop_path(spark, f"{path}/meta")
+            fs.delete(legacy, True)  # the parquet record meta.json replaced
         return cls._committed(spark, path, postings, meta)
 
     @classmethod
-    def _committed(cls, spark, path: str, postings: DataFrame, meta: dict,
-                   like: "SearchIndex | None" = None) -> "SearchIndex":
+    def _committed(cls, spark, path: str, postings: DataFrame,
+                   meta: dict) -> "SearchIndex":
         """The handle over a committed layout: ``postings`` is the frame
-        whose file listing gave ``meta["fingerprint"]``. ``like`` = a
-        handle on the same index whose sidecar schemas the reads reuse
-        (no schema-inference job)."""
-
-        def read(name: str) -> DataFrame:
-            r = spark.read
-            r = r if like is None else r.schema(getattr(like, name).schema)
-            return r.parquet(f"{path}/{name}")
-
+        whose file listing gave ``meta["fingerprint"]``; the sidecars
+        open with the record's schemas (no Spark job), and a record
+        written before it carried schemas or a bucket count falls back to
+        inference and :func:`_listed_bucket_count`."""
+        schemas = meta.get("schemas") or {}
         positional = None
         if meta.get("pos_fingerprint"):
             try:
-                pos = spark.read.parquet(f"{path}/positions")
+                pos = _read_artifact(spark, path, "positions", schemas)
             except Exception:
                 pos = None
             if pos is not None and (
@@ -2426,9 +2551,10 @@ class SearchIndex:
             stats,
             stats_scalars=(meta["n_docs"], meta["sum_dl"]),
             index_bytes=int(index_bytes),
-            vocab=read("vocab"),
-            doc_ids=read("doc_ids"),
+            vocab=_read_artifact(spark, path, "vocab", schemas),
+            doc_ids=_read_artifact(spark, path, "doc_ids", schemas),
             positional=positional,
+            n_buckets=meta.get("n_buckets") or _listed_bucket_count(postings),
         )
 
     def search(self, query: str, k: int = 10,
@@ -2452,12 +2578,17 @@ class SearchIndex:
             ):
                 n_docs, sum_dl = self.stats_scalars
                 return bm25_from_postings_small(
-                    self.postings, n_docs, sum_dl, query, k=k, after=after
+                    self.postings, n_docs, sum_dl, query, k=k, after=after,
+                    n_buckets=self.n_buckets,
                 )
             return bm25_from_postings(
-                self.postings, self.stats_scalars, query, k=k, after=after
+                self.postings, self.stats_scalars, query, k=k, after=after,
+                n_buckets=self.n_buckets,
             )
-        return bm25_from_postings(self.postings, self.stats, query, k=k, after=after)
+        return bm25_from_postings(
+            self.postings, self.stats, query, k=k, after=after,
+            n_buckets=self.n_buckets,
+        )
 
     def more_like_this(
         self,
@@ -2475,6 +2606,7 @@ class SearchIndex:
             self.postings, stats, src_doc_id, k=k,
             max_query_terms=max_query_terms,
             min_term_freq=min_term_freq, min_doc_freq=min_doc_freq,
+            n_buckets=self.n_buckets,
         )
 
     def fuzzy_search(
@@ -2492,7 +2624,7 @@ class SearchIndex:
         return fuzzy_match_from_postings(
             self.postings, stats, query, k=k,
             max_expansions=max_expansions, prefix_length=prefix_length,
-            vocab=self.vocab,
+            vocab=self.vocab, n_buckets=self.n_buckets,
         )
 
     def prefix_search(self, query: str, k: int = 10,
@@ -2505,6 +2637,7 @@ class SearchIndex:
         return prefix_search_from_postings(
             self.postings, stats, query, k=k,
             max_expansions=max_expansions, vocab=self.vocab,
+            n_buckets=self.n_buckets,
         )
 
     def suggest(self, term: str, max_edits: int = 2, prefix_length: int = 1,
@@ -2543,7 +2676,9 @@ class SearchIndex:
                 "whose positions were stale/mid-write is deliberately "
                 "disabled — rebuild via a positional save()."
             )
-        return phrase_search_from_postings(self.positional, phrase, k=k)
+        return phrase_search_from_postings(
+            self.positional, phrase, k=k, n_buckets=self.n_buckets
+        )
 
     @classmethod
     def append_save(cls, spark, path: str, docs: DataFrame,
@@ -2552,17 +2687,18 @@ class SearchIndex:
         batches writes through. When ``path`` holds no postings yet (never
         written, or the first write crashed before its postings commit),
         the batch becomes the index through :meth:`save`. Otherwise only
-        ``docs`` is tokenized and its postings are APPENDED into the
-        existing layout, then the sidecars refresh INCREMENTALLY: the
-        dedup guard anti-joins the tiny ``doc_ids`` sidecar (never a
-        full-postings distinct) and the batch's rows append to it, the
-        terms dictionary merges old vocab + the batch's term counts
-        (dictionary-sized, not postings-sized), and the record's stats are
-        exact integer sums. Returns the updated index handle, built from
-        the committed record, the postings frame the new fingerprint was
-        listed from and the previous handle's sidecar schemas (no second
-        :meth:`load`); probes over it equal a from-scratch rebuild of
-        old ∪ new.
+        ``docs`` is tokenized and its postings — bucketed with the
+        layout's own :attr:`n_buckets`, one file per bucket — are APPENDED
+        into the existing layout, then the sidecars refresh INCREMENTALLY:
+        the dedup guard anti-joins the tiny ``doc_ids`` sidecar (never a
+        full-postings distinct) and the batch's per-doc rows, zero-token
+        docs included, append to it; the terms dictionary merges old vocab
+        + the batch's term counts (dictionary-sized, not postings-sized);
+        the record's stats add the batch's exact integer sums, and its
+        schemas and bucket count carry over. Returns the updated index
+        handle, built from the committed record and the postings frame the
+        new fingerprint was listed from (no second :meth:`load`); probes
+        over it equal a from-scratch rebuild of old ∪ new.
 
         Already-indexed doc ids in ``docs`` are DROPPED (first-accepted
         wins — the same policy as the incremental dedup ingest): without
@@ -2580,8 +2716,7 @@ class SearchIndex:
             prev = cls.load(spark, path)  # validates/repairs sidecars
         except FileNotFoundError:
             cls.build(docs, id_col, text_col, cache=False).save(path)
-            postings = spark.read.parquet(f"{path}/postings")
-            return cls._committed(spark, path, postings, _read_index_meta(spark, path))
+            return cls.load(spark, path)
         if prev.positional is not None:
             raise ValueError(
                 "append_save does not maintain positional layouts: a crash "
@@ -2597,14 +2732,16 @@ class SearchIndex:
         # materialize the filtered batch BEFORE any write: the anti-join
         # reads {path}/doc_ids, which the refresh below appends to
         docs = docs.join(indexed, id_col, "left_anti").localCheckpoint(eager=True)
-        new_p, _new_s = build_postings(docs, id_col, text_col)
-        new_p = _bucket_laid(new_p).localCheckpoint(eager=True)  # 3 consumers below
+        new_p, new_docs = build_postings(docs, id_col, text_col, prev.n_buckets)
+        new_p = _bucket_laid(new_p).localCheckpoint(eager=True)  # 2 consumers below
         new_p.write.mode("append").partitionBy("bucket").parquet(f"{path}/postings")
-        new_docs = _doc_id_set(new_p)
-        new_docs.write.mode("append").parquet(f"{path}/doc_ids")
-        batch = new_docs.agg(
-            F.count(F.lit(1)).alias("n"), F.coalesce(F.sum("dl"), F.lit(0)).alias("s")
-        ).collect()[0]
+        # the batch's stats ride the doc_ids append as observed metrics: no
+        # second pass over the batch
+        batch = Observation()
+        (
+            new_docs.observe(batch, *_doc_stat_cols())
+            .write.mode("append").parquet(f"{path}/doc_ids")
+        )
         merged_vocab = (
             prev.vocab.select("term", "df")
             .unionByName(_term_df(new_p))
@@ -2615,12 +2752,20 @@ class SearchIndex:
         )
         _write_vocab(merged_vocab, path)
         n_docs, sum_dl = prev.stats_scalars
-        postings = spark.read.schema(prev.postings.schema).parquet(f"{path}/postings")
+        schemas = {
+            name: _file_schema(frame)
+            for name, frame in (
+                ("postings", prev.postings), ("vocab", prev.vocab),
+                ("doc_ids", prev.doc_ids),
+            )
+        }
+        postings = _read_artifact(spark, path, "postings", schemas)
         meta = _write_index_meta(
-            spark, path, n_docs + int(batch["n"]), sum_dl + int(batch["s"]),
-            _postings_fingerprint(postings),
+            spark, path, n_docs + batch.get["n_docs"],
+            sum_dl + (batch.get["sum_dl"] or 0),
+            prev.n_buckets, schemas, _postings_fingerprint(postings),
         )
-        return cls._committed(spark, path, postings, meta, like=prev)
+        return cls._committed(spark, path, postings, meta)
 
 
 def tfidf_keywords(
@@ -2734,9 +2879,7 @@ def build_postings_fields(
         long.select("field", "doc_id", "dl", F.explode("toks").alias("term"))
         .groupBy("field", "doc_id", "dl", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .withColumn(
-            "bucket", F.pmod(F.crc32(F.col("term")), F.lit(N_TERM_BUCKETS)).cast("int")
-        )
+        .withColumn("bucket", _bucket_col())
     )
     return postings, stats
 
@@ -2752,11 +2895,7 @@ def bm25_fields_from_postings(
     output to :func:`bm25_search_fields`, no corpus tokenize at query time.
     Per-(field, term) df recomputes from the pruned postings (rows unique
     per (field, doc, term) → plain count)."""
-    q_terms = sorted(set(query_terms(query)))
-    buckets = sorted({term_bucket_py(t) for t in q_terms})
-    p = postings.filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(q_terms)
-    )
+    p = _term_rows(postings, query_terms(query))
     df_t = p.groupBy("field", "term").agg(F.count(F.lit(1)).alias("df"))
     field_scores = (
         p.join(F.broadcast(df_t), ["field", "term"])
@@ -2822,14 +2961,13 @@ def build_positional_postings(
         base.select("doc_id", F.posexplode("toks").alias("pos", "term"))
         .groupBy("doc_id", "term")
         .agg(F.array_sort(F.collect_list("pos")).alias("positions"))
-        .withColumn(
-            "bucket", F.pmod(F.crc32(F.col("term")), F.lit(N_TERM_BUCKETS)).cast("int")
-        )
+        .withColumn("bucket", _bucket_col())
     )
 
 
 def phrase_search_from_postings(
-    postings_pos: DataFrame, phrase: str, k: int = 10
+    postings_pos: DataFrame, phrase: str, k: int = 10,
+    n_buckets: int | None = None,
 ) -> DataFrame:
     """Top-k docs containing the exact consecutive-token phrase, counted
     from positional postings alone — no corpus scan.
@@ -2841,31 +2979,29 @@ def phrase_search_from_postings(
     (every offset joins independently). The probe touches only the phrase
     terms' buckets → partition-pruned at scale."""
     return (
-        phrase_counts_from_postings(postings_pos, phrase)
+        phrase_counts_from_postings(postings_pos, phrase, n_buckets)
         .orderBy(F.desc("phrase_count"), "doc_id")
         .limit(k)
     )
 
 
 def phrase_counts_from_postings(
-    postings_pos: DataFrame, phrase: str
+    postings_pos: DataFrame, phrase: str, n_buckets: int | None = None
 ) -> DataFrame:
     """The UNLIMITED (doc_id, phrase_count) frame behind
     :func:`phrase_search_from_postings` — exposed so combinators (the
     indexed bool door's phrase clauses) can score every matching doc
-    instead of a pre-truncated page."""
+    instead of a pre-truncated page. ``n_buckets`` = the layout's
+    term-bucket count (:func:`_term_rows`)."""
     terms = query_terms(phrase)
     if not terms:
         raise ValueError("phrase has no tokenizable terms")
     m = len(terms)
-    buckets = sorted({term_bucket_py(t) for t in terms})
     offsets = F.posexplode(F.array(*[F.lit(t) for t in terms])).alias("off", "term")
     phrase_df = F.broadcast(
         postings_pos.sparkSession.range(1).select(offsets)
     )
-    probe = postings_pos.filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(sorted(set(terms)))
-    )
+    probe = _term_rows(postings_pos, terms, n_buckets)
     joined = probe.join(phrase_df, "term").select(
         "doc_id",
         "off",
@@ -2885,7 +3021,8 @@ def phrase_counts_from_postings(
 
 
 def span_counts_from_postings(
-    postings_pos: DataFrame, phrase: str, slop: int
+    postings_pos: DataFrame, phrase: str, slop: int,
+    n_buckets: int | None = None,
 ) -> DataFrame:
     """(doc_id, phrase_count) for a phrase WITH SLOP from the positional
     tier: the ordered span-start count of :func:`span_near_search` /
@@ -2898,7 +3035,8 @@ def span_counts_from_postings(
     groupBy assembling the m position arrays per doc (docs lacking any
     term drop via the n_off == m gate), then the same nested-EXISTS
     window search as HOFs over the (tiny, per-doc) arrays — no corpus
-    scan, no shuffle beyond the per-doc assembly."""
+    scan, no shuffle beyond the per-doc assembly. ``n_buckets`` = the
+    layout's term-bucket count (:func:`_term_rows`)."""
     terms = query_terms(phrase)
     if not terms:
         raise ValueError("phrase has no tokenizable terms")
@@ -2906,14 +3044,11 @@ def span_counts_from_postings(
         raise ValueError("slop must be ≥ 0")
     m = len(terms)
     W = slop + m
-    buckets = sorted({term_bucket_py(t) for t in terms})
     offsets = F.posexplode(F.array(*[F.lit(t) for t in terms])).alias("off", "term")
     phrase_df = F.broadcast(
         postings_pos.sparkSession.range(1).select(offsets)
     )
-    probe = postings_pos.filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(sorted(set(terms)))
-    )
+    probe = _term_rows(postings_pos, terms, n_buckets)
     per_doc = (
         probe.join(phrase_df, "term")
         .groupBy("doc_id")

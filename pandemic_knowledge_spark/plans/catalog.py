@@ -3906,8 +3906,8 @@ FROM hits h JOIN documents d USING (doc_id)
 )
 def search_page_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3+X4 over the PERSISTED index path (SURVEY §4.2): build the posting
-    tables (bucket-partitioned term → (doc, tf, dl) lists + one-row corpus
-    stats — operators.search.build_postings), score the page purely from
+    tables (bucket-partitioned term → (doc, tf, dl) lists + per-doc lengths
+    summed to the corpus stats — operators.search.build_postings), score the page purely from
     postings (bm25_from_postings: bucket partition-pruning + term filter,
     NO corpus tokenize at query time), then join back for display text and
     highlighting. Same oracle as search_page_highlighted proves the indexed

@@ -4,6 +4,8 @@ dashboard panel families (§2.6) over conformed facts.
 
 from __future__ import annotations
 
+import zlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -415,17 +417,24 @@ def test_search_index_probe_tiers_and_eager_stats(spark, tmp_path, monkeypatch):
 
 def test_spark_crc32_matches_python_bucket(spark):
     """The Spark bucket expression and term_bucket_py MUST agree — partition
-    pruning silently returns wrong (empty) results if they drift."""
-    from pandemic_knowledge_spark.operators.search import N_TERM_BUCKETS, term_bucket_py
+    pruning silently returns wrong (empty) results if they drift — at the
+    count new layouts use and at the 64 older layouts keep."""
+    from pandemic_knowledge_spark.operators.search import (
+        N_TERM_BUCKETS,
+        _bucket_col,
+        term_bucket_py,
+    )
 
     terms = ["virus", "outbreak", "zebra", "a", "covid19", "ünïcode"]
-    rows = (
-        spark.createDataFrame([(t,) for t in terms], "term string")
-        .select("term", F.pmod(F.crc32(F.col("term")), F.lit(N_TERM_BUCKETS)).cast("int").alias("b"))
-        .collect()
-    )
-    for r in rows:
-        assert r.b == term_bucket_py(r.term), r.term
+    for n in (N_TERM_BUCKETS, 64):
+        rows = (
+            spark.createDataFrame([(t,) for t in terms], "term string")
+            .select("term", _bucket_col(n).alias("b"))
+            .collect()
+        )
+        for r in rows:
+            assert r.b == term_bucket_py(r.term, n), (n, r.term)
+            assert r.b == zlib.crc32(r.term.encode("utf-8")) % n, (n, r.term)
 
 
 def test_multifield_index_probe_matches_direct(spark):
@@ -448,31 +457,45 @@ def test_multifield_index_probe_matches_direct(spark):
     assert probed.collect() == direct.collect()
 
 
-def test_search_index_append_save_equals_rebuild(spark, tmp_path):
-    """The persisted incremental loop: save(old) → append_save(new) →
-    probes equal a from-scratch rebuild of the full corpus."""
-    from pandemic_knowledge_spark.operators.search import SearchIndex
+def _docs_with_punctuation_doc(spark, sf_dir):
+    """The test corpus's documents plus one all-punctuation doc (zero
+    tokens), which lands in the odd-id half."""
     from pandemic_knowledge_spark.tables import load
 
-    docs = load(spark, "/root/testdata/sf0.001", "documents")
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    return docs.unionByName(
+        spark.createDataFrame([(10**6 + 1, "!!! ...")], docs.schema)
+    )
+
+
+def test_search_index_append_save_equals_rebuild(spark, sf_dir, tmp_path):
+    """The persisted incremental loop: save(old) → append_save(new) →
+    probes and corpus stats equal a from-scratch rebuild of the full
+    corpus — zero-token docs in the batch counted, as the build counts
+    them."""
+    from pandemic_knowledge_spark.operators.search import SearchIndex
+
+    docs = _docs_with_punctuation_doc(spark, sf_dir)
     old = docs.filter(F.col("doc_id") % 2 == 0)
     new = docs.filter(F.col("doc_id") % 2 == 1)
     path = str(tmp_path / "inc_idx")
     SearchIndex.build(old, "doc_id", "text", cache=False).save(path)
     updated = SearchIndex.append_save(spark, path, new)
     full = SearchIndex.build(docs, "doc_id", "text", cache=False)
+    assert updated.stats_scalars == tuple(full.stats.collect()[0])
     q = "virus outbreak"
     assert updated.search(q, k=8).collect() == full.search(q, k=8).collect()
 
 
-def test_search_index_append_save_is_idempotent_and_first_wins(spark, tmp_path):
+def test_search_index_append_save_is_idempotent_and_first_wins(
+    spark, sf_dir, tmp_path
+):
     """Retrying the same batch (at-least-once foreachBatch) and re-crawling
-    an already-indexed doc must both be no-ops — probes keep equaling the
-    clean rebuild."""
+    an already-indexed doc must both be no-ops — probes and stats keep
+    equaling the clean rebuild, a replayed zero-token doc included."""
     from pandemic_knowledge_spark.operators.search import SearchIndex
-    from pandemic_knowledge_spark.tables import load
 
-    docs = load(spark, "/root/testdata/sf0.001", "documents")
+    docs = _docs_with_punctuation_doc(spark, sf_dir)
     old = docs.filter(F.col("doc_id") % 2 == 0)
     new = docs.filter(F.col("doc_id") % 2 == 1)
     path = str(tmp_path / "idem_idx")
@@ -483,6 +506,7 @@ def test_search_index_append_save_is_idempotent_and_first_wins(spark, tmp_path):
     mutated = new.limit(3).withColumn("text", F.concat(F.col("text"), F.lit(" extra")))
     updated = SearchIndex.append_save(spark, path, mutated)
     full = SearchIndex.build(docs, "doc_id", "text", cache=False)
+    assert updated.stats_scalars == tuple(full.stats.collect()[0])
     q = "virus outbreak"
     assert updated.search(q, k=8).collect() == full.search(q, k=8).collect()
     # postings hold exactly one (doc, term) row set per doc

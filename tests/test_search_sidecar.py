@@ -56,13 +56,19 @@ def _saved(spark, tmp_path, name="idx"):
 
 def test_save_writes_vocab_docids_meta_sidecars(spark, tmp_path):
     """save() persists the derived sidecars and the ``meta.json`` record;
-    the record parses to the build's stats and the written postings'
-    fingerprint, and its publish leaves no tmp file behind; vocab is
+    the record parses to the build's stats, the layout's bucket count, the
+    written postings' fingerprint and the schemas a parquet read of each
+    artifact infers, and its publish leaves no tmp file behind; vocab is
     hive-partitioned by term length and agrees row-for-row with the
     postings aggregate."""
     import json
 
-    from pandemic_knowledge_spark.operators.search import _postings_fingerprint
+    from pyspark.sql.types import StructType
+
+    from pandemic_knowledge_spark.operators.search import (
+        N_TERM_BUCKETS,
+        _postings_fingerprint,
+    )
 
     docs, path = _saved(spark, tmp_path)
     assert os.path.isdir(f"{path}/vocab")
@@ -70,12 +76,17 @@ def test_save_writes_vocab_docids_meta_sidecars(spark, tmp_path):
     with open(f"{path}/meta.json", encoding="utf-8") as f:
         meta = json.load(f)
     want = SearchIndex.build(docs, "doc_id", "text", cache=False).stats.collect()[0]
+    schemas = meta.pop("schemas")
     assert meta == {
         "n_docs": want["n_docs"],
         "sum_dl": want["sum_dl"],
+        "n_buckets": N_TERM_BUCKETS,
         "fingerprint": _postings_fingerprint(spark.read.parquet(f"{path}/postings")),
         "pos_fingerprint": None,
     }
+    assert sorted(schemas) == ["doc_ids", "postings", "vocab"]
+    for name, schema in schemas.items():
+        assert StructType.fromJson(schema) == spark.read.parquet(f"{path}/{name}").schema
     assert not [e for e in os.listdir(path) if ".tmp" in e]
     # length-partitioned layout (the FST-analogue pruning axis)
     assert any(e.startswith("tlen=") for e in os.listdir(f"{path}/vocab"))
@@ -246,7 +257,8 @@ def test_load_legacy_postings_only_layout(spark, tmp_path):
     pre-sidecar one (postings dir only), and one whose commit record is
     the old one-row parquet ``meta/`` (such indexes persist under the
     system temp dir across runs). load() derives the sidecars and the
-    record once and probes work — no migration step."""
+    record once and probes work — no migration step; the repair deletes
+    the parquet ``meta/`` its ``meta.json`` replaces."""
     from pandemic_knowledge_spark.operators.search import _postings_fingerprint
 
     docs = load(spark, SF_DIR, "documents")
@@ -269,9 +281,121 @@ def test_load_legacy_postings_only_layout(spark, tmp_path):
         assert not os.path.exists(f"{path}/meta.json")
         idx = SearchIndex.load(spark, path)
         assert os.path.isfile(f"{path}/meta.json"), name
+        assert not os.path.exists(f"{path}/meta"), name  # the repair drops it
         assert idx.vocab is not None and idx.doc_ids is not None
         q = "virus outbreak"
         assert idx.search(q, k=5).collect() == idx0.search(q, k=5).collect(), name
+
+
+def _next_job_id(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def _postings_files(path) -> set:
+    return {
+        os.path.join(d, f)
+        for d, _, fs in os.walk(f"{path}/postings")
+        for f in fs
+        if f.endswith(".parquet")
+    }
+
+
+_BOOL = dict(
+    must=[{"match": "virus outbreak"}],
+    should=[{"fuzzy": "sparc"}, {"constant_score": {"term": "stream"}}],
+    must_not=[{"term": "zebra"}],
+    k=10,
+)
+
+
+def _probes(idx):
+    """The probe doors whose bucket pruning depends on the layout's count."""
+    return (
+        idx.search("virus outbreak spark", k=8).collect(),
+        idx.fuzzy_search("a sparc strean", k=10).collect(),
+        idx.bool_search(**_BOOL).collect(),
+    )
+
+
+def test_load_starts_no_job_and_append_writes_one_file_per_bucket_at_most(
+    spark, tmp_path
+):
+    """A committed layout opens with no Spark job — the record carries
+    every artifact's schema and the bucket count, and N_TERM_BUCKETS dirs
+    list on the driver — and one append_save adds at most N_TERM_BUCKETS
+    postings files."""
+    from pandemic_knowledge_spark.operators.search import N_TERM_BUCKETS
+
+    docs = load(spark, SF_DIR, "documents")
+    path = str(tmp_path / "idx")
+    SearchIndex.build(
+        docs.filter(F.col("doc_id") % 2 == 0), "doc_id", "text", cache=False
+    ).save(path)
+    before = _postings_files(path)
+    updated = SearchIndex.append_save(
+        spark, path, docs.filter(F.col("doc_id") % 2 == 1)
+    )
+    assert 0 < len(_postings_files(path) - before) <= N_TERM_BUCKETS
+    j0 = _next_job_id(spark)
+    idx = SearchIndex.load(spark, path)
+    assert _next_job_id(spark) == j0
+    assert idx.stats_scalars == updated.stats_scalars
+    assert idx.n_buckets == N_TERM_BUCKETS
+
+
+def test_64_bucket_layout_opens_probes_and_appends(spark, tmp_path, monkeypatch):
+    """An index written with 64 term buckets, the count before
+    N_TERM_BUCKETS was 16, under the record such layouts carry (no schemas,
+    no bucket count): it opens as a 64-bucket layout (the listing rule),
+    its probes equal a rebuild, and after an append_save — which buckets
+    the batch the layout's way and records the count — its probes equal a
+    rebuild of old ∪ new."""
+    import json
+
+    from pandemic_knowledge_spark.operators import search as search_mod
+    from pandemic_knowledge_spark.streaming.sinks import publish_file
+
+    docs = load(spark, SF_DIR, "documents")
+    old = docs.filter(F.col("doc_id") % 2 == 0)
+    path = str(tmp_path / "idx64")
+    monkeypatch.setattr(search_mod, "N_TERM_BUCKETS", 64)
+    SearchIndex.build(old, "doc_id", "text", cache=False).save(path)
+    monkeypatch.undo()
+    with open(f"{path}/meta.json", encoding="utf-8") as f:
+        meta = json.load(f)
+    publish_file(spark, f"{path}/meta.json", json.dumps(
+        {k: meta[k] for k in ("n_docs", "sum_dl", "fingerprint", "pos_fingerprint")}
+    ))
+    assert max(
+        int(d.split("=")[1]) for d in os.listdir(f"{path}/postings")
+        if d.startswith("bucket=")
+    ) >= 16
+    idx = SearchIndex.load(spark, path)
+    assert idx.n_buckets == 64
+    assert _probes(idx) == _probes(SearchIndex.build(old, "doc_id", "text", cache=False))
+    updated = SearchIndex.append_save(
+        spark, path, docs.filter(F.col("doc_id") % 2 == 1)
+    )
+    with open(f"{path}/meta.json", encoding="utf-8") as f:
+        assert json.load(f)["n_buckets"] == 64
+    want = _probes(SearchIndex.build(docs, "doc_id", "text", cache=False))
+    assert _probes(updated) == want
+    assert _probes(SearchIndex.load(spark, path)) == want
+
+
+def test_layout_without_record_takes_bucket_count_from_listing(spark, tmp_path):
+    """A 16-bucket layout whose meta.json is gone: load() repairs it, the
+    listing rule gives 16 (no bucket dir at or above 16), the repaired
+    record says so, and probes equal a rebuild."""
+    import json
+
+    docs, path = _saved(spark, tmp_path)
+    os.remove(f"{path}/meta.json")
+    idx = SearchIndex.load(spark, path)
+    assert idx.n_buckets == 16
+    with open(f"{path}/meta.json", encoding="utf-8") as f:
+        assert json.load(f)["n_buckets"] == 16
+    assert _probes(idx) == _probes(SearchIndex.build(docs, "doc_id", "text", cache=False))
 
 
 def test_inmemory_build_caches_dictionary_for_interactive_probes(spark):
