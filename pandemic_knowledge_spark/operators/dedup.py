@@ -212,16 +212,13 @@ def minhash_base(
     )
 
 
-def _band_rows(base: DataFrame) -> DataFrame:
-    """base → (doc_id, band, bkey): one row per LSH band bucket."""
-    sig_arr = base.select(
-        "doc_id", F.array(*[F.col(f"mh{i}") for i in range(N_PERM)]).alias("sig")
-    )
-    return sig_arr.select(
-        "doc_id", F.explode(band_keys(F.col("sig"))).alias("bk")
-    ).select(
-        "doc_id", F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey")
-    )
+def _band_rows(base: DataFrame, *carry: str) -> DataFrame:
+    """base → (doc_id, *carry, band, bkey): one row per LSH band bucket,
+    each carrying its doc's ``carry`` columns."""
+    sig = F.array(*[F.col(f"mh{i}") for i in range(N_PERM)])
+    return base.select(
+        "doc_id", *carry, F.explode(band_keys(sig)).alias("bk")
+    ).select("doc_id", *carry, "bk.band", "bk.bkey")
 
 
 def band_rows_rowlocal(
@@ -307,6 +304,15 @@ def near_dup_verdicts(marks: DataFrame) -> DataFrame:
     )
 
 
+def _jaccard(hs_a: Column, hs_b: Column) -> Column:
+    """Exact Jaccard of two distinct shingle-hash sets, rounded to 6 places."""
+    return F.round(
+        F.size(F.array_intersect(hs_a, hs_b)).cast("double")
+        / F.size(F.array_union(hs_a, hs_b)),
+        6,
+    )
+
+
 def _verify_pairs(cand: DataFrame, base_a: DataFrame, base_b: DataFrame,
                   threshold: float) -> DataFrame:
     """Exact-Jaccard verification of candidate (doc_a, doc_b) pairs against
@@ -316,14 +322,7 @@ def _verify_pairs(cand: DataFrame, base_a: DataFrame, base_b: DataFrame,
     return (
         cand.join(sa, "doc_a")
         .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("hs_a", "hs_b")).cast("double")
-                / F.size(F.array_union("hs_a", "hs_b")),
-                6,
-            ),
-        )
+        .withColumn("jaccard", _jaccard(F.col("hs_a"), F.col("hs_b")))
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
@@ -356,7 +355,7 @@ def minhash_lsh_pairs(
     Scale note: at cluster scale the collect_set payload for ALL docs is
     the dominant shuffle; the variant that wins there computes hash sets
     only for CANDIDATE docs (signatures-only aggregate → band join →
-    semi-join-pruned second pass, cf. minhash_pairs_between probing a
+    semi-join-pruned second pass, cf. minhash_probe_pairs probing a
     persisted store). Measured locally, the single-pass form is faster and
     more run-to-run stable — so :func:`minhash_lsh_pairs_auto` (the
     entry-point callers should use) picks THIS form below the
@@ -487,23 +486,46 @@ def minhash_lsh_pairs_auto(
     return fn(docs, id_col, text_col, k=k, threshold=threshold)
 
 
-def minhash_pairs_between(
-    base_new: DataFrame, base_old: DataFrame, threshold: float = 0.5
+def minhash_probe_pairs(
+    base: DataFrame, store: DataFrame | None, threshold: float = 0.5
 ) -> DataFrame:
-    """Near-dup pairs BETWEEN two signature sets (doc_a from new, doc_b from
-    old) — the incremental-ingest primitive: new docs LSH-probe a persisted
-    signature store instead of re-pairing the whole corpus. Band buckets
-    equi-join (at scale: store the band rows partitioned by (band, bkey) so
-    the probe prunes to matching buckets); verification is exact Jaccard on
-    the stored hash sets."""
-    a = _band_rows(base_new).alias("a")
-    b = _band_rows(base_old).alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bkey") == F.col("b.bkey")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+    """Near-dup pairs of a signature batch against itself AND a persisted
+    signature store, in one band-bucket join — the incremental-ingest
+    primitive: new docs LSH-probe the store instead of re-pairing the whole
+    corpus. Both frames have the ``minhash_base`` schema; ``store=None``
+    (no store yet) probes the batch alone.
+
+    Output: (doc_a, doc_b, hist), distinct. doc_a is always a batch doc;
+    ``hist`` is true when doc_b is a stored doc, and within-batch rows keep
+    doc_a < doc_b. The batch's band rows equi-join the band rows of
+    batch ∪ store on (band, bkey); each row carries its hash set through
+    the explode, so the exact-Jaccard check runs on the joined rows with
+    no second join back to either side. At scale, store the band rows
+    partitioned by (band, bkey) so the probe prunes to matching buckets."""
+
+    def bands(frame: DataFrame, hist: bool) -> DataFrame:
+        return _band_rows(frame.withColumn("hist", F.lit(hist)), "hs", "hist")
+
+    a = bands(base, False).alias("a")
+    b = bands(base, False)
+    if store is not None:
+        b = b.unionByName(bands(store, True))
+    b = b.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bkey") == F.col("b.bkey"))
+            & (F.col("b.hist") | (F.col("a.doc_id") < F.col("b.doc_id"))),
+        )
+        .filter(_jaccard(F.col("a.hs"), F.col("b.hs")) >= threshold)
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.col("b.hist").alias("hist"),
+        )
         .distinct()
     )
-    return _verify_pairs(cand, base_new, base_old, threshold)
 
 
 def kgram_hashes_ordered(toks: Column, k: int = 3) -> Column:

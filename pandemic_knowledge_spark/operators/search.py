@@ -2250,7 +2250,9 @@ def _write_index_sidecars(
     (Spark sessions schedule jobs from several threads safely; locally
     the two short jobs overlap their task-launch overhead). The
     fingerprints list the written files through the schemas the record
-    stores, so they read no data and infer nothing.
+    stores, so they read no data and infer nothing. Once the record is
+    published, a parquet ``meta/`` left by an older layout is deleted —
+    on a repair and on an overwrite save alike.
 
     ``doc_ids``: the (doc_id, dl) rows to write — a build's, zero-token
     docs included (:meth:`SearchIndex.save`), or the postings' own id
@@ -2258,6 +2260,8 @@ def _write_index_sidecars(
     read). ``stats``: (n_docs, sum_dl) when the caller holds them (a
     loaded handle being saved); None = sum the written ``doc_ids``."""
     from concurrent.futures import ThreadPoolExecutor
+
+    from pandemic_knowledge_spark.streaming.sinks import _hadoop_path
 
     schemas = {"postings": _file_schema(postings), "doc_ids": _file_schema(doc_ids)}
     if positional is not None:
@@ -2278,10 +2282,13 @@ def _write_index_sidecars(
             .agg(*_doc_stat_cols()).collect()[0]
         )
         stats = (row["n_docs"], row["sum_dl"] or 0)
-    return _write_index_meta(
+    meta = _write_index_meta(
         spark, path, *stats, n_buckets, schemas, fingerprint("postings"),
         fingerprint("positions") if positional is not None else None,
     )
+    legacy, fs = _hadoop_path(spark, f"{path}/meta")
+    fs.delete(legacy, True)  # the parquet record meta.json replaced
+    return meta
 
 
 def _write_index_meta(
@@ -2488,8 +2495,6 @@ class SearchIndex:
         Raises FileNotFoundError when ``path`` holds no postings yet."""
         from pyspark.errors import AnalysisException
 
-        from pandemic_knowledge_spark.streaming.sinks import _hadoop_path
-
         meta = _read_index_meta(spark, path)
         try:
             postings = _read_artifact(
@@ -2516,8 +2521,6 @@ class SearchIndex:
                 spark, path, postings, _doc_id_set(postings),
                 _listed_bucket_count(postings),
             )
-            legacy, fs = _hadoop_path(spark, f"{path}/meta")
-            fs.delete(legacy, True)  # the parquet record meta.json replaced
         return cls._committed(spark, path, postings, meta)
 
     @classmethod

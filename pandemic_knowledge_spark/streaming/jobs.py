@@ -27,9 +27,11 @@ OWID_LANDING_SCHEMA = StructType(
 )
 
 BATCH_CLUSTER_MAX_PAIRS = 1000
-"""Within-batch near-dup pair count up to which corpus_stream_ingest_dedup
-clusters on the driver (union-find over the collected pairs) instead of
-running connected_components, and hence the most ids its IN filter drops.
+"""Near-dup pair count — history pairs and within-batch pairs together,
+as the one probe of corpus_stream_ingest_dedup returns them — up to which
+a micro-batch is resolved on the driver (history hits plus union-find
+over the collected within-batch pairs) instead of in Spark with
+connected_components, and hence about the most ids its IN filter drops.
 connected_components costs tens of Spark jobs whatever the graph size
 (about 6 s for an 18-doc batch on 4 local cores); the driver arm costs
 about 0.4 ms of py4j per dropped id in the IN filter, which at 1000 ids
@@ -132,30 +134,35 @@ def corpus_stream_ingest_dedup(
     already accepted.
 
     Per micro-batch (foreachBatch):
-      1. cross-history: the batch's MinHash signatures LSH-probe the
-         persisted signature store (operators.dedup.minhash_pairs_between)
-         — new docs matching an accepted doc at >= threshold are rejected.
-         The store keeps the ``minhash_base`` schema, so probing re-pairs
-         nothing: candidates come from band-bucket equi-joins only. At
-         scale, lay the store out partitioned by (band, bkey) so the probe
-         prunes to matching buckets instead of scanning all signatures.
-         The survivors are materialized right here, once: the pairing,
-         the corpus semi-join and the store append all read that copy,
-         so the probe runs once per micro-batch.
-      2. within-batch: surviving docs pair among themselves
-         (pairs_from_base over that one copy) and collapse to clusters;
-         only each cluster's min-id representative survives. One bounded
-         collect reads at most ``BATCH_CLUSTER_MAX_PAIRS`` + 1 pairs. If
-         that is all of them, the driver clusters them
-         (dedup.union_find_reps) and the dropped ids leave through an IN
-         filter. A batch with more pairs (an availableNow backlog drain)
-         runs connected_components on the same pair frame and drops its
-         non-reps with an anti-join. Both arms label a cluster by its min
-         id, so they accept the same docs.
-      3. survivors append to the corpus table AND their signatures to the
-         store — the store is the job's only state, readable by any other
-         job (it IS the batch dedup structure, shared, not an opaque
-         streaming-state blob).
+      1. one probe: the batch's MinHash signatures (``minhash_base``,
+         materialized once) LSH-probe the batch itself and the persisted
+         signature store in ONE band-bucket equi-join, exact Jaccard
+         verified in the same pass (operators.dedup.minhash_probe_pairs);
+         each pair row says whether its partner is a stored doc (a
+         history pair). The store keeps the ``minhash_base`` schema and is
+         read with it, so opening it infers nothing. At scale, lay the
+         store out partitioned by (band, bkey) so the probe prunes to
+         matching buckets instead of scanning all signatures.
+      2. resolve: one bounded collect reads at most
+         ``BATCH_CLUSTER_MAX_PAIRS`` + 1 pair rows. If that is all of
+         them, the driver resolves the batch: every doc with a history
+         pair is rejected (first-accepted wins); the within-batch pairs
+         whose both sides survived that step are clustered
+         (dedup.union_find_reps), and only each cluster's min-id
+         representative survives. So a history hit never takes its
+         within-batch partners down with it.
+         A batch with more pairs (an availableNow backlog drain) resolves
+         the same way in Spark from the same pair frame, with
+         connected_components. Both arms label a cluster by its min id,
+         so they accept the same docs.
+      3. write: the accepted docs append to the corpus and their
+         signatures to the store, each through one filter that drops the
+         rejected ids (an IN filter on the driver arm, an anti-join on
+         the Spark arm) — docs too short to shingle have no signature, so
+         no pair names them and they pass. The corpus is written before
+         the store. The store is the job's only state, readable by any
+         other job (it IS the batch dedup structure, shared, not an
+         opaque streaming-state blob).
 
     Acceptance is order-dependent by design (first-accepted wins), exactly
     like the reference's daily re-crawl should have been — its uuid4 doc
@@ -169,8 +176,7 @@ def corpus_stream_ingest_dedup(
     from pandemic_knowledge_spark.operators.dedup import (
         connected_components,
         minhash_base,
-        minhash_pairs_between,
-        pairs_from_base,
+        minhash_probe_pairs,
         union_find_reps,
     )
 
@@ -183,43 +189,51 @@ def corpus_stream_ingest_dedup(
         if batch_df.isEmpty():
             return
         docs = batch_df.localCheckpoint(eager=True)
-        # Signatures computed ONCE per batch; every later step (history
-        # probe, within-batch pairing, survivor selection) reuses them.
+        # Signatures computed ONCE per batch: the probe and the store append
+        # read this copy. Docs too short to shingle have no signature, so no
+        # pair names them and they are accepted as-is (never stored).
         base = minhash_base(docs, "doc_id", "text").localCheckpoint(eager=True)
-        # Docs too short to shingle have no signature: nothing can verify
-        # as their near-dup, so they are accepted as-is (never stored).
-        unsigned = docs.join(base.select("doc_id"), "doc_id", "left_anti")
         # Missing store == first batch ever: that exact condition is checked
-        # explicitly. Any OTHER read failure (permissions, partial write from
-        # a crash, schema drift) must re-raise — swallowing it would silently
-        # disable cross-history dedup and admit duplicates into the corpus.
+        # explicitly. Any OTHER read failure (permissions, a stored column of
+        # another type) must re-raise — swallowing it would silently disable
+        # cross-history dedup and admit duplicates into the corpus.
         jvm_path = spark._jvm.org.apache.hadoop.fs.Path(sig_store)
         fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(jvm_path):
-            old = spark.read.parquet(sig_store)
-            hit = minhash_pairs_between(base, old, threshold).select("doc_a").distinct()
-            # Materialized here, so the pairing, the corpus semi-join and the
-            # store append below read blocks and the probe runs once.
-            base = base.join(
-                hit, base["doc_id"] == hit["doc_a"], "left_anti"
-            ).localCheckpoint(eager=True)
-        pairs = pairs_from_base(base, threshold).select("doc_a", "doc_b")
+        store = (
+            spark.read.schema(base.schema).parquet(sig_store)
+            if fs.exists(jvm_path) else None
+        )
+        pairs = minhash_probe_pairs(base, store, threshold)
         head = pairs.limit(BATCH_CLUSTER_MAX_PAIRS + 1).collect()
         if len(head) <= BATCH_CLUSTER_MAX_PAIRS:
-            reps = union_find_reps((r.doc_a, r.doc_b) for r in head)
-            dropped = [n for n, rep in reps.items() if n != rep]
+            hit = {r.doc_a for r in head if r.hist}
+            reps = union_find_reps(
+                (r.doc_a, r.doc_b) for r in head
+                if not r.hist and r.doc_a not in hit and r.doc_b not in hit
+            )
+            dropped = list(hit) + [n for n, rep in reps.items() if n != rep]
             if dropped:
-                base = base.filter(~F.col("doc_id").isin(dropped))
+                keep = ~F.col("doc_id").isin(dropped)
+                docs, base = docs.filter(keep), base.filter(keep)
         else:
-            # Re-derives the pairs from the materialized base: one band
-            # join, small beside its label-propagation rounds.
-            cc = connected_components(pairs)
-            dropped = cc.filter(F.col("node") != F.col("rep"))
-            base = base.join(
-                dropped, base["doc_id"] == dropped["node"], "left_anti"
-            ).localCheckpoint(eager=True)
-        accepted = docs.join(base.select("doc_id"), "doc_id", "left_semi")
-        accepted.unionByName(unsigned).write.mode("append").parquet(out_path)
+            # Same resolution in Spark: a history hit leaves, and clusters
+            # form among the batch pairs whose both sides survived it.
+            pairs = pairs.localCheckpoint(eager=True)
+            hit = pairs.filter("hist").select("doc_a").distinct()
+            within = (
+                pairs.filter(~F.col("hist"))
+                .join(hit, "doc_a", "left_anti")
+                .join(hit.withColumnRenamed("doc_a", "doc_b"), "doc_b", "left_anti")
+            )
+            non_reps = connected_components(within).filter(F.col("node") != F.col("rep"))
+            dropped = (
+                hit.select(F.col("doc_a").alias("doc_id"))
+                .unionByName(non_reps.select(F.col("node").alias("doc_id")))
+                .localCheckpoint(eager=True)
+            )
+            docs = docs.join(dropped, "doc_id", "left_anti")
+            base = base.join(dropped, "doc_id", "left_anti")
+        docs.write.mode("append").parquet(out_path)
         base.write.mode("append").parquet(sig_store)
 
     writer = stream.writeStream.foreachBatch(_ingest).option(

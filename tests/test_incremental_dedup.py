@@ -7,6 +7,7 @@ only the new drop."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -135,3 +136,74 @@ def test_connected_components_arm_matches_driver_arm(spark, tmp_path, monkeypatc
     cc_arm = _ingest_drops(spark, tmp_path / "cc")
     assert calls
     assert cc_arm == driver_arm
+
+
+# The same chain with every "x" spelled "z" (no shingle shared with the
+# first), and a history text that near-dups its middle link only (Jaccard
+# 0.68 to ZCHAIN_B, 0.37 to its ends).
+ZCHAIN_A, ZCHAIN_B, ZCHAIN_C = (t.replace("x", "z") for t in (CHAIN_A, CHAIN_B, CHAIN_C))
+ZHIST = ZCHAIN_B + " one two three four five six seven"
+
+
+@pytest.mark.parametrize("gate", [None, 0], ids=["driver", "connected_components"])
+def test_history_hit_spares_its_within_batch_partner(spark, tmp_path, monkeypatch, gate):
+    """History holds 100 (CHAIN_A). The next drop brings 200 (CHAIN_B) and
+    300 (CHAIN_C): 200 near-dups history doc 100 and is rejected; 300
+    near-dups only 200, so with 200 gone it is fresh and accepted. Clusters
+    form among history survivors only: clustering the batch first (rep 200)
+    and then subtracting history would drop 300 with its rep.
+
+    The mirrored case puts the hit on the larger-id side of its pairs:
+    history 101 near-dups only 700 (ZCHAIN_B), whose batch partners 500
+    and 600 are not near-dups of each other, so both are accepted; leaving
+    700 in the clustering would join them and drop 600.
+
+    Runs in both cluster arms (gate 0 sends any batch with a pair to
+    connected_components)."""
+    from pandemic_knowledge_spark.operators.dedup import minhash_base, minhash_probe_pairs
+    from pandemic_knowledge_spark.streaming import jobs
+
+    if gate is not None:
+        monkeypatch.setattr(jobs, "BATCH_CLUSTER_MAX_PAIRS", gate)
+    history = spark.createDataFrame([(100, CHAIN_A), (101, ZHIST)], SCHEMA)
+    drop = spark.createDataFrame(
+        [(200, CHAIN_B), (300, CHAIN_C), (500, ZCHAIN_A), (700, ZCHAIN_B), (600, ZCHAIN_C)],
+        SCHEMA,
+    )
+    pairs = minhash_probe_pairs(
+        minhash_base(drop, "doc_id", "text"), minhash_base(history, "doc_id", "text"), 0.5
+    )
+    assert {tuple(r) for r in pairs.collect()} == {
+        (200, 100, True), (200, 300, False),
+        (700, 101, True), (500, 700, False), (600, 700, False),
+    }
+
+    landing = str(tmp_path / "landing")
+    _land(history, landing)
+    _run(spark, landing, tmp_path)
+    _land(drop, landing)
+    _run(spark, landing, tmp_path)
+    corpus = {r.doc_id for r in spark.read.parquet(str(tmp_path / "corpus")).collect()}
+    assert corpus == {100, 101, 300, 500, 600}
+    sigs = {r.doc_id for r in spark.read.parquet(str(tmp_path / "sigs")).collect()}
+    assert sigs == corpus
+
+
+def test_dedup_micro_batch_job_budget(spark, tmp_path):
+    """One append micro-batch (the second drop of ``_drops``: history hits,
+    a within-batch cluster, an unsigned doc) resolves with one probe pass
+    and one collect. Counted: emptiness check 1, docs and signature
+    checkpoints 3, the probe's bounded collect 3, corpus and store appends
+    2 — 9 jobs on local[4]. Two separate pair pipelines with a survivors
+    checkpoint and join-based appends started 21."""
+    landing = str(tmp_path / "landing")
+    drop1, drop2 = _drops(spark)
+    _land(drop1, landing)
+    _run(spark, landing, tmp_path)
+    _land(drop2, landing)
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = scheduler.nextJobId()
+    _run(spark, landing, tmp_path)
+    assert scheduler.nextJobId() - before <= 12
+    got = {r.doc_id for r in spark.read.parquet(str(tmp_path / "corpus")).collect()}
+    assert got == {1, 2, 20, 30, 40, 100}

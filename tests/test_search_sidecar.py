@@ -287,6 +287,23 @@ def test_load_legacy_postings_only_layout(spark, tmp_path):
         assert idx.search(q, k=5).collect() == idx0.search(q, k=5).collect(), name
 
 
+def test_overwrite_save_drops_legacy_parquet_meta(spark, tmp_path):
+    """An overwrite save() over a layout that still has the old parquet
+    ``meta/`` record publishes ``meta.json`` and deletes ``meta/``, as the
+    load-time repair does; the saved index opens and probes like the build."""
+    docs, path = _saved(spark, tmp_path)
+    spark.range(1).select(F.lit(0).cast("long").alias("n_docs")).write.parquet(
+        f"{path}/meta"
+    )
+    idx0 = SearchIndex.build(docs, "doc_id", "text", cache=False)
+    idx0.save(path)
+    assert os.path.isfile(f"{path}/meta.json")
+    assert not os.path.exists(f"{path}/meta")
+    q = "virus outbreak"
+    assert (SearchIndex.load(spark, path).search(q, k=5).collect()
+            == idx0.search(q, k=5).collect())
+
+
 def _next_job_id(spark) -> int:
     return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
 
