@@ -29,27 +29,27 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 
-def _vocab_df(docs, id_col: str, text_col: str) -> DataFrame:
-    """(term, df) vocabulary in one scan + one map-side-combined exchange:
-    distinct terms per doc explode to rows, a plain count per term IS the
-    document frequency. The shuffle carries per-partition (term,
-    partial_count) rows — vocabulary-sized, never token-row-sized (r13
-    optimization, guide §2.3; same derivation :func:`term_suggest` always
-    used). Only the text column leaves the scan. The distinct-terms array
-    is pinned (r13): exploded inline, the inferred size > 0 generator
-    filter re-ran the regexp + array_distinct per row
-    (functions.pinning module docs)."""
+def _doc_terms(docs, text_col: str) -> DataFrame:
+    """One ``term`` row per distinct term of each doc; only the text column
+    leaves the scan. The distinct-terms array is pinned (r13): exploded
+    inline, the inferred size > 0 generator filter re-ran the regexp +
+    array_distinct per row (functions.pinning module docs)."""
     from pandemic_knowledge_spark.functions.pinning import pin
 
-    return (
-        pin(
-            docs.select(F.col(text_col)),
-            __terms=F.array_distinct(tokenize(text_col)),
-        )
-        .select(F.explode("__terms").alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
+    return pin(
+        docs.select(F.col(text_col)),
+        __terms=F.array_distinct(tokenize(text_col)),
+    ).select(F.explode("__terms").alias("term"))
+
+
+def _vocab_df(docs, id_col: str, text_col: str) -> DataFrame:
+    """(term, df) vocabulary in one scan + one map-side-combined exchange:
+    distinct terms per doc (:func:`_doc_terms`) explode to rows, a plain
+    count per term IS the document frequency. The shuffle carries
+    per-partition (term, partial_count) rows — vocabulary-sized, never
+    token-row-sized (r13 optimization, guide §2.3; same derivation
+    :func:`term_suggest` always used)."""
+    return _doc_terms(docs, text_col).groupBy("term").agg(F.count(F.lit(1)).alias("df"))
 
 
 def _corpus_stats(docs, text_col: str) -> DataFrame:
@@ -2012,6 +2012,26 @@ def _bucket_laid(postings: DataFrame) -> DataFrame:
     return postings.repartition("bucket").sortWithinPartitions("bucket", "term")
 
 
+def _tlen_laid(term_rows: DataFrame) -> DataFrame:
+    """The persisted ``vocab`` layout from (term, df) rows, where a term
+    may sit on several rows (an append's old dictionary plus one row per
+    batch doc that has the term): one hash partition per term length, df
+    summed per (tlen, term) and sorted (tlen, term) within it — the
+    dictionary probes' pruning axes. HashPartitioning(tlen) clusters the
+    (tlen, term) grouping key, so the sum and the layout share the one
+    exchange, and the (tlen, term) prefix satisfies the file writer's
+    dynamic-partition ordering, so writing the laid frame (or a checkpoint
+    of it) plans no exchange or sort of its own."""
+    return (
+        term_rows.withColumn("tlen", F.length("term"))
+        .repartition("tlen")
+        .groupBy("tlen", "term")
+        .agg(F.sum("df").cast("long").alias("df"))
+        .sortWithinPartitions("tlen", "term")
+        .select("term", "df", "tlen")
+    )
+
+
 def _term_df(postings: DataFrame) -> DataFrame:
     """(term, df) from postings: (doc_id, term) rows are unique, so a
     map-side-combined count per term IS the document frequency."""
@@ -2217,19 +2237,33 @@ def _read_index_meta(spark, path: str) -> dict | None:
         return None
 
 
-def _write_vocab(term_df: DataFrame, path: str) -> dict:
-    """Overwrite the ``vocab`` sidecar from (term, df) rows: partitioned by
-    term length, sorted by term within each length (the FST-analogue
-    pruning axes of the dictionary probes). Returns its record schema."""
-    vocab = term_df.withColumn("tlen", F.length("term"))
-    (
-        vocab.repartition("tlen")
-        .sortWithinPartitions("tlen", "term")
-        .write.mode("overwrite")
-        .partitionBy("tlen")
-        .parquet(f"{path}/vocab")
-    )
-    return _file_schema(vocab)
+def _write_vocab(laid: DataFrame, path: str) -> dict:
+    """Overwrite the ``vocab`` sidecar with a :func:`_tlen_laid` frame,
+    one directory per term length (the FST-analogue pruning axis of the
+    dictionary probes). Returns its record schema."""
+    laid.write.mode("overwrite").partitionBy("tlen").parquet(f"{path}/vocab")
+    return _file_schema(laid)
+
+
+def _run_side_by_side(spark, *calls) -> list:
+    """Run each zero-argument callable in its own thread, wait for all of
+    them and return their results in order; the first failure raises once
+    every call has finished. Spark sessions schedule jobs from several
+    threads safely, and locally two short jobs overlap their task-launch
+    overhead. Each thread inherits the caller's Spark local properties and
+    ``spark``'s tags (``pyspark.inheritable_thread_target``), so its jobs
+    keep the caller's job group — a streaming micro-batch's run id, an
+    ``sc.setJobGroup``."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    # with pinned-thread mode off this returns ``spark`` itself: no JVM
+    # thread to inherit from, so each call runs as it is
+    inherit = inheritable_thread_target(spark)
+    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
+        futs = [pool.submit(inherit(c) if callable(inherit) else c) for c in calls]
+    return [f.result() for f in futs]
 
 
 def _write_index_sidecars(
@@ -2246,9 +2280,9 @@ def _write_index_sidecars(
     its ``meta.json`` record — returned — strictly LAST: until then the
     layout reads as stale and :meth:`SearchIndex.load` repairs again, so
     an overwrite in progress never masquerades as fresh. ``doc_ids`` and
-    ``vocab`` (one aggregate over the postings) are written concurrently
-    (Spark sessions schedule jobs from several threads safely; locally
-    the two short jobs overlap their task-launch overhead). The
+    ``vocab`` (one aggregate over the postings, laid by
+    :func:`_tlen_laid`) are written side by side
+    (:func:`_run_side_by_side`, in the caller's job group). The
     fingerprints list the written files through the schemas the record
     stores, so they read no data and infer nothing. Once the record is
     published, a parquet ``meta/`` left by an older layout is deleted —
@@ -2259,19 +2293,16 @@ def _write_index_sidecars(
     set (the load-time repair, which has nothing but posting rows to
     read). ``stats``: (n_docs, sum_dl) when the caller holds them (a
     loaded handle being saved); None = sum the written ``doc_ids``."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from pandemic_knowledge_spark.streaming.sinks import _hadoop_path
 
     schemas = {"postings": _file_schema(postings), "doc_ids": _file_schema(doc_ids)}
     if positional is not None:
         schemas["positions"] = _file_schema(positional)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [
-            pool.submit(doc_ids.write.mode("overwrite").parquet, f"{path}/doc_ids"),
-            pool.submit(_write_vocab, _term_df(postings), path),
-        ]
-        _, schemas["vocab"] = (f.result() for f in futs)
+    _, schemas["vocab"] = _run_side_by_side(
+        spark,
+        lambda: doc_ids.write.mode("overwrite").parquet(f"{path}/doc_ids"),
+        lambda: _write_vocab(_tlen_laid(_term_df(postings)), path),
+    )
 
     def fingerprint(name: str) -> str:
         return _layout_fingerprint(_read_artifact(spark, path, name, schemas), name)
@@ -2339,9 +2370,13 @@ class SearchIndex:
 
     One write path: :meth:`save` writes a whole index, :meth:`append_save`
     adds a batch of documents to a persisted one (creating it on the first
-    batch). Both lay postings out with :func:`_bucket_laid`; a full write
-    derives its sidecars with :func:`_write_index_sidecars`, an append
-    refreshes them incrementally. Either way the record is published LAST
+    batch). Both lay postings out with :func:`_bucket_laid` and the terms
+    dictionary with :func:`_tlen_laid`; a full write derives its sidecars
+    with :func:`_write_index_sidecars`, an append refreshes them
+    incrementally in three steps — checkpoint the batch once; append the
+    postings beside merging the dictionary into a checkpoint; after the
+    postings commit, append ``doc_ids`` beside overwriting ``vocab``.
+    Either way the record is published LAST
     (streaming.sinks.publish_file, as AtomicTable's ``_CURRENT``) and is
     validated against the postings fingerprint at :meth:`load`, which
     rebuilds the sidecars from postings on mismatch or absence — a crash
@@ -2690,18 +2725,30 @@ class SearchIndex:
         batches writes through. When ``path`` holds no postings yet (never
         written, or the first write crashed before its postings commit),
         the batch becomes the index through :meth:`save`. Otherwise only
-        ``docs`` is tokenized and its postings — bucketed with the
-        layout's own :attr:`n_buckets`, one file per bucket — are APPENDED
-        into the existing layout, then the sidecars refresh INCREMENTALLY:
-        the dedup guard anti-joins the tiny ``doc_ids`` sidecar (never a
-        full-postings distinct) and the batch's per-doc rows, zero-token
-        docs included, append to it; the terms dictionary merges old vocab
-        + the batch's term counts (dictionary-sized, not postings-sized);
-        the record's stats add the batch's exact integer sums, and its
-        schemas and bucket count carry over. Returns the updated index
-        handle, built from the committed record and the postings frame the
-        new fingerprint was listed from (no second :meth:`load`); probes
-        over it equal a from-scratch rebuild of old ∪ new.
+        ``docs`` is tokenized and the write runs in three steps, each
+        waiting for the one before:
+
+        1. The batch, less its already-indexed doc ids (an anti-join
+           against the tiny ``doc_ids`` sidecar, never a full-postings
+           distinct), is checkpointed once; everything below reads it.
+        2. Its postings — bucketed with the layout's own
+           :attr:`n_buckets`, one file per bucket — are APPENDED to the
+           layout, side by side with the terms-dictionary merge: the old
+           ``vocab`` plus one (term, 1) row per distinct term of each
+           batch doc, summed inside one :func:`_tlen_laid` exchange and
+           checkpointed (dictionary-sized, not postings-sized).
+        3. Once the postings have committed, the batch's per-doc rows,
+           zero-token docs included, are appended to ``doc_ids``, side by
+           side with the ``vocab`` overwrite from the laid checkpoint (no
+           further exchange).
+
+        Then the ``meta.json`` record is published, LAST: its stats add
+        the batch's exact integer sums, its schemas and bucket count carry
+        over. Side-by-side actions run in the caller's job group
+        (:func:`_run_side_by_side`). Returns the updated index handle,
+        built from the committed record and the postings frame the new
+        fingerprint was listed from (no second :meth:`load`); probes over
+        it equal a from-scratch rebuild of old ∪ new.
 
         Already-indexed doc ids in ``docs`` are DROPPED (first-accepted
         wins — the same policy as the incremental dedup ingest): without
@@ -2710,11 +2757,13 @@ class SearchIndex:
 
         CRASH-IDEMPOTENT under at-least-once retries (e.g. foreachBatch):
         the load() at entry validates the sidecar fingerprint and repairs
-        a half-finished predecessor, the doc-id guard turns a replayed
-        batch into a no-op, the parquet append only becomes visible at job
-        commit, and the ``meta.json`` record commits LAST — a crash at any
-        point leaves either a no-op retry or a fingerprint mismatch that
-        the next open repairs from the postings."""
+        a half-finished predecessor, and the doc-id guard turns a replayed
+        batch into a no-op. Nothing a probe or the repair trusts changes
+        before the postings commit (a parquet append becomes visible at job
+        commit; step 2's dictionary merge only checkpoints), so a failure
+        up to it leaves the layout as it was; after it, the record still
+        names the old postings listing, and the next open repairs the
+        sidecars from the postings."""
         try:
             prev = cls.load(spark, path)  # validates/repairs sidecars
         except FileNotFoundError:
@@ -2733,27 +2782,32 @@ class SearchIndex:
             )
         indexed = prev.doc_ids.select(F.col("doc_id").alias(id_col))
         # materialize the filtered batch BEFORE any write: the anti-join
-        # reads {path}/doc_ids, which the refresh below appends to
+        # reads {path}/doc_ids, which step 3 appends to
         docs = docs.join(indexed, id_col, "left_anti").localCheckpoint(eager=True)
         new_p, new_docs = build_postings(docs, id_col, text_col, prev.n_buckets)
-        new_p = _bucket_laid(new_p).localCheckpoint(eager=True)  # 2 consumers below
-        new_p.write.mode("append").partitionBy("bucket").parquet(f"{path}/postings")
+        batch_terms = _doc_terms(docs, text_col).withColumn("df", F.lit(1).cast("long"))
+        _, merged_vocab = _run_side_by_side(
+            spark,
+            lambda: (
+                _bucket_laid(new_p).write.mode("append")
+                .partitionBy("bucket").parquet(f"{path}/postings")
+            ),
+            # materialized before step 3 overwrites the directory it reads
+            lambda: _tlen_laid(
+                prev.vocab.select("term", "df").unionByName(batch_terms)
+            ).localCheckpoint(eager=True),
+        )
         # the batch's stats ride the doc_ids append as observed metrics: no
         # second pass over the batch
         batch = Observation()
-        (
-            new_docs.observe(batch, *_doc_stat_cols())
-            .write.mode("append").parquet(f"{path}/doc_ids")
+        _run_side_by_side(
+            spark,
+            lambda: (
+                new_docs.observe(batch, *_doc_stat_cols())
+                .write.mode("append").parquet(f"{path}/doc_ids")
+            ),
+            lambda: _write_vocab(merged_vocab, path),
         )
-        merged_vocab = (
-            prev.vocab.select("term", "df")
-            .unionByName(_term_df(new_p))
-            .groupBy("term")
-            .agg(F.sum("df").cast("long").alias("df"))
-            # materialize before overwriting the directory it reads from
-            .localCheckpoint(eager=True)
-        )
-        _write_vocab(merged_vocab, path)
         n_docs, sum_dl = prev.stats_scalars
         schemas = {
             name: _file_schema(frame)

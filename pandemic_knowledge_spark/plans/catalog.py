@@ -14,6 +14,7 @@ reproducible across cluster sizes at 100 TB.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -1989,6 +1990,38 @@ def graph_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PHRASE_QUERY = "window table"
 
+_SCRATCH_INDEX_LOCK = threading.Lock()
+_SCRATCH_INDEXES: dict[tuple[str, bool], str] = {}
+
+
+def _scratch_search_index(spark: SparkSession, sf_dir: str, positional: bool = False):
+    """The persisted SearchIndex over ``sf_dir``'s documents that the
+    ``search_*_indexed`` rows probe, loaded from its layout. Each layout
+    (plain, positional) is built and saved once per process, into a
+    temp dir of the process's own that is deleted at exit: concurrent
+    processes never read or overwrite each other's layout, and a row
+    never reads one another process left behind."""
+    import atexit
+    import os
+    import shutil
+    import tempfile
+
+    from pandemic_knowledge_spark.operators.search import SearchIndex
+
+    key = (os.path.abspath(sf_dir), positional)
+    with _SCRATCH_INDEX_LOCK:
+        path = _SCRATCH_INDEXES.get(key)
+        if path is None:
+            root = tempfile.mkdtemp(prefix="pk_search_idx_")
+            atexit.register(shutil.rmtree, root, True)
+            path = os.path.join(root, "positional" if positional else "plain")
+            SearchIndex.build(
+                load(spark, sf_dir, "documents"), "doc_id", "text",
+                cache=False, positional=positional,
+            ).save(path)
+            _SCRATCH_INDEXES[key] = path
+    return SearchIndex.load(spark, path)
+
 
 @q(
     "search_phrase_positional",
@@ -2018,20 +2051,10 @@ def search_phrase_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     inconsistently, and append_save refuses
     positional layouts because positions aren't derivable from postings):
     build(positional=True) → save → load → phrase probe, only the phrase
-    terms' crc32 buckets scanned. Oracle = the corpus-scan phrase SQL,
+    terms' crc32 buckets scanned (the layout built once per process,
+    :func:`_scratch_search_index`). Oracle = the corpus-scan phrase SQL,
     proving persisted-tier ≡ direct scan with a value hash."""
-    import os
-    import tempfile
-
-    from pandemic_knowledge_spark.operators.search import SearchIndex
-
-    d = load(spark, sf_dir, "documents")
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"pk_search_pos_idx_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    SearchIndex.build(d, "doc_id", "text", cache=False, positional=True).save(path)
-    idx = SearchIndex.load(spark, path)
+    idx = _scratch_search_index(spark, sf_dir, positional=True)
     return idx.phrase_search(_PHRASE_QUERY, k=10)
 
 
@@ -3111,21 +3134,9 @@ def search_fuzzy_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``vocab/`` sidecar (ES's FST walk — dictionary slivers only), scoring
     probes the bucket-pruned postings; the oracle is the corpus-scan
     fuzzy_match_search SQL, proving sidecar probe ≡ corpus scan with a
-    value hash. (Scratch path fixed per-sf, rebuilt via save() each run —
-    same pattern as io_partitioned_roundtrip.)"""
-    import os
-    import tempfile
-
-    from pandemic_knowledge_spark.operators.search import SearchIndex
-
-    d = load(spark, sf_dir, "documents")
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"pk_search_idx_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    SearchIndex.build(d, "doc_id", "text", cache=False).save(path)
-    idx = SearchIndex.load(spark, path)
-    return idx.fuzzy_search(_FUZZY_QUERY, k=10)
+    value hash. (The layout is built once per process,
+    :func:`_scratch_search_index`.)"""
+    return _scratch_search_index(spark, sf_dir).fuzzy_search(_FUZZY_QUERY, k=10)
 
 
 @q(
@@ -3137,21 +3148,9 @@ def search_suggest_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes only the ±max_edits tlen partitions of the ``vocab/`` sidecar —
     never postings, never the corpus (operators.search.
     term_suggest_from_vocab). Oracle = the corpus-scan term_suggest SQL:
-    sidecar probe ≡ corpus scan, value-hashed. Reuses the scratch index
-    search_fuzzy_indexed materializes (same fixed per-sf path)."""
-    import os
-    import tempfile
-
-    from pandemic_knowledge_spark.operators.search import SearchIndex
-
-    d = load(spark, sf_dir, "documents")
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"pk_search_idx_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    if not os.path.isdir(os.path.join(path, "postings")):
-        SearchIndex.build(d, "doc_id", "text", cache=False).save(path)
-    idx = SearchIndex.load(spark, path)
+    sidecar probe ≡ corpus scan, value-hashed. Probes the layout
+    search_fuzzy_indexed probes (:func:`_scratch_search_index`)."""
+    idx = _scratch_search_index(spark, sf_dir)
     return idx.suggest(_SUGGEST_TERM, max_edits=2, prefix_length=1, k=5)
 
 
@@ -3492,23 +3491,8 @@ def search_bool_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (plan-gated in tests/test_boolquery.py). Oracle = the corpus-scan
     bool SQL: probe ≡ scan, value-hashed — the same once-per-ingest /
     probe-per-query split as search_fuzzy_indexed, on the positional
-    scratch index the phrase rows materialize."""
-    import os
-    import tempfile
-
-    from pandemic_knowledge_spark.operators.search import SearchIndex
-
-    d = load(spark, sf_dir, "documents")
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"pk_search_pos_idx_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    if not os.path.isdir(os.path.join(path, "positions")):
-        SearchIndex.build(d, "doc_id", "text", cache=False, positional=True).save(path)
-    idx = SearchIndex.load(spark, path)
-    if idx.positional is None:  # repaired/crashed layout: rebuild once
-        SearchIndex.build(d, "doc_id", "text", cache=False, positional=True).save(path)
-        idx = SearchIndex.load(spark, path)
+    layout search_phrase_indexed probes (:func:`_scratch_search_index`)."""
+    idx = _scratch_search_index(spark, sf_dir, positional=True)
     return bool_search_from_index(idx, **_BOOL_INDEXED)
 
 

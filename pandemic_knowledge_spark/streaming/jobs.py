@@ -259,11 +259,18 @@ def corpus_stream_index(
     appends their postings. The streaming form of the reference's daily
     re-bulk-load into ES (insert_owid.py:282-290), except incremental: old
     documents are never re-tokenized, and a probe over the index equals a
-    from-scratch rebuild at every point in time. foreachBatch is
-    at-least-once; the sink is crash-idempotent anyway (append_save repairs
-    a half-written predecessor from its postings, drops already-indexed doc
-    ids, and publishes its one-line ``meta.json`` commit record last, by an
-    atomic rename), so a retried micro-batch is a no-op."""
+    from-scratch rebuild at every point in time.
+
+    An append writes in three steps: it checkpoints the batch less its
+    already-indexed doc ids once; appends the postings beside merging the
+    terms dictionary into a checkpoint; and, once the postings have
+    committed, appends ``doc_ids`` beside overwriting ``vocab``. Its jobs
+    all run in the micro-batch's job group (the query's run id).
+    foreachBatch is at-least-once; the sink is crash-idempotent anyway
+    (append_save repairs a half-written predecessor from its postings,
+    drops already-indexed doc ids, and publishes its one-line
+    ``meta.json`` commit record last, by an atomic rename), so a retried
+    micro-batch is a no-op."""
     from pyspark.sql.types import LongType
 
     from pandemic_knowledge_spark.operators.search import SearchIndex

@@ -111,7 +111,7 @@ WIDE_QUERIES = [
     # r8-new operators — first sf1 evidence for each cost shape:
     "search_multi_most_fields",  # per-field TF shuffle, sum combiner
     "search_multi_cross_fields", # + blended-df broadcast, dis-max per term
-    "search_fuzzy_indexed",      # save+load+sidecar probe (io-inclusive)
+    "search_fuzzy_indexed",      # load+sidecar probe (built once per process)
     "search_suggest_indexed",    # tlen-pruned dictionary probe
     "agg_top_hits_latest",       # bucket window + WindowGroupLimit
     "geo_centroid_bounds",       # integer-micro centroid, one groupBy
@@ -129,7 +129,7 @@ WIDE_QUERIES = [
     "agg_normalize_pipeline",      # one-row exact moments broadcast
     "agg_percentiles_bucket",      # exact percentile over bucket frame
     "agg_missing_bucket",          # join-miss conditional sum
-    "search_phrase_indexed",       # positional build+save+probe (io-incl)
+    "search_phrase_indexed",       # load+positional probe (built once per process)
     "agg_t_test_welch",            # one-row conditional moments
     "agg_geotile_grid",            # scan-side mercator tile + groupBy
     "agg_top_metrics",             # struct-ordered arg-top, one agg

@@ -360,6 +360,127 @@ def test_load_starts_no_job_and_append_writes_one_file_per_bucket_at_most(
     assert idx.n_buckets == N_TERM_BUCKETS
 
 
+def _half_saved(spark, tmp_path):
+    """(docs, the odd-id batch, path of a committed index of the even ids)."""
+    docs = load(spark, SF_DIR, "documents")
+    path = str(tmp_path / "idx")
+    SearchIndex.build(
+        docs.filter(F.col("doc_id") % 2 == 0), "doc_id", "text", cache=False
+    ).save(path)
+    return docs, docs.filter(F.col("doc_id") % 2 == 1), path
+
+
+def test_append_save_job_budget_in_callers_job_group(spark, tmp_path):
+    """One append_save to a committed index starts at most 8 Spark jobs —
+    the batch checkpoint, the postings append beside the dictionary merge,
+    the doc_ids append beside the vocab overwrite — and every one runs in
+    the caller's job group, the side-by-side ones included, as do those
+    of a first append_save, which creates the index through save() and
+    writes its sidecars side by side: perfbench attributes a tick's jobs
+    by the streaming query's run id."""
+    _docs, new, path = _half_saved(spark, tmp_path)
+    sc = spark.sparkContext
+    sc.setJobGroup("append_save_budget", "append_save")
+    try:
+        j0 = _next_job_id(spark)
+        SearchIndex.append_save(spark, path, new)
+        j1 = _next_job_id(spark)
+        SearchIndex.append_save(spark, str(tmp_path / "created"), new)
+        j2 = _next_job_id(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert 0 < j1 - j0 <= 8
+    grouped = set(sc.statusTracker().getJobIdsForGroup("append_save_budget"))
+    assert set(range(j0, j2)) <= grouped
+
+
+def _listing(path, name) -> list:
+    root = os.path.join(path, name)
+    return sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, fs in os.walk(root)
+        for f in fs
+    )
+
+
+def _fail_parquet_write(monkeypatch, artifact):
+    """Make every parquet write into ``<index>/<artifact>`` raise before it
+    starts; other writes run."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    real = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        if path.rstrip("/").endswith(f"/{artifact}"):
+            raise RuntimeError(f"injected {artifact} write failure")
+        return real(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+
+
+def _crash_probes(idx):
+    return (
+        idx.search("virus outbreak spark", k=8).collect(),
+        idx.fuzzy_search("a sparc strean", k=10).collect(),
+        idx.suggest("viurs", max_edits=2, k=5).collect(),
+    )
+
+
+def test_append_save_failed_postings_write_changes_nothing(
+    spark, tmp_path, monkeypatch
+):
+    """Crash order, before the postings commit: with the postings append
+    failing, the ``vocab/`` and ``doc_ids/`` listings and the ``meta.json``
+    record are as they were — neither sidecar write starts before the
+    postings commit — and the retried append equals a rebuild."""
+    import pytest
+
+    docs, new, path = _half_saved(spark, tmp_path)
+    before = {n: _listing(path, n) for n in ("postings", "vocab", "doc_ids")}
+    with open(f"{path}/meta.json", encoding="utf-8") as f:
+        record = f.read()
+    _fail_parquet_write(monkeypatch, "postings")
+    with pytest.raises(RuntimeError, match="injected postings"):
+        SearchIndex.append_save(spark, path, new)
+    monkeypatch.undo()
+    assert {n: _listing(path, n) for n in before} == before
+    with open(f"{path}/meta.json", encoding="utf-8") as f:
+        assert f.read() == record
+    updated = SearchIndex.append_save(spark, path, new)
+    full = SearchIndex.build(docs, "doc_id", "text", cache=False)
+    assert updated.stats_scalars == tuple(full.stats.collect()[0])
+    assert _crash_probes(updated) == _crash_probes(full)
+
+
+def test_append_save_failed_vocab_write_after_postings_commit_is_repaired(
+    spark, tmp_path, monkeypatch
+):
+    """Crash order, after the postings commit: with the vocab overwrite
+    failing, the postings have grown but the record still names the old
+    listing, so load() repairs the sidecars from the postings; search,
+    fuzzy and suggest over the repaired index equal a rebuild."""
+    import json
+
+    import pytest
+
+    from pandemic_knowledge_spark.operators.search import _postings_fingerprint
+
+    docs, new, path = _half_saved(spark, tmp_path)
+    postings_before = _listing(path, "postings")
+    _fail_parquet_write(monkeypatch, "vocab")
+    with pytest.raises(RuntimeError, match="injected vocab"):
+        SearchIndex.append_save(spark, path, new)
+    monkeypatch.undo()
+    assert len(_listing(path, "postings")) > len(postings_before)
+    with open(f"{path}/meta.json", encoding="utf-8") as f:
+        stale = json.load(f)["fingerprint"]
+    assert stale != _postings_fingerprint(spark.read.parquet(f"{path}/postings"))
+    repaired = SearchIndex.load(spark, path)
+    full = SearchIndex.build(docs, "doc_id", "text", cache=False)
+    assert repaired.stats_scalars == tuple(full.stats.collect()[0])
+    assert _crash_probes(repaired) == _crash_probes(full)
+
+
 def test_64_bucket_layout_opens_probes_and_appends(spark, tmp_path, monkeypatch):
     """An index written with 64 term buckets, the count before
     N_TERM_BUCKETS was 16, under the record such layouts carry (no schemas,
