@@ -91,10 +91,9 @@ def main() -> None:
     idx_dir = tempfile.mkdtemp(prefix="pk_search_idx_")
     try:
         t0 = time.perf_counter()
-        save_timings: dict = {}
         SearchIndex.build(
             load(spark, sf_dir, "documents"), "doc_id", "text", cache=False
-        ).save(idx_dir, timings=save_timings)
+        ).save(idx_dir)
         build_sec = time.perf_counter() - t0
         idx = SearchIndex.load(spark, idx_dir)
         probe_queries = [
@@ -113,9 +112,6 @@ def main() -> None:
             probe_times.append(time.perf_counter() - t0)
         search_index = {
             "build_save_sec": round(build_sec, 3),
-            # r8-verdict watch item: which tier moves? tokenize+build is
-            # build_save - (postings+positions+sidecars writes).
-            "save_split": save_timings,
             "probe_median_sec": round(sorted(probe_times)[len(probe_times) // 2], 3),
             "n_probe_queries": len(probe_queries),
         }

@@ -1763,7 +1763,7 @@ def _index_match_frame(index, terms, min_terms: int = 1) -> DataFrame:
     aggregation — postings hold one row per (term, doc)."""
     from pandemic_knowledge_spark.operators.search import _term_rows
 
-    p = _term_rows(index.postings, terms, index.n_buckets)
+    p = _term_rows(index.postings, terms)
     df_t = p.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     scored = _attach_bm25_scores(
         _index_stats_cols(index, p.join(F.broadcast(df_t), "term"))
@@ -1794,15 +1794,10 @@ def _index_phrase_frame(index, phrase: str, slop: int = 0) -> DataFrame:
             "indexed bool phrase clause needs a positional index: build "
             "with positional=True (and save() to persist)"
         )
-    dl_src = index.doc_ids
-    if dl_src is None:
-        dl_src = index.postings.groupBy("doc_id").agg(F.first("dl").alias("dl"))
     counts = (
-        phrase_counts_from_postings(index.positional, phrase, index.n_buckets)
+        phrase_counts_from_postings(index.positional, phrase)
         if slop == 0
-        else span_counts_from_postings(
-            index.positional, phrase, slop, index.n_buckets
-        )
+        else span_counts_from_postings(index.positional, phrase, slop)
     )
     pf = (
         counts
@@ -1811,7 +1806,7 @@ def _index_phrase_frame(index, phrase: str, slop: int = 0) -> DataFrame:
     )
     df_ph = pf.count()
     n_docs, sum_dl = _index_stats_scalars(index)
-    joined = pf.join(dl_src.select("doc_id", "dl"), "doc_id")
+    joined = pf.join(index.doc_ids.select("doc_id", "dl"), "doc_id")
     avgdl = F.lit(float(sum_dl)) / F.lit(float(n_docs))
     idf = F.log(
         F.lit(1.0)
@@ -1844,13 +1839,13 @@ def _index_member_frame(index, clause: dict) -> DataFrame:
         )
     p = index.postings
     if key == "term":
-        return _term_rows(p, [clause["term"]], index.n_buckets).select("doc_id")
+        return _term_rows(p, [clause["term"]]).select("doc_id")
     if key == "match":
         terms = sorted(set(query_terms(clause["match"])))
         if not terms:
             raise ValueError("bool match clause has no tokenizable terms")
         min_terms = _match_min_terms(clause, terms)
-        hits = _term_rows(p, terms, index.n_buckets)
+        hits = _term_rows(p, terms)
         if min_terms == 1:
             return hits.select("doc_id").distinct()
         # one row per (term, doc): the grouped count IS the distinct
@@ -1875,13 +1870,9 @@ def _index_member_frame(index, clause: dict) -> DataFrame:
     if slop < 0:
         raise ValueError("phrase slop must be >= 0")
     counts = (
-        phrase_counts_from_postings(
-            index.positional, clause["phrase"], index.n_buckets
-        )
+        phrase_counts_from_postings(index.positional, clause["phrase"])
         if slop == 0
-        else span_counts_from_postings(
-            index.positional, clause["phrase"], slop, index.n_buckets
-        )
+        else span_counts_from_postings(index.positional, clause["phrase"], slop)
     )
     return counts.select("doc_id")
 
@@ -1958,8 +1949,7 @@ def bool_search_from_index(
             # fuzz lengths PLUS exact-term lengths: _fuzzy_selected looks
             # exact terms up in the vocabulary (for their df) now
             v = _probe_vocab(
-                index.postings, index.vocab,
-                [r[2] for r in fuzz_rows] + [len(t) for t in exact_terms],
+                index.vocab, [r[2] for r in fuzz_rows] + [len(t) for t in exact_terms]
             )
             selected = _fuzzy_selected(
                 spark, v, fuzz_rows, exact_terms, max_expansions, prefix_length
@@ -2003,10 +1993,7 @@ def bool_search_from_index(
     if parts:
         hits = _combine_scored(parts, len(must), msm)
     else:
-        dl_src = index.doc_ids
-        if dl_src is None:
-            dl_src = index.postings.select("doc_id").distinct()
-        hits = dl_src.select("doc_id", F.lit(0.0).alias("score"))
+        hits = index.doc_ids.select("doc_id", F.lit(0.0).alias("score"))
 
     for c in filter:
         hits = hits.join(_index_member_frame(index, c), "doc_id", "left_semi")

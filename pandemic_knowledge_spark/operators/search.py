@@ -1060,19 +1060,14 @@ def _fuzzy_selected(
     return selected.distinct()
 
 
-def _probe_vocab(postings: DataFrame, vocab: DataFrame | None, lengths) -> DataFrame:
-    """The term dictionary a probe expands against. With a persisted
-    ``vocab`` sidecar (see :meth:`SearchIndex.save`) the admissible term
-    LENGTHS prune its ``tlen`` partitions — the parquet analogue of ES
-    seeking the per-segment FST instead of touching postings; without one
-    (legacy layouts, ad-hoc posting frames) fall back to the one
-    map-side-combined count over the postings ((doc, term) rows are
-    unique, so the count IS the doc frequency — the same derivation
-    :func:`bm25_from_postings` uses)."""
-    if vocab is not None:
-        lens = sorted(set(lengths))
-        return vocab.filter(F.col("tlen").isin(lens)) if lens else vocab
-    return _term_df(postings)
+def _probe_vocab(vocab: DataFrame, lengths) -> DataFrame:
+    """The slivers of an index's (term, df, tlen) terms dictionary — the
+    persisted ``vocab`` sidecar or a build's cached derivation — that a
+    probe expands against: the admissible term LENGTHS prune its ``tlen``
+    partitions, the parquet analogue of ES seeking the per-segment FST
+    instead of touching postings. No lengths = the whole dictionary."""
+    lens = sorted(set(lengths))
+    return vocab.filter(F.col("tlen").isin(lens)) if lens else vocab
 
 
 def fuzzy_match_from_postings(
@@ -1082,8 +1077,8 @@ def fuzzy_match_from_postings(
     k: int = 10,
     max_expansions: int = 50,
     prefix_length: int = 0,
-    vocab: DataFrame | None = None,
-    n_buckets: int | None = None,
+    *,
+    vocab: DataFrame,
 ) -> DataFrame:
     """``fuzzy_match_search`` probed from a persisted index — ES's actual
     fuzzy execution shape (expand against the term dictionary, then run a
@@ -1091,16 +1086,15 @@ def fuzzy_match_from_postings(
     the same corpus (same AUTO bands, same expansion cap, same BM25 —
     pinned by ``tests/test_engine.py``).
 
-    The vocabulary (term, df) comes from :func:`_probe_vocab` — the
-    ``tlen``-partition-pruned terms-dictionary sidecar when the index has
-    one (nothing but dictionary slivers are scanned before candidates are
-    known, like ES's FST walk), else one map-side-combined count over the
-    postings; the shared :func:`_fuzzy_selected` expansion runs
+    The vocabulary (term, df) is the index's ``vocab`` pruned to the
+    admissible ``tlen`` partitions (:func:`_probe_vocab`: nothing but
+    dictionary slivers are scanned before candidates are known, like ES's
+    FST walk); the shared :func:`_fuzzy_selected` expansion runs
     distributed, and the bounded selection (≤ query terms ×
     max_expansions rows — ES's rewrite is capped identically) collects to
     the driver so the scoring probe can enumerate its crc32 BUCKETS and
     get parquet partition pruning, exactly like the MLT probe's second
-    phase (``n_buckets`` = the layout's count, :func:`_term_rows`)."""
+    phase (:func:`_term_rows`)."""
     q_terms = sorted(set(query_terms(query)))
     if not q_terms:
         return bm25_from_postings(postings, stats, "", k)
@@ -1116,8 +1110,7 @@ def fuzzy_match_from_postings(
     # lengths — _fuzzy_selected now looks exact terms up in the vocabulary
     # (for their df) instead of injecting literal rows
     v = _probe_vocab(
-        postings, vocab,
-        [r[2] for r in fuzz_rows] + [len(t) for t in exact_terms],
+        vocab, [r[2] for r in fuzz_rows] + [len(t) for t in exact_terms]
     )
     selected = _fuzzy_selected(
         postings.sparkSession, v, fuzz_rows, exact_terms,
@@ -1126,9 +1119,7 @@ def fuzzy_match_from_postings(
     sel_terms = sorted(r.term for r in selected.collect())
     if not sel_terms:
         return bm25_from_postings(postings, stats, "", k)
-    return bm25_from_postings(
-        postings, stats, " ".join(sel_terms), k, n_buckets=n_buckets
-    )
+    return bm25_from_postings(postings, stats, " ".join(sel_terms), k)
 
 
 def prefix_search_from_postings(
@@ -1137,26 +1128,24 @@ def prefix_search_from_postings(
     query: str,
     k: int = 10,
     max_expansions: int = 50,
-    vocab: DataFrame | None = None,
-    n_buckets: int | None = None,
+    *,
+    vocab: DataFrame,
 ) -> DataFrame:
     """:func:`prefix_search` probed from a persisted index — the
     per-keystroke path of the reference's search box
     (/root/reference/news_app/app/app/src/SearchUI.js:45-46): the
-    unfinished token expands against the term dictionary (the ``vocab``
-    sidecar when present — row-group min/max on the term-sorted files
-    prunes inside each length partition; otherwise one postings count),
-    then the bounded expansion set (≤ terms + max_expansions) probes the
-    bucket-pruned postings (``n_buckets`` = the layout's count,
-    :func:`_term_rows`). Identical output to the corpus-scan form."""
+    unfinished token expands against the index's ``vocab`` (row-group
+    min/max on the term-sorted files prunes inside each length
+    partition), then the bounded expansion set (≤ terms + max_expansions)
+    probes the bucket-pruned postings (:func:`_term_rows`). Identical
+    output to the corpus-scan form."""
     toks = query_terms(query)
     if not toks:
         return bm25_from_postings(postings, stats, "", k)
     *full_terms, prefix = toks
     full_terms = sorted(set(full_terms))
-    v = _probe_vocab(postings, vocab, ())
     expansions = (
-        v.filter(F.col("term").startswith(prefix))
+        vocab.filter(F.col("term").startswith(prefix))
         .orderBy(F.desc("df"), F.col("term"))
         .limit(max_expansions)
         .select("term")
@@ -1164,9 +1153,7 @@ def prefix_search_from_postings(
     sel_terms = sorted({r.term for r in expansions.collect()} | set(full_terms))
     if not sel_terms:
         return bm25_from_postings(postings, stats, "", k)
-    return bm25_from_postings(
-        postings, stats, " ".join(sel_terms), k, n_buckets=n_buckets
-    )
+    return bm25_from_postings(postings, stats, " ".join(sel_terms), k)
 
 
 def term_suggest_from_vocab(
@@ -1176,14 +1163,15 @@ def term_suggest_from_vocab(
     prefix_length: int = 1,
     k: int = 5,
 ) -> DataFrame:
-    """:func:`term_suggest` probed from a term dictionary (the persisted
-    ``vocab`` sidecar or the in-memory cached one) — identical output to
+    """:func:`term_suggest` probed from an index's (term, df, tlen) terms
+    dictionary (the persisted ``vocab`` sidecar or the in-memory cached
+    one) — identical output to
     the corpus-scan form, but per keystroke it touches only the ``tlen``
     partitions inside the ±``max_edits`` length band (edit distance can
     never beat the length gap), never the postings, never the corpus."""
     q = term.lower()
     lens = list(range(max(1, len(q) - max_edits), len(q) + max_edits + 1))
-    v = _probe_vocab(None, vocab, lens) if "tlen" in vocab.columns else vocab
+    v = _probe_vocab(vocab, lens)
     pref = q[: max(0, prefix_length)]
     cand = v.filter(
         (F.substring("term", 1, len(pref)) == F.lit(pref))
@@ -1380,7 +1368,6 @@ def more_like_this_from_postings(
     max_query_terms: int = 8,
     min_term_freq: int = 1,
     min_doc_freq: int = 1,
-    n_buckets: int | None = None,
 ) -> DataFrame:
     """``more_like_this`` probed from a persisted index — the interactive
     path (ES fetches the source doc's term vector, selects terms, then
@@ -1398,8 +1385,7 @@ def more_like_this_from_postings(
     tie-break, min_term_freq/min_doc_freq) runs driver-side over ≤ one
     doc's vocabulary. Scoring reuses :func:`bm25_from_postings` — the
     selected terms ARE tokens, so a space-joined query string re-analyzes
-    to exactly them — probing k+1 and dropping the source. ``n_buckets`` =
-    the layout's term-bucket count (:func:`_term_rows`)."""
+    to exactly them — probing k+1 and dropping the source."""
     import math
     from decimal import ROUND_HALF_UP, Decimal
 
@@ -1426,7 +1412,7 @@ def more_like_this_from_postings(
     if not src_rows:
         return bm25_from_postings(postings, stats, "", k)  # empty, right schema
     df_rows = (
-        _term_rows(postings, (r.term for r in src_rows), n_buckets)
+        _term_rows(postings, (r.term for r in src_rows))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("df"))
         .collect()
@@ -1442,7 +1428,7 @@ def more_like_this_from_postings(
     if not ranked:
         return bm25_from_postings(postings, stats, "", k)
     query = " ".join(t for _, t in ranked)
-    hits = bm25_from_postings(postings, stats, query, k + 1, n_buckets=n_buckets)
+    hits = bm25_from_postings(postings, stats, query, k + 1)
     return (
         hits.filter(F.col("doc_id") != F.lit(src_doc_id))
         .orderBy(F.desc("score"), F.col("doc_id"))
@@ -1896,7 +1882,7 @@ ORDER BY score DESC, doc_id
 # ---------------------------------------------------------------------------
 
 N_TERM_BUCKETS = 16
-"""Term buckets of a NEW index layout (``bucket`` = crc32(term) mod this).
+"""Term buckets of every index layout (``bucket`` = crc32(term) mod this).
 
 Every append writes one postings file per bucket, and every read of
 ``postings/`` lists the bucket dirs: Spark lists up to 32 of them on the
@@ -1910,43 +1896,37 @@ on append and probe time at the ingest scale, where 64 appended about
 1.5x slower; 16 gave news_search the lowest index set-up time; and at
 sf1 probe latency was flat from 8 to 64 buckets, so probes do not wait
 on the terms/16 scan. Of the tied counts, 16 lists half the dirs of 32
-and prunes twice as much as 8 where the index grows. Layouts written with 64 buckets keep theirs:
-the ``meta.json`` record carries each layout's count
-(:attr:`SearchIndex.n_buckets`)."""
-
-# The count of layouts written before the record carried one. 16 divides
-# it, which makes the listing rule in :func:`_listed_bucket_count` exact.
-_LEGACY_TERM_BUCKETS = 64
+and prunes twice as much as 8 where the index grows. A layout written with
+another count is rejected at :meth:`SearchIndex.load` and must be
+rebuilt."""
 
 
-def term_bucket_py(term: str, n_buckets: int | None = None) -> int:
+def term_bucket_py(term: str) -> int:
     """Python-side term bucket — MUST mirror :func:`_bucket_col` (crc32
     over UTF-8 agrees between zlib and Spark's F.crc32), so a query can
     enumerate its terms' buckets client-side and get parquet PARTITION
-    PRUNING on the probe. ``n_buckets``: the layout's count (default
-    :data:`N_TERM_BUCKETS`, what builds write)."""
+    PRUNING on the probe."""
     import zlib
 
-    return zlib.crc32(term.encode("utf-8")) % (n_buckets or N_TERM_BUCKETS)
+    return zlib.crc32(term.encode("utf-8")) % N_TERM_BUCKETS
 
 
-def _bucket_col(n_buckets: int | None = None):
+def _bucket_col():
     """The Spark term-bucket expression every postings builder partitions by."""
-    return F.pmod(F.crc32(F.col("term")), F.lit(n_buckets or N_TERM_BUCKETS)).cast("int")
+    return F.pmod(F.crc32(F.col("term")), F.lit(N_TERM_BUCKETS)).cast("int")
 
 
-def _term_rows(frame: DataFrame, terms, n_buckets: int | None = None) -> DataFrame:
+def _term_rows(frame: DataFrame, terms) -> DataFrame:
     """``frame``'s posting rows for ``terms``, pruned to their buckets (a
     partition filter on a persisted layout) — the one place a probe maps
-    terms to buckets. ``n_buckets`` = the layout's count
-    (:attr:`SearchIndex.n_buckets`; default :data:`N_TERM_BUCKETS`)."""
+    terms to buckets."""
     terms = sorted(set(terms))
-    buckets = sorted({term_bucket_py(t, n_buckets) for t in terms})
+    buckets = sorted({term_bucket_py(t) for t in terms})
     return frame.filter(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
 
 
 def build_postings(
-    docs: DataFrame, id_col: str, text_col: str, n_buckets: int | None = None,
+    docs: DataFrame, id_col: str, text_col: str,
 ) -> tuple[DataFrame, DataFrame]:
     """One corpus pass → (postings, doc_lens).
 
@@ -1960,7 +1940,7 @@ def build_postings(
     empty docs too.
 
     Persist postings partitioned by ``bucket`` (crc32(term) mod
-    ``n_buckets``, default :data:`N_TERM_BUCKETS`): a query's terms map
+    :data:`N_TERM_BUCKETS`): a query's terms map
     to a handful of buckets, so an indexed probe reads ~terms/buckets of
     the index — the partition-pruned analogue of ES's term dictionary
     seek. Within a bucket, parquet min/max on the sorted ``term`` column
@@ -1985,7 +1965,7 @@ def build_postings(
     ).withColumn("dl", F.size("toks"))
     postings = (
         base.select("doc_id", "dl", F.explode("toks").alias("term"))
-        .withColumn("bucket", _bucket_col(n_buckets))
+        .withColumn("bucket", _bucket_col())
         .repartition("bucket")
         .groupBy("doc_id", "dl", "term", "bucket")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -2082,7 +2062,7 @@ PROBE_WINDOW_MAX_BYTES = 64 << 20
 
 def bm25_from_postings(
     postings: DataFrame, stats, query: str, k: int = 10,
-    after: tuple | None = None, n_buckets: int | None = None,
+    after: tuple | None = None,
 ) -> DataFrame:
     """BM25 top-k scored ENTIRELY from the posting tables — no corpus scan,
     no tokenize. Identical output to :func:`bm25_search` (same tf/dl/df/
@@ -2101,9 +2081,8 @@ def bm25_from_postings(
 
     ``stats`` is either the one-row (n_docs, sum_dl) DataFrame (in-memory
     build path) or a plain ``(n_docs, sum_dl)`` tuple (loaded-index path —
-    folds to literals, skipping the crossJoin broadcast round).
-    ``n_buckets`` = the layout's term-bucket count (:func:`_term_rows`)."""
-    p = _term_rows(postings, query_terms(query), n_buckets)
+    folds to literals, skipping the crossJoin broadcast round)."""
+    p = _term_rows(postings, query_terms(query))
     df_t = p.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     scored = p.join(F.broadcast(df_t), "term")
     if isinstance(stats, tuple):
@@ -2132,7 +2111,7 @@ def bm25_from_postings(
 
 def bm25_from_postings_small(
     postings: DataFrame, n_docs: int, sum_dl: int, query: str, k: int = 10,
-    after: tuple | None = None, n_buckets: int | None = None,
+    after: tuple | None = None,
 ) -> DataFrame:
     """Interactive small-candidate probe tier: df via ``count() OVER
     (PARTITION BY term)`` in the SAME scan — one job, no broadcast round
@@ -2146,7 +2125,7 @@ def bm25_from_postings_small(
     :meth:`SearchIndex.search` keeps this tier behind the size gate."""
     from pyspark.sql import Window
 
-    p = _term_rows(postings, query_terms(query), n_buckets)
+    p = _term_rows(postings, query_terms(query))
     avgdl = F.lit(sum_dl).cast("double") / F.lit(n_docs)
     idf = F.log(
         F.lit(1.0)
@@ -2159,16 +2138,17 @@ def bm25_from_postings_small(
     return _bm25_score_agg(scored, k, after=after)
 
 
-def _layout_fingerprint(frame: DataFrame, subdir: str) -> str:
+def _layout_fingerprint(files: list, subdir: str) -> str:
     """Content fingerprint of a persisted index artifact: sha256 over the
-    sorted data-file names (driver-side listing — no data scan). Appends
+    sorted names of its data ``files`` (a frame's ``inputFiles()``, a
+    driver-side listing — no data scan). Appends
     add files and never rewrite them, so fingerprint equality ⇔ the
     sidecars were derived from exactly these files. Stored in the
     ``meta.json`` record, committed LAST at every save/append; a mismatch
     at load means a crash landed between an artifact and the record."""
     import hashlib
 
-    names = sorted(f.rsplit(f"/{subdir}/", 1)[-1] for f in frame.inputFiles())
+    names = sorted(f.rsplit(f"/{subdir}/", 1)[-1] for f in files)
     return hashlib.sha256("\n".join(names).encode("utf-8")).hexdigest()
 
 
@@ -2176,22 +2156,7 @@ def _postings_fingerprint(postings: DataFrame) -> str:
     """Fingerprint of the postings artifact — a mismatch vs the record
     triggers a one-time DERIVED-sidecar rebuild (self-healing, never wrong —
     the postings remain the single source of truth for vocab/doc_ids/stats)."""
-    return _layout_fingerprint(postings, "postings")
-
-
-def _listed_bucket_count(postings: DataFrame) -> int:
-    """The term-bucket count of a layout whose record does not carry one
-    (written before records did, or being repaired), read off the
-    ``bucket=K`` dirs of the postings listing a read already holds (no
-    Spark job): 64 when some K ≥ :data:`N_TERM_BUCKETS`, else
-    :data:`N_TERM_BUCKETS`. Exact because 16 divides 64: when every
-    bucket of a 64-bucket layout is below 16, crc32 mod 64 equals crc32
-    mod 16 for each of its terms, so either count finds every posting."""
-    top = max(
-        int(f.rsplit("/bucket=", 1)[1].split("/", 1)[0])
-        for f in postings.inputFiles()
-    )
-    return N_TERM_BUCKETS if top < N_TERM_BUCKETS else _LEGACY_TERM_BUCKETS
+    return _layout_fingerprint(postings.inputFiles(), "postings")
 
 
 def _file_schema(frame: DataFrame) -> dict:
@@ -2214,8 +2179,7 @@ def _file_schema(frame: DataFrame) -> dict:
 def _read_artifact(spark, path: str, name: str, schemas: dict) -> DataFrame:
     """Open the index artifact ``{path}/{name}``: with the record's schema
     when ``schemas`` has it (a listing, no Spark job), else by parquet
-    schema inference (one job — records written before they carried
-    schemas, and the repair)."""
+    schema inference (one job — the repair, which has no record)."""
     from pyspark.sql.types import StructType
 
     r = spark.read
@@ -2224,17 +2188,34 @@ def _read_artifact(spark, path: str, name: str, schemas: dict) -> DataFrame:
     return r.parquet(f"{path}/{name}")
 
 
+def _read_present_artifact(spark, path: str, name: str,
+                           schemas: dict) -> DataFrame | None:
+    """:func:`_read_artifact`, or None when the artifact is absent: no
+    directory, or one with no data file to infer a schema from (a first
+    write that crashed before its commit). Any other read error
+    propagates, so an existing artifact is never taken for none."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return _read_artifact(spark, path, name, schemas)
+    except AnalysisException as e:
+        if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            raise
+        return None
+
+
 def _read_index_meta(spark, path: str) -> dict | None:
     """The committed ``meta.json`` record as a dict (no Spark job), or None
-    — no commit yet, or a layout older than the record (postings-only, or
-    a parquet ``meta/`` row): each means 'repair'."""
+    — no commit yet, or a record written before records carried
+    ``schemas``: each means 'repair'."""
     from pandemic_knowledge_spark.streaming.sinks import read_published_file
 
     text = read_published_file(spark, f"{path}/meta.json")
     try:
-        return json.loads(text) if text else None
+        meta = json.loads(text) if text else None
     except ValueError:
         return None
+    return meta if meta and "schemas" in meta else None
 
 
 def _write_vocab(laid: DataFrame, path: str) -> dict:
@@ -2271,7 +2252,6 @@ def _write_index_sidecars(
     path: str,
     postings: DataFrame,
     doc_ids: DataFrame,
-    n_buckets: int,
     stats: tuple | None = None,
     positional: DataFrame | None = None,
 ) -> dict:
@@ -2284,17 +2264,13 @@ def _write_index_sidecars(
     :func:`_tlen_laid`) are written side by side
     (:func:`_run_side_by_side`, in the caller's job group). The
     fingerprints list the written files through the schemas the record
-    stores, so they read no data and infer nothing. Once the record is
-    published, a parquet ``meta/`` left by an older layout is deleted —
-    on a repair and on an overwrite save alike.
+    stores, so they read no data and infer nothing.
 
     ``doc_ids``: the (doc_id, dl) rows to write — a build's, zero-token
     docs included (:meth:`SearchIndex.save`), or the postings' own id
     set (the load-time repair, which has nothing but posting rows to
     read). ``stats``: (n_docs, sum_dl) when the caller holds them (a
     loaded handle being saved); None = sum the written ``doc_ids``."""
-    from pandemic_knowledge_spark.streaming.sinks import _hadoop_path
-
     schemas = {"postings": _file_schema(postings), "doc_ids": _file_schema(doc_ids)}
     if positional is not None:
         schemas["positions"] = _file_schema(positional)
@@ -2305,7 +2281,8 @@ def _write_index_sidecars(
     )
 
     def fingerprint(name: str) -> str:
-        return _layout_fingerprint(_read_artifact(spark, path, name, schemas), name)
+        frame = _read_artifact(spark, path, name, schemas)
+        return _layout_fingerprint(frame.inputFiles(), name)
 
     if stats is None:
         row = (
@@ -2313,32 +2290,28 @@ def _write_index_sidecars(
             .agg(*_doc_stat_cols()).collect()[0]
         )
         stats = (row["n_docs"], row["sum_dl"] or 0)
-    meta = _write_index_meta(
-        spark, path, *stats, n_buckets, schemas, fingerprint("postings"),
+    return _write_index_meta(
+        spark, path, *stats, schemas, fingerprint("postings"),
         fingerprint("positions") if positional is not None else None,
     )
-    legacy, fs = _hadoop_path(spark, f"{path}/meta")
-    fs.delete(legacy, True)  # the parquet record meta.json replaced
-    return meta
 
 
 def _write_index_meta(
-    spark, path: str, n_docs: int, sum_dl: int, n_buckets: int,
+    spark, path: str, n_docs: int, sum_dl: int,
     schemas: dict, fingerprint: str, pos_fingerprint: str | None = None,
 ) -> dict:
     """Commit the index: publish its one-line ``meta.json`` record the way
     AtomicTable publishes ``_CURRENT`` (no Spark job) and return it.
 
     Fields: ``n_docs`` and ``sum_dl`` (the corpus stats, exact integers);
-    ``n_buckets`` (the layout's term-bucket count); ``fingerprint`` and
-    ``pos_fingerprint`` (the postings and positions file listings the
-    record commits; the latter null without a positional artifact); and
-    ``schemas`` — the JSON StructType of ``postings``, ``vocab``,
+    ``fingerprint`` and ``pos_fingerprint`` (the postings and positions
+    file listings the record commits; the latter null without a
+    positional artifact); and ``schemas`` — the JSON StructType of ``postings``, ``vocab``,
     ``doc_ids`` and, when present, ``positions``, so :meth:`SearchIndex.load`
     opens every artifact without schema inference."""
     from pandemic_knowledge_spark.streaming.sinks import publish_file
 
-    meta = dict(n_docs=int(n_docs), sum_dl=int(sum_dl), n_buckets=int(n_buckets),
+    meta = dict(n_docs=int(n_docs), sum_dl=int(sum_dl),
                 fingerprint=fingerprint, pos_fingerprint=pos_fingerprint,
                 schemas=schemas)
     publish_file(spark, f"{path}/meta.json", json.dumps(meta))
@@ -2358,15 +2331,11 @@ class SearchIndex:
     fuzzy/suggest/prefix probes expand against dictionary slivers, never
     postings), ``doc_ids/`` the indexed-id set with dl norms, zero-token
     docs included (the incremental-ingest dedup guard), and ``meta.json``
-    the JSON commit record: corpus stats, the layout's term-bucket count,
-    the file-listing fingerprints and every artifact's schema
-    (:func:`_write_index_meta`). Opening a committed index reads the
-    record and lists the files — no Spark job.
-
-    :attr:`n_buckets` is the layout's term-bucket count: new layouts use
-    :data:`N_TERM_BUCKETS`, layouts written before it was 16 keep 64. The
-    handle passes it to every probe, so terms map to the buckets that
-    layout was written with.
+    the JSON commit record: corpus stats, the file-listing fingerprints
+    and every artifact's schema (:func:`_write_index_meta`). Opening a
+    committed index reads the record and lists the files — no Spark job.
+    Every layout has :data:`N_TERM_BUCKETS` term buckets; :meth:`load`
+    rejects one written with more.
 
     One write path: :meth:`save` writes a whole index, :meth:`append_save`
     adds a batch of documents to a persisted one (creating it on the first
@@ -2383,12 +2352,10 @@ class SearchIndex:
     anywhere in a write degrades to a one-time repair, never a wrong answer."""
 
     def __init__(self, postings: DataFrame, stats: DataFrame,
+                 vocab: DataFrame, doc_ids: DataFrame,
                  stats_scalars: tuple | None = None,
                  index_bytes: int | None = None,
-                 vocab: DataFrame | None = None,
-                 doc_ids: DataFrame | None = None,
-                 positional: DataFrame | None = None,
-                 n_buckets: int | None = None) -> None:
+                 positional: DataFrame | None = None) -> None:
         self.postings = postings
         self.stats = stats
         # (n_docs, sum_dl) as plain ints when known eagerly (loaded index):
@@ -2401,9 +2368,8 @@ class SearchIndex:
         # ~0.1 s — half the interactive budget).
         self.index_bytes = index_bytes
         # Terms dictionary (term, df, tlen) and indexed-id set (doc_id, dl):
-        # persisted sidecars on a loaded index, cached derivations on an
-        # in-memory build, None on bare frames (probes fall back to the
-        # postings aggregate).
+        # persisted sidecars on a loaded index, derivations (cached on
+        # request) on an in-memory build.
         self.vocab = vocab
         self.doc_ids = doc_ids
         # Positional postings (bucket, term, doc_id, positions) — an
@@ -2412,8 +2378,6 @@ class SearchIndex:
         # postings: present only on positional builds/layouts; phrase
         # probes require it.
         self.positional = positional
-        # Term-bucket count of the postings (and positions) layout.
-        self.n_buckets = n_buckets or N_TERM_BUCKETS
 
     @classmethod
     def build(cls, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
@@ -2440,19 +2404,15 @@ class SearchIndex:
             doc_ids = doc_ids.cache()
             if pos is not None:
                 pos = pos.cache()
-        return cls(postings, stats, vocab=vocab, doc_ids=doc_ids, positional=pos)
+        return cls(postings, stats, vocab, doc_ids, positional=pos)
 
     def warm(self) -> "SearchIndex":
         """Force materialization now (first search pays nothing)."""
-        self.postings.count()
-        self.stats.count()
-        if self.vocab is not None:
-            self.vocab.count()
-        if self.doc_ids is not None:
-            self.doc_ids.count()
+        for frame in (self.postings, self.stats, self.vocab, self.doc_ids):
+            frame.count()
         return self
 
-    def save(self, path: str, timings: dict | None = None) -> "SearchIndex":
+    def save(self, path: str) -> "SearchIndex":
         """Persist the whole index (overwrite): postings in the
         :func:`_bucket_laid` layout, the positional postings when this is
         a positional build (same layout — a phrase probe prunes the same
@@ -2460,12 +2420,6 @@ class SearchIndex:
         record (:func:`_write_index_sidecars`; a crash anywhere here
         leaves a fingerprint mismatch that :meth:`load` repairs — or, for
         the non-derivable positional artifact, loudly disables).
-
-        ``timings``: pass a dict to get the per-tier wall seconds recorded
-        into it (``postings_sec`` / ``positions_sec`` / ``sidecars_sec``)
-        — bench instrumentation (r8 verdict watch item: the r8 sidecar +
-        positional tiers tripled build_save; the split shows which tier
-        moves, from the one code path that actually runs).
 
         One lazy checkpoint of the laid postings feeds the postings write
         and the vocab aggregate, so nothing re-reads the files just
@@ -2479,12 +2433,8 @@ class SearchIndex:
         stats. At cluster scale the checkpoint holds one copy of the
         postings in executor memory/disk for the duration of the save —
         the same footprint the write shuffle already has."""
-        import time as _time
-
-        t0 = _time.perf_counter()
         laid = _bucket_laid(self.postings).localCheckpoint(eager=False)
         laid.write.mode("overwrite").partitionBy("bucket").parquet(f"{path}/postings")
-        t1 = _time.perf_counter()
         if self.positional is not None:
             (
                 _bucket_laid(self.positional)
@@ -2492,17 +2442,11 @@ class SearchIndex:
                 .partitionBy("bucket")
                 .parquet(f"{path}/positions")
             )
-        t2 = _time.perf_counter()
-        doc_ids = self.doc_ids if self.doc_ids is not None else _doc_id_set(laid)
         _write_index_sidecars(
-            self.postings.sparkSession, path, laid, doc_ids, self.n_buckets,
+            self.postings.sparkSession, path, laid, self.doc_ids,
             self.stats_scalars, self.positional,
         )
         laid.unpersist()
-        if timings is not None:
-            timings["postings_sec"] = round(t1 - t0, 3)
-            timings["positions_sec"] = round(t2 - t1, 3)
-            timings["sidecars_sec"] = round(_time.perf_counter() - t2, 3)
         return self
 
     @classmethod
@@ -2511,51 +2455,51 @@ class SearchIndex:
         ``meta.json`` record, open every artifact with the schema it
         stores (a driver-side file listing, no inference), and validate
         its fingerprint against the postings listing. Corpus stats
-        (n_docs, sum_dl) and the term-bucket count come from the record
-        as driver-side literals. save() recorded the stats from the FULL
-        corpus (zero-token docs included), so loaded-index scores are
-        bit-identical to the in-memory build.
+        (n_docs, sum_dl) come from the record as driver-side literals.
+        save() recorded the stats from the FULL corpus (zero-token docs
+        included), so loaded-index scores are bit-identical to the
+        in-memory build.
 
         When the fingerprint differs or there is no record — a crash
-        before the record's publish, or a layout older than the record —
-        the sidecars and the record are rebuilt from the postings once
-        (schema inference; the bucket count from the listing,
-        :func:`_listed_bucket_count`), and a parquet ``meta/`` left by
-        older layouts is deleted. Only this REPAIR path, which has
-        nothing but posting rows to read, falls back to postings-only
-        stats (on a corpus with empty docs n_docs reads slightly smaller
-        until the next save — empty docs never match, so only idf norms
-        shift). A record written before records carried schemas and a
-        bucket count still opens, by inference and the listing rule.
-        Raises FileNotFoundError when ``path`` holds no postings yet."""
-        from pyspark.errors import AnalysisException
+        before the record's publish, or a record written before records
+        carried schemas — the sidecars and the record are rebuilt from
+        the postings once (schema inference). Only this REPAIR path,
+        which has nothing but posting rows to read, falls back to
+        postings-only stats (on a corpus with empty docs n_docs reads
+        slightly smaller until the next save — empty docs never match,
+        so only idf norms shift).
 
+        Raises FileNotFoundError when ``path`` holds no postings yet, and
+        ValueError when the postings listing has a ``bucket=K`` dir with
+        K ≥ :data:`N_TERM_BUCKETS`: a layout written with more term
+        buckets would lose postings to the probes' bucket pruning, so it
+        must be rebuilt. The check is exact for 64 buckets, the count
+        before 16: 16 divides 64, so a 64-bucket layout whose buckets are
+        all below 16 maps every term to the bucket it was written to."""
         meta = _read_index_meta(spark, path)
-        try:
-            postings = _read_artifact(
-                spark, path, "postings", (meta or {}).get("schemas") or {}
-            )
-        except AnalysisException as e:
-            # absent, or a first write crashed before its postings commit
-            # (no data file to infer a schema from); any other read error
-            # propagates, so an existing index is never taken for none
-            if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-                raise
-            postings = None
+        postings = _read_present_artifact(
+            spark, path, "postings", meta["schemas"] if meta else {}
+        )
         # (with a record's schema an empty dir reads fine: an overwrite
         # that crashed before its postings commit)
-        if postings is None or not postings.inputFiles():
+        files = postings.inputFiles() if postings is not None else []
+        if not files:
             raise FileNotFoundError(f"no search index under {path}")
-        if meta is None or meta["fingerprint"] != _postings_fingerprint(postings):
+        top = max(int(f.rsplit("/bucket=", 1)[1].split("/", 1)[0]) for f in files)
+        if top >= N_TERM_BUCKETS:
+            raise ValueError(
+                f"search index under {path} has term bucket {top}: it was "
+                f"written with more than {N_TERM_BUCKETS} term buckets; "
+                "rebuild it with SearchIndex.build(...).save(path)"
+            )
+        fingerprint = _layout_fingerprint(files, "postings")
+        if meta is None or meta["fingerprint"] != fingerprint:
             # derived sidecars rebuild from postings; the positional
             # artifact is NOT derivable, and after a crash we can't know
             # it matches the postings — disable it (pos_fingerprint=None)
             # rather than risk silently inconsistent phrase results; a
             # positional save() re-enables it.
-            meta = _write_index_sidecars(
-                spark, path, postings, _doc_id_set(postings),
-                _listed_bucket_count(postings),
-            )
+            meta = _write_index_sidecars(spark, path, postings, _doc_id_set(postings))
         return cls._committed(spark, path, postings, meta)
 
     @classmethod
@@ -2563,18 +2507,17 @@ class SearchIndex:
                    meta: dict) -> "SearchIndex":
         """The handle over a committed layout: ``postings`` is the frame
         whose file listing gave ``meta["fingerprint"]``; the sidecars
-        open with the record's schemas (no Spark job), and a record
-        written before it carried schemas or a bucket count falls back to
-        inference and :func:`_listed_bucket_count`."""
-        schemas = meta.get("schemas") or {}
+        open with the record's schemas (no Spark job). The positional
+        artifact joins the handle only when the record names one and its
+        listing still matches; one that is gone leaves the handle without
+        a phrase door, and any other read error propagates."""
+        schemas = meta["schemas"]
         positional = None
-        if meta.get("pos_fingerprint"):
-            try:
-                pos = _read_artifact(spark, path, "positions", schemas)
-            except Exception:
-                pos = None
+        if meta["pos_fingerprint"]:
+            pos = _read_present_artifact(spark, path, "positions", schemas)
             if pos is not None and (
-                _layout_fingerprint(pos, "positions") == meta["pos_fingerprint"]
+                _layout_fingerprint(pos.inputFiles(), "positions")
+                == meta["pos_fingerprint"]
             ):
                 positional = pos
         stats = spark.range(1).select(
@@ -2587,12 +2530,11 @@ class SearchIndex:
         return cls(
             postings,
             stats,
+            _read_artifact(spark, path, "vocab", schemas),
+            _read_artifact(spark, path, "doc_ids", schemas),
             stats_scalars=(meta["n_docs"], meta["sum_dl"]),
             index_bytes=int(index_bytes),
-            vocab=_read_artifact(spark, path, "vocab", schemas),
-            doc_ids=_read_artifact(spark, path, "doc_ids", schemas),
             positional=positional,
-            n_buckets=meta.get("n_buckets") or _listed_bucket_count(postings),
         )
 
     def search(self, query: str, k: int = 10,
@@ -2617,15 +2559,12 @@ class SearchIndex:
                 n_docs, sum_dl = self.stats_scalars
                 return bm25_from_postings_small(
                     self.postings, n_docs, sum_dl, query, k=k, after=after,
-                    n_buckets=self.n_buckets,
                 )
             return bm25_from_postings(
                 self.postings, self.stats_scalars, query, k=k, after=after,
-                n_buckets=self.n_buckets,
             )
         return bm25_from_postings(
             self.postings, self.stats, query, k=k, after=after,
-            n_buckets=self.n_buckets,
         )
 
     def more_like_this(
@@ -2644,7 +2583,6 @@ class SearchIndex:
             self.postings, stats, src_doc_id, k=k,
             max_query_terms=max_query_terms,
             min_term_freq=min_term_freq, min_doc_freq=min_doc_freq,
-            n_buckets=self.n_buckets,
         )
 
     def fuzzy_search(
@@ -2662,7 +2600,7 @@ class SearchIndex:
         return fuzzy_match_from_postings(
             self.postings, stats, query, k=k,
             max_expansions=max_expansions, prefix_length=prefix_length,
-            vocab=self.vocab, n_buckets=self.n_buckets,
+            vocab=self.vocab,
         )
 
     def prefix_search(self, query: str, k: int = 10,
@@ -2675,7 +2613,6 @@ class SearchIndex:
         return prefix_search_from_postings(
             self.postings, stats, query, k=k,
             max_expansions=max_expansions, vocab=self.vocab,
-            n_buckets=self.n_buckets,
         )
 
     def suggest(self, term: str, max_edits: int = 2, prefix_length: int = 1,
@@ -2684,9 +2621,8 @@ class SearchIndex:
         dictionary (see :func:`term_suggest_from_vocab`): tlen-pruned
         dictionary slivers only, never a postings or corpus scan. Output
         identical to the corpus-scan :func:`term_suggest`."""
-        vocab = _probe_vocab(self.postings, self.vocab, ())
         return term_suggest_from_vocab(
-            vocab, term, max_edits=max_edits, prefix_length=prefix_length, k=k
+            self.vocab, term, max_edits=max_edits, prefix_length=prefix_length, k=k
         )
 
     def bool_search(self, **kwargs) -> DataFrame:
@@ -2714,9 +2650,7 @@ class SearchIndex:
                 "whose positions were stale/mid-write is deliberately "
                 "disabled — rebuild via a positional save()."
             )
-        return phrase_search_from_postings(
-            self.positional, phrase, k=k, n_buckets=self.n_buckets
-        )
+        return phrase_search_from_postings(self.positional, phrase, k=k)
 
     @classmethod
     def append_save(cls, spark, path: str, docs: DataFrame,
@@ -2731,8 +2665,7 @@ class SearchIndex:
         1. The batch, less its already-indexed doc ids (an anti-join
            against the tiny ``doc_ids`` sidecar, never a full-postings
            distinct), is checkpointed once; everything below reads it.
-        2. Its postings — bucketed with the layout's own
-           :attr:`n_buckets`, one file per bucket — are APPENDED to the
+        2. Its postings — one file per term bucket — are APPENDED to the
            layout, side by side with the terms-dictionary merge: the old
            ``vocab`` plus one (term, 1) row per distinct term of each
            batch doc, summed inside one :func:`_tlen_laid` exchange and
@@ -2743,12 +2676,12 @@ class SearchIndex:
            further exchange).
 
         Then the ``meta.json`` record is published, LAST: its stats add
-        the batch's exact integer sums, its schemas and bucket count carry
-        over. Side-by-side actions run in the caller's job group
-        (:func:`_run_side_by_side`). Returns the updated index handle,
-        built from the committed record and the postings frame the new
-        fingerprint was listed from (no second :meth:`load`); probes over
-        it equal a from-scratch rebuild of old ∪ new.
+        the batch's exact integer sums, its schemas carry over. Side-by-side
+        actions run in the caller's job group (:func:`_run_side_by_side`).
+        Returns the updated index handle, built from the committed record
+        and the postings frame the new fingerprint was listed from (no
+        second :meth:`load`); probes over it equal a from-scratch rebuild
+        of old ∪ new.
 
         Already-indexed doc ids in ``docs`` are DROPPED (first-accepted
         wins — the same policy as the incremental dedup ingest): without
@@ -2763,7 +2696,9 @@ class SearchIndex:
         commit; step 2's dictionary merge only checkpoints), so a failure
         up to it leaves the layout as it was; after it, the record still
         names the old postings listing, and the next open repairs the
-        sidecars from the postings."""
+        sidecars from the postings. A layout written with more than
+        :data:`N_TERM_BUCKETS` term buckets fails that load() with a
+        ValueError before anything is written."""
         try:
             prev = cls.load(spark, path)  # validates/repairs sidecars
         except FileNotFoundError:
@@ -2784,7 +2719,7 @@ class SearchIndex:
         # materialize the filtered batch BEFORE any write: the anti-join
         # reads {path}/doc_ids, which step 3 appends to
         docs = docs.join(indexed, id_col, "left_anti").localCheckpoint(eager=True)
-        new_p, new_docs = build_postings(docs, id_col, text_col, prev.n_buckets)
+        new_p, new_docs = build_postings(docs, id_col, text_col)
         batch_terms = _doc_terms(docs, text_col).withColumn("df", F.lit(1).cast("long"))
         _, merged_vocab = _run_side_by_side(
             spark,
@@ -2820,7 +2755,7 @@ class SearchIndex:
         meta = _write_index_meta(
             spark, path, n_docs + batch.get["n_docs"],
             sum_dl + (batch.get["sum_dl"] or 0),
-            prev.n_buckets, schemas, _postings_fingerprint(postings),
+            schemas, _postings_fingerprint(postings),
         )
         return cls._committed(spark, path, postings, meta)
 
@@ -3024,7 +2959,6 @@ def build_positional_postings(
 
 def phrase_search_from_postings(
     postings_pos: DataFrame, phrase: str, k: int = 10,
-    n_buckets: int | None = None,
 ) -> DataFrame:
     """Top-k docs containing the exact consecutive-token phrase, counted
     from positional postings alone — no corpus scan.
@@ -3036,20 +2970,17 @@ def phrase_search_from_postings(
     (every offset joins independently). The probe touches only the phrase
     terms' buckets → partition-pruned at scale."""
     return (
-        phrase_counts_from_postings(postings_pos, phrase, n_buckets)
+        phrase_counts_from_postings(postings_pos, phrase)
         .orderBy(F.desc("phrase_count"), "doc_id")
         .limit(k)
     )
 
 
-def phrase_counts_from_postings(
-    postings_pos: DataFrame, phrase: str, n_buckets: int | None = None
-) -> DataFrame:
+def phrase_counts_from_postings(postings_pos: DataFrame, phrase: str) -> DataFrame:
     """The UNLIMITED (doc_id, phrase_count) frame behind
     :func:`phrase_search_from_postings` — exposed so combinators (the
     indexed bool door's phrase clauses) can score every matching doc
-    instead of a pre-truncated page. ``n_buckets`` = the layout's
-    term-bucket count (:func:`_term_rows`)."""
+    instead of a pre-truncated page."""
     terms = query_terms(phrase)
     if not terms:
         raise ValueError("phrase has no tokenizable terms")
@@ -3058,7 +2989,7 @@ def phrase_counts_from_postings(
     phrase_df = F.broadcast(
         postings_pos.sparkSession.range(1).select(offsets)
     )
-    probe = _term_rows(postings_pos, terms, n_buckets)
+    probe = _term_rows(postings_pos, terms)
     joined = probe.join(phrase_df, "term").select(
         "doc_id",
         "off",
@@ -3079,7 +3010,6 @@ def phrase_counts_from_postings(
 
 def span_counts_from_postings(
     postings_pos: DataFrame, phrase: str, slop: int,
-    n_buckets: int | None = None,
 ) -> DataFrame:
     """(doc_id, phrase_count) for a phrase WITH SLOP from the positional
     tier: the ordered span-start count of :func:`span_near_search` /
@@ -3092,8 +3022,7 @@ def span_counts_from_postings(
     groupBy assembling the m position arrays per doc (docs lacking any
     term drop via the n_off == m gate), then the same nested-EXISTS
     window search as HOFs over the (tiny, per-doc) arrays — no corpus
-    scan, no shuffle beyond the per-doc assembly. ``n_buckets`` = the
-    layout's term-bucket count (:func:`_term_rows`)."""
+    scan, no shuffle beyond the per-doc assembly."""
     terms = query_terms(phrase)
     if not terms:
         raise ValueError("phrase has no tokenizable terms")
@@ -3105,7 +3034,7 @@ def span_counts_from_postings(
     phrase_df = F.broadcast(
         postings_pos.sparkSession.range(1).select(offsets)
     )
-    probe = _term_rows(postings_pos, terms, n_buckets)
+    probe = _term_rows(postings_pos, terms)
     per_doc = (
         probe.join(phrase_df, "term")
         .groupBy("doc_id")

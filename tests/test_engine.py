@@ -417,8 +417,7 @@ def test_search_index_probe_tiers_and_eager_stats(spark, tmp_path, monkeypatch):
 
 def test_spark_crc32_matches_python_bucket(spark):
     """The Spark bucket expression and term_bucket_py MUST agree — partition
-    pruning silently returns wrong (empty) results if they drift — at the
-    count new layouts use and at the 64 older layouts keep."""
+    pruning silently returns wrong (empty) results if they drift."""
     from pandemic_knowledge_spark.operators.search import (
         N_TERM_BUCKETS,
         _bucket_col,
@@ -426,15 +425,14 @@ def test_spark_crc32_matches_python_bucket(spark):
     )
 
     terms = ["virus", "outbreak", "zebra", "a", "covid19", "ünïcode"]
-    for n in (N_TERM_BUCKETS, 64):
-        rows = (
-            spark.createDataFrame([(t,) for t in terms], "term string")
-            .select("term", _bucket_col(n).alias("b"))
-            .collect()
-        )
-        for r in rows:
-            assert r.b == term_bucket_py(r.term, n), (n, r.term)
-            assert r.b == zlib.crc32(r.term.encode("utf-8")) % n, (n, r.term)
+    rows = (
+        spark.createDataFrame([(t,) for t in terms], "term string")
+        .select("term", _bucket_col().alias("b"))
+        .collect()
+    )
+    for r in rows:
+        assert r.b == term_bucket_py(r.term), r.term
+        assert r.b == zlib.crc32(r.term.encode("utf-8")) % N_TERM_BUCKETS, r.term
 
 
 def test_multifield_index_probe_matches_direct(spark):
@@ -627,7 +625,7 @@ def test_fuzzy_index_probe_matches_corpus_scan(spark, sf_dir, tmp_path):
         via_build = [
             (r.doc_id, r.score)
             for r in fuzzy_match_from_postings(
-                idx.postings, idx.stats, q, k=10
+                idx.postings, idx.stats, q, k=10, vocab=idx.vocab
             ).collect()
         ]
         via_loaded = [
@@ -635,7 +633,9 @@ def test_fuzzy_index_probe_matches_corpus_scan(spark, sf_dir, tmp_path):
         ]
         assert direct == via_build == via_loaded and len(direct) > 0, q
     # a query with no in-band expansion anywhere: empty, right schema
-    none = fuzzy_match_from_postings(idx.postings, idx.stats, "zzzzzzzzzz")
+    none = fuzzy_match_from_postings(
+        idx.postings, idx.stats, "zzzzzzzzzz", vocab=idx.vocab
+    )
     assert none.count() == 0 and none.columns == ["doc_id", "score"]
 
 

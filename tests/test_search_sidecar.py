@@ -56,19 +56,16 @@ def _saved(spark, tmp_path, name="idx"):
 
 def test_save_writes_vocab_docids_meta_sidecars(spark, tmp_path):
     """save() persists the derived sidecars and the ``meta.json`` record;
-    the record parses to the build's stats, the layout's bucket count, the
-    written postings' fingerprint and the schemas a parquet read of each
-    artifact infers, and its publish leaves no tmp file behind; vocab is
+    the record parses to the build's stats, the written postings'
+    fingerprint and the schemas a parquet read of each artifact infers,
+    and its publish leaves no tmp file behind; vocab is
     hive-partitioned by term length and agrees row-for-row with the
     postings aggregate."""
     import json
 
     from pyspark.sql.types import StructType
 
-    from pandemic_knowledge_spark.operators.search import (
-        N_TERM_BUCKETS,
-        _postings_fingerprint,
-    )
+    from pandemic_knowledge_spark.operators.search import _postings_fingerprint
 
     docs, path = _saved(spark, tmp_path)
     assert os.path.isdir(f"{path}/vocab")
@@ -80,7 +77,6 @@ def test_save_writes_vocab_docids_meta_sidecars(spark, tmp_path):
     assert meta == {
         "n_docs": want["n_docs"],
         "sum_dl": want["sum_dl"],
-        "n_buckets": N_TERM_BUCKETS,
         "fingerprint": _postings_fingerprint(spark.read.parquet(f"{path}/postings")),
         "pos_fingerprint": None,
     }
@@ -137,6 +133,8 @@ def test_fuzzy_probe_expansion_scans_vocab_sidecar_not_postings(spark, tmp_path)
     PARTITION filter — never the postings, never a full-vocabulary
     aggregate. Built through the exact helpers the probe calls
     (operators.search.fuzzy_match_from_postings)."""
+    from pandemic_knowledge_spark.operators.search import _term_df
+
     _docs, path = _saved(spark, tmp_path)
     idx = SearchIndex.load(spark, path)
     qterm = "strean"
@@ -146,7 +144,7 @@ def test_fuzzy_probe_expansion_scans_vocab_sidecar_not_postings(spark, tmp_path)
         for n in range(max(1, len(qterm) - band), len(qterm) + band + 1)
     ]
     with _full_plan_paths(spark):
-        v = _probe_vocab(idx.postings, idx.vocab, (r[2] for r in rows))
+        v = _probe_vocab(idx.vocab, (r[2] for r in rows))
         sel = _fuzzy_selected(spark, v, rows, [], 50, 0)
         plan = sel._jdf.queryExecution().executedPlan().toString()
         assert "/vocab" in plan
@@ -154,8 +152,9 @@ def test_fuzzy_probe_expansion_scans_vocab_sidecar_not_postings(spark, tmp_path)
         # the length band reaches the scan as a partition filter
         part = plan.split("PartitionFilters: [")[1].split("]")[0]
         assert "tlen" in part
-        # and the in-memory fallback (vocab=None) still derives from postings
-        v0 = _probe_vocab(idx.postings, None, (r[2] for r in rows))
+        # control: the same expansion over a postings-derived dictionary
+        # does show the postings scan this check looks for
+        v0 = _term_df(idx.postings)
         p0 = (
             _fuzzy_selected(spark, v0, rows, [], 50, 0)
             ._jdf.queryExecution().executedPlan().toString()
@@ -253,55 +252,23 @@ def test_append_save_creates_index_where_no_postings_committed(spark, tmp_path):
 
 
 def test_load_legacy_postings_only_layout(spark, tmp_path):
-    """Layouts written before the ``meta.json`` record open fine: a
-    pre-sidecar one (postings dir only), and one whose commit record is
-    the old one-row parquet ``meta/`` (such indexes persist under the
-    system temp dir across runs). load() derives the sidecars and the
-    record once and probes work — no migration step; the repair deletes
-    the parquet ``meta/`` its ``meta.json`` replaces."""
-    from pandemic_knowledge_spark.operators.search import _postings_fingerprint
-
+    """A layout of postings alone — what an index written before the
+    sidecars holds, and what a first save that crashed before its
+    sidecars leaves — opens fine: load() derives the sidecars and the
+    ``meta.json`` record once and probes work, no migration step."""
     docs = load(spark, SF_DIR, "documents")
     idx0 = SearchIndex.build(docs, "doc_id", "text", cache=False)
-    stats = idx0.stats.collect()[0]
-    for name in ("postings_only", "parquet_meta"):
-        path = str(tmp_path / name)
-        (
-            idx0.postings.repartition("bucket").sortWithinPartitions("term")
-            .write.mode("overwrite").partitionBy("bucket").parquet(f"{path}/postings")
-        )
-        if name == "parquet_meta":
-            fp = _postings_fingerprint(spark.read.parquet(f"{path}/postings"))
-            spark.range(1).select(
-                F.lit(stats["n_docs"]).cast("long").alias("n_docs"),
-                F.lit(stats["sum_dl"]).cast("long").alias("sum_dl"),
-                F.lit(fp).alias("fingerprint"),
-                F.lit(None).cast("string").alias("pos_fingerprint"),
-            ).coalesce(1).write.parquet(f"{path}/meta")
-        assert not os.path.exists(f"{path}/meta.json")
-        idx = SearchIndex.load(spark, path)
-        assert os.path.isfile(f"{path}/meta.json"), name
-        assert not os.path.exists(f"{path}/meta"), name  # the repair drops it
-        assert idx.vocab is not None and idx.doc_ids is not None
-        q = "virus outbreak"
-        assert idx.search(q, k=5).collect() == idx0.search(q, k=5).collect(), name
-
-
-def test_overwrite_save_drops_legacy_parquet_meta(spark, tmp_path):
-    """An overwrite save() over a layout that still has the old parquet
-    ``meta/`` record publishes ``meta.json`` and deletes ``meta/``, as the
-    load-time repair does; the saved index opens and probes like the build."""
-    docs, path = _saved(spark, tmp_path)
-    spark.range(1).select(F.lit(0).cast("long").alias("n_docs")).write.parquet(
-        f"{path}/meta"
+    path = str(tmp_path / "postings_only")
+    (
+        idx0.postings.repartition("bucket").sortWithinPartitions("term")
+        .write.mode("overwrite").partitionBy("bucket").parquet(f"{path}/postings")
     )
-    idx0 = SearchIndex.build(docs, "doc_id", "text", cache=False)
-    idx0.save(path)
-    assert os.path.isfile(f"{path}/meta.json")
-    assert not os.path.exists(f"{path}/meta")
+    idx = SearchIndex.load(spark, path)
+    assert sorted(e for e in os.listdir(path) if not e.startswith(".")) == [
+        "doc_ids", "meta.json", "postings", "vocab",
+    ]
     q = "virus outbreak"
-    assert (SearchIndex.load(spark, path).search(q, k=5).collect()
-            == idx0.search(q, k=5).collect())
+    assert idx.search(q, k=5).collect() == idx0.search(q, k=5).collect()
 
 
 def _next_job_id(spark) -> int:
@@ -326,7 +293,7 @@ _BOOL = dict(
 
 
 def _probes(idx):
-    """The probe doors whose bucket pruning depends on the layout's count."""
+    """Probe doors that prune by term bucket."""
     return (
         idx.search("virus outbreak spark", k=8).collect(),
         idx.fuzzy_search("a sparc strean", k=10).collect(),
@@ -338,9 +305,8 @@ def test_load_starts_no_job_and_append_writes_one_file_per_bucket_at_most(
     spark, tmp_path
 ):
     """A committed layout opens with no Spark job — the record carries
-    every artifact's schema and the bucket count, and N_TERM_BUCKETS dirs
-    list on the driver — and one append_save adds at most N_TERM_BUCKETS
-    postings files."""
+    every artifact's schema, and N_TERM_BUCKETS dirs list on the driver —
+    and one append_save adds at most N_TERM_BUCKETS postings files."""
     from pandemic_knowledge_spark.operators.search import N_TERM_BUCKETS
 
     docs = load(spark, SF_DIR, "documents")
@@ -357,7 +323,6 @@ def test_load_starts_no_job_and_append_writes_one_file_per_bucket_at_most(
     idx = SearchIndex.load(spark, path)
     assert _next_job_id(spark) == j0
     assert idx.stats_scalars == updated.stats_scalars
-    assert idx.n_buckets == N_TERM_BUCKETS
 
 
 def _half_saved(spark, tmp_path):
@@ -481,59 +446,62 @@ def test_append_save_failed_vocab_write_after_postings_commit_is_repaired(
     assert _crash_probes(repaired) == _crash_probes(full)
 
 
-def test_64_bucket_layout_opens_probes_and_appends(spark, tmp_path, monkeypatch):
-    """An index written with 64 term buckets, the count before
-    N_TERM_BUCKETS was 16, under the record such layouts carry (no schemas,
-    no bucket count): it opens as a 64-bucket layout (the listing rule),
-    its probes equal a rebuild, and after an append_save — which buckets
-    the batch the layout's way and records the count — its probes equal a
-    rebuild of old ∪ new."""
-    import json
+def test_layout_with_more_term_buckets_is_rejected_at_load(
+    spark, tmp_path, monkeypatch
+):
+    """An index written with 64 term buckets (the count before
+    N_TERM_BUCKETS was 16) has postings in ``bucket=K`` dirs with K ≥ 16,
+    which the probes' 16-bucket pruning would never read. load() refuses
+    it, asking for a rebuild — under its committed record and with no
+    record at all — and writes nothing: the repair does not run."""
+    import pytest
 
     from pandemic_knowledge_spark.operators import search as search_mod
-    from pandemic_knowledge_spark.streaming.sinks import publish_file
 
     docs = load(spark, SF_DIR, "documents")
-    old = docs.filter(F.col("doc_id") % 2 == 0)
     path = str(tmp_path / "idx64")
     monkeypatch.setattr(search_mod, "N_TERM_BUCKETS", 64)
-    SearchIndex.build(old, "doc_id", "text", cache=False).save(path)
+    SearchIndex.build(docs, "doc_id", "text", cache=False).save(path)
     monkeypatch.undo()
-    with open(f"{path}/meta.json", encoding="utf-8") as f:
-        meta = json.load(f)
-    publish_file(spark, f"{path}/meta.json", json.dumps(
-        {k: meta[k] for k in ("n_docs", "sum_dl", "fingerprint", "pos_fingerprint")}
-    ))
     assert max(
         int(d.split("=")[1]) for d in os.listdir(f"{path}/postings")
         if d.startswith("bucket=")
     ) >= 16
-    idx = SearchIndex.load(spark, path)
-    assert idx.n_buckets == 64
-    assert _probes(idx) == _probes(SearchIndex.build(old, "doc_id", "text", cache=False))
-    updated = SearchIndex.append_save(
-        spark, path, docs.filter(F.col("doc_id") % 2 == 1)
-    )
-    with open(f"{path}/meta.json", encoding="utf-8") as f:
-        assert json.load(f)["n_buckets"] == 64
-    want = _probes(SearchIndex.build(docs, "doc_id", "text", cache=False))
-    assert _probes(updated) == want
-    assert _probes(SearchIndex.load(spark, path)) == want
+    with pytest.raises(ValueError, match="rebuild"):
+        SearchIndex.load(spark, path)
+    os.remove(f"{path}/meta.json")
+    with pytest.raises(ValueError, match="rebuild"):
+        SearchIndex.load(spark, path)
+    assert not os.path.exists(f"{path}/meta.json")
 
 
 def test_layout_without_record_takes_bucket_count_from_listing(spark, tmp_path):
-    """A 16-bucket layout whose meta.json is gone: load() repairs it, the
-    listing rule gives 16 (no bucket dir at or above 16), the repaired
-    record says so, and probes equal a rebuild."""
+    """A 16-bucket layout without a usable record — its ``meta.json``
+    gone, or a record written before records carried schemas (stats and
+    fingerprints only) — passes the load-time bucket check on its
+    listing and is repaired: load() rebuilds the sidecars and publishes a
+    full record, and the probes equal a rebuild."""
     import json
 
-    docs, path = _saved(spark, tmp_path)
-    os.remove(f"{path}/meta.json")
-    idx = SearchIndex.load(spark, path)
-    assert idx.n_buckets == 16
-    with open(f"{path}/meta.json", encoding="utf-8") as f:
-        assert json.load(f)["n_buckets"] == 16
-    assert _probes(idx) == _probes(SearchIndex.build(docs, "doc_id", "text", cache=False))
+    from pandemic_knowledge_spark.streaming.sinks import publish_file
+
+    docs = load(spark, SF_DIR, "documents")
+    want = _probes(SearchIndex.build(docs, "doc_id", "text", cache=False))
+    for name in ("no_record", "no_schemas"):
+        _docs, path = _saved(spark, tmp_path, name)
+        if name == "no_record":
+            os.remove(f"{path}/meta.json")
+        else:
+            with open(f"{path}/meta.json", encoding="utf-8") as f:
+                meta = json.load(f)
+            publish_file(spark, f"{path}/meta.json", json.dumps({
+                k: meta[k]
+                for k in ("n_docs", "sum_dl", "fingerprint", "pos_fingerprint")
+            }))
+        idx = SearchIndex.load(spark, path)
+        with open(f"{path}/meta.json", encoding="utf-8") as f:
+            assert "schemas" in json.load(f), name
+        assert _probes(idx) == want, name
 
 
 def test_inmemory_build_caches_dictionary_for_interactive_probes(spark):
@@ -602,3 +570,42 @@ def test_positional_tier_roundtrip_and_consistency_guards(spark, tmp_path):
     plain = SearchIndex.build(docs, "doc_id", "text", cache=False)
     with pytest.raises(ValueError, match="positional"):
         plain.phrase_search(ph)
+
+
+def test_deleted_positions_disable_phrase_door_and_other_errors_propagate(
+    spark, tmp_path, monkeypatch
+):
+    """A committed positional layout whose ``positions/`` is gone opens
+    without a phrase door: load() gives ``positional is None``,
+    phrase_search raises its ValueError, and search still equals the
+    build. Only absence disables the tier: any other error reading
+    ``positions/`` propagates from load() instead of silently switching
+    phrase search off."""
+    import shutil
+
+    import pytest
+    from pyspark.sql.readwriter import DataFrameReader
+
+    docs = load(spark, SF_DIR, "documents")
+    path = str(tmp_path / "pos_idx")
+    built = SearchIndex.build(docs, "doc_id", "text", cache=False, positional=True)
+    built.save(path)
+    real = DataFrameReader.parquet
+
+    def parquet(self, *paths, **kwargs):
+        if paths[0].rstrip("/").endswith("/positions"):
+            raise RuntimeError("injected positions read failure")
+        return real(self, *paths, **kwargs)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    with pytest.raises(RuntimeError, match="injected positions"):
+        SearchIndex.load(spark, path)
+    monkeypatch.undo()
+
+    shutil.rmtree(f"{path}/positions")
+    idx = SearchIndex.load(spark, path)
+    assert idx.positional is None
+    with pytest.raises(ValueError, match="positional"):
+        idx.phrase_search("hash join")
+    q = "virus outbreak spark"
+    assert idx.search(q, k=8).collect() == built.search(q, k=8).collect()
