@@ -38,6 +38,16 @@ def tokenize(col: Column | str) -> Column:
     return F.regexp_extract_all(F.lower(c), F.lit(TOKEN_RE), 0)
 
 
+def sql_ident(name: str) -> str:
+    """A column name as a backtick-quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def spark_sql_tokenize(col_sql: str) -> str:
+    """:func:`tokenize` as Spark SQL text (the same expression tree)."""
+    return f"regexp_extract_all(lower({col_sql}), '{TOKEN_RE}', 0)"
+
+
 def query_terms(query: str) -> list[str]:
     """Tokenize a QUERY STRING with the same rule as the corpus tokenizer
     (TOKEN_RE) — ES analyzes queries with the index analyzer; a whitespace
@@ -67,6 +77,11 @@ def md5_int_expr(col_sql: str) -> str:
 def md5_int(col: Column) -> Column:
     """Spark Column version of :func:`md5_int_expr` (same value)."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
+def spark_sql_md5_int(col_sql: str) -> str:
+    """:func:`md5_int` as Spark SQL text (the same expression tree)."""
+    return f"CAST(conv(substring(md5({col_sql}), 1, 15), 16, 10) AS BIGINT)"
 
 
 def minhash_perm_params(n_perm: int) -> list[tuple[int, int]]:

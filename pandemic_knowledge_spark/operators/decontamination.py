@@ -32,7 +32,7 @@ def _distinct_shingle_hash_rows(
     """(doc_id, h): one row per DISTINCT k-shingle of each doc."""
     # Tokens as a NAMED column first: inlined, the k+1 references inside
     # shingles() would paste the tokenizer regexp into the Generate that
-    # many times per row (same fix as dedup._shingle_hash_rows; see
+    # many times per row (same fix as dedup._shingle_rows_sql; see
     # functions.pinning module docs).
     toks = F.col("__toks")
     return docs.select(

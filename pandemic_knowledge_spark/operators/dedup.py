@@ -44,6 +44,9 @@ from pandemic_knowledge_spark.functions.text import (
     HASH_MOD,
     md5_int,
     minhash_perm_params,
+    spark_sql_md5_int,
+    spark_sql_tokenize,
+    sql_ident,
     tokenize,
 )
 
@@ -52,19 +55,68 @@ N_BANDS = 4
 ROWS_PER_BAND = N_PERM // N_BANDS
 SIMHASH_BITS = 16
 
+# The MinHash signature and the LSH banding, as Spark SQL text built once
+# from the constants above. Every plan that signs or bands documents — the
+# batch pair operators, the ingest probe, the stream form — takes its text
+# from these fragments, so the definitions cannot fork. The plans are built
+# from SQL text rather than Column objects because each Column call is a
+# py4j round trip: the ingest micro-batch's signature and probe plans took
+# about 3,700 of them per batch, against 16 for one spark.sql statement
+# per step (the optimized plans are the same).
+_PERM_HASH_SQL = tuple(
+    f"({a} * h + {b}) % {HASH_MOD}" for a, b in minhash_perm_params(N_PERM)
+)
+"""Permutation i of a shingle hash ``h``: (a_i * h + b_i) mod P."""
+
+_PERM_MINS_SQL = ", ".join(
+    f"min({p}) AS mh{i}" for i, p in enumerate(_PERM_HASH_SQL)
+)
+"""The signature mh0..mh15 as aggregates over shingle-hash rows ``h``."""
+
+_SET_PERM_MINS_SQL = ", ".join(
+    f"array_min(transform(hs, h -> {p})) AS mh{i}"
+    for i, p in enumerate(_PERM_HASH_SQL)
+)
+"""The same signature, row-local, over a shingle-hash array ``hs``."""
+
+_BAND_KEYS_SQL = "array({})".format(", ".join(
+    f"struct({b} AS band, md5(concat_ws('-', transform(slice(array("
+    + ", ".join(f"mh{i}" for i in range(N_PERM))
+    + f"), {b * ROWS_PER_BAND + 1}, {ROWS_PER_BAND}), v -> CAST(v AS STRING))))"
+    " AS bkey)"
+    for b in range(N_BANDS)
+))
+"""LSH banding of mh0..mh15: one (band, md5-of-band-rows) struct per band."""
+
+
+def _double_sql(x: float) -> str:
+    """A Python float as a Spark SQL DOUBLE literal (a bare ``0.5`` is
+    DECIMAL); repr round-trips the exact bits ``F.lit`` would carry."""
+    return f"{float(x)!r}D"
+
 
 def _kgram_concat(toks: Column, k: int) -> Column:
     """Space-joined k-grams via k shifted O(1) slices zipped element-wise —
-    the ONE gram-assembly definition (shingles, _shingle_hash_rows,
-    kgram_hashes_ordered all build from it). For k=2 this reduces to the
-    original two-slice zip_with, so existing hashes are bit-identical; for
-    any k it avoids the per-position F.slice-inside-a-lambda form that
+    the ONE gram-assembly definition (shingles, kgram_hashes_ordered and,
+    as SQL text, :func:`_kgram_sql` build from it). For k=2 this reduces to
+    the original two-slice zip_with, so existing hashes are bit-identical;
+    for any k it avoids the per-position F.slice-inside-a-lambda form that
     re-evaluates O(n) work per gram (O(n²) per doc, ~5× measured)."""
     n = F.size(toks)
     parts = [F.slice(toks, i + 1, n - k + 1) for i in range(k)]
     return reduce(
         lambda a, b: F.zip_with(a, b, lambda x, y: F.concat(x, F.lit(" "), y)),
         parts,
+    )
+
+
+def _kgram_sql(arr: str, k: int) -> str:
+    """:func:`_kgram_concat` as Spark SQL text over the array column ``arr``
+    (the same expression tree)."""
+    n = f"size({arr}) - {k} + 1"
+    parts = [f"slice({arr}, {i + 1}, {n})" for i in range(k)]
+    return reduce(
+        lambda a, b: f"zip_with({a}, {b}, (x, y) -> concat(x, ' ', y))", parts
     )
 
 
@@ -81,43 +133,6 @@ def shingles(toks: Column, k: int = 2) -> Column:
     )
 
 
-def shingle_hashes(toks: Column, k: int = 2) -> Column:
-    """Shingles → int64 hashes reduced mod P (so a*h+b stays in int64)."""
-    return F.transform(shingles(toks, k), lambda s: md5_int(s) % HASH_MOD)
-
-
-def minhash_signature(hashes: Column, n_perm: int = N_PERM) -> Column:
-    """MinHash signature: per permutation i, min((a_i*h + b_i) mod P)."""
-    params = minhash_perm_params(n_perm)
-
-    def perm_min(a: int, b: int) -> Column:
-        return F.array_min(
-            F.transform(hashes, lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(HASH_MOD))
-        )
-
-    return F.array(*[perm_min(a, b) for (a, b) in params])
-
-
-def band_keys(sig: Column, n_bands: int = N_BANDS, rows: int = ROWS_PER_BAND) -> Column:
-    """LSH banding: array of (band_idx, md5-of-band-rows) structs."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "-",
-                        F.transform(
-                            F.slice(sig, b * rows + 1, rows), lambda x: x.cast("string")
-                        ),
-                    )
-                ).alias("bkey"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-
-
 def exact_dedup(df: DataFrame, fp: Column, id_col: str) -> DataFrame:
     """Exact dedup: group on content fingerprint, keep min id as canonical.
 
@@ -129,17 +144,8 @@ def exact_dedup(df: DataFrame, fp: Column, id_col: str) -> DataFrame:
     )
 
 
-def doc_shingle_sets(docs: DataFrame, id_col: str, text_col: str, k: int = 2) -> DataFrame:
-    toks = tokenize(text_col)
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        shingles(toks, k).alias("sh"),
-        shingle_hashes(toks, k).alias("hs"),
-    ).filter(F.size("sh") > 0)
-
-
 def minhash_signature_agg(
-    docs: DataFrame, id_col: str, text_col: str, k: int = 2, n_perm: int = N_PERM
+    docs: DataFrame, id_col: str, text_col: str, k: int = 2
 ) -> DataFrame:
     """MinHash signatures via explode → hash-aggregate (the scale path).
 
@@ -149,17 +155,22 @@ def minhash_signature_agg(
     the 16 permutation minima as a groupBy aggregation. HashAggregateExec
     map-side-combines the minima, so the shuffle carries one 16-long row per
     doc — this is the shape that survives 100 TB, and it's ~10× faster than
-    the nested-lambda version even locally.
+    the nested-lambda version even locally. One SQL statement
+    (:data:`_PERM_MINS_SQL` over :func:`_shingle_rows_sql`).
     """
-    ex = _shingle_hash_rows(docs, id_col, text_col, k)
-    params = minhash_perm_params(n_perm)
-    return ex.groupBy("doc_id").agg(*_perm_min_aggs(params))
+    return docs.sparkSession.sql(
+        f"SELECT doc_id, {_PERM_MINS_SQL} "
+        f"FROM ({_shingle_rows_sql(id_col, text_col, k)}) GROUP BY doc_id",
+        docs=docs,
+    )
 
 
-def _shingle_hash_rows(
-    docs: DataFrame, id_col: str, text_col: str, k: int = 2
-) -> DataFrame:
-    """(doc_id, h) — one row per shingle occurrence, hash as a NAMED COLUMN.
+def _shingle_rows_sql(
+    id_col: str, text_col: str, k: int = 2, where: str = ""
+) -> str:
+    """SQL text of (doc_id, h) over the frame ``{docs}``: one row per
+    shingle occurrence, hash as a NAMED COLUMN. ``where`` is an optional
+    scan-side `` WHERE ...`` clause.
 
     Shingles are assembled array-side — k shifted copies of the token array
     (one O(1)-ish slice each) zipped element-wise with concat — then exploded
@@ -173,28 +184,32 @@ def _shingle_hash_rows(
     Duplicate shingles are NOT removed here: the downstream consumers are
     min-aggregates and collect_set, both duplicate-insensitive, so skipping
     array_distinct saves work without changing any result.
+
+    Tokens are a NAMED column at their own SELECT level: written inline,
+    the k+1 references (size + k shifted slices) would be pasted verbatim
+    into the Generate expression and the regexp would run that many times
+    per row (measured 5 evaluations/row on this scan, r13 pass). As an
+    attribute it evaluates once — CollapseProject declines to inline
+    multi-use non-cheap aliases (see functions.pinning module docs).
     """
-    # Tokens as a NAMED column first: written inline, the Column object's
-    # k+1 references (size + k shifted slices) are pasted verbatim into the
-    # Generate expression and the regexp runs that many times per row
-    # (measured 5 evaluations/row on this scan, r13 pass). As an attribute
-    # it evaluates once — CollapseProject declines to inline multi-use
-    # non-cheap aliases (see functions.pinning module docs).
-    toks = F.col("__toks")
-    rows = docs.select(
-        F.col(id_col).alias("doc_id"), tokenize(text_col).alias("__toks")
-    ).select(
-        "doc_id",
-        F.explode(F.when(F.size(toks) >= k, _kgram_concat(toks, k))).alias("s"),
+    return (
+        f"SELECT doc_id, {spark_sql_md5_int('s')} % {HASH_MOD} AS h FROM ("
+        f"SELECT doc_id, explode(CASE WHEN size(__toks) >= {k} THEN "
+        f"{_kgram_sql('__toks', k)} END) AS s FROM ("
+        f"SELECT {sql_ident(id_col)} AS doc_id, "
+        f"{spark_sql_tokenize(sql_ident(text_col))} AS __toks "
+        f"FROM {{docs}}{where}))"
     )
-    return rows.select("doc_id", (md5_int(F.col("s")) % HASH_MOD).alias("h"))
 
 
-def _perm_min_aggs(params) -> list[Column]:
-    return [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(HASH_MOD)).alias(f"mh{i}")
-        for i, (a, b) in enumerate(params)
-    ]
+def _minhash_base_sql(
+    id_col: str, text_col: str, k: int = 2, where: str = ""
+) -> str:
+    """SQL text of :func:`minhash_base` over the frame ``{docs}``."""
+    return (
+        f"SELECT doc_id, collect_set(h) AS hs, {_PERM_MINS_SQL} "
+        f"FROM ({_shingle_rows_sql(id_col, text_col, k, where)}) GROUP BY doc_id"
+    )
 
 
 def minhash_base(
@@ -204,21 +219,32 @@ def minhash_base(
     ONE scan and ONE groupBy (collect_set and the 16 permutation minima
     aggregate together). This is both the in-flight shape of the pairwise
     operators and the persisted schema of an incremental signature store —
-    plain columns, so it round-trips through parquet unchanged."""
-    ex = _shingle_hash_rows(docs, id_col, text_col, k)
-    return ex.groupBy("doc_id").agg(
-        F.collect_set("h").alias("hs"),
-        *_perm_min_aggs(minhash_perm_params(N_PERM)),
+    plain columns, so it round-trips through parquet unchanged.
+
+    One SQL statement (tokenize, the k-gram zip_with, the md5 hash, then
+    collect_set and the 16 minima): the ingest stream builds it every
+    micro-batch, and as Column calls it took about 1,440 py4j round trips
+    (0.26-0.36 s) to build; as one statement it takes 7."""
+    return docs.sparkSession.sql(
+        _minhash_base_sql(id_col, text_col, k), docs=docs
+    )
+
+
+def _band_rows_sql(src: str, carry: tuple = ()) -> str:
+    """SQL text of one row per LSH band bucket of the signature frame
+    ``src`` (a ``{frame}`` placeholder or a parenthesized subquery with
+    doc_id, mh0..mh15 and ``carry``): (doc_id, *carry, band, bkey)."""
+    c = "".join(f", {name}" for name in carry)
+    return (
+        f"SELECT doc_id{c}, bk.band, bk.bkey FROM ("
+        f"SELECT doc_id{c}, explode({_BAND_KEYS_SQL}) AS bk FROM {src})"
     )
 
 
 def _band_rows(base: DataFrame, *carry: str) -> DataFrame:
     """base → (doc_id, *carry, band, bkey): one row per LSH band bucket,
     each carrying its doc's ``carry`` columns."""
-    sig = F.array(*[F.col(f"mh{i}") for i in range(N_PERM)])
-    return base.select(
-        "doc_id", *carry, F.explode(band_keys(sig)).alias("bk")
-    ).select("doc_id", *carry, "bk.band", "bk.bkey")
+    return base.sparkSession.sql(_band_rows_sql("{base}", carry), base=base)
 
 
 def band_rows_rowlocal(
@@ -229,33 +255,33 @@ def band_rows_rowlocal(
 
     bkeys are bit-identical to the agg form (`_band_rows` over
     `minhash_base`): the signature is per-permutation minima over the
-    shingle-hash set, minima ignore hash multiplicity, and `band_keys`
-    sees only the signature — pinned by tests/test_stream_neardup.py.
-    Docs with no shingles (< k tokens) are dropped, matching
-    `_shingle_hash_rows`'s explode; NULL-id docs are dropped scan-side —
-    an id-less doc can't be registered in the bucket store, and a NaN id
-    would poison the stateful kernel's int64 running min."""
-    # hs behind a pin barrier: the size(hs) > 0 predicate would otherwise
-    # push below the projection and re-run the whole tokenize+shingle+md5
-    # chain per row. (r13 history: the STRUCT-wrapped pin measured slower
-    # than the duplicated chain — 1.29→1.39 s — and was reverted; the
-    # bare-explode single-column pin added later in the round measured
-    # ~17% FASTER than the inline form on this subplan, 2.70→2.23 s noop
-    # median of 6, every round consistent.)
-    from pandemic_knowledge_spark.functions.pinning import pin
+    doc's shingle hashes (:data:`_SET_PERM_MINS_SQL`, the same permutation
+    text as the aggregate), minima ignore hash multiplicity, and the band
+    keys come from the one banding text (:func:`_band_rows_sql`) — pinned
+    by tests/test_stream_neardup.py. Docs with no shingles (< k tokens)
+    are dropped, matching `_shingle_rows_sql`'s explode; NULL-id docs are
+    dropped scan-side — an id-less doc can't be registered in the bucket
+    store, and a NaN id would poison the stateful kernel's int64 running
+    min.
 
-    with_hs = pin(
-        docs.where(F.col(id_col).isNotNull()).select(
-            F.col(id_col).alias("doc_id"), F.col(text_col)
-        ),
-        hs=shingle_hashes(tokenize(text_col), k),
-    ).where(F.size("hs") > 0)
-    return with_hs.select(
-        "doc_id",
-        F.explode(band_keys(minhash_signature(F.col("hs")))).alias("bk"),
-    ).select(
-        "doc_id", F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey")
+    Tokens sit behind a pin barrier (``explode(array(...))``,
+    functions.pinning): the size(__toks) >= k predicate would otherwise
+    push below the projection and re-run the tokenizer per row. The hash
+    array and the 16 minima are each a SELECT level of their own, so each
+    evaluates once per row."""
+    ident = sql_ident(id_col)
+    toks = (
+        f"SELECT {ident} AS doc_id, "
+        f"explode(array({spark_sql_tokenize(sql_ident(text_col))})) AS __toks "
+        f"FROM {{docs}} WHERE {ident} IS NOT NULL"
     )
+    hs = (
+        f"SELECT doc_id, transform({_kgram_sql('__toks', k)}, "
+        f"s -> {spark_sql_md5_int('s')} % {HASH_MOD}) AS hs "
+        f"FROM ({toks}) WHERE size(__toks) >= {k}"
+    )
+    sig = f"(SELECT doc_id, {_SET_PERM_MINS_SQL} FROM ({hs}))"
+    return docs.sparkSession.sql(_band_rows_sql(sig), docs=docs)
 
 
 def near_dup_mark(
@@ -278,11 +304,13 @@ def near_dup_mark(
     rollup. Nothing is pairwise; hot buckets cost a min, not C(n,2).
     NULL-id docs are dropped (same contract as the streaming form: no id,
     no bucket registration)."""
-    docs = docs.where(F.col(id_col).isNotNull())
-    bands = _band_rows(minhash_base(docs, id_col, text_col, k))
-    w = Window.partitionBy("band", "bkey")
-    marked = bands.select(
-        "doc_id", F.min("doc_id").over(w).alias("band_ref")
+    base = _minhash_base_sql(
+        id_col, text_col, k, where=f" WHERE {sql_ident(id_col)} IS NOT NULL"
+    )
+    marked = docs.sparkSession.sql(
+        "SELECT doc_id, min(doc_id) OVER (PARTITION BY band, bkey) AS band_ref "
+        f"FROM ({_band_rows_sql(f'({base})')})",
+        docs=docs,
     )
     return near_dup_verdicts(marked)
 
@@ -304,27 +332,36 @@ def near_dup_verdicts(marks: DataFrame) -> DataFrame:
     )
 
 
-def _jaccard(hs_a: Column, hs_b: Column) -> Column:
+def _jaccard_sql(hs_a: str, hs_b: str) -> str:
     """Exact Jaccard of two distinct shingle-hash sets, rounded to 6 places."""
-    return F.round(
-        F.size(F.array_intersect(hs_a, hs_b)).cast("double")
-        / F.size(F.array_union(hs_a, hs_b)),
-        6,
+    return (
+        f"round(CAST(size(array_intersect({hs_a}, {hs_b})) AS DOUBLE) / "
+        f"size(array_union({hs_a}, {hs_b})), 6)"
     )
 
 
-def _verify_pairs(cand: DataFrame, base_a: DataFrame, base_b: DataFrame,
-                  threshold: float) -> DataFrame:
-    """Exact-Jaccard verification of candidate (doc_a, doc_b) pairs against
-    the two sides' distinct shingle-hash sets."""
-    sa = base_a.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a"))
-    sb = base_b.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b"))
+def _cand_sql(sigs: str) -> str:
+    """SQL text of the within-set candidate pairs (doc_a, doc_b), doc_a <
+    doc_b, distinct: the band-bucket equi-self-join of the signature frame
+    ``sigs`` (a ``{frame}`` placeholder or a parenthesized subquery)."""
+    bands = _band_rows_sql(sigs)
     return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("jaccard", _jaccard(F.col("hs_a"), F.col("hs_b")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
+        "SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b "
+        f"FROM ({bands}) a JOIN ({bands}) b "
+        "ON a.band = b.band AND a.bkey = b.bkey WHERE a.doc_id < b.doc_id"
+    )
+
+
+def _verify_sql(cand: str, sets: str, threshold: float) -> str:
+    """SQL text of the exact-Jaccard verification of candidate (doc_a,
+    doc_b) pairs ``cand`` against the (doc_id, hs) hash sets ``sets``:
+    (doc_a, doc_b, jaccard) at or above ``threshold``."""
+    return (
+        "SELECT doc_a, doc_b, jaccard FROM ("
+        f"SELECT *, {_jaccard_sql('hs_a', 'hs_b')} AS jaccard FROM {cand} "
+        f"JOIN (SELECT doc_id AS doc_a, hs AS hs_a FROM {sets}) USING (doc_a) "
+        f"JOIN (SELECT doc_id AS doc_b, hs AS hs_b FROM {sets}) USING (doc_b)) "
+        f"WHERE jaccard >= {_double_sql(threshold)}"
     )
 
 
@@ -381,19 +418,13 @@ def minhash_lsh_pairs(
 
 def pairs_from_base(base: DataFrame, threshold: float) -> DataFrame:
     """Within-set near-dup pairs from a prepared signature BASE (sig +
-    hash sets): band-bucket equi-self-join → verified Jaccard. The ONE
-    candidate-construction definition — the batch form above and the
-    incremental streaming ingest both call it, so a banding or
-    verification change cannot fork the two paths."""
-    exploded = _band_rows(base)
-    a, b = exploded.alias("a"), exploded.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bkey") == F.col("b.bkey")))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
+    hash sets): band-bucket equi-self-join → verified Jaccard, one SQL
+    statement. The ONE candidate-construction definition
+    (:func:`_cand_sql`, :func:`_verify_sql`) — the batch forms share it,
+    so a banding or verification change cannot fork them."""
+    return base.sparkSession.sql(
+        _verify_sql(f"({_cand_sql('{base}')})", "{base}", threshold), base=base
     )
-    return _verify_pairs(cand, base, base, threshold)
 
 
 def minhash_lsh_pairs_pruned(
@@ -427,32 +458,22 @@ def minhash_lsh_pairs_pruned(
     # same concurrent-stage race as the single-pass base — the band
     # self-join reads sigs through two stages of one job; the wave-8 A/B
     # on the single-pass form measured lazy losing, same shape here).
+    spark = docs.sparkSession
     sigs = minhash_signature_agg(docs, id_col, text_col, k).localCheckpoint(
         eager=True
     )
-    exploded = _band_rows(sigs)
-    a, b = exploded.alias("a"), exploded.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bkey") == F.col("b.bkey")))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-        # eager (r14): consumed by cand_ids' two union legs and the
-        # verify join — concurrent stages of one job (wave-8 A/B shape)
-        .localCheckpoint(eager=True)
-    )
-    cand_ids = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
+    # eager (r14): consumed by the candidate ids' two union legs and the
+    # verify join — concurrent stages of one job (wave-8 A/B shape)
+    cand = spark.sql(_cand_sql("{sigs}"), sigs=sigs).localCheckpoint(eager=True)
     hs = (
-        _shingle_hash_rows(docs, id_col, text_col, k)
-        .join(cand_ids, "doc_id", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.collect_set("h").alias("hs"))
+        f"(SELECT doc_id, collect_set(h) AS hs FROM ("
+        f"{_shingle_rows_sql(id_col, text_col, k)}) "
+        "LEFT SEMI JOIN (SELECT DISTINCT doc_id FROM ("
+        "SELECT doc_a AS doc_id FROM {cand} "
+        "UNION ALL SELECT doc_b AS doc_id FROM {cand})) USING (doc_id) "
+        "GROUP BY doc_id)"
     )
-    return _verify_pairs(cand, hs, hs, threshold)
+    return spark.sql(_verify_sql("{cand}", hs, threshold), docs=docs, cand=cand)
 
 
 PRUNED_THRESHOLD_BYTES = 1 << 30  # 1 GiB of corpus ≈ the page-cache frontier
@@ -492,8 +513,9 @@ def minhash_probe_pairs(
     """Near-dup pairs of a signature batch against itself AND a persisted
     signature store, in one band-bucket join — the incremental-ingest
     primitive: new docs LSH-probe the store instead of re-pairing the whole
-    corpus. Both frames have the ``minhash_base`` schema; ``store=None``
-    (no store yet) probes the batch alone.
+    corpus. Both frames have the ``minhash_base`` schema and belong to one
+    SparkSession (the statement reads them as temporary views of it);
+    ``store=None`` (no store yet) probes the batch alone.
 
     Output: (doc_a, doc_b, hist), distinct. doc_a is always a batch doc;
     ``hist`` is true when doc_b is a stored doc, and within-batch rows keep
@@ -501,30 +523,28 @@ def minhash_probe_pairs(
     batch ∪ store on (band, bkey); each row carries its hash set through
     the explode, so the exact-Jaccard check runs on the joined rows with
     no second join back to either side. At scale, store the band rows
-    partitioned by (band, bkey) so the probe prunes to matching buckets."""
+    partitioned by (band, bkey) so the probe prunes to matching buckets.
 
-    def bands(frame: DataFrame, hist: bool) -> DataFrame:
-        return _band_rows(frame.withColumn("hist", F.lit(hist)), "hs", "hist")
+    One SQL statement (banding, ``hist``, the union with the store, the
+    equi-join, the Jaccard filter and the distinct): the ingest stream
+    builds it every micro-batch, and as Column calls it took 1,600-2,800
+    py4j round trips (0.6-0.8 s) to build; as one statement it takes 7-9."""
 
-    a = bands(base, False).alias("a")
-    b = bands(base, False)
+    def bands(src: str, hist: str) -> str:
+        return _band_rows_sql(f"(SELECT *, {hist} AS hist FROM {src})", ("hs", "hist"))
+
+    probe = bands("{base}", "false")
+    frames = {"base": base}
+    pool = probe
     if store is not None:
-        b = b.unionByName(bands(store, True))
-    b = b.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("b.hist") | (F.col("a.doc_id") < F.col("b.doc_id"))),
-        )
-        .filter(_jaccard(F.col("a.hs"), F.col("b.hs")) >= threshold)
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("b.hist").alias("hist"),
-        )
-        .distinct()
+        pool = f"{probe} UNION ALL {bands('{store}', 'true')}"
+        frames["store"] = store
+    return base.sparkSession.sql(
+        "SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b, b.hist AS hist "
+        f"FROM ({probe}) a JOIN ({pool}) b ON a.band = b.band "
+        "AND a.bkey = b.bkey AND (b.hist OR a.doc_id < b.doc_id) "
+        f"WHERE {_jaccard_sql('a.hs', 'b.hs')} >= {_double_sql(threshold)}",
+        **frames,
     )
 
 
@@ -533,7 +553,7 @@ def kgram_hashes_ordered(toks: Column, k: int = 3) -> Column:
     winnowing selects from. Order matters, so no array_distinct here.
 
     Gram assembly is k shifted O(1) slices of the token array zipped
-    element-wise (the `_shingle_hash_rows` trick) — NOT a per-position
+    element-wise (the `_shingle_rows_sql` trick) — NOT a per-position
     F.slice inside a lambda, which would re-evaluate the (inlined) token
     expression once per gram and turn the scan O(n²)-per-doc. Pass a
     MATERIALIZED tokens column, not an inline tokenize() expression."""

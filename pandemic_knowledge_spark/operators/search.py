@@ -23,23 +23,37 @@ import json
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from pandemic_knowledge_spark.functions.text import query_terms, sql_tokenize, tokenize
+from pandemic_knowledge_spark.functions.text import (
+    query_terms,
+    spark_sql_tokenize,
+    sql_ident,
+    sql_tokenize,
+    tokenize,
+)
 
 BM25_K1 = 1.2
 BM25_B = 0.75
+
+
+def _doc_terms_sql(text_col: str) -> str:
+    """SQL text of :func:`_doc_terms` over the frame ``{docs}``."""
+    text = sql_ident(text_col)
+    return (
+        "SELECT explode(__terms) AS term FROM ("
+        f"SELECT *, explode(array(array_distinct({spark_sql_tokenize(text)}))) "
+        f"AS __terms FROM (SELECT {text} FROM {{docs}}))"
+    )
 
 
 def _doc_terms(docs, text_col: str) -> DataFrame:
     """One ``term`` row per distinct term of each doc; only the text column
     leaves the scan. The distinct-terms array is pinned (r13): exploded
     inline, the inferred size > 0 generator filter re-ran the regexp +
-    array_distinct per row (functions.pinning module docs)."""
-    from pandemic_knowledge_spark.functions.pinning import pin
-
-    return pin(
-        docs.select(F.col(text_col)),
-        __terms=F.array_distinct(tokenize(text_col)),
-    ).select(F.explode("__terms").alias("term"))
+    array_distinct per row (functions.pinning module docs). One SQL
+    statement (:func:`_doc_terms_sql`; the index append builds it every
+    micro-batch, and SQL text costs a few py4j round trips where Column
+    calls cost about a hundred)."""
+    return docs.sparkSession.sql(_doc_terms_sql(text_col), docs=docs)
 
 
 def _vocab_df(docs, id_col: str, text_col: str) -> DataFrame:
@@ -101,6 +115,29 @@ def _selected_tf(docs, id_col: str, text_col: str, df_sel: DataFrame,
     return out
 
 
+def _idf_sql(n_docs: str) -> str:
+    """BM25 idf of a term with document frequency ``df``, as Spark SQL
+    text; ``n_docs`` is a column or an integer literal. Float literals carry
+    the ``D`` suffix (a bare ``0.5`` is DECIMAL) and the log is ``ln`` (SQL
+    ``log(x)`` is a two-argument log with base e), so the tree and every
+    score bit equal those of ``F.log(F.lit(1.0) + ...)``."""
+    return f"ln(1.0D + ({n_docs} - df + 0.5D) / (df + 0.5D))"
+
+
+def _term_score_sql(idf: str, avgdl: str) -> str:
+    """BM25 per-(term, doc) score over columns ``tf`` and ``dl``, as Spark
+    SQL text — THE one term-score formula, ``idf * (tf * (k1 + 1)) / (tf +
+    k1 * (1 - b + b * dl / avgdl))``; ``idf`` and ``avgdl`` are SQL
+    expressions (parenthesize a compound ``avgdl``). The constants are
+    folded and the operands ordered as Column arithmetic builds that
+    formula (a reflected ``*`` or ``+`` puts the column first), so the tree
+    and every score bit equal the Column form's."""
+    return (
+        f"{idf} * (tf * {BM25_K1 + 1!r}D) / (tf + (dl * {BM25_B!r}D / {avgdl}"
+        f" + {1 - BM25_B!r}D) * {BM25_K1!r}D)"
+    )
+
+
 def _attach_bm25_scores(joined: DataFrame) -> DataFrame:
     """Add avgdl/idf/term_score to a frame carrying (tf, dl, df, n_docs,
     sum_dl) — the one BM25 expression shape every scorer shares."""
@@ -108,17 +145,8 @@ def _attach_bm25_scores(joined: DataFrame) -> DataFrame:
         joined.withColumn(
             "avgdl", F.col("sum_dl").cast("double") / F.col("n_docs")
         )
-        .withColumn(
-            "idf",
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-            ),
-        )
-        .withColumn(
-            "term_score",
-            _term_score(F.col("idf"), F.col("tf"), F.col("dl"), F.col("avgdl")),
-        )
+        .withColumn("idf", F.expr(_idf_sql("n_docs")))
+        .withColumn("term_score", F.expr(_term_score_sql("idf", "avgdl")))
     )
 
 
@@ -1911,18 +1939,42 @@ def term_bucket_py(term: str) -> int:
     return zlib.crc32(term.encode("utf-8")) % N_TERM_BUCKETS
 
 
+def _bucket_sql() -> str:
+    """The term-bucket expression every postings builder partitions by, as
+    SQL text (:data:`N_TERM_BUCKETS` is read when the plan is built)."""
+    return f"CAST(pmod(crc32(term), {N_TERM_BUCKETS}) AS INT)"
+
+
 def _bucket_col():
-    """The Spark term-bucket expression every postings builder partitions by."""
-    return F.pmod(F.crc32(F.col("term")), F.lit(N_TERM_BUCKETS)).cast("int")
+    """:func:`_bucket_sql` as a Column."""
+    return F.expr(_bucket_sql())
+
+
+def _term_buckets(terms) -> tuple[list, list]:
+    """(sorted distinct ``terms``, their sorted buckets) — the one place a
+    probe maps terms to buckets."""
+    terms = sorted(set(terms))
+    return terms, sorted({term_bucket_py(t) for t in terms})
 
 
 def _term_rows(frame: DataFrame, terms) -> DataFrame:
     """``frame``'s posting rows for ``terms``, pruned to their buckets (a
-    partition filter on a persisted layout) — the one place a probe maps
-    terms to buckets."""
-    terms = sorted(set(terms))
-    buckets = sorted({term_bucket_py(t) for t in terms})
+    partition filter on a persisted layout)."""
+    terms, buckets = _term_buckets(terms)
     return frame.filter(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
+
+
+def _query_term_rows_sql(query: str) -> str:
+    """:func:`_term_rows`'s predicate for the terms of ``query``, as SQL
+    text. The terms are inlined as literals only because
+    :func:`query_terms` yields TOKEN_RE matches (``[a-z0-9]+``), which
+    need no quoting; terms from anywhere else go through
+    :func:`_term_rows`. A query with no terms matches nothing."""
+    terms, buckets = _term_buckets(query_terms(query))
+    if not terms:
+        return "false"
+    quoted = ", ".join(f"'{t}'" for t in terms)
+    return f"bucket IN ({', '.join(map(str, buckets))}) AND term IN ({quoted})"
 
 
 def build_postings(
@@ -1956,20 +2008,25 @@ def build_postings(
     combine), ~1.3× the aggregated posting bytes — still under the 2× of
     shuffling the aggregate twice. Tokens pinned (r13): the postings
     explode's inferred size > 0 filter re-ran the tokenizer regexp per
-    row through pushdown re-inlining (functions.pinning)."""
-    from pandemic_knowledge_spark.functions.pinning import pin
+    row through pushdown re-inlining (functions.pinning).
 
-    base = pin(
-        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col)),
-        toks=tokenize(text_col),
-    ).withColumn("dl", F.size("toks"))
-    postings = (
-        base.select("doc_id", "dl", F.explode("toks").alias("term"))
-        .withColumn("bucket", _bucket_col())
-        .repartition("bucket")
-        .groupBy("doc_id", "dl", "term", "bucket")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .select("doc_id", "dl", "term", "tf", "bucket")
+    Built from two SQL statements (the pinned tokens, then the postings
+    aggregate): the index append builds this every micro-batch, and as
+    Column calls it took about 265 py4j round trips."""
+    text = sql_ident(text_col)
+    spark = docs.sparkSession
+    base = spark.sql(
+        "SELECT *, size(toks) AS dl FROM ("
+        f"SELECT *, explode(array({spark_sql_tokenize(text)})) AS toks FROM ("
+        f"SELECT {sql_ident(id_col)} AS doc_id, {text} FROM {{docs}}))",
+        docs=docs,
+    )
+    postings = spark.sql(
+        "SELECT doc_id, dl, term, count(1) AS tf, bucket FROM ("
+        f"SELECT doc_id, dl, term, {_bucket_sql()} AS bucket FROM ("
+        "SELECT doc_id, dl, explode(toks) AS term FROM {base}) "
+        "DISTRIBUTE BY bucket) GROUP BY doc_id, dl, term, bucket",
+        base=base,
     )
     return postings, base.select("doc_id", "dl")
 
@@ -1992,6 +2049,17 @@ def _bucket_laid(postings: DataFrame) -> DataFrame:
     return postings.repartition("bucket").sortWithinPartitions("bucket", "term")
 
 
+def _tlen_laid_sql(term_rows: str) -> str:
+    """SQL text of :func:`_tlen_laid` over ``term_rows`` (a ``{frame}``
+    placeholder or a parenthesized subquery)."""
+    return (
+        "SELECT term, df, tlen FROM ("
+        "SELECT tlen, term, CAST(sum(df) AS BIGINT) AS df FROM ("
+        f"SELECT *, length(term) AS tlen FROM {term_rows} DISTRIBUTE BY tlen) "
+        "GROUP BY tlen, term SORT BY tlen, term)"
+    )
+
+
 def _tlen_laid(term_rows: DataFrame) -> DataFrame:
     """The persisted ``vocab`` layout from (term, df) rows, where a term
     may sit on several rows (an append's old dictionary plus one row per
@@ -2001,15 +2069,21 @@ def _tlen_laid(term_rows: DataFrame) -> DataFrame:
     (tlen, term) grouping key, so the sum and the layout share the one
     exchange, and the (tlen, term) prefix satisfies the file writer's
     dynamic-partition ordering, so writing the laid frame (or a checkpoint
-    of it) plans no exchange or sort of its own."""
-    return (
-        term_rows.withColumn("tlen", F.length("term"))
-        .repartition("tlen")
-        .groupBy("tlen", "term")
-        .agg(F.sum("df").cast("long").alias("df"))
-        .sortWithinPartitions("tlen", "term")
-        .select("term", "df", "tlen")
+    of it) plans no exchange or sort of its own. One SQL statement
+    (:func:`_tlen_laid_sql`)."""
+    return term_rows.sparkSession.sql(_tlen_laid_sql("{rows}"), rows=term_rows)
+
+
+def _merged_vocab(vocab: DataFrame, docs: DataFrame, text_col: str) -> DataFrame:
+    """The append's new dictionary in the :func:`_tlen_laid` layout: the
+    old ``vocab``'s (term, df) rows plus one (term, 1) row per distinct
+    term of each doc in ``docs``, summed — one SQL statement, built every
+    index micro-batch."""
+    rows = (
+        "(SELECT term, df FROM {vocab} UNION ALL SELECT term, "
+        f"CAST(1 AS BIGINT) AS df FROM ({_doc_terms_sql(text_col)}))"
     )
+    return docs.sparkSession.sql(_tlen_laid_sql(rows), vocab=vocab, docs=docs)
 
 
 def _term_df(postings: DataFrame) -> DataFrame:
@@ -2025,32 +2099,34 @@ def _doc_id_set(postings: DataFrame) -> DataFrame:
     return postings.groupBy("doc_id").agg(F.first("dl").alias("dl"))
 
 
-def _bm25_score_agg(scored: DataFrame, k: int, after: tuple | None = None) -> DataFrame:
-    """Shared tail of every postings scorer: per-doc score sum → top-k.
+def _bm25_score_agg_sql(scored: str, k: int,
+                        after: tuple | None = None) -> tuple[str, dict | None]:
+    """(SQL text, bound args) of the shared tail of every postings scorer
+    over the (doc_id, term_score) rows ``scored``: per-doc score sum →
+    top-k.
 
     ``after`` = (score, doc_id) keyset cursor — ES ``search_after``: keep
     only rows strictly past the cursor in the total (score DESC, doc_id)
     order, THEN top-k. Unlike from/size (the :meth:`Engine.search` offset
     form), page N never re-ranks the N·k prefix: the cursor predicate
-    prunes before the top-k heaps, so every page costs the same."""
-    out = scored.groupBy("doc_id").agg(
-        F.round(F.sum("term_score"), 4).alias("score")
-    )
+    prunes before the top-k heaps, so every page costs the same. The
+    cursor values are bound as parameters, not inlined."""
+    where, args = "", None
     if after is not None:
-        c_score, c_id = after
-        out = out.where(
-            (F.col("score") < F.lit(c_score))
-            | ((F.col("score") == F.lit(c_score)) & (F.col("doc_id") > F.lit(c_id)))
-        )
-    return out.orderBy(F.desc("score"), F.col("doc_id")).limit(k)
-
-
-def _term_score(idf, tf, dl, avgdl):
-    return (
-        idf
-        * (tf * (BM25_K1 + 1))
-        / (tf + BM25_K1 * (1 - BM25_B + BM25_B * dl / avgdl))
+        where = " WHERE score < :c_score OR (score = :c_score AND doc_id > :c_id)"
+        args = {"c_score": after[0], "c_id": after[1]}
+    text = (
+        "SELECT * FROM (SELECT doc_id, round(sum(term_score), 4) AS score "
+        f"FROM {scored} GROUP BY doc_id){where} "
+        f"ORDER BY score DESC, doc_id LIMIT {int(k)}"
     )
+    return text, args
+
+
+def _bm25_score_agg(scored: DataFrame, k: int, after: tuple | None = None) -> DataFrame:
+    """:func:`_bm25_score_agg_sql` over the frame ``scored``."""
+    text, args = _bm25_score_agg_sql("{scored}", k, after)
+    return scored.sparkSession.sql(text, args, scored=scored)
 
 
 # Pruned-candidate size below which the probe takes the single-scan window
@@ -2094,17 +2170,8 @@ def bm25_from_postings(
         scored = scored.crossJoin(F.broadcast(stats))
     scored = (
         scored.withColumn("avgdl", F.col("sum_dl").cast("double") / F.col("n_docs"))
-        .withColumn(
-            "idf",
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-            ),
-        )
-        .withColumn(
-            "term_score",
-            _term_score(F.col("idf"), F.col("tf"), F.col("dl"), F.col("avgdl")),
-        )
+        .withColumn("idf", F.expr(_idf_sql("n_docs")))
+        .withColumn("term_score", F.expr(_term_score_sql("idf", "avgdl")))
     )
     return _bm25_score_agg(scored, k, after=after)
 
@@ -2122,20 +2189,22 @@ def bm25_from_postings_small(
     term's whole posting list in one task — fine below
     :data:`PROBE_WINDOW_MAX_BYTES`, a skew bottleneck on a 100 TB corpus
     where one common term can match most documents; the dispatcher in
-    :meth:`SearchIndex.search` keeps this tier behind the size gate."""
-    from pyspark.sql import Window
+    :meth:`SearchIndex.search` keeps this tier behind the size gate.
 
-    p = _term_rows(postings, query_terms(query))
-    avgdl = F.lit(sum_dl).cast("double") / F.lit(n_docs)
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(n_docs) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
+    One SQL statement — term pruning, the window df, the term scores and
+    the top-k tail, with (n_docs, sum_dl) as integer literals: every
+    ingest probe builds it, and as Column calls it took about 420 py4j
+    round trips."""
+    n_docs, sum_dl = int(n_docs), int(sum_dl)
+    idf = _idf_sql(str(n_docs))
+    avgdl = f"(CAST({sum_dl} AS DOUBLE) / {n_docs})"
     scored = (
-        p.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("term")))
-        .withColumn("term_score", _term_score(idf, F.col("tf"), F.col("dl"), avgdl))
+        f"(SELECT *, {_term_score_sql(idf, avgdl)} AS term_score FROM ("
+        "SELECT *, count(1) OVER (PARTITION BY term) AS df FROM {postings} "
+        f"WHERE {_query_term_rows_sql(query)}))"
     )
-    return _bm25_score_agg(scored, k, after=after)
+    text, args = _bm25_score_agg_sql(scored, k, after)
+    return postings.sparkSession.sql(text, args, postings=postings)
 
 
 def _layout_fingerprint(files: list, subdir: str) -> str:
@@ -2720,7 +2789,6 @@ class SearchIndex:
         # reads {path}/doc_ids, which step 3 appends to
         docs = docs.join(indexed, id_col, "left_anti").localCheckpoint(eager=True)
         new_p, new_docs = build_postings(docs, id_col, text_col)
-        batch_terms = _doc_terms(docs, text_col).withColumn("df", F.lit(1).cast("long"))
         _, merged_vocab = _run_side_by_side(
             spark,
             lambda: (
@@ -2728,9 +2796,9 @@ class SearchIndex:
                 .partitionBy("bucket").parquet(f"{path}/postings")
             ),
             # materialized before step 3 overwrites the directory it reads
-            lambda: _tlen_laid(
-                prev.vocab.select("term", "df").unionByName(batch_terms)
-            ).localCheckpoint(eager=True),
+            lambda: _merged_vocab(prev.vocab, docs, text_col).localCheckpoint(
+                eager=True
+            ),
         )
         # the batch's stats ride the doc_ids append as observed metrics: no
         # second pass over the batch

@@ -2249,7 +2249,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ngram_hashed_cte(k: int) -> str:
     """Shared DuckDB CTE pair: per-doc distinct k-shingle hash sets,
     generalizing _NGRAM_ORACLE's k=2 form (same tokenizer, separator,
-    md5→61-bit→mod-P mapping as operators.dedup.shingle_hashes)."""
+    md5→61-bit→mod-P mapping as operators.dedup.ngram_intersections)."""
     join = " || ' ' || ".join(f"t[i+{j}]" for j in range(k))
     return f"""
 WITH sh AS (

@@ -142,7 +142,11 @@ def corpus_stream_ingest_dedup(
          history pair). The store keeps the ``minhash_base`` schema and is
          read with it, so opening it infers nothing. At scale, lay the
          store out partitioned by (band, bkey) so the probe prunes to
-         matching buckets instead of scanning all signatures.
+         matching buckets instead of scanning all signatures. Both plans
+         are built from one SQL statement each, not Column calls: the
+         batch pays py4j round trips for every call, and the Column form
+         took about 3,700 of them (0.5-0.8 s) per batch; the two
+         statements take 16 (the optimized plans are the same).
       2. resolve: one bounded collect reads at most
          ``BATCH_CLUSTER_MAX_PAIRS`` + 1 pair rows. If that is all of
          them, the driver resolves the batch: every doc with a history
@@ -199,8 +203,10 @@ def corpus_stream_ingest_dedup(
         # cross-history dedup and admit duplicates into the corpus.
         jvm_path = spark._jvm.org.apache.hadoop.fs.Path(sig_store)
         fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
+        # read in the batch's session: the probe is one SQL statement over
+        # temporary views, which must all live in the session that runs it
         store = (
-            spark.read.schema(base.schema).parquet(sig_store)
+            docs.sparkSession.read.schema(base.schema).parquet(sig_store)
             if fs.exists(jvm_path) else None
         )
         pairs = minhash_probe_pairs(base, store, threshold)

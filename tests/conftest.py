@@ -23,6 +23,41 @@ def sf_dir():
     return SF_DIR
 
 
+@pytest.fixture
+def count_py4j_calls(monkeypatch):
+    """``count(fn)`` → (fn(), the py4j commands the calling thread sent while
+    fn ran): the driver-side cost of building a plan. Both connection kinds
+    are counted — the pinned-thread client (ClientServerConnection) and the
+    unpinned gateway (GatewayConnection)."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+    from py4j.java_gateway import GatewayConnection
+
+    state = {"thread": None, "n": 0}
+
+    def counted(send):
+        def send_command(self, *args, **kwargs):
+            if threading.get_ident() == state["thread"]:
+                state["n"] += 1
+            return send(self, *args, **kwargs)
+
+        return send_command
+
+    for cls in (ClientServerConnection, GatewayConnection):
+        monkeypatch.setattr(cls, "send_command", counted(cls.send_command))
+
+    def count(fn):
+        state["thread"], state["n"] = threading.get_ident(), 0
+        try:
+            out = fn()
+        finally:
+            state["thread"] = None
+        return out, state["n"]
+
+    return count
+
+
 _SLOW_MARKED = pytest.StashKey[int]()
 
 

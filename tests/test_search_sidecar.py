@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pandemic_knowledge_spark.operators.search import (
     SearchIndex,
     _fuzzy_selected,
+    build_postings,
     _probe_vocab,
     fuzzy_auto_band,
     fuzzy_match_search,
@@ -333,6 +334,30 @@ def _half_saved(spark, tmp_path):
         docs.filter(F.col("doc_id") % 2 == 0), "doc_id", "text", cache=False
     ).save(path)
     return docs, docs.filter(F.col("doc_id") % 2 == 1), path
+
+
+def test_postings_and_probe_plans_build_in_few_py4j_calls(
+    spark, tmp_path, count_py4j_calls
+):
+    """Building — not running — an index append's postings
+    (``build_postings``) and a probe of a loaded index
+    (``SearchIndex.search``, the window tier) sends 27 and 7 py4j commands
+    from the calling thread: each step is a SQL statement. Built from
+    Column calls they sent about 265 and 417."""
+    docs, path = _saved(spark, tmp_path)
+    idx = SearchIndex.load(spark, path)
+    query = "spark stream window"
+    build_postings(docs, "doc_id", "text")  # first use loads classes
+    idx.search(query, k=5)
+    (postings, doc_lens), n_postings = count_py4j_calls(
+        lambda: build_postings(docs, "doc_id", "text")
+    )
+    hits, n_search = count_py4j_calls(lambda: idx.search(query, k=5))
+    assert n_postings <= 54
+    assert n_search <= 14
+    assert doc_lens.count() == docs.count()
+    built = SearchIndex.build(docs, "doc_id", "text", cache=False)
+    assert hits.collect() == built.search(query, k=5).collect()
 
 
 def test_append_save_job_budget_in_callers_job_group(spark, tmp_path):
