@@ -68,8 +68,11 @@ class Engine:
         """The table's inverted index, built+cached ON FIRST USE and reused by
         every subsequent search (SURVEY.md §4.2 — the ES-index analogue; the
         reference pays indexing in its bulk loaders, then each keystroke is a
-        probe). Call .save(path) to persist per ingest; SearchIndex.load
-        swaps a parquet-backed index in."""
+        probe). ``warm()`` materializes the cached postings, dictionary and
+        doc ids and collects the corpus stats (n_docs, sum_dl) once, so a
+        probe starts no job beyond its own one-statement scorer
+        (operators.search.bm25_from_postings). Call .save(path) to persist
+        per ingest; SearchIndex.load swaps a parquet-backed index in."""
         key = (table, id_col, text_col)
         if key not in self._search_indexes:
             self._search_indexes[key] = SearchIndex.build(

@@ -113,6 +113,8 @@ from pandemic_knowledge_spark.operators.search import (
     _corpus_stats,
     _fuzzy_selected,
     _literal_tf_with_stats,
+    _postings_scores_sql,
+    _query_rows,
     _selected_tf,
     _span_start_pred,
     _sql_tf_prelude,
@@ -518,7 +520,7 @@ def _scored_frames(docs, id_col, text_col, scored):
     frames — the shared front half of :func:`bool_search` and
     :func:`dis_max_search`: one selected-TF sliver feeds every
     match/fuzzy clause, phrase clauses fold their corpus constants to
-    literals via one bounded one-row collect (the stats_scalars idiom),
+    literals via one bounded one-row collect (as SearchIndex.corpus_stats does),
     prefix clauses are constant_score scan-side projections.
 
     Validation-order note (r13 advice): phrase-clause validation (empty
@@ -1734,47 +1736,23 @@ ORDER BY score DESC, doc_id LIMIT {k}
 # -------------------------------------------------------- indexed bool door
 
 
-def _index_stats_cols(index, frame: DataFrame) -> DataFrame:
-    if index.stats_scalars is not None:
-        n_docs, sum_dl = index.stats_scalars
-        return frame.withColumns(
-            {
-                "n_docs": F.lit(int(n_docs)).cast("long"),
-                "sum_dl": F.lit(int(sum_dl)).cast("long"),
-            }
-        )
-    return frame.crossJoin(F.broadcast(index.stats))
-
-
-def _index_stats_scalars(index) -> tuple:
-    if index.stats_scalars is not None:
-        return index.stats_scalars
-    row = index.stats.collect()[0]
-    return int(row["n_docs"]), int(row["sum_dl"] or 0)
-
-
 def _index_match_frame(index, terms, min_terms: int = 1) -> DataFrame:
     """Full (doc_id, cscore) BM25 frame for a term set, scored entirely
     from the bucket-pruned postings — the unlimited form of
-    operators.search.bm25_from_postings (same pruned-count df, same
-    formula, so the indexed door equals the corpus door to the bit).
-    ``min_terms`` enforces the match clause's term-level control
-    (operator and / minimum_should_match) as a count in the same grouped
-    aggregation — postings hold one row per (term, doc)."""
-    from pandemic_knowledge_spark.operators.search import _term_rows
-
-    p = _term_rows(index.postings, terms)
-    df_t = p.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    scored = _attach_bm25_scores(
-        _index_stats_cols(index, p.join(F.broadcast(df_t), "term"))
+    operators.search.bm25_from_postings (its term-score rows, the
+    index's integer corpus stats as literals, so the indexed door equals
+    the corpus door to the bit). ``terms`` are tokens (query terms or
+    dictionary terms), inlined space-joined. ``min_terms`` enforces the
+    match clause's term-level control (operator and /
+    minimum_should_match) as a count in the same grouped aggregation —
+    postings hold one row per (term, doc)."""
+    n_docs, sum_dl = index.corpus_stats
+    having = f" HAVING count(1) >= {int(min_terms)}" if min_terms > 1 else ""
+    return index.postings.sparkSession.sql(
+        "SELECT doc_id, sum(term_score) AS cscore FROM "
+        f"{_postings_scores_sql(n_docs, sum_dl)} GROUP BY doc_id{having}",
+        rows=_query_rows(index.postings, " ".join(terms)),
     )
-    agged = scored.groupBy("doc_id").agg(
-        F.sum("term_score").alias("cscore"),
-        F.count(F.lit(1)).alias("__nt"),
-    )
-    if min_terms > 1:
-        agged = agged.where(F.col("__nt") >= F.lit(min_terms))
-    return agged.select("doc_id", "cscore")
 
 
 def _index_phrase_frame(index, phrase: str, slop: int = 0) -> DataFrame:
@@ -1805,7 +1783,7 @@ def _index_phrase_frame(index, phrase: str, slop: int = 0) -> DataFrame:
         .localCheckpoint(eager=False)  # count() below materializes (r13)
     )
     df_ph = pf.count()
-    n_docs, sum_dl = _index_stats_scalars(index)
+    n_docs, sum_dl = index.corpus_stats
     joined = pf.join(index.doc_ids.select("doc_id", "dl"), "doc_id")
     avgdl = F.lit(float(sum_dl)) / F.lit(float(n_docs))
     idf = F.log(
@@ -1893,9 +1871,9 @@ def bool_search_from_index(
     probe; this is that split for composed queries). Identical output to
     :func:`bool_search` over the same corpus (asserted in tests):
 
-    - match clauses score from the bucket-pruned postings (the
-      bm25_from_postings shape: pruned-count df broadcasts, posting rows
-      never shuffle by term),
+    - match clauses score from the bucket-pruned postings through the
+      term-score rows of bm25_from_postings (window df in the one scan,
+      the index's integer corpus stats as literals),
     - fuzzy clauses expand against the terms-dictionary sidecar
       (tlen-pruned slivers) and score the bounded expansion from postings,
     - phrase clauses probe the positional tier (raise without one — a
@@ -1954,18 +1932,13 @@ def bool_search_from_index(
             selected = _fuzzy_selected(
                 spark, v, fuzz_rows, exact_terms, max_expansions, prefix_length
             )
-            # bounded: <= |query terms| * max_expansions rows
+            # bounded: <= |query terms| * max_expansions rows. With no
+            # vocabulary term within the edit band the clause matches
+            # NOTHING — an empty frame, so a must-context clause correctly
+            # empties the result (dropping the clause instead would
+            # silently relax a must to a no-op)
             sel_terms = sorted(r.term for r in selected.collect())
-            if sel_terms:
-                frame = _index_match_frame(index, sel_terms)
-            else:
-                # no vocabulary term within the edit band: the clause
-                # matches NOTHING — an empty frame, so a must-context
-                # clause correctly empties the result (dropping the
-                # clause instead would silently relax a must to a no-op)
-                frame = index.postings.select("doc_id").limit(0).withColumn(
-                    "cscore", F.lit(1.0)
-                )
+            frame = _index_match_frame(index, sel_terms)
         elif key == "phrase":
             slop = int(clause.get("slop", 0))
             if slop < 0:

@@ -1100,7 +1100,7 @@ def _probe_vocab(vocab: DataFrame, lengths) -> DataFrame:
 
 def fuzzy_match_from_postings(
     postings: DataFrame,
-    stats,
+    stats: tuple[int, int],
     query: str,
     k: int = 10,
     max_expansions: int = 50,
@@ -1120,12 +1120,14 @@ def fuzzy_match_from_postings(
     FST walk); the shared :func:`_fuzzy_selected` expansion runs
     distributed, and the bounded selection (≤ query terms ×
     max_expansions rows — ES's rewrite is capped identically) collects to
-    the driver so the scoring probe can enumerate its crc32 BUCKETS and
-    get parquet partition pruning, exactly like the MLT probe's second
-    phase (:func:`_term_rows`)."""
+    the driver. The selected terms are dictionary tokens, so they score
+    as a space-joined query through :func:`bm25_from_postings`, which
+    enumerates their crc32 BUCKETS for parquet partition pruning.
+    ``stats`` is the index's (n_docs, sum_dl)."""
+    n_docs, sum_dl = stats
     q_terms = sorted(set(query_terms(query)))
     if not q_terms:
-        return bm25_from_postings(postings, stats, "", k)
+        return bm25_from_postings(postings, n_docs, sum_dl, "", k)
     bands = [(t, fuzzy_auto_band(len(t))) for t in q_terms]
     exact_terms = sorted(t for t, b in bands if b == 0)
     fuzz_rows = [
@@ -1145,14 +1147,12 @@ def fuzzy_match_from_postings(
         max_expansions, prefix_length,
     )
     sel_terms = sorted(r.term for r in selected.collect())
-    if not sel_terms:
-        return bm25_from_postings(postings, stats, "", k)
-    return bm25_from_postings(postings, stats, " ".join(sel_terms), k)
+    return bm25_from_postings(postings, n_docs, sum_dl, " ".join(sel_terms), k)
 
 
 def prefix_search_from_postings(
     postings: DataFrame,
-    stats,
+    stats: tuple[int, int],
     query: str,
     k: int = 10,
     max_expansions: int = 50,
@@ -1165,11 +1165,13 @@ def prefix_search_from_postings(
     unfinished token expands against the index's ``vocab`` (row-group
     min/max on the term-sorted files prunes inside each length
     partition), then the bounded expansion set (≤ terms + max_expansions)
-    probes the bucket-pruned postings (:func:`_term_rows`). Identical
-    output to the corpus-scan form."""
+    scores through :func:`bm25_from_postings` as a space-joined query of
+    dictionary tokens. ``stats`` is the index's (n_docs, sum_dl).
+    Identical output to the corpus-scan form."""
+    n_docs, sum_dl = stats
     toks = query_terms(query)
     if not toks:
-        return bm25_from_postings(postings, stats, "", k)
+        return bm25_from_postings(postings, n_docs, sum_dl, "", k)
     *full_terms, prefix = toks
     full_terms = sorted(set(full_terms))
     expansions = (
@@ -1179,9 +1181,7 @@ def prefix_search_from_postings(
         .select("term")
     )
     sel_terms = sorted({r.term for r in expansions.collect()} | set(full_terms))
-    if not sel_terms:
-        return bm25_from_postings(postings, stats, "", k)
-    return bm25_from_postings(postings, stats, " ".join(sel_terms), k)
+    return bm25_from_postings(postings, n_docs, sum_dl, " ".join(sel_terms), k)
 
 
 def term_suggest_from_vocab(
@@ -1390,7 +1390,7 @@ def linear_fuse(
 
 def more_like_this_from_postings(
     postings: DataFrame,
-    stats,
+    stats: tuple[int, int],
     src_doc_id,
     k: int = 10,
     max_query_terms: int = 8,
@@ -1413,7 +1413,8 @@ def more_like_this_from_postings(
     tie-break, min_term_freq/min_doc_freq) runs driver-side over ≤ one
     doc's vocabulary. Scoring reuses :func:`bm25_from_postings` — the
     selected terms ARE tokens, so a space-joined query string re-analyzes
-    to exactly them — probing k+1 and dropping the source."""
+    to exactly them — probing k+1 and dropping the source. ``stats`` is
+    the index's (n_docs, sum_dl)."""
     import math
     from decimal import ROUND_HALF_UP, Decimal
 
@@ -1427,10 +1428,7 @@ def more_like_this_from_postings(
             Decimal(repr(x)).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP)
         )
 
-    if isinstance(stats, tuple):
-        n_docs = int(stats[0])
-    else:
-        n_docs = int(stats.collect()[0]["n_docs"])
+    n_docs, sum_dl = stats
     src_rows = (
         postings.filter(F.col("doc_id") == F.lit(src_doc_id))
         .filter(F.col("tf") >= F.lit(min_term_freq))
@@ -1438,7 +1436,7 @@ def more_like_this_from_postings(
         .collect()
     )
     if not src_rows:
-        return bm25_from_postings(postings, stats, "", k)  # empty, right schema
+        return bm25_from_postings(postings, n_docs, sum_dl, "", k)  # empty, right schema
     df_rows = (
         _term_rows(postings, (r.term for r in src_rows))
         .groupBy("term")
@@ -1453,10 +1451,8 @@ def more_like_this_from_postings(
             if df_by_term.get(r.term, 0) >= min_doc_freq
         ),
     )[:max_query_terms]
-    if not ranked:
-        return bm25_from_postings(postings, stats, "", k)
     query = " ".join(t for _, t in ranked)
-    hits = bm25_from_postings(postings, stats, query, k + 1)
+    hits = bm25_from_postings(postings, n_docs, sum_dl, query, k + 1)
     return (
         hits.filter(F.col("doc_id") != F.lit(src_doc_id))
         .orderBy(F.desc("score"), F.col("doc_id"))
@@ -1968,8 +1964,10 @@ def _query_term_rows_sql(query: str) -> str:
     """:func:`_term_rows`'s predicate for the terms of ``query``, as SQL
     text. The terms are inlined as literals only because
     :func:`query_terms` yields TOKEN_RE matches (``[a-z0-9]+``), which
-    need no quoting; terms from anywhere else go through
-    :func:`_term_rows`. A query with no terms matches nothing."""
+    need no quoting. A caller with terms from the index — the terms
+    dictionary or the postings, which hold tokens — passes them
+    space-joined, and they re-analyze to themselves; any other terms go
+    through :func:`_term_rows`. A query with no terms matches nothing."""
     terms, buckets = _term_buckets(query_terms(query))
     if not terms:
         return "false"
@@ -2129,82 +2127,63 @@ def _bm25_score_agg(scored: DataFrame, k: int, after: tuple | None = None) -> Da
     return scored.sparkSession.sql(text, args, scored=scored)
 
 
-# Pruned-candidate size below which the probe takes the single-scan window
-# tier (one job, no broadcast round). Above it — or when the estimate is
-# unusable — the broadcast-df tier's map-side-combined count is the safe
-# shape. 64 MiB of matching postings is far past interactive anyway.
-PROBE_WINDOW_MAX_BYTES = 64 << 20
+def _postings_scores_sql(n_docs: int, sum_dl: int) -> str:
+    """SQL subquery text of the BM25 (term, doc) score rows over the
+    frame ``{rows}`` — a postings frame already pruned to the query's
+    terms (:func:`_query_rows`): df via ``count() OVER (PARTITION BY
+    term)`` in the same scan, and ``term_score`` from the one formula with
+    (n_docs, sum_dl) as integer literals. Every postings scorer —
+    :func:`bm25_from_postings` and the indexed bool door's match clauses —
+    aggregates these rows. An empty index has no rows to score: its avgdl
+    divides by 1, not 0, which the planner would fold into an error."""
+    n_docs, sum_dl = int(n_docs), int(sum_dl)
+    idf = _idf_sql(str(n_docs))
+    avgdl = f"(CAST({sum_dl} AS DOUBLE) / {max(n_docs, 1)})"
+    return (
+        f"(SELECT *, {_term_score_sql(idf, avgdl)} AS term_score FROM ("
+        "SELECT *, count(1) OVER (PARTITION BY term) AS df FROM {rows}))"
+    )
+
+
+def _query_rows(postings: DataFrame, query: str) -> DataFrame:
+    """``postings``'s rows for the terms of ``query``, bucket-pruned
+    (:func:`_query_term_rows_sql`) — the ``{rows}`` frame a scorer
+    statement reads. The filter is a frame of its own, never the bare
+    handle frame, because spark.sql drops the temp view of each frame it
+    is handed after the statement, and dropping a view uncaches a cached
+    frame whose plan it is: a cached build would lose its postings on its
+    first probe. A filtered frame only reads the cache."""
+    return postings.where(_query_term_rows_sql(query))
 
 
 def bm25_from_postings(
-    postings: DataFrame, stats, query: str, k: int = 10,
-    after: tuple | None = None,
-) -> DataFrame:
-    """BM25 top-k scored ENTIRELY from the posting tables — no corpus scan,
-    no tokenize. Identical output to :func:`bm25_search` (same tf/dl/df/
-    corpus stats, same formula, same 4 dp rounding).
-
-    df per term is recomputed from the PRUNED postings (the filter keeps
-    only query-term rows, and (doc_id, term) rows are unique, so a plain
-    count per term IS the document frequency) — cheaper than persisting and
-    probing a second table. The partial count combines map-side and the
-    tiny (≤ #terms rows) result broadcasts, so the candidate posting rows
-    themselves NEVER shuffle by term: a stop-word-frequency term whose
-    posting list is millions of rows costs one broadcast int, not a
-    single-task window partition. That skew-safety is why this is the
-    scale tier (see :func:`bm25_from_postings_small` and the dispatch in
-    :meth:`SearchIndex.search`).
-
-    ``stats`` is either the one-row (n_docs, sum_dl) DataFrame (in-memory
-    build path) or a plain ``(n_docs, sum_dl)`` tuple (loaded-index path —
-    folds to literals, skipping the crossJoin broadcast round)."""
-    p = _term_rows(postings, query_terms(query))
-    df_t = p.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    scored = p.join(F.broadcast(df_t), "term")
-    if isinstance(stats, tuple):
-        n_docs, sum_dl = stats
-        scored = scored.withColumns(
-            {"n_docs": F.lit(n_docs).cast("long"), "sum_dl": F.lit(sum_dl).cast("long")}
-        )
-    else:
-        scored = scored.crossJoin(F.broadcast(stats))
-    scored = (
-        scored.withColumn("avgdl", F.col("sum_dl").cast("double") / F.col("n_docs"))
-        .withColumn("idf", F.expr(_idf_sql("n_docs")))
-        .withColumn("term_score", F.expr(_term_score_sql("idf", "avgdl")))
-    )
-    return _bm25_score_agg(scored, k, after=after)
-
-
-def bm25_from_postings_small(
     postings: DataFrame, n_docs: int, sum_dl: int, query: str, k: int = 10,
     after: tuple | None = None,
 ) -> DataFrame:
-    """Interactive small-candidate probe tier: df via ``count() OVER
-    (PARTITION BY term)`` in the SAME scan — one job, no broadcast round
-    (measured ~0.14 s vs ~0.26 s for the broadcast form at sf0.1,
-    cache-cleared). Identical output to :func:`bm25_from_postings`.
+    """BM25 top-k scored ENTIRELY from the posting tables — no corpus scan,
+    no tokenize — and the one postings scorer: :meth:`SearchIndex.search`
+    and the fuzzy, prefix and more-like-this probes all score through it.
+    Identical output to :func:`bm25_search` (same tf/dl/df/corpus stats,
+    same formula, same 4 dp rounding).
 
-    The window shuffles every candidate posting row by term, putting each
-    term's whole posting list in one task — fine below
-    :data:`PROBE_WINDOW_MAX_BYTES`, a skew bottleneck on a 100 TB corpus
-    where one common term can match most documents; the dispatcher in
-    :meth:`SearchIndex.search` keeps this tier behind the size gate.
+    One SQL statement over one pruned scan (:func:`_query_rows`): df per
+    term recomputed from the pruned rows by a window (``(doc_id, term)``
+    rows are unique, so a count per term IS the document frequency —
+    cheaper than persisting and probing a second table), the term scores
+    with the corpus stats (n_docs, sum_dl) as integer literals
+    (:func:`_postings_scores_sql`), and the top-k tail
+    (:func:`_bm25_score_agg_sql`; ``after`` is its keyset cursor, bound as
+    parameters). The window shuffles the candidate posting rows by term,
+    so each term's posting list lands in one task: at a size where one
+    stop-word-frequency term matches most of a huge corpus that task is
+    the skew bottleneck, far past any interactive index.
 
-    One SQL statement — term pruning, the window df, the term scores and
-    the top-k tail, with (n_docs, sum_dl) as integer literals: every
-    ingest probe builds it, and as Column calls it took about 420 py4j
-    round trips."""
-    n_docs, sum_dl = int(n_docs), int(sum_dl)
-    idf = _idf_sql(str(n_docs))
-    avgdl = f"(CAST({sum_dl} AS DOUBLE) / {n_docs})"
-    scored = (
-        f"(SELECT *, {_term_score_sql(idf, avgdl)} AS term_score FROM ("
-        "SELECT *, count(1) OVER (PARTITION BY term) AS df FROM {postings} "
-        f"WHERE {_query_term_rows_sql(query)}))"
+    The ingest probe builds this for every tick; as Column calls it took
+    about 420 py4j round trips."""
+    text, args = _bm25_score_agg_sql(_postings_scores_sql(n_docs, sum_dl), k, after)
+    return postings.sparkSession.sql(
+        text, args, rows=_query_rows(postings, query)
     )
-    text, args = _bm25_score_agg_sql(scored, k, after)
-    return postings.sparkSession.sql(text, args, postings=postings)
 
 
 def _layout_fingerprint(files: list, subdir: str) -> str:
@@ -2339,7 +2318,8 @@ def _write_index_sidecars(
     docs included (:meth:`SearchIndex.save`), or the postings' own id
     set (the load-time repair, which has nothing but posting rows to
     read). ``stats``: (n_docs, sum_dl) when the caller holds them (a
-    loaded handle being saved); None = sum the written ``doc_ids``."""
+    loaded handle, or a build whose stats were already collected);
+    None = sum the written ``doc_ids``."""
     schemas = {"postings": _file_schema(postings), "doc_ids": _file_schema(doc_ids)}
     if positional is not None:
         schemas["positions"] = _file_schema(positional)
@@ -2406,6 +2386,12 @@ class SearchIndex:
     Every layout has :data:`N_TERM_BUCKETS` term buckets; :meth:`load`
     rejects one written with more.
 
+    One scorer: :meth:`search` and the fuzzy, prefix and more-like-this
+    probes all score through :func:`bm25_from_postings`, with the corpus
+    stats as the two integers :attr:`corpus_stats` — read from the record
+    on a loaded handle, collected once from ``doc_ids`` on an in-memory
+    build.
+
     One write path: :meth:`save` writes a whole index, :meth:`append_save`
     adds a batch of documents to a persisted one (creating it on the first
     batch). Both lay postings out with :func:`_bucket_laid` and the terms
@@ -2420,22 +2406,13 @@ class SearchIndex:
     rebuilds the sidecars from postings on mismatch or absence — a crash
     anywhere in a write degrades to a one-time repair, never a wrong answer."""
 
-    def __init__(self, postings: DataFrame, stats: DataFrame,
-                 vocab: DataFrame, doc_ids: DataFrame,
-                 stats_scalars: tuple | None = None,
-                 index_bytes: int | None = None,
+    def __init__(self, postings: DataFrame, vocab: DataFrame, doc_ids: DataFrame,
+                 corpus_stats: tuple | None = None,
                  positional: DataFrame | None = None) -> None:
         self.postings = postings
-        self.stats = stats
-        # (n_docs, sum_dl) as plain ints when known eagerly (loaded index):
-        # probes fold them to literals instead of crossJoining a one-row
-        # frame — one less broadcast round per query.
-        self.stats_scalars = stats_scalars
-        # Whole-index Catalyst size estimate, computed ONCE at load: the
-        # probe tier gate compares this stored int, not a per-query
-        # optimizer invocation (a py4j stats() round per probe measured
-        # ~0.1 s — half the interactive budget).
-        self.index_bytes = index_bytes
+        # (n_docs, sum_dl) as plain ints: given by a loaded handle's
+        # record, collected on first use by an in-memory build
+        self._corpus_stats = corpus_stats
         # Terms dictionary (term, df, tlen) and indexed-id set (doc_id, dl):
         # persisted sidecars on a loaded index, derivations (cached on
         # request) on an in-memory build.
@@ -2459,7 +2436,6 @@ class SearchIndex:
         ``positional=True`` additionally builds the positional posting
         table (phrase probes; a second tokenize pass over the corpus)."""
         postings, doc_ids = build_postings(docs, id_col, text_col)
-        stats = doc_ids.agg(*_doc_stat_cols())
         vocab = _term_df(postings).withColumn("tlen", F.length("term"))
         pos = (
             build_positional_postings(docs, id_col, text_col)
@@ -2468,17 +2444,30 @@ class SearchIndex:
         )
         if cache:
             postings = postings.cache()
-            stats = stats.cache()
             vocab = vocab.cache()
             doc_ids = doc_ids.cache()
             if pos is not None:
                 pos = pos.cache()
-        return cls(postings, stats, vocab, doc_ids, positional=pos)
+        return cls(postings, vocab, doc_ids, positional=pos)
+
+    @property
+    def corpus_stats(self) -> tuple[int, int]:
+        """The corpus stats (n_docs, sum_dl) as exact integers — zero-token
+        docs count, as in the corpus-scan scorers. A loaded handle has
+        them from its record; an in-memory build sums its ``doc_ids`` in
+        one bounded collect on first use and keeps them."""
+        if self._corpus_stats is None:
+            row = self.doc_ids.agg(*_doc_stat_cols()).collect()[0]
+            self._corpus_stats = (int(row["n_docs"]), int(row["sum_dl"] or 0))
+        return self._corpus_stats
 
     def warm(self) -> "SearchIndex":
-        """Force materialization now (first search pays nothing)."""
-        for frame in (self.postings, self.stats, self.vocab, self.doc_ids):
+        """Force materialization now (first search pays nothing): the
+        postings and dictionary, and the corpus stats, whose collect
+        reads every ``doc_ids`` row."""
+        for frame in (self.postings, self.vocab):
             frame.count()
+        self.corpus_stats  # noqa: B018 - reading it collects and keeps them
         return self
 
     def save(self, path: str) -> "SearchIndex":
@@ -2498,8 +2487,9 @@ class SearchIndex:
         counts empty docs exactly like the corpus-scan scorers, so a
         LOADED index scores bit-identically to the in-memory build (only
         the crash-REPAIR path, which has nothing but postings to read,
-        keeps postings-only stats). A loaded handle keeps its record's
-        stats. At cluster scale the checkpoint holds one copy of the
+        keeps postings-only stats). A handle that already holds its stats
+        — a loaded one, or a build that has collected them — records
+        those instead. At cluster scale the checkpoint holds one copy of the
         postings in executor memory/disk for the duration of the save —
         the same footprint the write shuffle already has."""
         laid = _bucket_laid(self.postings).localCheckpoint(eager=False)
@@ -2513,7 +2503,7 @@ class SearchIndex:
             )
         _write_index_sidecars(
             self.postings.sparkSession, path, laid, self.doc_ids,
-            self.stats_scalars, self.positional,
+            self._corpus_stats, self.positional,
         )
         laid.unpersist()
         return self
@@ -2589,51 +2579,26 @@ class SearchIndex:
                 == meta["pos_fingerprint"]
             ):
                 positional = pos
-        stats = spark.range(1).select(
-            F.lit(meta["n_docs"]).cast("long").alias("n_docs"),
-            F.lit(meta["sum_dl"]).cast("long").alias("sum_dl"),
-        )
-        index_bytes = (
-            postings._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
         return cls(
             postings,
-            stats,
             _read_artifact(spark, path, "vocab", schemas),
             _read_artifact(spark, path, "doc_ids", schemas),
-            stats_scalars=(meta["n_docs"], meta["sum_dl"]),
-            index_bytes=int(index_bytes),
+            corpus_stats=(int(meta["n_docs"]), int(meta["sum_dl"])),
             positional=positional,
         )
 
     def search(self, query: str, k: int = 10,
                after: tuple | None = None) -> DataFrame:
-        """Probe: identical scores from either tier; the tier only changes
-        the physical shape. A small loaded index (interactive sessions)
-        takes the single-scan window tier — one job per probe; a large or
-        size-unknown index (100 TB corpora, in-memory builds) takes the
-        broadcast-df tier, whose map-side-combined count never shuffles
-        posting rows by term — the skew-safe shape. The gate is the
-        whole-index estimate stored at load (conservative: a big index
-        with a rare-term query still takes the safe tier — correct either
-        way, and the per-probe cost of estimating the pruned subset would
-        exceed the saving). ``after`` = the ES search_after keyset cursor
-        (score, doc_id) of the previous page's last hit — deep pagination
-        without the from/size prefix re-rank (:func:`_bm25_score_agg`)."""
-        if self.stats_scalars is not None:
-            if (
-                self.index_bytes is not None
-                and self.index_bytes < PROBE_WINDOW_MAX_BYTES
-            ):
-                n_docs, sum_dl = self.stats_scalars
-                return bm25_from_postings_small(
-                    self.postings, n_docs, sum_dl, query, k=k, after=after,
-                )
-            return bm25_from_postings(
-                self.postings, self.stats_scalars, query, k=k, after=after,
-            )
+        """BM25 top-k probe through :func:`bm25_from_postings` — one SQL
+        statement over the bucket-pruned postings with :attr:`corpus_stats`
+        as literals; the same rows from a loaded layout and an in-memory
+        build of the same corpus. ``after`` = the ES search_after keyset
+        cursor (score, doc_id) of the previous page's last hit — deep
+        pagination without the from/size prefix re-rank
+        (:func:`_bm25_score_agg_sql`)."""
+        n_docs, sum_dl = self.corpus_stats
         return bm25_from_postings(
-            self.postings, self.stats, query, k=k, after=after,
+            self.postings, n_docs, sum_dl, query, k=k, after=after,
         )
 
     def more_like_this(
@@ -2645,11 +2610,11 @@ class SearchIndex:
         min_doc_freq: int = 1,
     ) -> DataFrame:
         """Related-docs probe from the index — ES more_like_this against
-        the persisted postings (see :func:`more_like_this_from_postings`);
-        output identical to the corpus-scan form."""
-        stats = self.stats_scalars if self.stats_scalars is not None else self.stats
+        the postings (see :func:`more_like_this_from_postings`), scored by
+        :func:`bm25_from_postings` with :attr:`corpus_stats`; output
+        identical to the corpus-scan form."""
         return more_like_this_from_postings(
-            self.postings, stats, src_doc_id, k=k,
+            self.postings, self.corpus_stats, src_doc_id, k=k,
             max_query_terms=max_query_terms,
             min_term_freq=min_term_freq, min_doc_freq=min_doc_freq,
         )
@@ -2662,12 +2627,11 @@ class SearchIndex:
         prefix_length: int = 0,
     ) -> DataFrame:
         """Misspelling-tolerant probe — ES `match` with fuzziness=AUTO
-        against the persisted postings (see
-        :func:`fuzzy_match_from_postings`); output identical to the
-        corpus-scan :func:`fuzzy_match_search`."""
-        stats = self.stats_scalars if self.stats_scalars is not None else self.stats
+        against the postings (see :func:`fuzzy_match_from_postings`),
+        scored by :func:`bm25_from_postings` with :attr:`corpus_stats`;
+        output identical to the corpus-scan :func:`fuzzy_match_search`."""
         return fuzzy_match_from_postings(
-            self.postings, stats, query, k=k,
+            self.postings, self.corpus_stats, query, k=k,
             max_expansions=max_expansions, prefix_length=prefix_length,
             vocab=self.vocab,
         )
@@ -2675,12 +2639,12 @@ class SearchIndex:
     def prefix_search(self, query: str, k: int = 10,
                       max_expansions: int = 50) -> DataFrame:
         """Search-as-you-type probe — ES `match_bool_prefix` against the
-        persisted postings with the last token expanded against the terms
-        dictionary (see :func:`prefix_search_from_postings`); output
+        postings with the last token expanded against the terms dictionary
+        (see :func:`prefix_search_from_postings`), scored by
+        :func:`bm25_from_postings` with :attr:`corpus_stats`; output
         identical to the corpus-scan :func:`prefix_search`."""
-        stats = self.stats_scalars if self.stats_scalars is not None else self.stats
         return prefix_search_from_postings(
-            self.postings, stats, query, k=k,
+            self.postings, self.corpus_stats, query, k=k,
             max_expansions=max_expansions, vocab=self.vocab,
         )
 
@@ -2811,7 +2775,7 @@ class SearchIndex:
             ),
             lambda: _write_vocab(merged_vocab, path),
         )
-        n_docs, sum_dl = prev.stats_scalars
+        n_docs, sum_dl = prev.corpus_stats
         schemas = {
             name: _file_schema(frame)
             for name, frame in (

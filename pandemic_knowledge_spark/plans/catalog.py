@@ -3892,8 +3892,10 @@ def search_page_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3+X4 over the PERSISTED index path (SURVEY §4.2): build the posting
     tables (bucket-partitioned term → (doc, tf, dl) lists + per-doc lengths
     summed to the corpus stats — operators.search.build_postings), score the page purely from
-    postings (bm25_from_postings: bucket partition-pruning + term filter,
-    NO corpus tokenize at query time), then join back for display text and
+    postings (bm25_from_postings, the one postings scorer: bucket
+    partition-pruning + term filter, window df in the same scan, the
+    build's (n_docs, sum_dl) collected once as integer literals, NO
+    corpus tokenize at query time), then join back for display text and
     highlighting. Same oracle as search_page_highlighted proves the indexed
     probe is bit-identical to the direct corpus scorer — exactly the
     ES-index/news-app split: indexing at ingest, probing per keystroke."""

@@ -28,6 +28,14 @@ from pyspark.sql.types import (
     StructType,
 )
 
+# near_dup_verdicts: the one mark-stream rollup (near_dup_mark uses it
+# too, so the pinned stream == batch equivalence cannot drift), re-exported
+# beside the stream it rolls up
+from pandemic_knowledge_spark.operators.dedup import (  # noqa: F401
+    band_rows_rowlocal,
+    near_dup_verdicts,
+)
+
 RUNNING_TOTALS_OUTPUT = StructType(
     [
         StructField("user_id", LongType()),
@@ -278,7 +286,6 @@ def near_dup_mark_stateful(
     id-ordered, which is exactly stream_dedup_first's (ts, event_id)
     contract with doc_id as the arrival proxy.
     """
-    from pandemic_knowledge_spark.operators.dedup import band_rows_rowlocal
 
     def update(
         key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -306,16 +313,3 @@ def near_dup_mark_stateful(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def near_dup_verdicts(marks: DataFrame) -> DataFrame:
-    """Roll the mark stream up to per-doc verdicts (doc_id, first_ref,
-    is_dup) — delegates to THE one rollup definition in operators.dedup
-    (near_dup_mark uses the same code path, so the pinned stream ≡ batch
-    equivalence cannot drift). min() is idempotent over replayed marks,
-    so at-least-once sinks are safe."""
-    from pandemic_knowledge_spark.operators.dedup import (
-        near_dup_verdicts as _verdicts,
-    )
-
-    return _verdicts(marks)

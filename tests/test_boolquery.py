@@ -333,7 +333,7 @@ def test_indexed_door_counts_empty_docs_like_corpus_scan(spark, tmp_path):
     probed = idx.bool_search(**spec).collect()
     assert [tuple(r) for r in probed] == [tuple(r) for r in scan]
     assert len(scan) > 0
-    # the plain BM25 probe path agrees too (stats_scalars from meta)
+    # the plain BM25 probe path agrees too (corpus_stats from meta)
     s = bm25_search(docs, "doc_id", "text", "spark stream", k=10).collect()
     p = idx.search("spark stream", k=10).collect()
     assert [tuple(r) for r in p] == [tuple(r) for r in s]

@@ -132,7 +132,7 @@ def test_more_like_this_index_probe_matches_corpus_scan(spark, sf_dir, tmp_path)
         via_build = [
             (r.doc_id, r.score)
             for r in more_like_this_from_postings(
-                idx.postings, idx.stats, src, k=10, min_doc_freq=2
+                idx.postings, idx.corpus_stats, src, k=10, min_doc_freq=2
             ).collect()
         ]
         via_loaded = [
@@ -141,7 +141,7 @@ def test_more_like_this_index_probe_matches_corpus_scan(spark, sf_dir, tmp_path)
         ]
         assert direct == via_build == via_loaded and len(direct) > 0, src
     # unknown source: empty from the index path too
-    assert more_like_this_from_postings(idx.postings, idx.stats, 10**9).count() == 0
+    assert more_like_this_from_postings(idx.postings, idx.corpus_stats, 10**9).count() == 0
 
 
 def test_more_like_this_unknown_source_is_empty(spark):
@@ -372,47 +372,70 @@ def test_search_index_parquet_roundtrip_prunes_partitions(spark, tmp_path):
     assert "PartitionFilters: [bucket" in plan.replace("PartitionFilters: [isnotnull(bucket", "PartitionFilters: [bucket") or "bucket#" in plan.split("PartitionFilters")[1].split("]")[0]
 
 
-def test_search_index_probe_tiers_and_eager_stats(spark, tmp_path, monkeypatch):
-    """Probe-tier dispatch regression pin (the r4 probe-latency bug):
+def test_search_index_probe_tiers_and_eager_stats(spark, tmp_path):
+    """One postings scorer for every handle kind (the r4 probe-latency
+    regression pin, kept):
 
-    1. load() derives corpus stats ONCE, eagerly — the probe plan must not
-       re-aggregate the whole postings table per query (exactly one parquet
-       scan in the small-tier plan, and it carries the bucket partition
-       filter).
-    2. A small loaded index takes the single-scan window tier; forcing the
-       gate to 0 bytes flips to the broadcast-df scale tier; both tiers
-       return identical rows.
-    3. The eager (n_docs, sum_dl) scalars equal the full derivation.
+    1. An in-memory build, cached and uncached, and its saved-and-loaded
+       layout all plan ``search`` as the one window statement: a
+       ``Window`` over exactly one postings scan (the corpus stats are
+       literals, never re-derived per query; on the loaded layout the scan
+       carries the bucket partition filter) and no df broadcast.
+    2. All of them return the same rows.
+    3. The build's (n_docs, sum_dl) integers equal the record's — which
+       save() summed from the written doc_ids — and a from-scratch
+       derivation.
     """
+    from pandemic_knowledge_spark.functions.text import tokenize
     from pandemic_knowledge_spark.operators.search import SearchIndex
     from pandemic_knowledge_spark.tables import load
 
     docs = load(spark, "/root/testdata/sf0.001", "documents")
-    SearchIndex.build(docs, "doc_id", "text", cache=False).save(str(tmp_path / "idx"))
-    idx = SearchIndex.load(spark, str(tmp_path / "idx"))
+    base = docs.select(F.size(tokenize("text")).alias("dl"))
+    exp = tuple(base.agg(F.count(F.lit(1)), F.sum("dl")).collect()[0])
+    q = "spark join stream window"
+    got = []
+    for cache in (True, False):
+        built = SearchIndex.build(docs, "doc_id", "text", cache=cache)
+        path = str(tmp_path / f"idx_{cache}")
+        built.save(path)
+        loaded = SearchIndex.load(spark, path)
+        assert built.corpus_stats == loaded.corpus_stats == exp
+        for idx in (built, loaded):
+            out = idx.search(q, k=8)
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert "Window" in plan
+            assert "Broadcast" not in plan
+            # a cached build's relation prints the plan it cached as well
+            cached = idx is built and cache
+            assert plan.count("InMemoryTableScan" if cached else "Scan parquet") == 1
+            if idx is loaded:
+                assert "PartitionFilters: [bucket" in plan
+            got.append(out.collect())
+        if cache:
+            # a probe leaves the build's cache in place for the next one
+            again = built.search(q, k=8)._jdf.queryExecution().executedPlan()
+            assert "InMemoryTableScan" in again.toString()
+            for frame in (built.postings, built.vocab, built.doc_ids):
+                frame.unpersist()
+    assert got[0] and all(rows == got[0] for rows in got)
 
-    # eager stats match a from-scratch derivation
-    n_docs, sum_dl = idx.stats_scalars
-    from pandemic_knowledge_spark.functions.text import tokenize
 
-    base = docs.select(F.col("doc_id"), F.size(tokenize("text")).alias("dl"))
-    exp = base.agg(F.count(F.lit(1)), F.sum("dl")).collect()[0]
-    assert (n_docs, sum_dl) == (exp[0], exp[1])
+def test_empty_build_probes_return_no_rows(spark):
+    """An in-memory build over an empty corpus has corpus stats (0, 0);
+    every probe through the one scorer plans and returns no rows."""
+    from pandemic_knowledge_spark.operators.search import SearchIndex
 
-    q = "virus outbreak"
-    small = idx.search(q, k=8)
-    plan = small._jdf.queryExecution().executedPlan().toString()
-    assert "Window" in plan  # small tier selected for a tiny index
-    assert plan.count("Scan parquet") == 1  # stats folded, not re-derived
-
-    from pandemic_knowledge_spark.operators import search as search_mod
-
-    monkeypatch.setattr(search_mod, "PROBE_WINDOW_MAX_BYTES", 0)
-    big = idx.search(q, k=8)
-    big_plan = big._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in big_plan  # scale tier: broadcast df, no
-    # posting-row shuffle by term
-    assert big.collect() == small.collect()
+    docs = spark.createDataFrame([], "doc_id long, text string")
+    idx = SearchIndex.build(docs, "doc_id", "text", cache=False)
+    assert idx.corpus_stats == (0, 0)
+    for out in (
+        idx.search("virus", k=3),
+        idx.fuzzy_search("virus"),
+        idx.prefix_search("vir"),
+        idx.more_like_this(1),
+    ):
+        assert out.collect() == [] and out.columns == ["doc_id", "score"]
 
 
 def test_spark_crc32_matches_python_bucket(spark):
@@ -480,7 +503,7 @@ def test_search_index_append_save_equals_rebuild(spark, sf_dir, tmp_path):
     SearchIndex.build(old, "doc_id", "text", cache=False).save(path)
     updated = SearchIndex.append_save(spark, path, new)
     full = SearchIndex.build(docs, "doc_id", "text", cache=False)
-    assert updated.stats_scalars == tuple(full.stats.collect()[0])
+    assert updated.corpus_stats == full.corpus_stats
     q = "virus outbreak"
     assert updated.search(q, k=8).collect() == full.search(q, k=8).collect()
 
@@ -504,7 +527,7 @@ def test_search_index_append_save_is_idempotent_and_first_wins(
     mutated = new.limit(3).withColumn("text", F.concat(F.col("text"), F.lit(" extra")))
     updated = SearchIndex.append_save(spark, path, mutated)
     full = SearchIndex.build(docs, "doc_id", "text", cache=False)
-    assert updated.stats_scalars == tuple(full.stats.collect()[0])
+    assert updated.corpus_stats == full.corpus_stats
     q = "virus outbreak"
     assert updated.search(q, k=8).collect() == full.search(q, k=8).collect()
     # postings hold exactly one (doc, term) row set per doc
@@ -625,7 +648,7 @@ def test_fuzzy_index_probe_matches_corpus_scan(spark, sf_dir, tmp_path):
         via_build = [
             (r.doc_id, r.score)
             for r in fuzzy_match_from_postings(
-                idx.postings, idx.stats, q, k=10, vocab=idx.vocab
+                idx.postings, idx.corpus_stats, q, k=10, vocab=idx.vocab
             ).collect()
         ]
         via_loaded = [
@@ -634,7 +657,7 @@ def test_fuzzy_index_probe_matches_corpus_scan(spark, sf_dir, tmp_path):
         assert direct == via_build == via_loaded and len(direct) > 0, q
     # a query with no in-band expansion anywhere: empty, right schema
     none = fuzzy_match_from_postings(
-        idx.postings, idx.stats, "zzzzzzzzzz", vocab=idx.vocab
+        idx.postings, idx.corpus_stats, "zzzzzzzzzz", vocab=idx.vocab
     )
     assert none.count() == 0 and none.columns == ["doc_id", "score"]
 

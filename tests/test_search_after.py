@@ -1,7 +1,8 @@
 """ES ``search_after`` keyset pagination (r8 verdict task #4): page-N by
 cursor equals page-N by offset on the total (score DESC, doc_id) order,
-through every tier (direct scan, broadcast-df postings probe, window-tier
-probe, Engine facade), and the cursor plan carries no growing offset."""
+through every door (direct scan, the postings scorer over a loaded layout
+and over an in-memory build, Engine facade), and the cursor plan carries
+no growing offset."""
 
 from __future__ import annotations
 
@@ -49,30 +50,22 @@ def test_cursor_walk_equals_offset_pages_direct_scan(spark, sf_dir):
     ]
 
 
-def test_cursor_walk_equals_offset_pages_indexed_both_tiers(
-    spark, sf_dir, tmp_path, monkeypatch
-):
+def test_cursor_walk_equals_offset_pages_loaded_and_built(spark, sf_dir, tmp_path):
+    """Both handle kinds — a loaded layout and an in-memory build — page by
+    cursor exactly as by offset, and agree with each other."""
     docs = load(spark, sf_dir, "documents")
     path = str(tmp_path / "sa_idx")
-    SearchIndex.build(docs, "doc_id", "text", cache=False).save(path)
-    idx = SearchIndex.load(spark, path)
-    offset_pages = _pages_by_offset(lambda n: idx.search(QUERY, k=n), 3)
-
-    # whichever tier the size gate picked
-    got = _walk_by_cursor(lambda c: idx.search(QUERY, k=K, after=c).collect(), 3)
-    assert [list(map(tuple, p)) for p in got] == [
-        list(map(tuple, p)) for p in offset_pages
-    ]
-
-    # force the OTHER tier by flipping the window gate
-    import pandemic_knowledge_spark.operators.search as search_mod
-
-    small = (idx.index_bytes or 0) < search_mod.PROBE_WINDOW_MAX_BYTES
-    monkeypatch.setattr(search_mod, "PROBE_WINDOW_MAX_BYTES", 0 if small else 1 << 60)
-    got2 = _walk_by_cursor(lambda c: idx.search(QUERY, k=K, after=c).collect(), 3)
-    assert [list(map(tuple, p)) for p in got2] == [
-        list(map(tuple, p)) for p in offset_pages
-    ]
+    built = SearchIndex.build(docs, "doc_id", "text", cache=False)
+    built.save(path)
+    loaded = SearchIndex.load(spark, path)
+    walks = []
+    for idx in (loaded, built):
+        offset_pages = _pages_by_offset(lambda n: idx.search(QUERY, k=n), 3)
+        got = _walk_by_cursor(lambda c: idx.search(QUERY, k=K, after=c).collect(), 3)
+        pages = [list(map(tuple, p)) for p in offset_pages]
+        assert [list(map(tuple, p)) for p in got] == pages
+        walks.append(pages)
+    assert walks[0] == walks[1]
 
 
 def test_engine_facade_pages_past_its_own_search(spark, sf_dir):

@@ -73,11 +73,11 @@ def test_save_writes_vocab_docids_meta_sidecars(spark, tmp_path):
     assert os.path.isdir(f"{path}/doc_ids")
     with open(f"{path}/meta.json", encoding="utf-8") as f:
         meta = json.load(f)
-    want = SearchIndex.build(docs, "doc_id", "text", cache=False).stats.collect()[0]
+    want_n, want_sum = SearchIndex.build(docs, "doc_id", "text", cache=False).corpus_stats
     schemas = meta.pop("schemas")
     assert meta == {
-        "n_docs": want["n_docs"],
-        "sum_dl": want["sum_dl"],
+        "n_docs": want_n,
+        "sum_dl": want_sum,
         "fingerprint": _postings_fingerprint(spark.read.parquet(f"{path}/postings")),
         "pos_fingerprint": None,
     }
@@ -94,7 +94,7 @@ def test_save_writes_vocab_docids_meta_sidecars(spark, tmp_path):
     from_sidecar = idx.vocab.select("term", "df").collect()
     assert sorted(map(tuple, from_sidecar)) == sorted(map(tuple, from_postings))
     # doc_ids sidecar = one row per doc with its dl norm
-    n_docs, sum_dl = idx.stats_scalars
+    n_docs, sum_dl = idx.corpus_stats
     assert idx.doc_ids.count() == n_docs
     assert idx.doc_ids.agg(F.sum("dl")).collect()[0][0] == sum_dl
 
@@ -198,9 +198,7 @@ def test_load_repairs_sidecars_after_simulated_crash(spark, tmp_path):
     )
     idx = SearchIndex.load(spark, path)  # must repair, not trust the record
     full = SearchIndex.build(docs, "doc_id", "text", cache=False)
-    assert idx.stats_scalars == tuple(
-        full.stats.collect()[0][i] for i in range(2)
-    )
+    assert idx.corpus_stats == full.corpus_stats
     fq = "a sparc strean"
     assert (
         idx.fuzzy_search(fq, k=10).collect()
@@ -219,7 +217,7 @@ def test_append_save_refreshes_sidecars_incrementally(spark, tmp_path):
     updated = SearchIndex.append_save(spark, inc, new)
     SearchIndex.build(docs, "doc_id", "text", cache=False).save(full)
     want = SearchIndex.load(spark, full)
-    assert updated.stats_scalars == want.stats_scalars
+    assert updated.corpus_stats == want.corpus_stats
     assert sorted(map(tuple, updated.vocab.select("term", "df").collect())) == sorted(
         map(tuple, want.vocab.select("term", "df").collect())
     )
@@ -247,7 +245,7 @@ def test_append_save_creates_index_where_no_postings_committed(spark, tmp_path):
     full = str(tmp_path / "full")
     SearchIndex.build(docs, "doc_id", "text", cache=False).save(full)
     want = SearchIndex.load(spark, full)
-    assert created.stats_scalars == want.stats_scalars
+    assert created.corpus_stats == want.corpus_stats
     q = "virus outbreak"
     assert created.search(q, k=8).collect() == want.search(q, k=8).collect()
 
@@ -323,7 +321,7 @@ def test_load_starts_no_job_and_append_writes_one_file_per_bucket_at_most(
     j0 = _next_job_id(spark)
     idx = SearchIndex.load(spark, path)
     assert _next_job_id(spark) == j0
-    assert idx.stats_scalars == updated.stats_scalars
+    assert idx.corpus_stats == updated.corpus_stats
 
 
 def _half_saved(spark, tmp_path):
@@ -438,7 +436,7 @@ def test_append_save_failed_postings_write_changes_nothing(
         assert f.read() == record
     updated = SearchIndex.append_save(spark, path, new)
     full = SearchIndex.build(docs, "doc_id", "text", cache=False)
-    assert updated.stats_scalars == tuple(full.stats.collect()[0])
+    assert updated.corpus_stats == full.corpus_stats
     assert _crash_probes(updated) == _crash_probes(full)
 
 
@@ -467,7 +465,7 @@ def test_append_save_failed_vocab_write_after_postings_commit_is_repaired(
     assert stale != _postings_fingerprint(spark.read.parquet(f"{path}/postings"))
     repaired = SearchIndex.load(spark, path)
     full = SearchIndex.build(docs, "doc_id", "text", cache=False)
-    assert repaired.stats_scalars == tuple(full.stats.collect()[0])
+    assert repaired.corpus_stats == full.corpus_stats
     assert _crash_probes(repaired) == _crash_probes(full)
 
 
@@ -543,7 +541,7 @@ def test_inmemory_build_caches_dictionary_for_interactive_probes(spark):
             == term_suggest(docs, "doc_id", "text", st).collect()
         )
     finally:
-        for frame in (idx.postings, idx.stats, idx.vocab, idx.doc_ids):
+        for frame in (idx.postings, idx.vocab, idx.doc_ids):
             frame.unpersist()
 
 
