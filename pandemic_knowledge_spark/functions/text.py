@@ -14,7 +14,7 @@ python code path, guaranteeing the two sides can't drift.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 TOKEN_RE = "[a-z0-9]+"
@@ -41,6 +41,19 @@ def tokenize(col: Column | str) -> Column:
 def sql_ident(name: str) -> str:
     """A column name as a backtick-quoted Spark SQL identifier."""
     return "`" + name.replace("`", "``") + "`"
+
+
+def sql_over(text: str, args: dict | None = None, **frames: DataFrame) -> DataFrame:
+    """``spark.sql(text, args, **frames)`` — the one door the SQL-text plan
+    builders use — with each frame handed over as a ``true`` filter of
+    itself. spark.sql drops the temp view of every frame it is handed
+    after the statement, and dropping a view uncaches the cached data
+    whose plan is the view's, so a caller's cached frame handed over as-is
+    (or as ``select("*")``) would lose its cache. A filter over it only
+    reads the cache, and the optimizer removes the filter, so the
+    statement plans as before."""
+    spark = next(iter(frames.values())).sparkSession
+    return spark.sql(text, args, **{n: f.where("true") for n, f in frames.items()})
 
 
 def spark_sql_tokenize(col_sql: str) -> str:

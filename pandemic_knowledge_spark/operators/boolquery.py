@@ -103,6 +103,7 @@ from pyspark.sql import functions as F
 
 from pandemic_knowledge_spark.functions.text import (
     query_terms,
+    sql_over,
     sql_tokenize,
     tokenize,
 )
@@ -1748,7 +1749,7 @@ def _index_match_frame(index, terms, min_terms: int = 1) -> DataFrame:
     postings hold one row per (term, doc)."""
     n_docs, sum_dl = index.corpus_stats
     having = f" HAVING count(1) >= {int(min_terms)}" if min_terms > 1 else ""
-    return index.postings.sparkSession.sql(
+    return sql_over(
         "SELECT doc_id, sum(term_score) AS cscore FROM "
         f"{_postings_scores_sql(n_docs, sum_dl)} GROUP BY doc_id{having}",
         rows=_query_rows(index.postings, " ".join(terms)),

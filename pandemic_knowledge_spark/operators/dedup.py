@@ -47,6 +47,7 @@ from pandemic_knowledge_spark.functions.text import (
     spark_sql_md5_int,
     spark_sql_tokenize,
     sql_ident,
+    sql_over,
     tokenize,
 )
 
@@ -158,7 +159,7 @@ def minhash_signature_agg(
     the nested-lambda version even locally. One SQL statement
     (:data:`_PERM_MINS_SQL` over :func:`_shingle_rows_sql`).
     """
-    return docs.sparkSession.sql(
+    return sql_over(
         f"SELECT doc_id, {_PERM_MINS_SQL} "
         f"FROM ({_shingle_rows_sql(id_col, text_col, k)}) GROUP BY doc_id",
         docs=docs,
@@ -224,8 +225,8 @@ def minhash_base(
     One SQL statement (tokenize, the k-gram zip_with, the md5 hash, then
     collect_set and the 16 minima): the ingest stream builds it every
     micro-batch, and as Column calls it took about 1,440 py4j round trips
-    (0.26-0.36 s) to build; as one statement it takes 7."""
-    return docs.sparkSession.sql(
+    (0.26-0.36 s) to build; as one statement it takes 8."""
+    return sql_over(
         _minhash_base_sql(id_col, text_col, k), docs=docs
     )
 
@@ -244,7 +245,7 @@ def _band_rows_sql(src: str, carry: tuple = ()) -> str:
 def _band_rows(base: DataFrame, *carry: str) -> DataFrame:
     """base → (doc_id, *carry, band, bkey): one row per LSH band bucket,
     each carrying its doc's ``carry`` columns."""
-    return base.sparkSession.sql(_band_rows_sql("{base}", carry), base=base)
+    return sql_over(_band_rows_sql("{base}", carry), base=base)
 
 
 def band_rows_rowlocal(
@@ -281,7 +282,7 @@ def band_rows_rowlocal(
         f"FROM ({toks}) WHERE size(__toks) >= {k}"
     )
     sig = f"(SELECT doc_id, {_SET_PERM_MINS_SQL} FROM ({hs}))"
-    return docs.sparkSession.sql(_band_rows_sql(sig), docs=docs)
+    return sql_over(_band_rows_sql(sig), docs=docs)
 
 
 def near_dup_mark(
@@ -307,7 +308,7 @@ def near_dup_mark(
     base = _minhash_base_sql(
         id_col, text_col, k, where=f" WHERE {sql_ident(id_col)} IS NOT NULL"
     )
-    marked = docs.sparkSession.sql(
+    marked = sql_over(
         "SELECT doc_id, min(doc_id) OVER (PARTITION BY band, bkey) AS band_ref "
         f"FROM ({_band_rows_sql(f'({base})')})",
         docs=docs,
@@ -422,7 +423,7 @@ def pairs_from_base(base: DataFrame, threshold: float) -> DataFrame:
     statement. The ONE candidate-construction definition
     (:func:`_cand_sql`, :func:`_verify_sql`) — the batch forms share it,
     so a banding or verification change cannot fork them."""
-    return base.sparkSession.sql(
+    return sql_over(
         _verify_sql(f"({_cand_sql('{base}')})", "{base}", threshold), base=base
     )
 
@@ -458,13 +459,12 @@ def minhash_lsh_pairs_pruned(
     # same concurrent-stage race as the single-pass base — the band
     # self-join reads sigs through two stages of one job; the wave-8 A/B
     # on the single-pass form measured lazy losing, same shape here).
-    spark = docs.sparkSession
     sigs = minhash_signature_agg(docs, id_col, text_col, k).localCheckpoint(
         eager=True
     )
     # eager (r14): consumed by the candidate ids' two union legs and the
     # verify join — concurrent stages of one job (wave-8 A/B shape)
-    cand = spark.sql(_cand_sql("{sigs}"), sigs=sigs).localCheckpoint(eager=True)
+    cand = sql_over(_cand_sql("{sigs}"), sigs=sigs).localCheckpoint(eager=True)
     hs = (
         f"(SELECT doc_id, collect_set(h) AS hs FROM ("
         f"{_shingle_rows_sql(id_col, text_col, k)}) "
@@ -473,7 +473,7 @@ def minhash_lsh_pairs_pruned(
         "UNION ALL SELECT doc_b AS doc_id FROM {cand})) USING (doc_id) "
         "GROUP BY doc_id)"
     )
-    return spark.sql(_verify_sql("{cand}", hs, threshold), docs=docs, cand=cand)
+    return sql_over(_verify_sql("{cand}", hs, threshold), docs=docs, cand=cand)
 
 
 PRUNED_THRESHOLD_BYTES = 1 << 30  # 1 GiB of corpus ≈ the page-cache frontier
@@ -528,7 +528,7 @@ def minhash_probe_pairs(
     One SQL statement (banding, ``hist``, the union with the store, the
     equi-join, the Jaccard filter and the distinct): the ingest stream
     builds it every micro-batch, and as Column calls it took 1,600-2,800
-    py4j round trips (0.6-0.8 s) to build; as one statement it takes 7-9."""
+    py4j round trips (0.6-0.8 s) to build; as one statement it takes 8-11."""
 
     def bands(src: str, hist: str) -> str:
         return _band_rows_sql(f"(SELECT *, {hist} AS hist FROM {src})", ("hs", "hist"))
@@ -539,7 +539,7 @@ def minhash_probe_pairs(
     if store is not None:
         pool = f"{probe} UNION ALL {bands('{store}', 'true')}"
         frames["store"] = store
-    return base.sparkSession.sql(
+    return sql_over(
         "SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b, b.hist AS hist "
         f"FROM ({probe}) a JOIN ({pool}) b ON a.band = b.band "
         "AND a.bkey = b.bkey AND (b.hist OR a.doc_id < b.doc_id) "

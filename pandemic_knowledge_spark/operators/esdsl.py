@@ -2333,8 +2333,9 @@ def _bucket_key(atype: str, body: dict, p: str) -> dict:
 def _split_sub_aggs(sub: dict, path: str):
     """A bucket's ``aggs`` dict → (inner bucket entry | None, pipeline
     entries, frame pipelines, cardinality pipelines, metric leaves). At
-    most ONE nested bucket level (the Kibana split-series shape); deeper
-    nesting raises with the JSON path."""
+    most ONE nested bucket per level (a second sibling bucket raises with
+    the JSON path); :func:`_bucket_agg` walks the nesting up to three
+    levels."""
     inner = None
     pipelines, frame_pipelines, card_pipelines, metrics = {}, {}, {}, {}
     for sname, sspec in (sub or {}).items():
@@ -2710,71 +2711,36 @@ def _apply_bucket_pipelines(grouped: DataFrame, pipelines: dict,
     return fr.drop(*drop)
 
 
-def _densify(grouped: DataFrame, step, ext=None, off=0.0) -> DataFrame:
+def _densify_per_parent(grouped: DataFrame, parent_cols: list, ikey: str,
+                        step, ext, off=0.0) -> DataFrame:
     """ES ``min_doc_count: 0`` gap buckets: left-join the bucket frame
     onto a DENSE key spine — every calendar/interval step between the
     first and last observed bucket exists, gaps with doc_count=0 and
-    NULL metrics (ES's empty-bucket shape). ``ext`` (extended_bounds)
-    widens the spine to at least [min, max] — least/greatest against the
-    data range, so it can only extend (ES's union rule), and an empty
-    frame still renders the requested window. The spine is ONE bounded
-    explode of the key range (never the fact table; ≤ tens of thousands
-    of rows for decades at day grain — the dense_daily_counts rationale,
-    generalized to every unit and to numeric intervals)."""
-    cols = grouped.columns
-    bounds = grouped.agg(F.min("key").alias("__lo"), F.max("key").alias("__hi"))
-    lo, hi = F.col("__lo"), F.col("__hi")
-    if ext is not None:
-        # least/greatest skip NULLs, so an all-gap (empty) frame falls
-        # back to the extended bounds alone
-        lo, hi = F.least(lo, ext[0]), F.greatest(hi, ext[1])
-    if isinstance(step, str):  # calendar interval
-        spine = bounds.select(
-            F.explode(F.sequence(lo, hi, F.expr(step))).alias("key")
-        )
-    else:  # numeric histogram: step over integer bucket indices
-        # (offset-anchored keys are off + i·step — subtracting the
-        # offset keeps the index integral)
-        spine = bounds.select(
-            F.explode(
-                F.sequence(
-                    F.round((lo - F.lit(off)) / step).cast("long"),
-                    F.round((hi - F.lit(off)) / step).cast("long"),
-                )
-            ).alias("__i")
-        ).select((F.col("__i") * F.lit(step) + F.lit(off)).alias("key"))
-    return (
-        spine.join(grouped, "key", "left")
-        .select(
-            "key",
-            F.coalesce(F.col("doc_count"), F.lit(0)).alias("doc_count"),
-            *[c for c in cols if c not in ("key", "doc_count")],
-        )
-    )
+    NULL metrics (ES's empty-bucket shape; ES also reports null
+    avg/min/max for empty buckets). ``ext`` (extended_bounds) widens the
+    spine to at least [min, max] — least/greatest against the data
+    range, so it can only extend (ES's union rule), and an empty frame
+    still renders the requested window.
 
-
-def _densify_per_parent(grouped: DataFrame, parent_cols: list, ikey: str,
-                        step, ext, off=0.0) -> DataFrame:
-    """Per-parent dense spine for ``min_doc_count: 0`` INSIDE a nested
-    bucket — the Kibana split-series default (a terms split whose
-    per-series date_histogram zero-fills its gaps). ES treats each
-    parent's sub-histogram as an independent aggregation instance, so
-    the spine spans each parent's OWN [min, max] key range (widened by
-    ``extended_bounds`` when present — least/greatest, the union rule).
+    With ``parent_cols`` (the Kibana split-series default: a terms split
+    whose per-series date_histogram zero-fills its gaps) the spine is PER
+    PARENT: ES treats each parent's sub-histogram as an independent
+    aggregation instance, so each spans its OWN [min, max] key range.
+    With none it is the one spine of a single-level histogram.
 
     One grouped reduction over the already-bucket-count-sized frame
-    computes the per-parent bounds, one bounded explode builds all
-    spines (|parents| × |buckets| rows — dashboard-sized, never the
-    fact table), and one left join fills the gaps: doc_count coalesces
-    to 0, metric columns stay NULL for gap rows (the single-level
-    :func:`_densify` convention — ES also reports null avg/min/max for
-    empty buckets)."""
+    computes the bounds, one bounded explode builds all spines
+    (|parents| × |buckets| rows — dashboard-sized, never the fact table;
+    ≤ tens of thousands of rows for decades at day grain, the
+    dense_daily_counts rationale), and one left join fills the gaps."""
     cols = grouped.columns
     bounds = grouped.groupBy(*parent_cols).agg(
         F.min(ikey).alias("__lo"), F.max(ikey).alias("__hi")
     )
     lo, hi = F.col("__lo"), F.col("__hi")
     if ext is not None:
+        # least/greatest skip NULLs, so an all-gap (empty) frame falls
+        # back to the extended bounds alone
         lo, hi = F.least(lo, ext[0]), F.greatest(hi, ext[1])
     if isinstance(step, str):  # calendar / fixed interval
         spine = bounds.select(
@@ -2782,7 +2748,8 @@ def _densify_per_parent(grouped: DataFrame, parent_cols: list, ikey: str,
             F.explode(F.sequence(lo, hi, F.expr(step))).alias(ikey),
         )
     else:  # numeric histogram: step over integer bucket indices
-        # (offset-anchored keys are off + i·step, as in _densify)
+        # (offset-anchored keys are off + i·step — subtracting the
+        # offset keeps the index integral)
         spine = bounds.select(
             *parent_cols,
             F.explode(
@@ -3820,358 +3787,18 @@ def _one_agg(filtered: DataFrame, name: str, spec: dict,
             conds.append((key, pred))
         return _predicate_buckets_agg(filtered, conds, sub, path)
 
-    outer = _bucket_key(atype, body, p)
-    (inner_entry, pipelines, frame_pipes, card_pipes,
-     metric_leaves) = _split_sub_aggs(sub, path)
-
-    if inner_entry is None:
-        # ----- single-level bucket: one scan, one grouped shuffle
-        card_specs = []
-        for pname, pbody in card_pipes.items():
-            # ES ``cumulative_cardinality`` — "distinct keys seen so
-            # far" (the total-users-to-date Kibana line). ES merges
-            # per-bucket HLL sketches; exactly and distributed it
-            # reduces to FIRST-SEEN buckets: a key contributes from the
-            # bucket of its first appearance onward, so the pipeline is
-            # one groupBy(field).min(key) aggregate + the SAME two-phase
-            # cumulative_sum machinery every other walk pipeline uses
-            # (operators.aggregates.cumulative_cardinality_daily, door
-            # form). buckets_path must name a sibling cardinality
-            # metric — that metric's field is the key being counted.
-            pp = f"{path}.aggs.{pname}"
-            ref = str(_req(pbody, "buckets_path", pp))
-            _reject_extras(pbody, {"buckets_path"}, pp)
-            sib = metric_leaves.get(ref)
-            if (not isinstance(sib, dict)
-                    or next(iter(sib), None) != "cardinality"):
-                _fail(f"{pp}.buckets_path",
-                      f"{ref!r} must name a sibling cardinality metric "
-                      "(its field is the key the cumulative count walks)")
-            if outer["order"] != "key":
-                _fail(pp, "cumulative_cardinality needs an ordered parent "
-                          "bucket (date_histogram or histogram)")
-            if outer.get("min_dc", 1) > 1:
-                _fail(pp, "cumulative_cardinality under min_doc_count "
-                          "> 1 is not implemented (ES walks the "
-                          "RETURNED buckets — a key first seen in a "
-                          "pruned bucket counts from its next "
-                          "appearance; the first-seen reduction here "
-                          "would drop it) — drop one")
-            card_specs.append(
-                (pname, _req(sib["cardinality"], "field", f"{pp}.field"))
-            )
-        rate_specs = []
-        for rname in list(metric_leaves):
-            rspec = metric_leaves[rname]
-            if not (isinstance(rspec, dict)
-                    and next(iter(rspec), None) == "rate"):
-                continue
-            # ES ``rate`` — per-calendar-unit normalized sum/count under
-            # a date_histogram parent (the Kibana per-day trend line on
-            # monthly buckets): value = Σfield (or doc_count) ÷ the
-            # bucket's span in `unit`s. The span is pure key arithmetic
-            # (key + 1 interval − key), so rate is a post-aggregation
-            # column on the bucket frame — no extra scan
-            # (operators.aggregates.rate_monthly, door form).
-            rb = rspec["rate"]
-            rp = f"{path}.aggs.{rname}.rate"
-            _reject_extras(rb, {"unit", "field"}, rp)
-            if atype != "date_histogram":
-                _fail(rp, "rate needs a date_histogram parent")
-            runit = str(_req(rb, "unit", rp))
-            punit = body.get("calendar_interval") or body.get(
-                "fixed_interval")
-            if runit != punit and (runit != "day"
-                                   or punit not in ("week", "month",
-                                                    "quarter", "year")):
-                _fail(f"{rp}.unit",
-                      "implemented rate units: the parent's own interval "
-                      "(span 1), or 'day' under a week/month/quarter/"
-                      "year parent")
-            fld = rb.get("field")
-            if fld is not None:
-                metric_leaves[f"__rs_{rname}"] = {"sum": {"field": fld}}
-            rate_specs.append((rname, fld, runit, punit))
-            del metric_leaves[rname]
-        m_aggs, m_finals, mads = _metric_cols(
-            metric_leaves, path, dtypes=dict(filtered.dtypes)
-        )
-        frame = filtered
-        if outer["pre"] is not None:
-            frame = frame.where(outer["pre"])
-        framed = frame.withColumn("key", outer["expr"])
-        grouped = (
-            framed.groupBy("key")
-            .agg(F.count(F.lit(1)).alias("doc_count"), *m_aggs)
-            .select("key", "doc_count", *m_finals)
-        )
-        grouped = _apply_mads(grouped, framed, ["key"], mads)
-        for pname, fld in card_specs:
-            # first-seen counts per bucket (new-keys frame is
-            # bucket-count-sized → broadcast onto the grouped frame),
-            # then the synthetic cumulative_sum below integrates it
-            firsts = (
-                framed.where(F.col(fld).isNotNull())
-                .groupBy(fld)
-                .agg(F.min("key").alias("key"))
-                .groupBy("key")
-                .agg(F.count(F.lit(1)).alias(f"__new_{pname}"))
-            )
-            grouped = grouped.join(F.broadcast(firsts), "key", "left")
-            grouped = grouped.withColumn(
-                f"__new_{pname}",
-                F.coalesce(F.col(f"__new_{pname}"), F.lit(0)),
-            )
-            pipelines[pname] = (
-                "cumulative_sum", {"buckets_path": f"__new_{pname}"}
-            )
-        if outer.get("dense"):
-            grouped = _densify(grouped, outer["step"], outer.get("ext"),
-                               off=outer.get("off", 0.0))
-            for pname, _ in card_specs:  # gap buckets add no new keys
-                grouped = grouped.withColumn(
-                    f"__new_{pname}",
-                    F.coalesce(F.col(f"__new_{pname}"), F.lit(0)),
-                )
-        for rname, fld, runit, punit in rate_specs:
-            if runit == punit:
-                span = F.lit(1.0)
-            else:  # day units under a coarser calendar parent
-                span = F.datediff(
-                    (F.col("key") + F.expr(_CAL_STEP[punit])).cast("date"),
-                    F.col("key").cast("date"),
-                ).cast("double")
-            base_col = (F.coalesce(F.col(f"__rs_{rname}"), F.lit(0))
-                        if fld is not None else F.col("doc_count"))
-            grouped = grouped.withColumn(
-                rname, F.round(base_col / span, 6)
-            )
-        if rate_specs:
-            grouped = grouped.drop(*[
-                f"__rs_{r}" for r, f, _, _ in rate_specs if f is not None
-            ])
-        if outer.get("min_dc", 1) > 1:
-            # ES terms min_doc_count: buckets below the threshold are
-            # pruned BEFORE the size cut (a rare-value floor); a plain
-            # filter on the already-aggregated bucket frame
-            grouped = grouped.where(
-                F.col("doc_count") >= F.lit(outer["min_dc"]))
-        if outer["order"] == "count":
-            # ES pipelines run over the RETURNED buckets, so the
-            # terms/grid size cut applies first (percent_of_sum under
-            # terms is the share among the top-size buckets, as Kibana
-            # renders it). A terms `order` spec redirects the ranking:
-            # _count asc/desc, _key, or a sibling METRIC column — the
-            # cut stays a top-k heap on the (bucket-count-sized)
-            # aggregated frame either way, never a fact-table sort.
-            spec_o = outer.get("order_spec")
-            if spec_o is None or spec_o == ("_count", "desc"):
-                sort_cols = [F.desc("doc_count"), F.asc("key")]
-            elif spec_o[0] == "_count":
-                sort_cols = [F.asc("doc_count"), F.asc("key")]
-            elif spec_o[0] == "_key":
-                sort_cols = [F.desc("key") if spec_o[1] == "desc"
-                             else F.asc("key")]
-            else:
-                tgt, dirn = spec_o
-                if tgt not in grouped.columns:
-                    _fail(f"{p}.order",
-                          f"{tgt!r} does not name a sibling metric "
-                          f"column (has {grouped.columns})")
-                c = F.col(tgt)
-                sort_cols = [c.desc() if dirn == "desc" else c.asc(),
-                             F.asc("key")]
-            grouped = grouped.orderBy(*sort_cols).limit(outer["size"])
-        grouped = _apply_bucket_pipelines(
-            grouped, pipelines, "key", [], outer, path
-        )
-        if card_specs:
-            grouped = grouped.drop(*[f"__new_{p}" for p, _ in card_specs])
-        grouped = _apply_frame_pipelines(grouped, frame_pipes, path)
-        if outer["order"] == "count":
-            return grouped
-        return grouped.orderBy("key")
-
-    # ----- two-level bucket-in-bucket (the Kibana split-series shape):
-    # ONE scan, ONE grouped shuffle on the composite key; the outer
-    # terms/grid size cut re-aggregates the (already bucket-count-sized)
-    # grouped frame for outer totals and semi-joins the winners back —
-    # never a second fact-table pass, never a global window. terms
-    # `order` (_count / _key, both directions — Kibana's "order by
-    # ascending count / alphabetical" split knobs) and min_doc_count > 1
-    # participate in each level's cut: order picks the sort of the
-    # re-aggregated totals frame (parents rank by their TOTAL like ES),
-    # min_doc_count prunes buckets below the floor BEFORE the size cut
-    # (the single-level precedent). Sibling-METRIC order targets stay
-    # loud: metrics cannot sit next to a nested bucket in this door.
-    iname, itype, ibody, isub = inner_entry
-    if outer.get("dense"):
-        _fail(p, "min_doc_count: 0 on a parent of a nested bucket is not "
-                 "implemented (the dense spine is single-level) — drop it "
-                 "or flatten the query")
-    if metric_leaves:
-        _fail(f"{path}.aggs",
-              "metric sub-aggs next to a nested bucket must live INSIDE "
-              "the nested bucket (one flat (outer, inner, metrics) table "
-              "per level is the door's output shape)")
-    if pipelines or frame_pipes or card_pipes:
-        _fail(f"{path}.aggs",
-              "pipeline sub-aggs next to a nested bucket must live INSIDE "
-              "the nested bucket (they window over the inner frame)")
-    inner = _bucket_key(itype, ibody, f"{path}.aggs.{iname}.{itype}")
-    if inner.get("dense") and inner.get("step") is None:
-        _fail(f"{path}.aggs.{iname}.{itype}",
-              "min_doc_count: 0 on a nested TERMS bucket (unmatched-"
-              "value buckets) is not implemented — only histogram "
-              "families densify")
-    (i_inner, i_pipelines, i_frame_pipes, i_card_pipes,
-     i_metrics) = _split_sub_aggs(isub, f"{path}.aggs.{iname}")
-    if i_card_pipes and i_inner is not None:
-        _fail(f"{path}.aggs.{iname}.aggs",
-              "cumulative_cardinality inside three-level nesting is "
-              "not implemented")
-    i_card_specs = []
-    for pname, pbody in i_card_pipes.items():
-        # per-parent EXACT cumulative_cardinality (r13 late wave — was
-        # loud): within each split value, a key contributes from the
-        # inner bucket of its first appearance in THAT parent onward
-        # (ES's independent-instance semantics) — one
-        # groupBy(parent, field).min(inner_key) reduction + the shared
-        # per-parent cumulative_sum walk; same shape as the proven
-        # single-level form, keyed by (parent, bucket).
-        pp = f"{path}.aggs.{iname}.aggs.{pname}"
-        ref = str(_req(pbody, "buckets_path", pp))
-        _reject_extras(pbody, {"buckets_path"}, pp)
-        sib = i_metrics.get(ref)
-        if (not isinstance(sib, dict)
-                or next(iter(sib), None) != "cardinality"):
-            _fail(f"{pp}.buckets_path",
-                  f"{ref!r} must name a sibling cardinality metric "
-                  "(its field is the key the cumulative count walks)")
-        if inner["order"] != "key":
-            _fail(pp, "cumulative_cardinality needs an ordered inner "
-                      "bucket (date_histogram or histogram)")
-        if inner.get("min_dc", 1) > 1:
-            _fail(pp, "cumulative_cardinality under min_doc_count > 1 "
-                      "is not implemented (pruned-bucket first-seen "
-                      "divergence — see the single-level guard)")
-        i_card_specs.append(
-            (pname, _req(sib["cardinality"], "field", f"{pp}.field"))
-        )
-    if i_inner is not None:
-        return _three_level_agg(filtered, outer, inner_entry, i_inner,
-                                i_pipelines, i_metrics, path, p,
-                                dtypes=dict(filtered.dtypes))
-    m_aggs, m_finals, mads = _metric_cols(
-        i_metrics, f"{path}.aggs.{iname}", dtypes=dict(filtered.dtypes)
-    )
-
-    ikey = f"{iname}_key"
-    frame = filtered
-    if outer["pre"] is not None:
-        frame = frame.where(outer["pre"])
-    if inner["pre"] is not None:
-        frame = frame.where(inner["pre"])
-    framed = (
-        frame.withColumn("key", outer["expr"])
-        .withColumn(ikey, inner["expr"])
-    )
-    grouped = (
-        framed.groupBy("key", ikey)
-        .agg(F.count(F.lit(1)).alias("doc_count"), *m_aggs)
-        .select("key", ikey, "doc_count", *m_finals)
-    )
-    grouped = _apply_mads(grouped, framed, ["key", ikey], mads)
-
-    if outer["order"] == "count":
-        # outer terms/grid: top-size keys by TOTAL doc_count (ES orders
-        # parents by their total, not any single child bucket); explicit
-        # `order` swaps the sort of this totals frame, min_doc_count
-        # prunes before the limit
-        totals = grouped.groupBy("key").agg(
-            F.sum("doc_count").alias("__total")
-        )
-        if outer.get("min_dc", 1) > 1:
-            totals = totals.where(F.col("__total") >= outer["min_dc"])
-        totals = totals.orderBy(
-            *_nested_order_cols(outer.get("order_spec"), "__total", "key", p)
-        ).limit(outer["size"])
-        grouped = grouped.join(
-            F.broadcast(totals.select("key")), "key", "left_semi"
-        )
-    for pname, fld in i_card_specs:
-        # per-(parent, key-value) first-seen counts — the new-keys
-        # frame is bucket-count-sized, broadcast onto the grouped
-        # frame; the synthetic per-parent cumulative_sum integrates it
-        firsts = (
-            framed.where(F.col(fld).isNotNull())
-            .groupBy("key", fld)
-            .agg(F.min(ikey).alias(ikey))
-            .groupBy("key", ikey)
-            .agg(F.count(F.lit(1)).alias(f"__new_{pname}"))
-        )
-        grouped = grouped.join(F.broadcast(firsts), ["key", ikey], "left")
-        grouped = grouped.withColumn(
-            f"__new_{pname}",
-            F.coalesce(F.col(f"__new_{pname}"), F.lit(0)),
-        )
-        i_pipelines[pname] = (
-            "cumulative_sum", {"buckets_path": f"__new_{pname}"}
-        )
-    if inner.get("dense"):
-        # ES min_doc_count: 0 inside a split: each parent's histogram
-        # is an independent sub-aggregation instance, so the spine is
-        # PER PARENT — that parent's own [min, max] key range (union
-        # extended_bounds), zero-filled. Runs AFTER the outer size cut
-        # (spines only for surviving parents) and BEFORE pipelines
-        # (derivative/moving_fn step over the dense spine, ES order).
-        grouped = _densify_per_parent(
-            grouped, ["key"], ikey, inner["step"], inner.get("ext"),
-            off=inner.get("off", 0.0),
-        )
-        for pname, _ in i_card_specs:  # gap buckets add no new keys
-            grouped = grouped.withColumn(
-                f"__new_{pname}",
-                F.coalesce(F.col(f"__new_{pname}"), F.lit(0)),
-            )
-    if inner.get("min_dc", 1) > 1:
-        grouped = grouped.where(F.col("doc_count") >= inner["min_dc"])
-    if inner["order"] == "count" and inner["size"] is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("key").orderBy(
-            *_nested_order_cols(inner.get("order_spec"), "doc_count",
-                                ikey, f"{path}.aggs.{iname}.{itype}")
-        )
-        grouped = (
-            grouped.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") <= inner["size"])
-            .drop("__rn")
-        )
-    grouped = _apply_bucket_pipelines(
-        grouped, i_pipelines, ikey, ["key"], inner,
-        f"{path}.aggs.{iname}",
-    )
-    if i_card_specs:
-        grouped = grouped.drop(*[f"__new_{n}" for n, _ in i_card_specs])
-    if i_frame_pipes:
-        # bucket_script/bucket_selector are row-local (they apply
-        # unchanged); bucket_sort pages PER PARENT via one window over
-        # the bucket-count-sized frame (r13 late wave — was loud)
-        grouped = _apply_frame_pipelines(
-            grouped, i_frame_pipes, f"{path}.aggs.{iname}",
-            parent_cols=["key"], key_col=ikey,
-        )
-    return grouped.orderBy("key", ikey)
+    return _bucket_agg(filtered, atype, body, sub, path)
 
 
-def _nested_order_cols(spec_o, count_col: str, key_col: str, p: str):
-    """terms ``order`` applied at a nested-bucket level: the sort of that
-    level's cut frame. ``_count`` ranks by the level's (total) doc_count
-    — ES ranks a parent by its TOTAL, a leaf by its own count — ``_key``
-    by the bucket key; both directions. A sibling-METRIC target raises:
-    metrics cannot sit next to a nested bucket in this door (the flat
-    per-level output shape), so there is no sibling column to rank by."""
+def _order_cols(spec_o, count_col: str, key_col: str, p: str,
+                metric_frame: DataFrame | None = None):
+    """terms ``order`` → the sort of one level's cut frame. ``_count``
+    ranks by the level's doc_count (a parent by its TOTAL, as ES ranks
+    parents; a leaf by its own count), ``_key`` by the bucket key; both
+    directions. A sibling-METRIC target names a column of
+    ``metric_frame``, the single-level bucket frame. Without one (a
+    nested level) it raises: metric sub-aggs live inside the innermost
+    bucket there, so no level has a sibling metric column to rank by."""
     if spec_o is None or spec_o == ("_count", "desc"):
         return [F.desc(count_col), F.asc(key_col)]
     tgt, dirn = spec_o
@@ -4179,198 +3806,270 @@ def _nested_order_cols(spec_o, count_col: str, key_col: str, p: str):
         return [F.asc(count_col), F.asc(key_col)]
     if tgt == "_key":
         return [F.desc(key_col) if dirn == "desc" else F.asc(key_col)]
-    _fail(f"{p}.order",
-          f"{tgt!r}: ordering a nested-bucket level by a sibling metric "
-          "is not implemented (metric sub-aggs live INSIDE the innermost "
-          "bucket here, so there is no sibling metric column) — use "
-          "_count/_key or flatten the query")
+    if metric_frame is None:
+        _fail(f"{p}.order",
+              f"{tgt!r}: ordering a nested-bucket level by a sibling "
+              "metric is not implemented (metric sub-aggs live INSIDE the "
+              "innermost bucket here, so there is no sibling metric "
+              "column) — use _count/_key or flatten the query")
+    if tgt not in metric_frame.columns:
+        _fail(f"{p}.order",
+              f"{tgt!r} does not name a sibling metric column "
+              f"(has {metric_frame.columns})")
+    c = F.col(tgt)
+    return [c.desc() if dirn == "desc" else c.asc(), F.asc(key_col)]
 
 
-def _three_level_agg(filtered: DataFrame, outer: dict, l2_entry, l3_entry,
-                     l2_pipelines: dict, l2_metrics: dict, path: str,
-                     p: str, dtypes: dict) -> DataFrame:
-    """THREE-level bucket nesting — the full Kibana "split chart +
-    x-axis + split series" body: ONE scan, ONE grouped shuffle on the
-    triple key, then three bounded cuts on the (bucket-count-sized)
-    frame — never a second fact pass:
+def _top_per_parent(frame: DataFrame, parent_cols: list, order: list,
+                    size: int) -> DataFrame:
+    """The top ``size`` rows of a bucket-count-sized frame by ``order``:
+    one top-k heap without parents, one row_number per parent with them
+    (each parent keeps its own top — ES's independent-instance rule)."""
+    if not parent_cols:
+        return frame.orderBy(*order).limit(size)
+    from pyspark.sql import Window
 
-    - level 1 (terms/grid, order count): top-size keys by TOTAL
-      doc_count (sum over all descendants — ES ranks parents by their
-      total), semi-joined back;
-    - level 2: per level-1 key, top-size sub-keys by their (level-1,
-      level-2) TOTAL via one window rank over the re-aggregated
-      sub-totals frame;
-    - level 3 (the leaf): per (level-1, level-2), top-size by its own
-      doc_count via WindowGroupLimit.
+    w = Window.partitionBy(*parent_cols).orderBy(*order)
+    return (
+        frame.withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") <= size)
+        .drop("__rn")
+    )
 
-    Metrics, walk pipelines, frame pipelines (bucket_script/selector
-    row-local, bucket_sort paged per (chart, series) pair), exact
-    cumulative_cardinality (two-split first-seen reduction) and
-    ``min_doc_count: 0`` leaf dense spines all live in the LEAF
-    (windows partition by the two outer keys — each series
-    independently, no single-partition exchange); terms ``order``
-    (_count/_key) and min_doc_count > 1 participate in each level's
-    cut. Metrics/pipelines at levels 1-2 and min_doc_count: 0 on a
-    SPLIT level raise with the path; nesting past three levels raises
-    (ES allows it; Kibana does not emit it)."""
-    iname, itype, ibody, isub = l2_entry
-    if l2_pipelines or l2_metrics:
-        _fail(f"{path}.aggs.{iname}.aggs",
-              "metric/pipeline sub-aggs next to a nested bucket must "
-              "live INSIDE the innermost bucket")
-    jname, jtype, jbody, jsub = l3_entry
-    inner2 = _bucket_key(itype, ibody, f"{path}.aggs.{iname}.{itype}")
-    jp = f"{path}.aggs.{iname}.aggs.{jname}"
-    inner3 = _bucket_key(jtype, jbody, f"{jp}.{jtype}")
-    for lvl, spec_l in ((p, outer), (f"{path}.aggs.{iname}.{itype}", inner2)):
-        if spec_l.get("dense"):
-            _fail(lvl, "min_doc_count: 0 on a SPLIT level of three-level "
-                       "nesting is not implemented — only the leaf "
-                       "histogram densifies")
-    if inner3.get("dense") and inner3.get("step") is None:
-        _fail(f"{jp}.{jtype}",
-              "min_doc_count: 0 on a terms leaf (unmatched-value "
-              "buckets) is not implemented")
-    (j_inner, j_pipelines, j_frame_pipes, j_card,
-     j_metrics) = _split_sub_aggs(jsub, jp)
-    if j_inner is not None:
-        _fail(f"{jp}.aggs",
-              "bucket nesting deeper than three levels is not implemented")
-    j_card_specs = []
-    for pname, pbody in j_card.items():
-        # leaf-level exact cumulative_cardinality: the same per-parent
-        # first-seen reduction as the two-level arm, keyed by BOTH
-        # split columns (each (chart, series) pair counts its own
-        # first appearances)
-        pp = f"{jp}.aggs.{pname}"
+
+def _bucket_agg(filtered: DataFrame, atype: str, body: dict, sub,
+                path: str) -> DataFrame:
+    """A bucket agg nested one to three levels deep — a plain terms/
+    histogram/grid panel, the Kibana split series (terms → date_histogram)
+    and the full "split chart + x-axis + split series" body — as ONE
+    grouped aggregate on the key tuple (``key`` for the top level,
+    ``<name>_key`` below it; output one flat row per key tuple), then
+    bounded cuts on the bucket-count-sized frame, never a global window:
+
+    - each SPLIT level keeps its top ``size`` keys per parent prefix by
+      TOTAL doc_count (ES ranks a parent by the sum over its
+      descendants): one re-aggregate of the grouped frame, cut and
+      semi-joined back. terms ``order`` (_count/_key) picks the sort and
+      ``min_doc_count`` > 1 prunes below the floor BEFORE the cut.
+      Catalyst pushes the semi-join below the key-tuple aggregate, so
+      the facts are read once per split cut and once more for the
+      winners' rows (pruned before their shuffle) — pinned by
+      tests/test_plan_shape.py.
+    - the LEAF carries everything else, once: metrics, ``rate`` (under a
+      single-level date_histogram), exact ``cumulative_cardinality``,
+      ``min_doc_count: 0`` dense spines, ``min_doc_count`` > 1, the size
+      cut, walk pipelines and frame pipelines — every window partitioned
+      by the parent keys (each series independent, no single-partition
+      exchange).
+
+    Metrics/pipelines next to a nested bucket, ``min_doc_count: 0`` on a
+    split level, a sibling-metric ``order`` on a nested level and
+    nesting past three levels raise with the path (ES allows the last;
+    Kibana does not emit it)."""
+    levels = []  # (bucket spec, its JSON path, its key column)
+    lpath, key_col = path, "key"
+    while True:
+        p = f"{lpath}.{atype}"
+        spec = _bucket_key(atype, body, p)
+        inner, pipelines, frame_pipes, card_pipes, metrics = _split_sub_aggs(
+            sub, lpath
+        )
+        levels.append((spec, p, key_col))
+        if inner is None:
+            break
+        if len(levels) == 3:
+            _fail(f"{lpath}.aggs",
+                  "bucket nesting deeper than three levels is not "
+                  "implemented")
+        if spec.get("dense"):
+            _fail(p, "min_doc_count: 0 on the parent of a nested bucket (a "
+                     "SPLIT level) is not implemented — only the leaf "
+                     "histogram densifies; drop it or flatten the query")
+        if metrics or pipelines or frame_pipes or card_pipes:
+            _fail(f"{lpath}.aggs",
+                  "metric and pipeline sub-aggs next to a nested bucket "
+                  "must live INSIDE the innermost bucket (one flat table "
+                  "of every level's key and the leaf's metrics is the "
+                  "door's output shape)")
+        iname, atype, body, sub = inner
+        lpath, key_col = f"{lpath}.aggs.{iname}", f"{iname}_key"
+    leaf, p, lkey = levels[-1]
+    keys = [k for _, _, k in levels]
+    pkeys = keys[:-1]
+
+    card_specs = []
+    for pname, pbody in card_pipes.items():
+        # ES ``cumulative_cardinality`` — "distinct keys seen so far"
+        # (the total-users-to-date Kibana line). ES merges per-bucket HLL
+        # sketches; exactly and distributed it reduces to FIRST-SEEN
+        # buckets: a key contributes from the bucket of its first
+        # appearance in its parent onward (each parent an independent
+        # instance), so the pipeline is one groupBy(parents, field)
+        # .min(key) aggregate + the SAME cumulative_sum machinery every
+        # other walk pipeline uses (operators.aggregates.
+        # cumulative_cardinality_daily, door form). buckets_path must
+        # name a sibling cardinality metric — that metric's field is the
+        # key being counted.
+        pp = f"{lpath}.aggs.{pname}"
         ref = str(_req(pbody, "buckets_path", pp))
         _reject_extras(pbody, {"buckets_path"}, pp)
-        sib = j_metrics.get(ref)
+        sib = metrics.get(ref)
         if (not isinstance(sib, dict)
                 or next(iter(sib), None) != "cardinality"):
             _fail(f"{pp}.buckets_path",
-                  f"{ref!r} must name a sibling cardinality metric")
-        if inner3["order"] != "key":
-            _fail(pp, "cumulative_cardinality needs an ordered leaf "
-                      "bucket (date_histogram or histogram)")
-        if inner3.get("min_dc", 1) > 1:
-            _fail(pp, "cumulative_cardinality under min_doc_count > 1 "
-                      "is not implemented (pruned-bucket first-seen "
-                      "divergence)")
-        j_card_specs.append(
+                  f"{ref!r} must name a sibling cardinality metric "
+                  "(its field is the key the cumulative count walks)")
+        if leaf["order"] != "key":
+            _fail(pp, "cumulative_cardinality needs an ordered "
+                      f"{'inner' if pkeys else 'parent'} bucket "
+                      "(date_histogram or histogram)")
+        if leaf.get("min_dc", 1) > 1:
+            _fail(pp, "cumulative_cardinality under min_doc_count "
+                      "> 1 is not implemented (ES walks the "
+                      "RETURNED buckets — a key first seen in a "
+                      "pruned bucket counts from its next "
+                      "appearance; the first-seen reduction here "
+                      "would drop it) — drop one")
+        card_specs.append(
             (pname, _req(sib["cardinality"], "field", f"{pp}.field"))
         )
-    m_aggs, m_finals, mads = _metric_cols(j_metrics, jp, dtypes=dtypes)
-
-    ikey, jkey = f"{iname}_key", f"{jname}_key"
-    frame = filtered
-    for spec_l in (outer, inner2, inner3):
-        if spec_l["pre"] is not None:
-            frame = frame.where(spec_l["pre"])
-    framed = (
-        frame.withColumn("key", outer["expr"])
-        .withColumn(ikey, inner2["expr"])
-        .withColumn(jkey, inner3["expr"])
+    rate_specs = []
+    # nested rate leaves stay in `metrics`, where _metric_cols refuses them
+    for rname in [] if pkeys else list(metrics):
+        rspec = metrics[rname]
+        if not (isinstance(rspec, dict)
+                and next(iter(rspec), None) == "rate"):
+            continue
+        # ES ``rate`` — per-calendar-unit normalized sum/count under
+        # a date_histogram parent (the Kibana per-day trend line on
+        # monthly buckets): value = Σfield (or doc_count) ÷ the
+        # bucket's span in `unit`s. The span is pure key arithmetic
+        # (key + 1 interval − key), so rate is a post-aggregation
+        # column on the bucket frame — no extra scan
+        # (operators.aggregates.rate_monthly, door form).
+        rb = rspec["rate"]
+        rp = f"{lpath}.aggs.{rname}.rate"
+        _reject_extras(rb, {"unit", "field"}, rp)
+        if atype != "date_histogram":
+            _fail(rp, "rate needs a date_histogram parent")
+        runit, punit = str(_req(rb, "unit", rp)), leaf["unit"]
+        if runit != punit and (runit != "day"
+                               or punit not in ("week", "month",
+                                                "quarter", "year")):
+            _fail(f"{rp}.unit",
+                  "implemented rate units: the parent's own interval "
+                  "(span 1), or 'day' under a week/month/quarter/"
+                  "year parent")
+        fld = rb.get("field")
+        if fld is not None:
+            metrics[f"__rs_{rname}"] = {"sum": {"field": fld}}
+        rate_specs.append((rname, fld, runit, punit))
+        del metrics[rname]
+    m_aggs, m_finals, mads = _metric_cols(
+        metrics, lpath, dtypes=dict(filtered.dtypes)
     )
+
+    framed = filtered
+    for spec, _, _ in levels:
+        if spec["pre"] is not None:
+            framed = framed.where(spec["pre"])
+    for spec, _, k in levels:
+        framed = framed.withColumn(k, spec["expr"])
     grouped = (
-        framed.groupBy("key", ikey, jkey)
+        framed.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("doc_count"), *m_aggs)
-        .select("key", ikey, jkey, "doc_count", *m_finals)
+        .select(*keys, "doc_count", *m_finals)
     )
-    grouped = _apply_mads(grouped, framed, ["key", ikey, jkey], mads)
+    grouped = _apply_mads(grouped, framed, keys, mads)
 
-    from pyspark.sql import Window
+    for i, (spec, sp, k) in enumerate(levels[:-1]):
+        # split level i: its (prefix, key) totals, floored and cut, then
+        # semi-joined back (spines and pipelines below see only winners)
+        own = keys[:i + 1]
+        if spec["order"] != "count" and spec.get("min_dc", 1) <= 1:
+            continue
+        totals = grouped.groupBy(*own).agg(
+            F.sum("doc_count").alias("__total")
+        )
+        if spec.get("min_dc", 1) > 1:
+            totals = totals.where(F.col("__total") >= spec["min_dc"])
+        if spec["order"] == "count":
+            totals = _top_per_parent(
+                totals, keys[:i],
+                _order_cols(spec.get("order_spec"), "__total", k, sp),
+                spec["size"],
+            )
+        grouped = grouped.join(
+            F.broadcast(totals.select(*own)), own, "left_semi"
+        )
 
-    if outer["order"] == "count":
-        totals = grouped.groupBy("key").agg(
-            F.sum("doc_count").alias("__t")
-        )
-        if outer.get("min_dc", 1) > 1:
-            totals = totals.where(F.col("__t") >= outer["min_dc"])
-        totals = totals.orderBy(
-            *_nested_order_cols(outer.get("order_spec"), "__t", "key", p)
-        ).limit(outer["size"])
-        grouped = grouped.join(
-            F.broadcast(totals.select("key")), "key", "left_semi"
-        )
-    if inner2["order"] == "count" and inner2["size"] is not None:
-        t2 = grouped.groupBy("key", ikey).agg(
-            F.sum("doc_count").alias("__t2")
-        )
-        if inner2.get("min_dc", 1) > 1:
-            t2 = t2.where(F.col("__t2") >= inner2["min_dc"])
-        w2 = Window.partitionBy("key").orderBy(
-            *_nested_order_cols(inner2.get("order_spec"), "__t2", ikey,
-                                f"{path}.aggs.{iname}.{itype}")
-        )
-        winners2 = (
-            t2.withColumn("__rn", F.row_number().over(w2))
-            .where(F.col("__rn") <= inner2["size"])
-            .select("key", ikey)
-        )
-        grouped = grouped.join(F.broadcast(winners2), ["key", ikey],
-                               "left_semi")
-    elif inner2.get("min_dc", 1) > 1:
-        t2 = grouped.groupBy("key", ikey).agg(
-            F.sum("doc_count").alias("__t2")
-        ).where(F.col("__t2") >= inner2["min_dc"])
-        grouped = grouped.join(
-            F.broadcast(t2.select("key", ikey)), ["key", ikey], "left_semi"
-        )
-    if inner3.get("min_dc", 1) > 1:
-        grouped = grouped.where(F.col("doc_count") >= inner3["min_dc"])
-    if inner3["order"] == "count" and inner3["size"] is not None:
-        w3 = Window.partitionBy("key", ikey).orderBy(
-            *_nested_order_cols(inner3.get("order_spec"), "doc_count",
-                                jkey, f"{jp}.{jtype}")
-        )
-        grouped = (
-            grouped.withColumn("__rn", F.row_number().over(w3))
-            .where(F.col("__rn") <= inner3["size"])
-            .drop("__rn")
-        )
-    for pname, fld in j_card_specs:
+    for pname, fld in card_specs:
+        # first-seen counts per (parents, bucket) — the new-keys frame
+        # is bucket-count-sized, broadcast onto the grouped frame; the
+        # synthetic cumulative_sum below integrates it
         firsts = (
             framed.where(F.col(fld).isNotNull())
-            .groupBy("key", ikey, fld)
-            .agg(F.min(jkey).alias(jkey))
-            .groupBy("key", ikey, jkey)
+            .groupBy(*pkeys, fld)
+            .agg(F.min(lkey).alias(lkey))
+            .groupBy(*keys)
             .agg(F.count(F.lit(1)).alias(f"__new_{pname}"))
         )
-        grouped = grouped.join(F.broadcast(firsts),
-                               ["key", ikey, jkey], "left")
-        grouped = grouped.withColumn(
-            f"__new_{pname}",
-            F.coalesce(F.col(f"__new_{pname}"), F.lit(0)),
-        )
-        j_pipelines[pname] = (
+        grouped = grouped.join(F.broadcast(firsts), keys, "left")
+        pipelines[pname] = (
             "cumulative_sum", {"buckets_path": f"__new_{pname}"}
         )
-    if inner3.get("dense"):
-        # leaf per-parent spine keyed by BOTH splits — each (chart,
-        # series) pair zero-fills its own [min, max] leaf range
+    if leaf.get("dense"):
+        # after the split cuts (spines only for surviving parents) and
+        # before pipelines (derivative/moving_fn step over the dense
+        # spine, ES order)
         grouped = _densify_per_parent(
-            grouped, ["key", ikey], jkey, inner3["step"],
-            inner3.get("ext"), off=inner3.get("off", 0.0),
+            grouped, pkeys, lkey, leaf["step"], leaf.get("ext"),
+            off=leaf.get("off", 0.0),
         )
-        for pname, _ in j_card_specs:  # gap buckets add no new keys
-            grouped = grouped.withColumn(
-                f"__new_{pname}",
-                F.coalesce(F.col(f"__new_{pname}"), F.lit(0)),
-            )
+    for pname, _ in card_specs:  # unseen and gap buckets add no new keys
+        grouped = grouped.withColumn(
+            f"__new_{pname}", F.coalesce(F.col(f"__new_{pname}"), F.lit(0))
+        )
+    for rname, fld, runit, punit in rate_specs:
+        if runit == punit:
+            span = F.lit(1.0)
+        else:  # day units under a coarser calendar parent
+            span = F.datediff(
+                (F.col("key") + F.expr(_CAL_STEP[punit])).cast("date"),
+                F.col("key").cast("date"),
+            ).cast("double")
+        base_col = (F.coalesce(F.col(f"__rs_{rname}"), F.lit(0))
+                    if fld is not None else F.col("doc_count"))
+        grouped = grouped.withColumn(rname, F.round(base_col / span, 6))
+    if rate_specs:
+        grouped = grouped.drop(*[
+            f"__rs_{r}" for r, f, _, _ in rate_specs if f is not None
+        ])
+    if leaf.get("min_dc", 1) > 1:
+        # ES min_doc_count: buckets below the threshold are pruned
+        # BEFORE the size cut (a rare-value floor)
+        grouped = grouped.where(F.col("doc_count") >= F.lit(leaf["min_dc"]))
+    if leaf["order"] == "count":
+        # ES pipelines run over the RETURNED buckets, so the terms/grid
+        # size cut applies first (percent_of_sum under terms is the
+        # share among the top-size buckets, as Kibana renders it)
+        grouped = _top_per_parent(
+            grouped, pkeys,
+            _order_cols(leaf.get("order_spec"), "doc_count", lkey, p,
+                        None if pkeys else grouped),
+            leaf["size"],
+        )
     grouped = _apply_bucket_pipelines(
-        grouped, j_pipelines, jkey, ["key", ikey], inner3, jp
+        grouped, pipelines, lkey, pkeys, leaf, lpath
     )
-    if j_card_specs:
-        grouped = grouped.drop(*[f"__new_{n}" for n, _ in j_card_specs])
-    if j_frame_pipes:
-        # leaf bucket_script/selector are row-local; bucket_sort pages
-        # per (chart, series) pair via one two-key window
-        grouped = _apply_frame_pipelines(
-            grouped, j_frame_pipes, jp,
-            parent_cols=["key", ikey], key_col=jkey,
-        )
-    return grouped.orderBy("key", ikey, jkey)
+    if card_specs:
+        grouped = grouped.drop(*[f"__new_{n}" for n, _ in card_specs])
+    grouped = _apply_frame_pipelines(
+        grouped, frame_pipes, lpath, parent_cols=pkeys, key_col=lkey
+    )
+    if leaf["order"] == "count" and not pkeys:
+        return grouped  # the top-k heap's order
+    return grouped.orderBy(*keys)
 
 
 def es_aggs(
@@ -4385,10 +4084,11 @@ def es_aggs(
     Buckets: ``terms`` (with ``order``/``missing``) / ``date_histogram``
     (``time_zone``, ``extended_bounds``) / ``histogram`` /
     ``geohash_grid`` / ``geotile_grid`` (the Kibana map grids —
-    ``field`` names a geo_point struct column) / ``filters`` / ``range``,
-    nestable ONE level deep (``terms`` → ``date_histogram`` …, the Kibana
-    split-series shape — output one flat row per (key, <inner>_key)
-    pair). Metrics: avg/sum/min/max/value_count/cardinality/stats/
+    ``field`` names a geo_point struct column) / ``filters`` / ``range``;
+    the first five nest up to THREE levels deep (``terms`` →
+    ``date_histogram`` …, the Kibana split-series and split-chart shapes
+    — output one flat row per (key, <inner>_key, …) tuple). Metrics:
+    avg/sum/min/max/value_count/cardinality/stats/
     percentiles/percentile_ranks/extended_stats/
     median_absolute_deviation/top_metrics, plus ``rate`` under a
     date_histogram parent. Pipelines: ``cumulative_sum`` /

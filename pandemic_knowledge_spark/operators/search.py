@@ -27,6 +27,7 @@ from pandemic_knowledge_spark.functions.text import (
     query_terms,
     spark_sql_tokenize,
     sql_ident,
+    sql_over,
     sql_tokenize,
     tokenize,
 )
@@ -53,7 +54,7 @@ def _doc_terms(docs, text_col: str) -> DataFrame:
     statement (:func:`_doc_terms_sql`; the index append builds it every
     micro-batch, and SQL text costs a few py4j round trips where Column
     calls cost about a hundred)."""
-    return docs.sparkSession.sql(_doc_terms_sql(text_col), docs=docs)
+    return sql_over(_doc_terms_sql(text_col), docs=docs)
 
 
 def _vocab_df(docs, id_col: str, text_col: str) -> DataFrame:
@@ -2012,14 +2013,13 @@ def build_postings(
     aggregate): the index append builds this every micro-batch, and as
     Column calls it took about 265 py4j round trips."""
     text = sql_ident(text_col)
-    spark = docs.sparkSession
-    base = spark.sql(
+    base = sql_over(
         "SELECT *, size(toks) AS dl FROM ("
         f"SELECT *, explode(array({spark_sql_tokenize(text)})) AS toks FROM ("
         f"SELECT {sql_ident(id_col)} AS doc_id, {text} FROM {{docs}}))",
         docs=docs,
     )
-    postings = spark.sql(
+    postings = sql_over(
         "SELECT doc_id, dl, term, count(1) AS tf, bucket FROM ("
         f"SELECT doc_id, dl, term, {_bucket_sql()} AS bucket FROM ("
         "SELECT doc_id, dl, explode(toks) AS term FROM {base}) "
@@ -2069,7 +2069,7 @@ def _tlen_laid(term_rows: DataFrame) -> DataFrame:
     dynamic-partition ordering, so writing the laid frame (or a checkpoint
     of it) plans no exchange or sort of its own. One SQL statement
     (:func:`_tlen_laid_sql`)."""
-    return term_rows.sparkSession.sql(_tlen_laid_sql("{rows}"), rows=term_rows)
+    return sql_over(_tlen_laid_sql("{rows}"), rows=term_rows)
 
 
 def _merged_vocab(vocab: DataFrame, docs: DataFrame, text_col: str) -> DataFrame:
@@ -2081,7 +2081,7 @@ def _merged_vocab(vocab: DataFrame, docs: DataFrame, text_col: str) -> DataFrame
         "(SELECT term, df FROM {vocab} UNION ALL SELECT term, "
         f"CAST(1 AS BIGINT) AS df FROM ({_doc_terms_sql(text_col)}))"
     )
-    return docs.sparkSession.sql(_tlen_laid_sql(rows), vocab=vocab, docs=docs)
+    return sql_over(_tlen_laid_sql(rows), vocab=vocab, docs=docs)
 
 
 def _term_df(postings: DataFrame) -> DataFrame:
@@ -2124,7 +2124,7 @@ def _bm25_score_agg_sql(scored: str, k: int,
 def _bm25_score_agg(scored: DataFrame, k: int, after: tuple | None = None) -> DataFrame:
     """:func:`_bm25_score_agg_sql` over the frame ``scored``."""
     text, args = _bm25_score_agg_sql("{scored}", k, after)
-    return scored.sparkSession.sql(text, args, scored=scored)
+    return sql_over(text, args, scored=scored)
 
 
 def _postings_scores_sql(n_docs: int, sum_dl: int) -> str:
@@ -2148,11 +2148,7 @@ def _postings_scores_sql(n_docs: int, sum_dl: int) -> str:
 def _query_rows(postings: DataFrame, query: str) -> DataFrame:
     """``postings``'s rows for the terms of ``query``, bucket-pruned
     (:func:`_query_term_rows_sql`) — the ``{rows}`` frame a scorer
-    statement reads. The filter is a frame of its own, never the bare
-    handle frame, because spark.sql drops the temp view of each frame it
-    is handed after the statement, and dropping a view uncaches a cached
-    frame whose plan it is: a cached build would lose its postings on its
-    first probe. A filtered frame only reads the cache."""
+    statement reads."""
     return postings.where(_query_term_rows_sql(query))
 
 
@@ -2181,9 +2177,7 @@ def bm25_from_postings(
     The ingest probe builds this for every tick; as Column calls it took
     about 420 py4j round trips."""
     text, args = _bm25_score_agg_sql(_postings_scores_sql(n_docs, sum_dl), k, after)
-    return postings.sparkSession.sql(
-        text, args, rows=_query_rows(postings, query)
-    )
+    return sql_over(text, args, rows=_query_rows(postings, query))
 
 
 def _layout_fingerprint(files: list, subdir: str) -> str:

@@ -7745,8 +7745,8 @@ def agg_es_dense_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     first and last bucket is emitted with doc_count=0 / NULL metrics.
     The spine is ONE bounded explode of the [min, max] week range
     (bucket-frame-sized, never the fact table —
-    operators.esdsl._densify, the dense_daily_counts rationale
-    generalized to every calendar unit)."""
+    operators.esdsl._densify_per_parent with no parent columns, the
+    dense_daily_counts rationale generalized to every calendar unit)."""
     from pandemic_knowledge_spark.operators.esdsl import es_aggs
 
     return es_aggs(load(spark, sf_dir, "orders"), _ES_DENSE)["per_week"]
@@ -8744,10 +8744,12 @@ FROM ranked WHERE rn <= 2
 def agg_es_three_level_door(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THREE-level bucket nesting via the agg-body door — Kibana's full
     "split chart + x-axis + split series" body: terms → date_histogram
-    → terms with a metric leaf. ONE scan, ONE triple-key shuffle, then
-    bounded cuts top-down (parents rank by TOTAL doc_count at every
-    level — ES's cut semantics; the mid/leaf cuts are WindowGroupLimit
-    ranks, pushed below their shuffles). Four levels raise with the
+    → terms with a metric leaf. One triple-key aggregate, then bounded
+    cuts top-down (parents rank by TOTAL doc_count at every level — ES's
+    cut semantics; the mid/leaf cuts are WindowGroupLimit ranks, pushed
+    below their shuffles). Catalyst pushes each split cut's semi-join
+    below the aggregate, so the facts are read once per split cut plus
+    once for the winners' rows. Four levels raise with the
     path (operators.esdsl, nested-bucket recursion)."""
     from pandemic_knowledge_spark.operators.esdsl import es_aggs
 
@@ -9361,9 +9363,10 @@ def agg_es_nested_order_door(spark: SparkSession, sf_dir: str) -> DataFrame:
     ES); the inner ``{"_count": "asc"}`` swaps the per-parent rank
     window's sort; inner min_doc_count prunes below the floor AFTER the
     parent cut (parent totals stay ES-true) and before the inner size
-    cut. Still ONE scan + ONE composite-key shuffle; the cuts operate on
-    the bucket-count-sized frame. Sibling-METRIC order targets raise
-    with the path (operators.esdsl._nested_order_cols)."""
+    cut. The cuts operate on the bucket-count-sized frame of the one
+    composite-key aggregate (the winners' rows are read a second time,
+    pruned by the parent cut's semi-join). Sibling-METRIC order targets raise
+    with the path (operators.esdsl._order_cols)."""
     from pandemic_knowledge_spark.operators.esdsl import es_aggs
 
     return es_aggs(load(spark, sf_dir, "events"), {"aggs": {"t": {
@@ -9408,9 +9411,9 @@ def agg_es_three_level_order_door(spark: SparkSession, sf_dir: str) -> DataFrame
     "asc"}`` sorts the level-1 totals frame (rarest charts first);
     level 2 ``{"_key": "asc"}`` ranks each chart's series
     alphabetically inside the per-parent window; the leaf histogram
-    stays key-ordered. Same one-scan / one-triple-key-shuffle plan as
-    the default three-level path — only the cut sorts change
-    (operators.esdsl._three_level_agg + _nested_order_cols)."""
+    stays key-ordered. Same plan as the default three-level path — only
+    the cut sorts change
+    (operators.esdsl._bucket_agg + _order_cols)."""
     from pandemic_knowledge_spark.operators.esdsl import es_aggs
 
     return es_aggs(load(spark, sf_dir, "events"), {"aggs": {"t": {
@@ -10023,9 +10026,9 @@ def agg_es_three_level_dense_door(
     split series + zero-filled x-axis. The leaf spine is keyed by BOTH
     split columns — each (chart, series) pair zero-fills its own
     [min, max] day range AFTER the two top-down total-ranked cuts, so
-    spines exist only for surviving pairs; still one fact scan + one
-    triple-key shuffle + bucket-count-sized frames
-    (operators.esdsl._three_level_agg + _densify_per_parent)."""
+    spines exist only for surviving pairs; the spines and cuts work on
+    bucket-count-sized frames
+    (operators.esdsl._bucket_agg + _densify_per_parent)."""
     from pandemic_knowledge_spark.operators.esdsl import es_aggs
 
     return es_aggs(load(spark, sf_dir, "events"), {

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from datetime import date
 
+import pytest
 from pyspark.sql import functions as F
 
 from pandemic_knowledge_spark.operators.aggregates import (
@@ -494,3 +495,52 @@ def test_moving_percentile_truncates_at_series_start_and_sees_gaps(spark):
         moving_percentile_daily(df, "ts", window=0)
     with pytest.raises(ValueError, match="p must"):
         moving_percentile_daily(df, "ts", p=1.5)
+
+
+_PANEL_BODIES = {
+    "date_histogram": {"query": {"range": {"ts": {
+        "gte": 1704067200000, "lt": 1709251200000, "format": "epoch_millis"}}},
+        "aggs": {"h": {"date_histogram": {"field": "ts", "calendar_interval": "day"},
+                       "aggs": {"s": {"sum": {"field": "value"}}}}}},
+    "terms": {"query": {"range": {"value": {"gte": 5.0}}},
+        "aggs": {"t": {"terms": {"field": "event_type", "size": 4},
+                       "aggs": {"a": {"avg": {"field": "value"}}}}}},
+    "split_series": {"aggs": {"t": {"terms": {"field": "event_type", "size": 3},
+        "aggs": {"w": {"date_histogram": {"field": "ts", "calendar_interval": "week"},
+                       "aggs": {"m": {"max": {"field": "value"}}}}}}}},
+    "percentiles": {"query": {"range": {"value": {"gte": 2.5}}},
+        "aggs": {"t": {"terms": {"field": "event_type", "size": 10},
+                       "aggs": {"p": {"percentiles": {
+                           "field": "value", "percents": [50.0, 95.0]}}}}}},
+    "geotile": {"aggs": {"g": {"geotile_grid": {"field": "loc", "precision": 3}}}},
+}
+
+
+@pytest.mark.parametrize("panel, bound", [
+    ("date_histogram", 204),
+    ("terms", 167),
+    ("split_series", 232),
+    ("percentiles", 234),
+    ("geotile", 398),
+])
+def test_kibana_panel_bodies_build_in_bounded_py4j_calls(
+    spark, sf_dir, count_py4j_calls, panel, bound
+):
+    """Building — not running — a Kibana-shaped es_aggs body sends at most
+    as many py4j commands from the calling thread as the bound: the count
+    measured before one/two/three-level nesting moved onto one code path,
+    and the same after it (plan building must not get dearer — plan time
+    is a visible share of every dashboard panel)."""
+    from pandemic_knowledge_spark.operators.esdsl import es_aggs
+    from pandemic_knowledge_spark.tables import load
+
+    frame = load(spark, sf_dir, "events")
+    if panel == "geotile":
+        frame = frame.selectExpr(
+            "*", "named_struct('lat', CAST(user_id % 170 AS DOUBLE) - 85.0, "
+            "'lon', CAST(event_id % 360 AS DOUBLE) - 180.0) AS loc")
+    body = _PANEL_BODIES[panel]
+    es_aggs(frame, body)  # first use loads classes on both sides
+    out, n = count_py4j_calls(lambda: es_aggs(frame, body))
+    assert n <= bound, n
+    assert out[next(iter(body["aggs"]))].count() > 0

@@ -214,7 +214,7 @@ def test_dedup_micro_batch_plans_build_in_few_py4j_calls(
 ):
     """Building — not running — one append micro-batch's two plans, its
     signatures (``minhash_base``) and the probe of them against a stored
-    signature frame (``minhash_probe_pairs``), sends 16 py4j commands from
+    signature frame (``minhash_probe_pairs``), sends 19 py4j commands from
     the calling thread: each plan is one SQL statement. Built from Column
     calls the two sent about 3,700, about 1 s of driver time per batch."""
     from pandemic_knowledge_spark.operators.dedup import (

@@ -874,3 +874,64 @@ def test_index_save_laid_frame_is_single_exchange(spark, sf_dir):
     assert re.search(r"Sort \[bucket#\d+ ASC NULLS FIRST, term#\d+ ASC NULLS FIRST\]", plan), plan
     for node in PY_EVAL_NODES:
         assert node not in plan
+
+
+# ---------------------------------------------------------------------------
+# es_aggs bucket nesting: one key-tuple aggregate, bounded cuts.
+# ---------------------------------------------------------------------------
+
+_ES_SPLIT = {"aggs": {"t": {
+    "terms": {"field": "event_type", "size": 2},
+    "aggs": {"w": {"date_histogram": {"field": "ts", "calendar_interval": "week"},
+                   "aggs": {"m": {"max": {"field": "value"}}}}}}}}
+_ES_THREE = {"aggs": {"t": {
+    "terms": {"field": "event_type", "size": 2},
+    "aggs": {"w": {
+        "date_histogram": {"field": "ts", "calendar_interval": "month"},
+        "aggs": {"u": {"terms": {"field": "user_id", "size": 2},
+                       "aggs": {"m": {"max": {"field": "value"}}}}}}}}}}
+
+
+def _es_plan(spark, sf_dir, body: dict) -> str:
+    from pandemic_knowledge_spark.operators.esdsl import es_aggs
+    from pandemic_knowledge_spark.tables import load
+
+    df = es_aggs(load(spark, sf_dir, "events"), body)[next(iter(body["aggs"]))]
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_es_terms_cut_is_take_ordered(spark, sf_dir):
+    """A one-level terms panel cuts its top `size` buckets with a top-k
+    heap over the aggregated frame, never a global sort."""
+    plan = _es_plan(spark, sf_dir, {"aggs": {"t": {
+        "terms": {"field": "event_type", "size": 3},
+        "aggs": {"a": {"avg": {"field": "value"}}}}}})
+    assert "TakeOrderedAndProject" in plan
+    assert "rangepartitioning" not in plan
+    assert plan.count("FileScan parquet") == 1
+
+
+@pytest.mark.parametrize("body, keys", [
+    (_ES_SPLIT, ("key", "w_key")),
+    (_ES_THREE, ("key", "w_key", "u_key")),
+], ids=["split_series", "three_level"])
+def test_es_nested_cut_reads_one_key_tuple_aggregate(spark, sf_dir, body, keys):
+    """The split level's cut reads ONE events scan and ONE aggregate
+    Exchange on the whole key tuple, keeps its top keys with a top-k heap,
+    and broadcasts them into a LEFT SEMI join — no sort-merge join.
+    Catalyst pushes that semi-join below the key-tuple aggregate, so the
+    winners' rows are read once more, pruned before their own key-tuple
+    shuffle: two scans in all."""
+    plan = _es_plan(spark, sf_dir, body)
+    tuple_exchange = re.compile(
+        r"Exchange hashpartitioning\("
+        + ", ".join(rf"{k}#\d+L?" for k in keys) + r", \d+\)")
+    cuts = [sub for sub in _subtree_lines(plan, "BroadcastExchange")
+            if any("TakeOrderedAndProject" in line for line in sub)]
+    assert len(cuts) == 1, plan
+    cut = "\n".join(cuts[0])
+    assert cut.count("FileScan parquet") == 1, cut
+    assert len(tuple_exchange.findall(cut)) == 1, cut
+    assert "LeftSemi" in plan and "SortMergeJoin" not in plan
+    assert plan.count("FileScan parquet") == 2, plan
+    assert len(tuple_exchange.findall(plan)) == 2, plan

@@ -339,7 +339,7 @@ def test_postings_and_probe_plans_build_in_few_py4j_calls(
 ):
     """Building — not running — an index append's postings
     (``build_postings``) and a probe of a loaded index
-    (``SearchIndex.search``, the window tier) sends 27 and 7 py4j commands
+    (``SearchIndex.search``, the window tier) sends 29 and 9 py4j commands
     from the calling thread: each step is a SQL statement. Built from
     Column calls they sent about 265 and 417."""
     docs, path = _saved(spark, tmp_path)
@@ -356,6 +356,35 @@ def test_postings_and_probe_plans_build_in_few_py4j_calls(
     assert doc_lens.count() == docs.count()
     built = SearchIndex.build(docs, "doc_id", "text", cache=False)
     assert hits.collect() == built.search(query, k=5).collect()
+
+
+def test_sql_plan_builders_keep_a_callers_cache(spark):
+    """A caller's cached ``docs`` stays cached when a plan builder hands it
+    to spark.sql — an uncached SearchIndex build (postings, vocabulary)
+    and ``minhash_base``. spark.sql drops the temp view of each frame it
+    is handed, and dropping a view of the bare cached frame uncaches it."""
+    from pandemic_knowledge_spark.operators.dedup import minhash_base
+
+    docs = spark.createDataFrame(
+        [(i, f"spark stream window {i} doc {i % 3}") for i in range(12)],
+        "doc_id long, text string",
+    ).cache()
+    docs.count()
+
+    def reads_cache() -> bool:
+        plan = docs.select("doc_id")._jdf.queryExecution().optimizedPlan()
+        return "InMemoryRelation" in plan.toString()
+
+    try:
+        assert reads_cache()
+        idx = SearchIndex.build(docs, "doc_id", "text", cache=False)
+        assert idx.search("spark stream", k=3).count() == 3
+        assert idx.vocab.count() > 0
+        assert reads_cache()
+        assert minhash_base(docs, "doc_id", "text").count() == 12
+        assert reads_cache()
+    finally:
+        docs.unpersist()
 
 
 def test_append_save_job_budget_in_callers_job_group(spark, tmp_path):
